@@ -3,9 +3,10 @@ package graft.apply
 import graft.core.{LastPk, ShardCursor, ShardStats, SyncState, VGtid}
 import graft.functions.VGtidRankExpr.vgtid_rank
 import graft.laketable.{LakeTable, Snapshot}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Result of applying one micro-batch. `stats` carries per-shard end cursors
   * + lineage derived from the SAME job that staged the batch (no second
@@ -31,11 +32,11 @@ final case class ApplyResult(
   * VGTID cursors committed in the same snapshot (exactly-once).
   *
   * Scale notes:
-  *  - LWW dedup is a single shuffle on the merge key; partial aggregation
-  *    (`max_by`-style) happens map-side because we use a window over the
-  *    already key-partitioned exchange. Hot repos are handled by AQE skew
-  *    splitting on the join and by the key carrying `path` (high cardinality
-  *    within a hot repo spreads its partitions).
+  *  - LWW dedup is one hash aggregate on the merge key ([[dedupLww]]) whose
+  *    map-side partial combine leaves one candidate per key per partition
+  *    for the single shuffle. Hot repos are handled by that combine, by AQE
+  *    skew splitting on the join and by the key carrying `path` (high
+  *    cardinality within a hot repo spreads its partitions).
   *  - The MERGE never rewrites the whole table: only buckets present in the
   *    batch are read back, anti-joined, and rewritten. The batch side of the
   *    join is broadcast when small (AQE decides from runtime stats).
@@ -44,20 +45,17 @@ object CdcApply {
 
   /** Parity mode reproduces the reference's After-image-only semantics
     * (deletes dropped — `planetscale_edge_database.go:398-410`); native mode
-    * applies deletes as row removals. `saltBuckets` switches LWW dedup to
-    * the explicitly salted two-level tree (see [[dedupLwwSalted]]) for
-    * key-flood skew. `wireSpec` marks the batch as a RAW WIRE-STRING
-    * changelog: every after-image column is run through the reference's
-    * `parseValue` normalization (`types.go:139-220`) and cast to its typed
-    * landing column INSIDE the staging job — normalization is part of the
-    * ingest plan (one pass, codegen'd column expressions), not a separate
-    * post-pass over the table. `keyColumns` names the merge key in the event
+    * applies deletes as row removals. `wireSpec` marks the batch as a RAW
+    * WIRE-STRING changelog: every after-image column is run through the
+    * reference's `parseValue` normalization (`types.go:139-220`) and cast to
+    * its typed landing column INSIDE the staging job — normalization is
+    * part of the ingest plan (one pass, codegen'd column expressions), not a
+    * separate post-pass over the table. `keyColumns` names the merge key in the event
     * payload — in the same order as the table's leading field ids 1..k — so
     * ANY table with a composite PK ingests, not just repo_content; the
     * first key column drives bucketing.
     */
   final case class ApplyConfig(parityMode: Boolean = false,
-      saltBuckets: Option[Int] = None,
       wireSpec: Option[graft.core.WireTableSpec] = None,
       keyColumns: Seq[String] = Seq("repo", "path"),
       // two-pass winner dedup ([[dedupLwwTwoPass]]): decide winner positions
@@ -73,8 +71,8 @@ object CdcApply {
 
   /** Trailing window of `lineage:b<N>` summary keys retained per stream —
     * older entries are pruned at commit so the snapshot summary stays O(1)
-    * over a stream's lifetime (the metrics sidecar is the durable record;
-    * only the newest batch can ever need a lineage-driven metrics backfill).
+    * over a stream's lifetime (the snapshot's metrics files are the durable
+    * per-batch record).
     */
   val lineageKeep: Long = 64L
 
@@ -98,22 +96,8 @@ object CdcApply {
     lineageMapper.writeValueAsString(n)
   }
 
-  /** Parsed lineage entry: (wallMs, committedVersion, per-shard stats). */
-  private[graft] def lineageStats(json: String): (Long, Long, Map[String, ShardStats]) = {
-    import scala.jdk.CollectionConverters._
-    val n = lineageMapper.readTree(json)
-    val shards = Option(n.get("shards")).map(_.properties().asScala.map { e =>
-      val s = e.getValue
-      e.getKey -> ShardStats(
-        ShardCursor(s.get("keyspace").asText(), e.getKey, s.get("position").asText(), None),
-        s.get("rows").asLong(), s.get("start").asText(), s.get("end").asText())
-    }.toMap).getOrElse(Map.empty[String, ShardStats])
-    (Option(n.get("wallMs")).map(_.asLong()).getOrElse(0L),
-      Option(n.get("version")).map(_.asLong()).getOrElse(0L), shards)
-  }
-
   /** Key names whose canonical `_<name>` column would collide with the
-    * dedup/staging internals (`_rank`, `_salt`, `_win`, …) — a collision
+    * dedup/staging internals (`_rank`, `_win`, `_kind`, …) — a collision
     * would silently corrupt the LWW grouping, so fail loud instead.
     */
   private val ReservedKeyNames =
@@ -157,14 +141,11 @@ object CdcApply {
     * north-star's "(vgtid, event_seq) window".
     * Input must carry `vgtid`, `event_seq`, `op`, `before`, `after`.
     *
-    * Implementation: winner keys via `max(struct(rank, seq))` — a hash
-    * aggregate with MAP-SIDE partial combine, so the shuffle carries one
-    * small row per key per partition instead of every event's content bytes
-    * — then a join back to pick the winning rows. AQE broadcasts the winner
-    * side when it is small (typical micro-batch); at worst it degrades to a
-    * shuffle join on the key, never worse than the window formulation. Hot
-    * repos (Zipf skew) are absorbed by the map-side combine, the classic
-    * skew cure the window version lacks.
+    * Implementation: ONE `LwwMaxBy` aggregate per key whose buffer is the
+    * winning event itself — a hash aggregate with MAP-SIDE partial combine,
+    * so the shuffle carries at most one candidate row per key per partition
+    * instead of every event. Hot repos (Zipf skew) are absorbed by the
+    * map-side combine, the classic skew cure a window formulation lacks.
     */
   def dedupLww(events: DataFrame,
       keys: Seq[String] = Seq("repo", "path"),
@@ -302,48 +283,6 @@ object CdcApply {
     (out, () => { light.unpersist(false); bfB.foreach(_.destroy()); () })
   }
 
-  /** Explicitly SALTED LWW dedup (north-star "salting merge keys"): a
-    * two-level aggregation tree — partial LWW per (key, salt) then final LWW
-    * per key — for the pathological case the map-side combine alone can't
-    * spread: ONE merge key receiving a flood so large that even the combined
-    * per-partition candidates overwhelm a single reducer's input. `max` is
-    * associative, so the salted tree is exactly equivalent (spec-asserted).
-    * The salt is `event_seq % salts`: deterministic, uniform within a key.
-    * Costs one extra (tiny: winners-only) shuffle — enable via
-    * `ApplyConfig.saltBuckets` only when key-flood skew is expected.
-    */
-  def dedupLwwSalted(events: DataFrame, salts: Int,
-      keys: Seq[String] = Seq("repo", "path"),
-      keyLanding: (String, Column) => Column = rawKey): DataFrame = {
-    val keyed = withKeyCols(events, keys, keyLanding)
-      .withColumn("_rank", vgtid_rank(col("vgtid")))
-    val keyCols = keys.map(k => col(s"_$k"))
-    val payload = events.columns.map(col) :+ col("_rank")
-    val partial = keyed
-      .withColumn("_payload", struct(payload: _*)) // pre-built, see dedupLww
-      .groupBy(keyCols :+ pmod(col("event_seq"), lit(salts)).as("_salt"): _*)
-      .agg(graft.functions.LwwMaxBy.lww_max_by(
-        col("_payload"), col("_rank"), col("event_seq")).as("_win"),
-        count(lit(1)).as("_sub_events"))
-    partial
-      .groupBy(keyCols: _*)
-      .agg(graft.functions.LwwMaxBy.lww_max_by(
-        col("_win"), col("_win._rank"), col("_win.event_seq")).as("_win"),
-        sum(col("_sub_events")).as("_key_events"))
-      .select(keyCols ++ Seq(col("_win.*"), col("_key_events")): _*)
-  }
-
-  /** Window-formulated LWW (reference semantics oracle for tests). */
-  def dedupLwwWindow(events: DataFrame,
-      keys: Seq[String] = Seq("repo", "path"),
-      keyLanding: (String, Column) => Column = rawKey): DataFrame = {
-    val keyed = withKeyCols(events, keys, keyLanding)
-      .withColumn("_rank", vgtid_rank(col("vgtid")))
-    val w = Window.partitionBy(keys.map(k => col(s"_$k")): _*)
-      .orderBy(col("_rank").desc, col("event_seq").desc)
-    keyed.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** Per-winner provenance columns staged alongside the data columns: enough
     * to recover per-shard cursors/lineage from the ALREADY-WRITTEN staged
     * parquet (one column-pruned read of local winner files — never a second
@@ -458,11 +397,9 @@ object CdcApply {
     // see one identical typed key value
     val keyLanding = conf.wireSpec.map(wireKey).getOrElse(rawKey)
     val filtered = if (conf.parityMode) events.filter(col("op") =!= "delete") else events
-    val (deduped, cleanupDedup) = conf.saltBuckets match {
-      case Some(salts)               => (dedupLwwSalted(filtered, salts, keys, keyLanding), () => ())
-      case None if conf.twoPassDedup => dedupLwwTwoPassManaged(filtered, keys, keyLanding)
-      case None                      => (dedupLww(filtered, keys, keyLanding), () => ())
-    }
+    val (deduped, cleanupDedup) =
+      if (conf.twoPassDedup) dedupLwwTwoPassManaged(filtered, keys, keyLanding)
+      else (dedupLww(filtered, keys, keyLanding), () => ())
     val spark = events.sparkSession
 
     // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet).
@@ -522,9 +459,9 @@ object CdcApply {
     try {
       val affected = table.stagedBuckets(stage)
 
-      // --- ONE column-pruned read of the staged winners yields the per-kind
-      // row counts AND the per-shard cursors/stats (previously three jobs:
-      // two footer counts + a stats aggregation). In parity mode the shard
+      // --- ONE read of the staged winners yields the per-kind row counts,
+      // the per-shard cursors/stats AND (below) the survivor anti-join's
+      // keys, each a column-pruned scan of it. In parity mode the shard
       // stats come from a re-scan of the raw batch instead, so dropped
       // deletes still advance positions; evolution tracking stays at the
       // base version there — parity mode models the reference's After-only
@@ -532,10 +469,8 @@ object CdcApply {
       var maxWireSv = 1
       var upsertCount = 0L
       var deleteCount = 0L
-      val stagedRows = table.stagedAllDf(spark, stage, Some(staged.schema)) match {
-        case None => Array.empty[org.apache.spark.sql.Row]
-        case Some(all) => statsFromStaged(all).collect()
-      }
+      val stagedAll = table.stagedAllDf(spark, stage, staged.schema)
+      val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
       stagedRows.foreach { r =>
         upsertCount += r.getLong(8)
         deleteCount += r.getLong(9)
@@ -552,7 +487,8 @@ object CdcApply {
       val cursors = stats.map { case (s, st) => s -> st.cursor }
 
       // --- prune overwritten/deleted keys out of existing files (only the
-      // affected buckets; anti-join against the column-pruned staged keys) ---
+      // affected buckets, so a staged read exists whenever old files do;
+      // anti-join against its key columns) ---
       // merge key = fields id 1..k (current names survive renames)
       val keyNames = (1 to keys.length).map(id =>
         snap.currentSchema.find(_.id == id).get.name)
@@ -562,7 +498,7 @@ object CdcApply {
         else {
           val old = table.readFiles(snap, oldFiles)
           val survivors = old
-            .join(table.stagedKeys(spark, stage, keyNames), keyNames, "left_anti")
+            .join(stagedAll.get.select(keyNames.map(col): _*), keyNames, "left_anti")
             .withColumn("_bucket",
               pmod(xxhash64(col(keyNames.head)), lit(snap.numBuckets)).cast("int"))
           // hash-repartition on _bucket alone: file count per commit is
@@ -571,6 +507,17 @@ object CdcApply {
         }
       phase("survivors")
       val newFiles = table.adoptStagedUpserts(stage, snap.schemaVersion) ++ survivorFiles
+      // --- the batch's metrics rows (and any tier fold) are staged, adopted
+      // and listed by the SAME commit as its data and cursors: exactly-once
+      // by construction. `version` is the version this commit lands as
+      // (single writer — nothing commits in between). ---
+      val wallMs = (System.nanoTime() - tStart) / 1000000L
+      val version = snap.version + 1
+      val batchMetrics =
+        if (stats.isEmpty) Nil
+        else Seq(writeMetricsFile(spark, stage, 0, metricsRows(batchId, stats, wallMs, version)))
+      val (foldFiles, folded) = foldMetrics(spark, table, snap, stage)
+      val newMetrics = table.adoptMetrics(batchMetrics ++ foldFiles)
       phase("adopt")
 
       // --- transactional cursor + lineage commit ---
@@ -587,16 +534,11 @@ object CdcApply {
         }
         st.updated(stateKey, keep)
       }
-      // lineage carries the per-shard stats so a crash between this commit
-      // and the caller's metrics append can be healed: a replay-skip
-      // reconstructs the batch's metrics rows from here (exactly-once
-      // metrics even across that window). `version` is the version this
-      // commit lands as (single writer — nothing commits in between).
       val lineage = lineageJson(batchId, affected.size, upsertCount, deleteCount,
-        (System.nanoTime() - tStart) / 1000000L, snap.version + 1, stats)
+        wallMs, version, stats)
       // bounded lineage: retain the trailing window only — the summary map
       // (rewritten every commit) must not grow O(batches) over a stream's
-      // lifetime. The metrics sidecar is the durable per-batch record.
+      // lifetime. The metrics files are the durable per-batch record.
       val stale = snap.summary.keysIterator.filter { k =>
         k.startsWith("lineage:b") &&
           k.stripPrefix("lineage:b").toLongOption.exists(_ <= batchId - lineageKeep)
@@ -620,11 +562,103 @@ object CdcApply {
           key -> batchId.toString,
           "cursors" -> merged.toJson,
           s"lineage:b$batchId" -> lineage) ++ announce,
-        dropSummaryKeys = stale)
+        dropSummaryKeys = stale,
+        newMetrics = newMetrics,
+        foldedMetrics = folded)
       phase("commit")
       ApplyResult(committed, upsertCount, deleteCount, skipped = false, stats = stats,
         maxSchemaVersion = maxWireSv)
     } finally table.dropStage(stage)
+  }
+
+  /** Per-batch metrics rows, one per (batch, shard): shard lineage (vgtid
+    * range, rows), the apply wall up to the commit, throughput and the
+    * committed version. Numerics are required, strings optional.
+    */
+  val metricsSchema: StructType = StructType(Seq(
+    StructField("batch_id", LongType, nullable = false),
+    StructField("keyspace", StringType),
+    StructField("shard", StringType),
+    StructField("vgtid_start", StringType),
+    StructField("vgtid_end", StringType),
+    StructField("rows", LongType, nullable = false),
+    StructField("wall_ms", LongType, nullable = false),
+    StructField("batch_events_per_sec", DoubleType, nullable = false),
+    StructField("committed_version", LongType, nullable = false)))
+
+  private lazy val metricsParquet: org.apache.parquet.schema.MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    metricsSchema.fields.foldLeft[Types.GroupBuilder[MessageType]](Types.buildMessage()) {
+      (b, f) => b.addField(f.dataType match {
+        case LongType   => Types.required(INT64).named(f.name)
+        case DoubleType => Types.required(DOUBLE).named(f.name)
+        case _          => Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(f.name)
+      })
+    }.named("spark_schema")
+  }
+
+  private[graft] def metricsRows(batchId: Long, stats: Map[String, ShardStats],
+      wallMs: Long, version: Long): Seq[Row] = {
+    val evPerSec = if (wallMs > 0) stats.values.map(_.rows).sum * 1000.0 / wallMs else 0.0
+    stats.toSeq.sortBy(_._1).map { case (shard, st) =>
+      Row(batchId, st.cursor.keyspace, shard, st.vgtidStart, st.vgtidEnd, st.rows, wallMs,
+        evPerSec, version)
+    }
+  }
+
+  /** Write `rows` ([[metricsSchema]]) as one tier-`tier` parquet file in
+    * `dir` — directly with the parquet writer on the driver: the rows are
+    * O(shards) per batch, far below the cost of a Spark job. Null strings
+    * are left unset, as the optional schema fields declare.
+    */
+  private[graft] def writeMetricsFile(spark: SparkSession, dir: Path, tier: Int,
+      rows: Seq[Row]): Path = {
+    val file = new Path(dir, s"gen$tier-${java.util.UUID.randomUUID()}.parquet")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+      .withType(metricsParquet)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach { r =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(metricsParquet)
+      metricsSchema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+        r.get(i) match {
+          case v: Long   => g.add(i, v)
+          case v: Double => g.add(i, v)
+          case v         => g.add(i, v.toString)
+        }
+      }
+      writer.write(g)
+    } finally writer.close()
+    file
+  }
+
+  /** Files per metrics tier. A tier below the top one that holds this many
+    * files in the previous snapshot folds into ONE file of the next tier
+    * inside the batch commit — a content-neutral swap of list entries — so
+    * each row is rewritten once per tier and the list stays bounded (the top
+    * tier, 3, gains a file every 32³ batches).
+    */
+  val MetricsTierFiles = 32
+
+  private def metricsTier(path: String): Int =
+    new Path(path).getName.stripPrefix("gen").takeWhile(_.isDigit).toInt
+
+  /** Stage the fold of every full tier: returns the folded files (in
+    * `stage`) and the list entries they replace.
+    */
+  private def foldMetrics(spark: SparkSession, table: LakeTable, snap: Snapshot,
+      stage: Path): (Seq[Path], Set[String]) = {
+    val full = snap.metricsFiles.groupBy(metricsTier).toSeq
+      .filter { case (t, files) => t < 3 && files.size >= MetricsTierFiles }
+    val out = full.map { case (t, files) =>
+      val rows = spark.read.schema(metricsSchema)
+        .parquet(files.map(f => new Path(table.root, f).toString): _*).collect()
+      writeMetricsFile(spark, stage, t + 1, rows.toSeq)
+    }
+    (out, full.flatMap(_._2).toSet)
   }
 
   /** Batch replay driver: applies a full changelog DataFrame in one shot

@@ -39,7 +39,10 @@ final case class Snapshot(
     numBuckets: Int,
     bucketsPerManifest: Int,
     manifests: Seq[ManifestEntry],
-    summary: Map[String, String]) {
+    summary: Map[String, String],
+    // table-relative paths of the files under metrics/ this snapshot lists
+    // (per-batch metrics rows, committed with the batch's data and cursors)
+    metricsFiles: Seq[String] = Nil) {
 
   def currentSchema: Seq[FieldDef] = schemas(schemaVersion)
 
@@ -55,14 +58,15 @@ final case class Snapshot(
 
 /** Iceberg-style snapshot table, built from scratch (no Iceberg/Delta runtime
   * exists in this environment): immutable Parquet data files + JSON snapshot
-  * metadata + an atomic version-pointer swap. Per-shard VGTID cursors, lineage
-  * and metrics live in the snapshot `summary`, so data and cursor commit in
-  * the SAME atomic operation — the exactly-once mechanism the reference only
-  * approximates by emitting STATE after RECORD batches
-  * (`cmd/airbyte-source/read.go:131-137`).
+  * metadata + an atomic version-pointer swap. Per-shard VGTID cursors and
+  * lineage live in the snapshot `summary` and per-batch metrics files in its
+  * `metricsFiles` list, so data, cursors and metrics commit in the SAME atomic
+  * operation — the exactly-once mechanism the reference only approximates by
+  * emitting STATE after RECORD batches (`cmd/airbyte-source/read.go:131-137`).
   *
   * Layout (works on any Hadoop FileSystem — local, HDFS, S3A):
   *   <root>/data/<uuid>.parquet          immutable data files
+  *   <root>/metrics/gen<T>-<uuid>.parquet immutable metrics files (tier T)
   *   <root>/meta/m-<uuid>.json           immutable manifest (files of one bucket group)
   *   <root>/meta/v<N>.json               snapshot N (schemas + manifest list + summary)
   *   <root>/meta/version-hint.txt        current version (atomic rename swap)
@@ -85,6 +89,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   private val metaDir = new Path(root, "meta")
   private val dataDir = new Path(root, "data")
+  private val metricsDir = new Path(root, "metrics")
   private val hintFile = new Path(metaDir, "version-hint.txt")
 
   // ---- snapshot IO -------------------------------------------------------
@@ -305,55 +310,26 @@ final class LakeTable(val root: String, spark: SparkSession) {
     stage
   }
 
-  /** The staged files of one `_kind` partition, if any were written. */
-  private[graft] def stagedKindDf(spark2: SparkSession, stage: Path,
-      kind: String): Option[DataFrame] = {
-    val p = new Path(stage, s"_kind=$kind")
-    if (!fs.exists(p)) None else Some(spark2.read.parquet(p.toString))
-  }
-
   /** BOTH staged kinds in one read, `_kind`/`_bucket` recovered as partition
-    * columns from the directory layout — lets the apply derive upsert/delete
-    * counts AND per-shard cursor stats in ONE Spark job instead of three
-    * (two footer-count jobs + a stats aggregation). None when the batch
+    * columns from the directory layout — the apply derives upsert/delete
+    * counts, per-shard cursor stats AND the survivor anti-join's keys from
+    * this one DataFrame (one file listing per batch). None when the batch
     * staged nothing. `stagedSchema` (the schema of the DataFrame that was
-    * just written, WITH `_kind`/`_bucket`) skips the per-batch footer read +
-    * schema inference — the writer knows exactly what it wrote.
+    * just written, WITH `_kind`/`_bucket`) skips footer reads + schema
+    * inference — the writer knows exactly what it wrote.
     */
   private[graft] def stagedAllDf(spark2: SparkSession, stage: Path,
-      stagedSchema: Option[StructType] = None): Option[DataFrame] = {
+      stagedSchema: StructType): Option[DataFrame] = {
     val f = fs
-    val hasAny = Seq("u", "d").exists(k => f.exists(new Path(stage, s"_kind=$k")))
-    if (!hasAny) None
+    if (!Seq("u", "d").exists(k => f.exists(new Path(stage, s"_kind=$k")))) None
     else {
-      val reader = stagedSchema match {
-        case Some(s) =>
-          // partition columns (_kind/_bucket) go last — the order Spark's
-          // partition discovery appends them in
-          val parts = Set("_kind", "_bucket")
-          val reordered = StructType(
-            s.fields.filterNot(f2 => parts.contains(f2.name)) ++
-              s.fields.filter(f2 => parts.contains(f2.name)))
-          spark2.read.schema(reordered)
-        case None => spark2.read
-      }
-      Some(reader.parquet(stage.toString))
+      // partition columns (_kind/_bucket) go last — the order Spark's
+      // partition discovery appends them in
+      val parts = Set("_kind", "_bucket")
+      val (partCols, dataCols) = stagedSchema.fields.partition(f2 => parts.contains(f2.name))
+      Some(spark2.read.schema(StructType(dataCols ++ partCols)).parquet(stage.toString))
     }
   }
-
-  /** Parquet-footer row count of one staged kind (no data scan). */
-  private[graft] def stagedCount(spark2: SparkSession, stage: Path, kind: String): Long =
-    stagedKindDf(spark2, stage, kind).map(_.count()).getOrElse(0L)
-
-  /** Merge keys present in the staged batch (both `u` and `d` kinds; the
-    * per-shard stats provenance rides as `_s_*` columns ON the winner rows,
-    * pruned away here) — column-pruned read.
-    */
-  private[graft] def stagedKeys(spark2: SparkSession, stage: Path,
-      keyCols: Seq[String]): DataFrame =
-    Seq("u", "d").flatMap(stagedKindDf(spark2, stage, _))
-      .map(_.select(keyCols.map(col): _*))
-      .reduce(_.unionByName(_))
 
   /** Adopt staged upsert files as final data files (move, no rewrite). */
   private[graft] def adoptStagedUpserts(stage: Path, schemaVersion: Int): Seq[DataFileEntry] = {
@@ -368,6 +344,19 @@ final class LakeTable(val root: String, spark: SparkSession) {
           throw new IllegalStateException(s"failed to adopt ${st.getPath}")
         DataFileEntry(s"data/$name", bucket, -1L, schemaVersion)
       }
+    }
+  }
+
+  /** Move files staged for the metrics list into metrics/ (no rewrite);
+    * returns their table-relative paths for [[commit]].
+    */
+  private[graft] def adoptMetrics(files: Seq[Path]): Seq[String] = {
+    val f = fs
+    if (files.nonEmpty) f.mkdirs(metricsDir)
+    files.map { p =>
+      if (!f.rename(p, new Path(metricsDir, p.getName)))
+        throw new IllegalStateException(s"failed to adopt $p")
+      s"metrics/${p.getName}"
     }
   }
 
@@ -386,7 +375,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   /** Commit a new snapshot replacing all files in `replacedBuckets` with
     * `newFiles`, merging `summaryUpdates` into the previous summary (keys in
-    * `dropSummaryKeys` are removed — bounded-lineage pruning).
+    * `dropSummaryKeys` are removed — bounded-lineage pruning). The metrics
+    * list drops `foldedMetrics` and gains `newMetrics`.
     * Single-writer (the streaming driver); the version-hint swap is atomic.
     *
     * Metadata cost: only manifests of bucket GROUPS touched by
@@ -399,7 +389,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
       replacedBuckets: Set[Int],
       newFiles: Seq[DataFileEntry],
       summaryUpdates: Map[String, String],
-      dropSummaryKeys: Set[String] = Set.empty): Snapshot = {
+      dropSummaryKeys: Set[String] = Set.empty,
+      newMetrics: Seq[String] = Nil,
+      foldedMetrics: Set[String] = Set.empty): Snapshot = {
     val prev = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
     val touchedGroups =
       (replacedBuckets.iterator ++ newFiles.iterator.map(_.bucket)).map(prev.groupOf).toSet
@@ -417,7 +409,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
     val snap = prev.copy(
       version = prev.version + 1,
       manifests = (untouched ++ rewritten).sortBy(_.loBucket),
-      summary = (prev.summary ++ summaryUpdates) -- dropSummaryKeys)
+      summary = (prev.summary ++ summaryUpdates) -- dropSummaryKeys,
+      metricsFiles = prev.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
     writeSnapshot(snap)
     snap
   }
@@ -445,8 +438,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** Drop snapshot metadata older than the last `keepLast` versions and
-    * delete data files AND manifest files no kept snapshot references (time
-    * travel window + GC of orphans from crashed commits).
+    * delete data, metrics and manifest files no kept snapshot references
+    * (time travel window + GC of orphans from crashed commits), plus stage
+    * dirs a crashed apply stranded (single-writer: none is live here).
     */
   def expireSnapshots(keepLast: Int = 3): Unit = {
     val cur = currentVersion.getOrElse(return)
@@ -470,11 +464,14 @@ final class LakeTable(val root: String, spark: SparkSession) {
     val kept = versionsOnDisk.filter(_ >= keepFrom).sorted.map(snapshot)
     val keptManifests = kept.flatMap(_.manifests).distinctBy(_.path)
     val referenced = keptManifests.flatMap(readManifest).map(_.path).toSet
-    // delete unreferenced data files
-    f.listStatus(dataDir).foreach { st =>
-      val rel = s"data/${st.getPath.getName}"
-      if (!referenced.contains(rel)) f.delete(st.getPath, false)
+    val referencedMetrics = kept.flatMap(_.metricsFiles).toSet
+    // delete unreferenced data and metrics files
+    Seq(dataDir -> referenced, metricsDir -> referencedMetrics).foreach { case (dir, refs) =>
+      if (f.exists(dir)) f.listStatus(dir).foreach { st =>
+        if (!refs.contains(s"${dir.getName}/${st.getPath.getName}")) f.delete(st.getPath, false)
+      }
     }
+    f.globStatus(new Path(root, "stage-*")).foreach(st => f.delete(st.getPath, true))
     // delete unreferenced manifests (expired snapshots' and crash orphans)
     // and temp-write leftovers a crash between create and rename strands
     // (.m-*.tmp / .v*.tmp / .version-hint.*.tmp — single-writer, so no
@@ -527,6 +524,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
 object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
+  private val FormatVersion = 3
 
   def bucketExpr(numBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("repo")), lit(numBuckets)).cast("int")
@@ -558,7 +556,7 @@ object LakeTable {
 
   def snapshotToJson(s: Snapshot): String = {
     val n = mapper.createObjectNode()
-    n.put("formatVersion", 2)
+    n.put("formatVersion", FormatVersion)
     n.put("version", s.version)
     n.put("schemaVersion", s.schemaVersion)
     n.put("numBuckets", s.numBuckets)
@@ -579,19 +577,20 @@ object LakeTable {
     }
     val sum = n.putObject("summary")
     s.summary.toSeq.sortBy(_._1).foreach { case (k, v) => sum.put(k, v) }
+    val metrics = n.putArray("metrics")
+    s.metricsFiles.foreach(metrics.add)
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
   }
 
   def snapshotFromJson(json: String): Snapshot = {
     val n = mapper.readTree(json)
-    // fail LOUD on pre-manifest-tree metadata, never NPE: formatVersion 1
-    // kept the full file inventory inline in v<N>.json
-    if (n.get("manifests") == null)
+    // fail LOUD on older metadata, never NPE: formatVersion 1 kept the file
+    // inventory inline, formatVersion 2 kept metrics outside the snapshot
+    val fv = Option(n.get("formatVersion")).map(_.asInt()).getOrElse(1)
+    if (fv != FormatVersion)
       throw new IllegalStateException(
-        "unsupported snapshot format: no 'manifests' list (formatVersion 1, " +
-          "pre-manifest-tree inline file inventory). Rebuild the table, or " +
-          "migrate by wrapping the legacy 'files' array in one manifest per " +
-          "bucket group.")
+        s"unsupported snapshot formatVersion $fv (this build reads $FormatVersion). " +
+          "Rebuild the table.")
     val schemas = n.get("schemas").properties().asScala.map { e =>
       val fields = e.getValue.asInstanceOf[ArrayNode].asScala.map { fn =>
         FieldDef(fn.get("id").asInt(), fn.get("name").asText(), fn.get("type").asText())
@@ -603,7 +602,9 @@ object LakeTable {
         mn.get("hi").asInt(), mn.get("fileCount").asInt())
     }.toSeq
     val summary = n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+    val metrics = n.get("metrics").asInstanceOf[ArrayNode].asScala.map(_.asText()).toSeq
     Snapshot(n.get("version").asLong(), n.get("schemaVersion").asInt(), schemas,
-      n.get("numBuckets").asInt(), n.get("bucketsPerManifest").asInt(), manifests, summary)
+      n.get("numBuckets").asInt(), n.get("bucketsPerManifest").asInt(), manifests, summary,
+      metrics)
   }
 }

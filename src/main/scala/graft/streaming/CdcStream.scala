@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.apply.CdcApply
-import graft.core.ShardStats
 import graft.genlog.GenConfig
 import graft.laketable.LakeTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming CDC ingest driver — the re-imagined `read` verb
@@ -32,11 +31,11 @@ object CdcStream {
       compactEvery: Option[Int] = None,
       maxFilesPerBucket: Int = 4,
       // snapshot-expiry cadence: every N batches, drop snapshot metadata
-      // older than `keepSnapshots` versions and GC unreferenced data files,
-      // manifests, and crash-stranded temps. Without this a long-lived
-      // stream accretes one v<N>.json + O(touched groups) manifests per
-      // commit forever — the meta dir must stay bounded like the data and
-      // metrics dirs. None disables (keep every snapshot / external expiry).
+      // older than `keepSnapshots` versions and GC unreferenced data and
+      // metrics files, manifests, and crash-stranded temps and stage dirs.
+      // Without this a long-lived stream accretes one v<N>.json + O(touched
+      // groups) manifests per commit forever. None disables (keep every
+      // snapshot / external expiry).
       expireEvery: Option[Int] = Some(32),
       keepSnapshots: Int = 8,
       startingGtids: Map[String, Map[String, String]] = Map.empty,
@@ -162,197 +161,17 @@ object CdcStream {
       resumeOptions(rc) // explicit state wins over starting_gtids (read.go:169-180)
   }
 
-  // metrics sidecar schema, fixed (see writeMetrics). Nullability mirrors
-  // what a Spark tuple-DataFrame write produced (numerics required, strings
-  // optional) so direct-written and historically Spark-written files merge
-  // cleanly under one inferred schema.
-  private lazy val metricsSchema: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    def req(t: PrimitiveType.PrimitiveTypeName, n: String) =
-      Types.required(t).named(n)
-    def str(n: String) = Types.optional(BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named(n)
-    Types.buildMessage()
-      .addField(req(INT64, "batch_id"))
-      .addField(str("keyspace"))
-      .addField(str("shard"))
-      .addField(str("vgtid_start"))
-      .addField(str("vgtid_end"))
-      .addField(req(INT64, "rows"))
-      .addField(req(INT64, "wall_ms"))
-      .addField(req(DOUBLE, "batch_events_per_sec"))
-      .addField(req(INT64, "committed_version"))
-      .named("spark_schema")
-  }
-
-  /** Append one row per (batch, shard) to the table's metrics sidecar —
-    * per-partition lineage (shard, vgtid range, rows) + throughput, the
-    * north-star's per-micro-batch metrics table.
-    *
-    * Written DIRECTLY with the parquet writer on the driver: the rows are
-    * O(shards) per batch, and the previous `coalesce(1).write` formulation
-    * paid a full Spark job (driver→scheduler→task→commit protocol) per
-    * micro-batch just to emit a few hundred bytes. Same directory layout,
-    * same `part-*` naming contract ([[compactMetrics]]/[[backfillMetrics]]
-    * key on the prefix), byte-compatible schema.
+  /** Read the metrics table (one row per batch × shard): exactly the files
+    * the current snapshot lists, each batch's rows committed atomically with
+    * its data and cursors — no de-duplication, and files an in-flight or
+    * crashed commit left in metrics/ are never read.
     */
-  private def writeMetrics(spark: SparkSession, tableRoot: String, batchId: Long,
-      stats: Map[String, ShardStats], wallMs: Long, version: Long): Unit = {
-    if (stats.isEmpty) return
-    val totalRows = stats.values.map(_.rows).sum
-    val evPerSec = if (wallMs > 0) totalRows * 1000.0 / wallMs else 0.0
-    val dir = new org.apache.hadoop.fs.Path(s"$tableRoot/metrics")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val file = new org.apache.hadoop.fs.Path(dir,
-      s"part-direct-${java.util.UUID.randomUUID()}.parquet")
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
-      .withType(metricsSchema)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      stats.toSeq.sortBy(_._1).foreach { case (shard, st) =>
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(metricsSchema)
-        g.add("batch_id", batchId)
-        g.add("keyspace", st.cursor.keyspace)
-        g.add("shard", shard)
-        g.add("vgtid_start", st.vgtidStart)
-        g.add("vgtid_end", st.vgtidEnd)
-        g.add("rows", st.rows)
-        g.add("wall_ms", wallMs)
-        g.add("batch_events_per_sec", evPerSec)
-        g.add("committed_version", version)
-        writer.write(g)
-      }
-    } finally writer.close()
-  }
-
-  /** Reconstruct a skipped-replay batch's metrics rows from the committed
-    * snapshot's `lineage:b<N>` summary entry, iff they are missing. Writing
-    * only-when-missing keeps the sidecar's row VALUES deterministic (no
-    * duplicate with a different wall_ms for the reader's dedup to pick
-    * arbitrarily). Lineage is pruned to a trailing window, but a replayed
-    * batch is by construction the newest — always inside the window.
-    */
-  private[graft] def backfillMetrics(spark: SparkSession, tableRoot: String,
-      table: LakeTable, batchId: Long): Unit = {
-    val lineage = table.summaryValue(s"lineage:b$batchId").getOrElse(return)
-    val (wallMs, version, stats) = CdcApply.lineageStats(lineage)
-    if (stats.isEmpty) return
-    val dir = new org.apache.hadoop.fs.Path(s"$tableRoot/metrics")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing sidecar — or a dir the parquet writer created but died
-    // before committing any data file into (footerless: no part-*/gen*-*
-    // entries, only writer scaffolding) — means the crash hit before the
-    // first append completed: treat as absent and write. Probing for data
-    // files FIRST keeps this heal path out of spark.read's
-    // unable-to-infer-schema AnalysisException, which would wedge every
-    // retry. Any OTHER read failure (e.g. a corrupt part file among real
-    // data files) must propagate: a blind append over
-    // unreadable-but-present rows would duplicate them with different
-    // wall_ms and break the deterministic-values contract.
-    val hasDataFiles = fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith("part-") || n.startsWith("gen")
-    }
-    val present = hasDataFiles &&
-      readMetrics(spark, tableRoot).filter(s"batch_id = $batchId").limit(1).count() > 0
-    if (!present) writeMetrics(spark, tableRoot, batchId, stats, wallMs, version)
-  }
-
-  /** Read the metrics table (one row per batch × shard). Deduplicated on the
-    * natural key: a crash inside a sidecar fold (between promoting the
-    * folded file and deleting its inputs) can leave the same rows in two
-    * files — duplication is the ONLY crash hazard of the fold scheme, and
-    * the reader absorbs it, so no swap/rename dance of the whole directory
-    * is ever needed.
-    *
-    * ==Polling a LIVE stream? Pass `lenient = true`.==
-    * A fold on the writer thread may delete input files between this
-    * reader's listing and its execution; the strict default then fails with
-    * FileNotFoundException. That default is deliberate — post-run audits and
-    * tests must see genuinely missing files LOUDLY — but any monitoring
-    * caller reading concurrently with an active writer needs `lenient`
-    * (such a read can transiently miss just-folded rows; re-read to settle).
-    */
-  def readMetrics(spark: SparkSession, tableRoot: String,
-      lenient: Boolean = false): DataFrame = {
-    // lenient=true (for readers POLLING concurrently with a live writer): a
-    // fold on the writer thread may delete input files between the reader's
-    // listing and its execution — skip them; such a read can transiently
-    // miss just-folded rows, re-read for a settled view. The strict default
-    // keeps genuinely missing files LOUD for post-run audits and tests.
-    val base = if (lenient) spark.read.option("ignoreMissingFiles", "true")
-               else spark.read
-    base.parquet(s"$tableRoot/metrics")
-      .dropDuplicates("batch_id", "keyspace", "shard")
-  }
-
-  /** Bound the metrics sidecar's file count with a TIERED generational fold
-    * (each micro-batch appends one small file; a year of micro-batches is a
-    * million tiny files): once `maxFiles` per-batch `part-*` files
-    * accumulate, fold them into ONE `gen1-*` file; once `maxFiles` gen1
-    * files accumulate (~maxFiles² batches), fold those into a `gen2-*`.
-    * Each row is rewritten O(tiers) times total — never the
-    * rewrite-everything-every-32-batches O(N²) a single-level fold costs —
-    * and no fold ever moves the live directory. A crash between promote and
-    * input-delete duplicates rows; [[readMetrics]] dedups (and skips files
-    * a concurrent fold deletes mid-read — such a read may transiently miss
-    * the folded rows; re-read for a settled view). Returns true when any
-    * tier folded.
-    */
-  def compactMetrics(spark: SparkSession, tableRoot: String, maxFiles: Int = 32): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$tableRoot/metrics")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // migration/adoption of pre-tiered swap leftovers: an earlier scheme
-    // could crash with the sidecar moved aside to .metrics-old-*; adopt it
-    // (restore when the live dir is gone, otherwise fold its files in —
-    // duplicates are absorbed by the reader's dedup)
-    fs.globStatus(new Path(s"$tableRoot/.metrics-old-*")).foreach { o =>
-      if (!fs.exists(dir)) {
-        require(fs.rename(o.getPath, dir), s"metrics adopt failed: ${o.getPath}")
-      } else {
-        fs.listStatus(o.getPath).filter(_.getPath.getName.startsWith("part-"))
-          .zipWithIndex.foreach { case (f, i) =>
-            // a failed rename must NOT reach the delete below — these rows
-            // exist nowhere else
-            require(fs.rename(f.getPath, new Path(dir,
-              s"gen1-adopt-${java.util.UUID.randomUUID()}-$i.parquet")),
-              s"metrics adopt rename failed: ${f.getPath}")
-          }
-        fs.delete(o.getPath, true)
-      }
-    }
-    if (!fs.exists(dir)) return false
-    // tmp leftovers from a crashed fold: inputs were never deleted, safe sweep
-    fs.globStatus(new Path(s"$tableRoot/.metrics-tmp-*"))
-      .foreach(s => fs.delete(s.getPath, true))
-    def foldTier(inPrefix: String, outPrefix: String): Boolean = {
-      val files = fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(inPrefix))
-      if (files.length <= maxFiles) return false
-      val id = java.util.UUID.randomUUID().toString
-      val tmp = new Path(s"$tableRoot/.metrics-tmp-$id")
-      spark.read.parquet(files.map(_.toString): _*).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val folded = fs.listStatus(tmp).map(_.getPath)
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(sys.error(s"fold produced no file under $tmp"))
-      // promote INTO the live dir (single rename), then drop the inputs
-      require(fs.rename(folded, new Path(dir, s"$outPrefix$id.parquet")),
-        s"metrics fold promote failed: $folded")
-      files.foreach(f => fs.delete(f, true))
-      fs.delete(tmp, true)
-      true
-    }
-    val t1 = foldTier("part-", "gen1-")
-    val t2 = foldTier("gen1-", "gen2-")
-    // a gen3 tier caps the file count at ~4×maxFiles for any realistic
-    // stream lifetime (gen3 fills after maxFiles³ ≈ 32k× maxFiles batches)
-    val t3 = foldTier("gen2-", "gen3-")
-    t1 || t2 || t3
+  def readMetrics(spark: SparkSession, tableRoot: String): DataFrame = {
+    val files = new LakeTable(tableRoot, spark).currentSnapshot.map(_.metricsFiles).getOrElse(Nil)
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], CdcApply.metricsSchema)
+    else spark.read.schema(CdcApply.metricsSchema)
+      .parquet(files.map(f => new org.apache.hadoop.fs.Path(tableRoot, f).toString): _*)
   }
 
   /** Deterministic validation failures must surface immediately —
@@ -559,7 +378,6 @@ object CdcStream {
       .option("checkpointLocation", rc.checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
         // single source scan: cursors + lineage stats come back from the
         // apply itself (recovered from the staged winners' provenance
         // columns), not a pre-scan of the batch here
@@ -570,17 +388,15 @@ object CdcStream {
             keyColumns = rc.wireTable.map(_.keys).getOrElse(Seq("repo", "path")),
             twoPassDedup = rc.twoPassDedup),
           streamName = rc.streamName)
+        // stream-driven Avro evolution: the batch commit recorded the
+        // announced wire version, so the trigger is derivable from committed
+        // state — run it after fresh batches for freshness, after skipped
+        // replays (a crash between the bump batch's commit and its evolution
+        // commits) and at end-of-sync, so NO crash/fence window can strand
+        // v2 data under a v1 schema
+        maybeEvolve(table, rc)
         if (!res.skipped) {
           batches += 1
-          writeMetrics(spark, rc.tableRoot, batchId, res.stats,
-            (System.nanoTime() - t0) / 1000000L, res.snapshot.version)
-          compactMetrics(spark, rc.tableRoot)
-          // stream-driven Avro evolution: the batch commit above recorded
-          // the announced wire version, so the trigger is derivable from
-          // committed state — run it here for freshness, and again on
-          // skipped replays and at end-of-sync so NO crash/fence window
-          // can strand v2 data under a v1 schema
-          maybeEvolve(table, rc)
           // periodic small-file compaction (its commit is separate from the
           // batch commit and content-neutral, so replays stay idempotent)
           rc.compactEvery.foreach { k =>
@@ -592,17 +408,6 @@ object CdcStream {
           rc.expireEvery.foreach { k =>
             if (k > 0 && batchId % k == k - 1) table.expireSnapshots(rc.keepSnapshots)
           }
-        } else {
-          // replay-skip after a crash BETWEEN snapshot commit and metrics
-          // append: the batch's data and cursors are committed but its
-          // metrics row may never have been written. Heal from the committed
-          // snapshot's lineage (which carries per-shard stats + apply wall)
-          // so metrics stay exactly-once-per-batch across that crash window.
-          backfillMetrics(spark, rc.tableRoot, table, batchId)
-          // …and heal the evolution crash window the same way: a crash
-          // between the bump batch's commit and its evolution commits left
-          // the announced version ahead of the applied watermark
-          maybeEvolve(table, rc)
         }
         ()
       }

@@ -103,9 +103,20 @@ class ManifestSpec extends AnyFunSuite with SparkSupport {
     val s = Snapshot(3L, 1, Map(0 -> Seq(FieldDef(1, "repo", "STRING")),
       1 -> Seq(FieldDef(1, "repository", "STRING"))), 64, 8,
       Seq(ManifestEntry("meta/m-x.json", 0, 8, 12), ManifestEntry("meta/m-y.json", 56, 64, 1)),
-      Map("cursors" -> "{}"))
+      Map("cursors" -> "{}"), Seq("metrics/gen0-a.parquet", "metrics/gen1-b.parquet"))
     assert(LakeTable.snapshotFromJson(LakeTable.snapshotToJson(s)) == s)
     val files = Seq(DataFileEntry("data/a.parquet", 3, 10L, 0))
     assert(LakeTable.manifestFromJson(LakeTable.manifestToJson(files)) == files)
+  }
+
+  test("a formatVersion 2 snapshot (metrics outside the snapshot) fails loudly") {
+    val s = Snapshot(1L, 0, Map(0 -> Seq(FieldDef(1, "repo", "STRING"))), 8, 1, Nil, Map.empty)
+    val n = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(LakeTable.snapshotToJson(s))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    n.put("formatVersion", 2)
+    n.remove("metrics")
+    val e = intercept[IllegalStateException](LakeTable.snapshotFromJson(n.toString))
+    assert(e.getMessage.contains("formatVersion 2") && e.getMessage.contains("Rebuild"))
   }
 }

@@ -249,14 +249,36 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val batches = CdcStream.runAvailableNow(spark, CdcStream.RunConfig(c, s"$base/t",
       s"$base/cp", maxEventsPerTrigger = Some(100L)))
     assert(batches >= 50, s"expected ≥50 micro-batches, got $batches")
+    // the snapshot's metrics list: at most MetricsTierFiles per tier, and
+    // the tier-0 threshold was crossed (a fold ran inside a batch commit)
+    val listed = t.currentSnapshot.get.metricsFiles
+    val tiers = listed.groupBy(_.stripPrefix("metrics/gen").takeWhile(_.isDigit).toInt)
+    assert(tiers.values.forall(_.size <= graft.apply.CdcApply.MetricsTierFiles),
+      s"metrics list tiers ${tiers.map { case (k, v) => k -> v.size }} exceed the threshold")
+    assert(tiers.keySet.exists(_ > 0), s"no fold ran: tiers ${tiers.keySet}")
+    assert(listed.size <= 33, s"metrics list holds ${listed.size} files (unbounded growth)")
+    // metrics/ after the sync's final expiry: only what kept snapshots list
     val dir = new org.apache.hadoop.fs.Path(s"$base/t/metrics")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(dir).count(_.getPath.getName.startsWith("part-"))
-    assert(files <= 33, s"metrics sidecar accreted $files files (unbounded growth)")
-    // no batch lost through the folds
+    val files = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
+    assert(files <= 33, s"metrics dir accreted $files files (unbounded growth)")
+    // no batch lost through the folds, none repeated
     val m = CdcStream.readMetrics(spark, s"$base/t")
     assert(m.select(sum(col("rows"))).head().getLong(0) == c.numEvents)
     assert(m.select(countDistinct(col("batch_id"))).head().getLong(0) == batches)
+    assert(m.groupBy("batch_id", "shard").count().filter(col("count") =!= 1).isEmpty)
+  }
+
+  test("metrics writer leaves null optional strings unset instead of failing") {
+    val dir = new org.apache.hadoop.fs.Path(tmpDir("metricsnull"))
+    val st = graft.core.ShardStats(
+      graft.core.ShardCursor(null, "-80", "MySQL56/x:1-5", None), 5L, null, "MySQL56/x:1-5")
+    val f = graft.apply.CdcApply.writeMetricsFile(spark, dir, 0,
+      graft.apply.CdcApply.metricsRows(7L, Map("-80" -> st), 10L, 3L))
+    val r = spark.read.schema(graft.apply.CdcApply.metricsSchema).parquet(f.toString).collect()
+    assert(r.length == 1 && r(0).isNullAt(1) && r(0).isNullAt(3))
+    assert(r(0).getLong(0) == 7L && r(0).getString(2) == "-80" &&
+      r(0).getString(4) == "MySQL56/x:1-5" && r(0).getLong(5) == 5L)
   }
 
   test("wirePayload source: raw wire strings stream through the DSv2 source and " +
@@ -312,58 +334,6 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
       Seq("_graft_vgtid", "_graft_seq", "_graft_extracted_at"))
     assert(df.filter(col("_graft_vgtid").startsWith("MySQL56/")).count() == df.count())
     assert(df.filter(col("verified").isNull).count() == 0)
-  }
-
-  test("compactMetrics crash window: duplicated fold output (promote happened, " +
-    "input delete didn't) is absorbed by the reader; tmp leftovers swept; " +
-    "no fold state ever moves the live dir") {
-    val c = GenConfig(numEvents = 2000L, numShards = 2, numRepos = 10, pathsPerRepo = 5)
-    val base = tmpDir("metricscrash")
-    val t = new LakeTable(s"$base/t", spark)
-    t.create(ChangeEvent.rowSchema, numBuckets = 4)
-    CdcStream.runAvailableNow(spark, CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
-      maxEventsPerTrigger = Some(500L)))
-    val m0 = CdcStream.readMetrics(spark, s"$base/t")
-    val rows = m0.count()
-    val events = m0.select(sum(col("rows"))).head().getLong(0)
-    // crash simulation: a promoted fold file whose inputs were never deleted
-    // == every row present twice; plus an orphaned tmp dir
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val metricsDir = new org.apache.hadoop.fs.Path(s"$base/t/metrics")
-    val aPart = fs.listStatus(metricsDir).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    org.apache.hadoop.fs.FileUtil.copy(fs, aPart, fs,
-      new org.apache.hadoop.fs.Path(metricsDir, "gen1-crashdup.parquet"),
-      false, spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/t/.metrics-tmp-crash"))
-    // reader view unchanged despite the physical duplicate
-    val m1 = CdcStream.readMetrics(spark, s"$base/t")
-    assert(m1.count() == rows && m1.select(sum(col("rows"))).head().getLong(0) == events)
-    CdcStream.compactMetrics(spark, s"$base/t")
-    assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/t/.metrics-tmp-*")).isEmpty)
-    val m2 = CdcStream.readMetrics(spark, s"$base/t")
-    assert(m2.count() == rows && m2.select(sum(col("rows"))).head().getLong(0) == events)
-
-    // pre-tiered-scheme migration, branch 1: the whole sidecar stranded
-    // under .metrics-old-* with no live dir → adopted back verbatim
-    fs.rename(metricsDir, new org.apache.hadoop.fs.Path(s"$base/t/.metrics-old-legacy"))
-    CdcStream.compactMetrics(spark, s"$base/t")
-    val m3 = CdcStream.readMetrics(spark, s"$base/t")
-    assert(m3.count() == rows && m3.select(sum(col("rows"))).head().getLong(0) == events)
-    // branch 2: an old leftover ALONGSIDE a live dir → its files fold in
-    // (duplicates absorbed by the reader), leftover dir removed
-    val legacy = new org.apache.hadoop.fs.Path(s"$base/t/.metrics-old-two")
-    fs.mkdirs(legacy)
-    val somePart = fs.listStatus(metricsDir).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    org.apache.hadoop.fs.FileUtil.copy(fs, somePart, fs,
-      new org.apache.hadoop.fs.Path(legacy, "part-legacy.parquet"),
-      false, spark.sparkContext.hadoopConfiguration)
-    CdcStream.compactMetrics(spark, s"$base/t")
-    assert(!fs.exists(legacy))
-    val m4 = CdcStream.readMetrics(spark, s"$base/t")
-    assert(m4.count() == rows && m4.select(sum(col("rows"))).head().getLong(0) == events)
   }
 
   test("starting_gtids start the tail mid-binlog; checkpoint beats starting_gtids") {

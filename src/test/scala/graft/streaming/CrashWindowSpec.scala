@@ -12,7 +12,9 @@ import java.nio.file.{Files, Paths}
   * BEFORE the streaming checkpoint advances means the next run REPLAYS the
   * last micro-batch. Simulated by deleting the checkpoint's newest commit
   * marker (exactly the state Spark leaves behind in that window) — the replay
-  * must hit the snapshot's batch-id idempotence gate and be a no-op.
+  * must hit the snapshot's batch-id idempotence gate and be a no-op. A
+  * batch's metrics rows commit in the same snapshot, so they need no repair
+  * on any of these paths.
   */
 class CrashWindowSpec extends AnyFunSuite with SparkSupport {
 
@@ -26,6 +28,9 @@ class CrashWindowSpec extends AnyFunSuite with SparkSupport {
     CdcStream.runAvailableNow(spark, rc)
     val version = t.currentVersion.get
     val rows = t.read().count()
+    def metrics() = CdcStream.readMetrics(spark, s"$base/t")
+      .orderBy("batch_id", "shard").collect().toSeq
+    val metricsBefore = metrics()
 
     // crash window: data+cursors committed, checkpoint commit marker lost
     val commits = Paths.get(s"$base/cp/commits")
@@ -49,87 +54,43 @@ class CrashWindowSpec extends AnyFunSuite with SparkSupport {
     val got = digest(t.read())
     val want = digest(ChangelogGen.expectedFinalState(spark, c))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+
+    // the metrics rows committed with each batch: every committed
+    // (batch, shard) exactly once — no reader de-duplication — unchanged by
+    // the replay, and summing to the stream
+    val m = metrics()
+    assert(m == metricsBefore, "the replay changed the metrics rows")
+    val keys = m.map(r => (r.getLong(0), r.getString(2)))
+    assert(keys.distinct == keys, s"a (batch, shard) repeats: $keys")
+    val lastBatch = t.summaryValue("batch:default").get.toLong
+    assert(keys.map(_._1).toSet == (0L to lastBatch).toSet)
+    assert(m.map(_.getLong(5)).sum == c.numEvents)
   }
 
-  test("crash between snapshot commit and metrics append: the replay-skip " +
-    "backfills the batch's metrics rows from committed lineage — exactly-once " +
-    "metrics across the second crash window too") {
-    val c = GenConfig(numEvents = 6000L, numShards = 2, numRepos = 20, pathsPerRepo = 10)
-    val base = tmpDir("crashm")
-    val t = new LakeTable(s"$base/t", spark)
-    t.create(ChangeEvent.rowSchema, numBuckets = 4)
-    val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
-      maxEventsPerTrigger = Some(2000L))
-    CdcStream.runAvailableNow(spark, rc)
-    val lastBatch = CdcStream.readMetrics(spark, s"$base/t")
-      .agg(max(col("batch_id"))).head.getLong(0)
-    val fullMetrics = CdcStream.readMetrics(spark, s"$base/t")
-      .orderBy("batch_id", "shard").collect().toSeq
-
-    // crash window #2: snapshot committed (data + cursors + lineage), but the
-    // process died before the metrics append AND the checkpoint marker —
-    // simulated by deleting the checkpoint marker and the sidecar file(s)
-    // holding the last batch's rows
-    val commits = Paths.get(s"$base/cp/commits")
-    val last = Files.list(commits).toArray.map(_.toString)
-      .filterNot(_.endsWith(".crc")).maxBy(p => p.split("/").last.toLong)
-    Files.delete(Paths.get(last))
-    Files.deleteIfExists(
-      Paths.get(last).getParent.resolve("." + Paths.get(last).getFileName + ".crc"))
-    val metricsDir = Paths.get(s"$base/t/metrics")
-    Files.list(metricsDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach { f =>
-        val holdsLast = spark.read.parquet(f.toString)
-          .filter(col("batch_id") === lastBatch).limit(1).count() > 0
-        if (holdsLast) {
-          Files.delete(f)
-          Files.deleteIfExists(f.getParent.resolve("." + f.getFileName + ".crc"))
-        }
-      }
-    assert(CdcStream.readMetrics(spark, s"$base/t")
-      .filter(col("batch_id") === lastBatch).count() == 0, "window setup failed")
-
-    // restart: apply skips the replayed batch, backfill heals the sidecar
-    CdcStream.runAvailableNow(spark, rc)
-    val healed = CdcStream.readMetrics(spark, s"$base/t")
-      .orderBy("batch_id", "shard").collect().toSeq
-    assert(healed.map(r => (r.getLong(0), r.getString(2))) ==
-      fullMetrics.map(r => (r.getLong(0), r.getString(2))),
-      "every (batch, shard) present exactly once after heal")
-    val backfilled = healed.filter(_.getLong(0) == lastBatch)
-    val original = fullMetrics.filter(_.getLong(0) == lastBatch)
-    // lineage-derived rows carry the same shard/vgtid-range/rows/version facts
-    assert(backfilled.map(r => (r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4), r.getLong(5), r.getLong(8))) ==
-      original.map(r => (r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4), r.getLong(5), r.getLong(8))))
-  }
-
-  test("crash DURING the first-ever metrics append (dir created, no data " +
-    "file committed): the footerless dir is treated as absent and the " +
-    "backfill heals it instead of wedging on unable-to-infer-schema") {
+  test("a truncated, footerless parquet file in metrics/ (a crash mid-write) " +
+    "is never read, and expireSnapshots deletes it") {
     val c = GenConfig(numEvents = 4000L, numShards = 2, numRepos = 20, pathsPerRepo = 10)
-    val base = tmpDir("crashfooterless")
+    val base = tmpDir("crashtrunc")
     val t = new LakeTable(s"$base/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 4)
     val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
       maxEventsPerTrigger = Some(2000L))
     CdcStream.runAvailableNow(spark, rc)
-    val lastBatch = CdcStream.readMetrics(spark, s"$base/t")
-      .agg(max(col("batch_id"))).head.getLong(0)
+    val listed = t.currentSnapshot.get.metricsFiles
+    assert(listed.nonEmpty)
+    val before = CdcStream.readMetrics(spark, s"$base/t")
+      .orderBy("batch_id", "shard").collect().toSeq
 
-    // simulate: the parquet writer created the dir (maybe scaffolding too)
-    // but died before committing ANY data file footer into it
-    val metricsDir = Paths.get(s"$base/t/metrics")
-    Files.list(metricsDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .foreach(p => Files.deleteIfExists(p))
-    Files.createDirectories(metricsDir.resolve("_temporary"))
-    // spark.read.parquet on this dir would throw AnalysisException — the
-    // probe must classify it as ABSENT and write, not fail every retry
-    CdcStream.backfillMetrics(spark, s"$base/t", t, lastBatch)
-    assert(CdcStream.readMetrics(spark, s"$base/t")
-      .filter(col("batch_id") === lastBatch).count() > 0,
-      "footerless dir was not healed")
+    // what a writer killed mid-file leaves: parquet magic, no footer
+    val truncated = Paths.get(s"$base/t/metrics/part-direct-crashed.parquet")
+    Files.write(truncated, "PAR1\u0000\u0001".getBytes("UTF-8"))
+    val during = CdcStream.readMetrics(spark, s"$base/t")
+      .orderBy("batch_id", "shard").collect().toSeq
+    assert(during == before, "the unlisted file changed what readMetrics returns")
+
+    t.expireSnapshots(rc.keepSnapshots)
+    assert(!Files.exists(truncated), "expireSnapshots left the unlisted metrics file")
+    assert(listed.forall(p => Files.exists(Paths.get(s"$base/t", p))))
+    assert(CdcStream.readMetrics(spark, s"$base/t").count() == before.size)
   }
 }
