@@ -39,14 +39,6 @@ object SparkEntry {
 
   private def dec(c: Column, p: Int = 18, sc: Int = 2): Column = c.cast(s"decimal($p,$sc)")
 
-  /** The self-contained CDC queries replay ~4k-event fixture changelogs:
-    * at that size the two-pass dedup's extra light aggregate + join cost
-    * more than the payload-shuffle bytes they save (measured ~0.45 s per
-    * batch on local[32]), so these stay single-pass. Result-identical
-    * either way (spec-asserted dedup equivalence).
-    */
-  private val tinyBatchConf = CdcApply.ApplyConfig(twoPassDedup = false)
-
   // --------------------------------------------------------------------- //
   // Flagship: the CDC engine end-to-end at sf-tiny — generate a sharded
   // changelog, LWW-merge it into a lake table, aggregate the final state.
@@ -57,7 +49,7 @@ object SparkEntry {
     val scratch = java.nio.file.Files.createTempDirectory("graft-entry").toString
     val table = new LakeTable(s"$scratch/t", spark)
     table.create(ChangeEvent.rowSchema, numBuckets = 4)
-    CdcApply.replayAll(table, ChangelogGen.fullStream(spark, c), tinyBatchConf)
+    CdcApply.replayAll(table, ChangelogGen.fullStream(spark, c))
     materializeAndClean(
       table.read().groupBy(col("repo"))
         .agg(count(lit(1)).as("n_files"), sum(length(col("content"))).as("n_bytes")),
@@ -399,7 +391,7 @@ object SparkEntry {
     val table = new LakeTable(s"$scratch/t", s)
     table.create(ws.landingSchema, numBuckets = 8)
     CdcApply.replayAll(table, events,
-      CdcApply.ApplyConfig(wireSpec = Some(ws), twoPassDedup = false))
+      CdcApply.ApplyConfig(wireSpec = Some(ws)))
     materializeAndClean(
       table.read().select(
         col("repo"), col("path"), col("status"), col("locations"), col("verified"),
@@ -659,7 +651,7 @@ object SparkEntry {
     val scratch = java.nio.file.Files.createTempDirectory("graft-q").toString
     val table = new LakeTable(s"$scratch/t", s)
     table.create(ChangeEvent.rowSchema, numBuckets = 4)
-    CdcApply.replayAll(table, ChangelogGen.fullStream(s, c), tinyBatchConf)
+    CdcApply.replayAll(table, ChangelogGen.fullStream(s, c))
     val st = graft.core.SyncState.fromJson(table.summaryValue("cursors").get)
     val rows = st.streams(s"${c.keyspace}:repo_content").toSeq.sortBy(_._1)
       .map { case (sh, cur) =>
@@ -971,7 +963,6 @@ object SparkEntry {
     graft.streaming.CdcStream.runAvailableNow(s, graft.streaming.CdcStream.RunConfig(
       c, s"$scratch/t", s"$scratch/cp",
       maxEventsPerTrigger = Some(2000L),
-      twoPassDedup = false, // 2k-event fixture batches: single-pass is cheaper
       expireEvery = None,
       schemaRegistry = Map(
         1 -> graft.laketable.AvroSchema.repoContentV1,
@@ -992,7 +983,7 @@ object SparkEntry {
     val scratch = java.nio.file.Files.createTempDirectory("graft-q").toString
     val table = new LakeTable(s"$scratch/t", s)
     table.create(ChangeEvent.rowSchema, numBuckets = 4)
-    CdcApply.replayAll(table, ChangelogGen.fullStream(s, c), tinyBatchConf)
+    CdcApply.replayAll(table, ChangelogGen.fullStream(s, c))
     materializeAndClean(
       table.read().select(col("repo"), col("path"), sha2(col("content"), 256).as("sha")),
       scratch)

@@ -37,9 +37,11 @@ final case class ApplyResult(
   *    for the single shuffle. Hot repos are handled by that combine, by AQE
   *    skew splitting on the join and by the key carrying `path` (high
   *    cardinality within a hot repo spreads its partitions).
-  *  - The MERGE never rewrites the whole table: only buckets present in the
-  *    batch are read back, anti-joined, and rewritten. The batch side of the
-  *    join is broadcast when small (AQE decides from runtime stats).
+  *  - The MERGE reads back, anti-joins and rewrites only the buckets present
+  *    in the batch. That bounds a commit by the batch's key spread, not by
+  *    its size: uniform keys touch every bucket, so such a batch rewrites
+  *    the whole table. The batch side of the join is broadcast when small
+  *    (AQE decides from runtime stats).
   */
 object CdcApply {
 
@@ -57,17 +59,7 @@ object CdcApply {
     */
   final case class ApplyConfig(parityMode: Boolean = false,
       wireSpec: Option[graft.core.WireTableSpec] = None,
-      keyColumns: Seq[String] = Seq("repo", "path"),
-      // two-pass winner dedup ([[dedupLwwTwoPass]]): decide winner positions
-      // over light rows + a Bloom pre-filter, so the wide aggregation
-      // shuffle never carries losing payloads (guide §3.2/§8). Default OFF:
-      // interleaved A/B at the bench shape (11M events, ~300-byte payloads,
-      // 200k keys, local[32] fast disks) measured single-pass 6.9 s vs
-      // two-pass 8.2 s — the extra source pass + Bloom build outweigh the
-      // payload-shuffle savings until payloads are much heavier than keys
-      // (multi-KB rows, or remote/slow shuffle fabric), which is when this
-      // knob earns its keep. Result-identical either way (spec-asserted).
-      twoPassDedup: Boolean = false)
+      keyColumns: Seq[String] = Seq("repo", "path"))
 
   /** Trailing window of `lineage:b<N>` summary keys retained per stream —
     * older entries are pruned at commit so the snapshot summary stays O(1)
@@ -172,115 +164,6 @@ object CdcApply {
         col("_payload"), col("_rank"), col("event_seq")).as("_win"),
         count(lit(1)).as("_key_events"))
       .select(keyCols ++ Seq(col("_win.*"), col("_key_events")): _*)
-  }
-
-  /** TWO-PASS LWW dedup (guide §8 "decide with small rows, move big rows
-    * once"): pass 1 aggregates only `(key, rank, seq, count)` — the winner
-    * POSITION per key — so its shuffle carries ~32 bytes per key-partition
-    * instead of the full event payload (content bytes). Pass 2 re-reads the
-    * events, keeps only rows matching a winner position (an inner join the
-    * planner broadcasts when the winner set is small; the payload columns of
-    * non-winners are never shuffled — and for a column-prunable source,
-    * pass 1 never even READS the payload columns), then runs the same exact
-    * [[dedupLww]]-style final aggregate over the surviving handful to
-    * resolve position ties identically to the single-pass form.
-    *
-    * Equivalence: the final aggregate is the same `lww_max_by` over the same
-    * candidate rows that would have won the single-pass aggregate (pass 1
-    * computes the exact per-key max position, and the join keeps every row
-    * AT that position — a superset containing the single-pass winner), and
-    * `_key_events` comes from pass 1's per-key count over ALL events, like
-    * the single-pass `count(lit(1))`. Spec-asserted equal to [[dedupLww]].
-    *
-    * Cost note: the source is read twice. Worth it when the dedup ratio is
-    * high (CDC catch-up streams: many events per key) or payloads are heavy;
-    * for tiny micro-batches the extra join/aggregate jobs can cost more than
-    * they save — [[ApplyConfig.twoPassDedup]] picks per caller.
-    */
-  def dedupLwwTwoPass(events: DataFrame,
-      keys: Seq[String] = Seq("repo", "path"),
-      keyLanding: (String, Column) => Column = rawKey): DataFrame =
-    dedupLwwTwoPassManaged(events, keys, keyLanding)._1
-
-  /** Two-pass with resource handle: `cleanup` unpersists the winner-position
-    * relation and drops the Bloom broadcast — call it once the returned
-    * DataFrame has been fully consumed (the apply calls it right after the
-    * staged write materializes).
-    *
-    * Winner pre-filter mechanics (guide §3.2 manual Bloom): the light pass's
-    * exact per-key winner positions feed a driver-built Bloom filter over
-    * `xxhash64(key…, rank, seq)`; pass 2 FILTERS the events on membership —
-    * never a join against the big side, so no planner/AQE strategy choice
-    * can ever shuffle or broadcast the payload stream (an exact-position
-    * join formulation measured pathological: the static planner broadcast
-    * the 11M-row generator side off its tiny size estimate). False
-    * positives only admit LOSING rows — every true winner's exact position
-    * is in the filter, so the final exact aggregate's result is unchanged
-    * by construction, at any fpp. Per-key counts ride back via a
-    * winner-scale join between the two aggregate outputs (both sides have
-    * runtime stats, so AQE sizes that join safely).
-    */
-  private[graft] def dedupLwwTwoPassManaged(events: DataFrame,
-      keys: Seq[String] = Seq("repo", "path"),
-      keyLanding: (String, Column) => Column = rawKey): (DataFrame, () => Unit) = {
-    val keyed = withKeyCols(events, keys, keyLanding)
-      .withColumn("_rank", vgtid_rank(col("vgtid")))
-    val keyCols = keys.map(k => col(s"_$k"))
-    // pass 1: exact winner position per key, ObjectHashAggregate-eligible
-    // (LwwMaxBy with a 2-long payload), plus the per-key event count.
-    // Persisted because it is consumed three times (count, Bloom build,
-    // count join) — ~32 bytes per key, spills to disk beyond memory.
-    val light = keyed
-      .groupBy(keyCols: _*)
-      .agg(graft.functions.LwwMaxBy.lww_max_by(
-        struct(col("_rank"), col("event_seq")), col("_rank"), col("event_seq")).as("_wpos"),
-        count(lit(1)).as("_key_events"))
-      .select(keys.map(k => col(s"_$k").as(s"_w_$k")) ++ Seq(
-        col("_wpos._rank").as("_wrank"), col("_wpos.event_seq").as("_wseq"),
-        col("_key_events")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nKeys = light.count()
-    val eventHash = xxhash64(keyCols ++ Seq(col("_rank"), col("event_seq")): _*)
-    // empty batch: stat.bloomFilter NPEs on a zero-row input (null aggregate
-    // buffer) — and there is nothing to keep anyway
-    var bfB: Option[org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]] = None
-    val winFilter: Column =
-      if (nKeys == 0) lit(false)
-      else {
-        val lightHash = xxhash64(
-          keys.map(k => col(s"_w_$k")) ++ Seq(col("_wrank"), col("_wseq")): _*)
-        // fpp 1% ≈ 9.6 bits/key: ~240 KB per million keys on the driver and
-        // in each task — the §3.2 cost, paid instead of any big-side shuffle
-        val bf = light.select(lightHash.as("_h")).stat.bloomFilter("_h", nKeys, 0.01)
-        val b = events.sparkSession.sparkContext.broadcast(bf)
-        bfB = Some(b)
-        // asNondeterministic (guide §4.4): a deterministic predicate would be
-        // PUSHED THROUGH the source projection, rewriting the condition in
-        // terms of the projection's expressions — for an expression-defined
-        // source (the synthetic changelog) that inlines the full payload
-        // subtree into the filter and re-evaluates it per extraction
-        // (measured 25+ s vs ~7 s). Non-deterministic pins the filter ABOVE
-        // the projection: rows materialize once, then the cheap probe runs.
-        val mightWin = udf((h: Long) => b.value.mightContainLong(h)).asNondeterministic()
-        mightWin(eventHash)
-      }
-    // pass 2: membership filter (pushes below the payload projection — for
-    // a column-prunable source the losing rows' payload columns are never
-    // computed), then the SAME exact aggregate as dedupLww over the
-    // surviving winners+FPs — identical winner semantics, tie class included
-    val filtered = keyed.filter(winFilter)
-    val payload = events.columns.map(col) :+ col("_rank")
-    val winners = filtered
-      .withColumn("_payload", struct(payload: _*)) // pre-built, see dedupLww
-      .groupBy(keyCols: _*)
-      .agg(graft.functions.LwwMaxBy.lww_max_by(
-        col("_payload"), col("_rank"), col("event_seq")).as("_win"))
-    // attach pass-1's per-key event counts (null-safe: null keys group)
-    val joinCond = keys.map(k => col(s"_$k") <=> col(s"_w_$k")).reduce(_ && _)
-    val out = winners.join(light, joinCond, "inner")
-      .select(keyCols ++ Seq(col("_win.*"), col("_key_events")): _*)
-    (out, () => { light.unpersist(false); bfB.foreach(_.destroy()); () })
   }
 
   /** Per-winner provenance columns staged alongside the data columns: enough
@@ -397,9 +280,7 @@ object CdcApply {
     // see one identical typed key value
     val keyLanding = conf.wireSpec.map(wireKey).getOrElse(rawKey)
     val filtered = if (conf.parityMode) events.filter(col("op") =!= "delete") else events
-    val (deduped, cleanupDedup) =
-      if (conf.twoPassDedup) dedupLwwTwoPassManaged(filtered, keys, keyLanding)
-      else (dedupLww(filtered, keys, keyLanding), () => ())
+    val deduped = dedupLww(filtered, keys, keyLanding)
     val spark = events.sparkSession
 
     // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet).
@@ -412,7 +293,7 @@ object CdcApply {
     // `_<key>` columns are already canonical/typed (keyLanding ran before
     // dedup), so bucketing here hashes the SAME value the survivor rewrite
     // hashes from the typed read path
-    val bucket = pmod(xxhash64(col(s"_${keys.head}")), lit(snap.numBuckets)).cast("int")
+    val bucket = snap.bucketOf(col(s"_${keys.head}"))
     val origById = snap.schemas(0).map(f => f.id -> f.name).toMap
     def nullAs(ddl: String, name: String) =
       lit(null).cast(org.apache.spark.sql.types.DataType.fromDDL(ddl)).as(name)
@@ -441,134 +322,117 @@ object CdcApply {
     val staged = deduped.select(dataCols ++ Seq(
       when(col("op") === "delete", lit("d")).otherwise(lit("u")).as("_kind"),
       bucket.as("_bucket")) ++ statsCols: _*)
-    // phase timing for the optimization harness (BenchExtra): prints only
-    // when SPARK_GRAFT_APPLY_TIMING is set, zero cost otherwise
-    val timing = sys.env.contains("SPARK_GRAFT_APPLY_TIMING")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"APPLY_PHASE $name ${(now - tPhase) / 1e9}%.2f")
-      tPhase = now
+    val stage = table.stageWrite(staged.repartition(col("_bucket")))
+    val affected = table.stagedBuckets(stage)
+
+    // --- ONE read of the staged winners yields the per-kind row counts,
+    // the per-shard cursors/stats AND (below) the survivor anti-join's
+    // keys, each a column-pruned scan of it. In parity mode the shard
+    // stats come from a re-scan of the raw batch instead, so dropped
+    // deletes still advance positions; evolution tracking stays at the
+    // base version there — parity mode models the reference's After-only
+    // comparison, not live schema changes. ---
+    var maxWireSv = 1
+    var upsertCount = 0L
+    var deleteCount = 0L
+    val stagedAll = table.stagedAllDf(spark, stage, staged.schema)
+    val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
+    stagedRows.foreach { r =>
+      upsertCount += r.getLong(8)
+      deleteCount += r.getLong(9)
     }
-    // staged write is eager — once it returns, the dedup plan is fully
-    // consumed and its winner-position cache/Bloom broadcast can go
-    val stage =
-      try table.stageWrite(staged.repartition(col("_bucket")))
-      finally cleanupDedup()
-    phase("stage_write")
-    try {
-      val affected = table.stagedBuckets(stage)
+    val stats: Map[String, ShardStats] =
+      if (conf.parityMode) statsFromEvents(events, prevState, streamName)
+      else stagedRows.map { r =>
+        maxWireSv = math.max(maxWireSv, r.getInt(7))
+        statsFromRow(r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
+          Option(r.getString(4)), Option(r.getString(5)), r.getLong(6), prevState,
+          streamName)
+      }.toMap
+    val cursors = stats.map { case (s, st) => s -> st.cursor }
 
-      // --- ONE read of the staged winners yields the per-kind row counts,
-      // the per-shard cursors/stats AND (below) the survivor anti-join's
-      // keys, each a column-pruned scan of it. In parity mode the shard
-      // stats come from a re-scan of the raw batch instead, so dropped
-      // deletes still advance positions; evolution tracking stays at the
-      // base version there — parity mode models the reference's After-only
-      // comparison, not live schema changes. ---
-      var maxWireSv = 1
-      var upsertCount = 0L
-      var deleteCount = 0L
-      val stagedAll = table.stagedAllDf(spark, stage, staged.schema)
-      val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
-      stagedRows.foreach { r =>
-        upsertCount += r.getLong(8)
-        deleteCount += r.getLong(9)
+    // --- prune overwritten/deleted keys out of existing files (only the
+    // affected buckets, so a staged read exists whenever old files do;
+    // anti-join against its key columns) ---
+    // merge key = fields id 1..k (current names survive renames)
+    val keyNames = (1 to keys.length).map(id =>
+      snap.currentSchema.find(_.id == id).get.name)
+    val oldFiles = table.filesInBuckets(snap, affected)
+    val survivorFiles =
+      if (oldFiles.isEmpty) Nil
+      else {
+        val old = table.readFiles(snap, oldFiles)
+        val survivors = old
+          .join(stagedAll.get.select(keyNames.map(col): _*), keyNames, "left_anti")
+          .withColumn("_bucket", snap.bucketOf(col(keyNames.head)))
+        // hash-repartition on _bucket alone: file count per commit is
+        // O(buckets), independent of parallelism
+        table.writeDataFiles(survivors.repartition(col("_bucket")), snap.schemaVersion)
       }
-      phase("staged_stats")
-      val stats: Map[String, ShardStats] =
-        if (conf.parityMode) statsFromEvents(events, prevState, streamName)
-        else stagedRows.map { r =>
-          maxWireSv = math.max(maxWireSv, r.getInt(7))
-          statsFromRow(r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
-            Option(r.getString(4)), Option(r.getString(5)), r.getLong(6), prevState,
-            streamName)
-        }.toMap
-      val cursors = stats.map { case (s, st) => s -> st.cursor }
+    val newFiles = table.adoptStagedUpserts(stage, snap.schemaVersion) ++ survivorFiles
+    // --- the batch's metrics rows (and any tier fold) are staged, adopted
+    // and listed by the SAME commit as its data and cursors: exactly-once
+    // by construction. `version` is the version this commit lands as
+    // (single writer — nothing commits in between). ---
+    val wallMs = (System.nanoTime() - tStart) / 1000000L
+    val version = snap.version + 1
+    val batchMetrics =
+      if (stats.isEmpty) Nil
+      else Seq(writeMetricsFile(spark, stage, 0, metricsRows(batchId, stats, wallMs, version)))
+    val (foldFiles, folded) = foldMetrics(spark, table, snap, stage)
+    val newMetrics = table.adoptMetrics(batchMetrics ++ foldFiles)
 
-      // --- prune overwritten/deleted keys out of existing files (only the
-      // affected buckets, so a staged read exists whenever old files do;
-      // anti-join against its key columns) ---
-      // merge key = fields id 1..k (current names survive renames)
-      val keyNames = (1 to keys.length).map(id =>
-        snap.currentSchema.find(_.id == id).get.name)
-      val oldFiles = table.filesInBuckets(snap, affected)
-      val survivorFiles =
-        if (oldFiles.isEmpty) Nil
-        else {
-          val old = table.readFiles(snap, oldFiles)
-          val survivors = old
-            .join(stagedAll.get.select(keyNames.map(col): _*), keyNames, "left_anti")
-            .withColumn("_bucket",
-              pmod(xxhash64(col(keyNames.head)), lit(snap.numBuckets)).cast("int"))
-          // hash-repartition on _bucket alone: file count per commit is
-          // O(buckets), independent of parallelism
-          table.writeDataFiles(survivors.repartition(col("_bucket")), snap.schemaVersion)
-        }
-      phase("survivors")
-      val newFiles = table.adoptStagedUpserts(stage, snap.schemaVersion) ++ survivorFiles
-      // --- the batch's metrics rows (and any tier fold) are staged, adopted
-      // and listed by the SAME commit as its data and cursors: exactly-once
-      // by construction. `version` is the version this commit lands as
-      // (single writer — nothing commits in between). ---
-      val wallMs = (System.nanoTime() - tStart) / 1000000L
-      val version = snap.version + 1
-      val batchMetrics =
-        if (stats.isEmpty) Nil
-        else Seq(writeMetricsFile(spark, stage, 0, metricsRows(batchId, stats, wallMs, version)))
-      val (foldFiles, folded) = foldMetrics(spark, table, snap, stage)
-      val newMetrics = table.adoptMetrics(batchMetrics ++ foldFiles)
-      phase("adopt")
-
-      // --- transactional cursor + lineage commit ---
-      val merged = cursors.values.foldLeft(prevState) { (st, c) =>
-        val stateKey = s"${c.keyspace}:$streamName"
-        // never move a cursor backwards (containment order, not lexicographic;
-        // blank positions never compare after — reference positionAfter
-        // guard), and never REPLACE a valid cursor with a blank one (a batch
-        // whose winners carry no position must not regress the shard)
-        val keep = st.cursorFor(stateKey, c.shard) match {
-          case Some(old) if c.position.isEmpty ||
-            VGtid.positionAfter(old.position, c.position) => old
-          case _ => c
-        }
-        st.updated(stateKey, keep)
+    // --- transactional cursor + lineage commit ---
+    val merged = cursors.values.foldLeft(prevState) { (st, c) =>
+      val stateKey = s"${c.keyspace}:$streamName"
+      // never move a cursor backwards (containment order, not lexicographic;
+      // blank positions never compare after — reference positionAfter
+      // guard), and never REPLACE a valid cursor with a blank one (a batch
+      // whose winners carry no position must not regress the shard)
+      val keep = st.cursorFor(stateKey, c.shard) match {
+        case Some(old) if c.position.isEmpty ||
+          VGtid.positionAfter(old.position, c.position) => old
+        case _ => c
       }
-      val lineage = lineageJson(batchId, affected.size, upsertCount, deleteCount,
-        wallMs, version, stats)
-      // bounded lineage: retain the trailing window only — the summary map
-      // (rewritten every commit) must not grow O(batches) over a stream's
-      // lifetime. The metrics files are the durable per-batch record.
-      val stale = snap.summary.keysIterator.filter { k =>
-        k.startsWith("lineage:b") &&
-          k.stripPrefix("lineage:b").toLongOption.exists(_ <= batchId - lineageKeep)
-      }.toSet
-      // the ANNOUNCED wire schema version rides the batch commit itself
-      // (monotone max): the streaming driver's evolution trigger is
-      // re-derivable from committed state alone, so a crash anywhere
-      // between this commit and the evolution commits can always heal —
-      // even when the bump batch is the stream's last and replays as a
-      // skip (or never replays because the checkpoint advanced)
-      val announcedPrev = snap.summary.get("wire_schema_announced")
-        .map(_.toInt).getOrElse(1)
-      val announce: Map[String, String] =
-        if (math.max(maxWireSv, announcedPrev) > 1)
-          Map("wire_schema_announced" -> math.max(maxWireSv, announcedPrev).toString)
-        else Map.empty
-      val committed = table.commit(
-        replacedBuckets = affected,
-        newFiles = newFiles,
-        summaryUpdates = Map(
-          key -> batchId.toString,
-          "cursors" -> merged.toJson,
-          s"lineage:b$batchId" -> lineage) ++ announce,
-        dropSummaryKeys = stale,
-        newMetrics = newMetrics,
-        foldedMetrics = folded)
-      phase("commit")
-      ApplyResult(committed, upsertCount, deleteCount, skipped = false, stats = stats,
-        maxSchemaVersion = maxWireSv)
-    } finally table.dropStage(stage)
+      st.updated(stateKey, keep)
+    }
+    val lineage = lineageJson(batchId, affected.size, upsertCount, deleteCount,
+      wallMs, version, stats)
+    // bounded lineage: retain the trailing window only — the summary map
+    // (rewritten every commit) must not grow O(batches) over a stream's
+    // lifetime. The metrics files are the durable per-batch record.
+    val stale = snap.summary.keysIterator.filter { k =>
+      k.startsWith("lineage:b") &&
+        k.stripPrefix("lineage:b").toLongOption.exists(_ <= batchId - lineageKeep)
+    }.toSet
+    // the ANNOUNCED wire schema version rides the batch commit itself
+    // (monotone max): the streaming driver's evolution trigger is
+    // re-derivable from committed state alone, so a crash anywhere
+    // between this commit and the evolution commits can always heal —
+    // even when the bump batch is the stream's last and replays as a
+    // skip (or never replays because the checkpoint advanced)
+    val announcedPrev = snap.summary.get("wire_schema_announced")
+      .map(_.toInt).getOrElse(1)
+    val announce: Map[String, String] =
+      if (math.max(maxWireSv, announcedPrev) > 1)
+        Map("wire_schema_announced" -> math.max(maxWireSv, announcedPrev).toString)
+      else Map.empty
+    val committed = table.commit(
+      replacedBuckets = affected,
+      newFiles = newFiles,
+      summaryUpdates = Map(
+        key -> batchId.toString,
+        "cursors" -> merged.toJson,
+        s"lineage:b$batchId" -> lineage) ++ announce,
+      dropSummaryKeys = stale,
+      newMetrics = newMetrics,
+      foldedMetrics = folded)
+    // the stage goes only once its batch has committed: a failed or fenced
+    // batch's cancelled tasks may still be reading it, so its stage is left
+    // to expireSnapshots' `stage-*` sweep, like a crashed batch's
+    table.dropStage(stage)
+    ApplyResult(committed, upsertCount, deleteCount, skipped = false, stats = stats,
+      maxSchemaVersion = maxWireSv)
   }
 
   /** Per-batch metrics rows, one per (batch, shard): shard lineage (vgtid

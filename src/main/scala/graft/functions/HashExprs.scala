@@ -351,6 +351,7 @@ object MinHashFromHashesExpr {
 /** Jaccard per-mille over two pre-hashed shingle arrays, with SET semantics
   * (elements deduped): `floor(|A∩B| * 1000 / |A∪B|)`, the same integer math
   * as `size(array_intersect)/size(array_union)` over the string shingles.
+  * Like those, a null slot is one set element (never the value 0).
   * One sorted-merge pass per pair instead of two generic array-set builds.
   */
 case class JaccardHashesExpr(left: Expression, right: Expression)
@@ -374,12 +375,16 @@ case class JaccardHashesExpr(left: Expression, right: Expression)
 }
 
 object JaccardHashesExpr {
+  /** The distinct non-null values, sorted. */
   private def sortedDistinct(arr: ArrayData): Array[Long] = {
-    val n = arr.numElements()
-    val a = new Array[Long](n)
+    var n = 0
+    val a = new Array[Long](arr.numElements())
     var i = 0
-    while (i < n) { a(i) = arr.getLong(i); i += 1 }
-    java.util.Arrays.sort(a)
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) { a(n) = arr.getLong(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(a, 0, n)
     // in-place dedup (arrays are distinct-by-string already; this enforces
     // set semantics under 64-bit hash collisions too)
     var w = 0
@@ -388,7 +393,7 @@ object JaccardHashesExpr {
       if (w == 0 || a(i) != a(w - 1)) { a(w) = a(i); w += 1 }
       i += 1
     }
-    if (w == n) a else java.util.Arrays.copyOf(a, w)
+    if (w == a.length) a else java.util.Arrays.copyOf(a, w)
   }
 
   def jaccardPermille(x: ArrayData, y: ArrayData): Long = {
@@ -402,7 +407,11 @@ object JaccardHashesExpr {
       else if (a(i) < b(j)) i += 1
       else j += 1
     }
-    val uni = a.length.toLong + b.length.toLong - inter
+    // null: one element of each set holding it, shared when both do
+    val (xNull, yNull) = (VectorExprs.hasNull(x), VectorExprs.hasNull(y))
+    if (xNull && yNull) inter += 1
+    val uni = a.length.toLong + b.length.toLong + (if (xNull) 1 else 0) +
+      (if (yNull) 1 else 0) - inter
     if (uni == 0L) 0L else inter * 1000L / uni
   }
 

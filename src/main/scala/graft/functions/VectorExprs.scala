@@ -34,11 +34,36 @@ object VectorExprs {
   private def get(arr: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
 
+  private[functions] def hasNull(arr: ArrayData): Boolean = {
+    var i = 0
+    while (i < arr.numElements()) { if (arr.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
+  private def sumSq(arr: ArrayData, isFloat: Boolean): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < arr.numElements()) { val x = get(arr, i, isFloat); s += x * x; i += 1 }
+    s
+  }
+
+  /** Where the higher-order-function form is NULL: a null slot nulls its
+    * array's norm, and ragged arrays null the dot product (`zip_with` pads
+    * the shorter with nulls), which only the zero-norm guard overrides.
+    */
+  def cosineIsNull(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Boolean =
+    hasNull(a) || hasNull(b) ||
+      (a.numElements() != b.numElements() &&
+        math.sqrt(sumSq(a, aFloat)) * math.sqrt(sumSq(b, bFloat)) != 0.0)
+
   /** `((0 + a0*b0) + a1*b1) + …` then `sqrt` norms — the exact accumulation
     * order of `aggregate(zip_with(...))`, so doubles match bit-for-bit.
+    * Defined where [[cosineIsNull]] is false.
     */
   def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    // a ragged pair gets here only when a norm is zero
+    if (a.numElements() != b.numElements()) return 0.0
+    val n = a.numElements()
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
@@ -91,9 +116,12 @@ object VectorExprs {
   private[functions] def isNumArr(dt: DataType): Boolean = checkArray(dt)
 }
 
-/** Cosine similarity of two numeric arrays (compiled; see [[VectorExprs]]). */
+/** Cosine similarity of two numeric arrays (compiled; see [[VectorExprs]]).
+  * NULL where the higher-order-function form is ([[VectorExprs.cosineIsNull]]).
+  */
 case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def checkInputDataTypes() =
     VectorExprs.typeCheck(
       VectorExprs.isNumArr(left.dataType) && VectorExprs.isNumArr(right.dataType),
@@ -102,12 +130,18 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
   private lazy val aFloat = VectorExprs.isFloatArr(left.dataType)
   private lazy val bFloat = VectorExprs.isFloatArr(right.dataType)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorExprs.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], aFloat, bFloat)
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (VectorExprs.cosineIsNull(x, y, aFloat, bFloat)) null
+    else VectorExprs.cosine(x, y, aFloat, bFloat)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorExprs.cosine($a, $b, $aFloat, $bFloat)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = graft.functions.VectorExprs.cosineIsNull($a, $b, $aFloat, $bFloat);
+         |if (!${ev.isNull}) {
+         |  ${ev.value} = graft.functions.VectorExprs.cosine($a, $b, $aFloat, $bFloat);
+         |}""".stripMargin)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
     copy(left = l, right = r)

@@ -11,24 +11,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  /** HOF formulation kept as the semantics oracle for [[cosine]]'s compiled
-    * expression (spec-asserted bit equality).
-    */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d === 0.0, lit(0.0)).otherwise(dot(a, b) / d)
-  }
-
-  /** Compiled cosine ([[CosineSimExpr]]): identical accumulation order and
-    * zero-norm guard as the HOF form, one codegen'd loop per pair instead of
-    * ~3×dim interpreted lambda calls.
+  /** Compiled cosine ([[CosineSimExpr]]): the values, accumulation order,
+    * zero-norm guard and NULLs of the higher-order-function form
+    * `dot(a, b) / (norm(a) * norm(b))` (its oracle in `CompiledExprParitySpec`),
+    * one codegen'd loop per pair instead of ~3×dim interpreted lambda calls.
     */
   def cosine(a: Column, b: Column): Column = VectorExprs.cosineCol(a, b)
 
@@ -74,20 +60,6 @@ object VectorFunctions {
     */
   def signBucket(vec: Column, dim: Int, bits: Int, seed: Long): Column =
     VectorExprs.signBucketCol(vec, planeSigns(dim, bits, seed))
-
-  /** HOF formulation kept as the semantics oracle for [[signBucket]]'s
-    * compiled expression (spec-asserted bit equality).
-    */
-  private[graft] def signBucketHof(vec: Column, dim: Int, bits: Int, seed: Long): Column = {
-    val planes = planeSigns(dim, bits, seed)
-    val buckets = (0 until bits).map { b =>
-      val proj = aggregate(
-        zip_with(vec, typedlit(planes(b)), (x, h) => x.cast("double") * h),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    buckets.reduce(_ + _)
-  }
 
   /** IVF (inverted-file) approximate top-k — the coarse-quantizer scale path
     * alongside [[lshTopK]]: every corpus vector is assigned to its nearest

@@ -57,43 +57,21 @@ object ChangelogGen {
   /** The catch-up changelog as a DataFrame (schema = ChangeEvent).
     *
     * Expression-based ([[GenExprs.changelog]]): value-identical to the
-    * encoder path below (spec-asserted row-for-row) but whole-stage
-    * codegen'd and COLUMN-PRUNABLE — a consumer that only needs keys and
-    * ordering columns never pays for the sha256-based content strings,
-    * which is what makes the apply's winner pre-pass cheap (guide §8).
+    * encoder formulation over [[EventGen]] (spec-asserted row-for-row in
+    * `GenExprsParitySpec`) but whole-stage codegen'd and COLUMN-PRUNABLE —
+    * a consumer that only needs keys and ordering columns never pays for
+    * the sha256-based content strings.
     */
   def changelog(spark: SparkSession, c: GenConfig): DataFrame =
     GenExprs.changelog(spark, c)
 
-  /** Encoder formulation kept as the semantics oracle for the expression
-    * generator (and as documentation of the closed forms in one place).
-    */
-  private[graft] def changelogViaEncoder(spark: SparkSession, c: GenConfig): DataFrame = {
-    import spark.implicits._
-    spark.range(c.numEvents)
-      .map { id => EventGen.catchupEvent((id % c.numShards).toInt, id / c.numShards, c) }
-      .toDF()
-  }
-
   /** COPY-phase rows: the initial table snapshot, streamed in PK order per
     * shard with LASTPK watermarks (VStream COPY analogue). All carry the
     * copy-start position (rank 1) so any catch-up event LWW-beats them.
-    * Expression-based; [[copyPhaseViaEncoder]] is the spec oracle.
+    * Expression-based; its encoder oracle is in `GenExprsParitySpec`.
     */
   def copyPhase(spark: SparkSession, c: GenConfig): DataFrame =
     GenExprs.copyPhase(spark, c)
-
-  private[graft] def copyPhaseViaEncoder(spark: SparkSession, c: GenConfig): DataFrame = {
-    import spark.implicits._
-    require(c.copyRows > 0)
-    val cp = EventGen.copyPerShard(c)
-    spark.range(cp * c.numShards)
-      .mapPartitions { it =>
-        val paths = EventGen.sortedPaths(c)
-        it.map(id => EventGen.copyEvent((id % c.numShards).toInt, id / c.numShards, c, paths))
-      }
-      .toDF()
-  }
 
   /** Full stream for a replay: copy phase (if any) followed by catch-up. */
   def fullStream(spark: SparkSession, c: GenConfig): DataFrame =

@@ -12,10 +12,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *  - no `Dataset.map` encoder boundary: rows materialize inside
   *    whole-stage codegen instead of closure → case class → encoder;
   *  - COLUMN PRUNING works: a pass that only needs the merge key and
-  *    ordering columns (e.g. the LWW winner pre-pass) never computes the
-  *    sha256-based `content`/`commit` strings at all — with the opaque
-  *    closure, every pass paid for every column (guide §2.3 "project before
-  *    the exchange" / §8 "decide with small rows").
+  *    ordering columns never computes the sha256-based `content`/`commit`
+  *    strings at all — with the opaque closure, every pass paid for every
+  *    column.
   *
   * Only `mix64` needs a custom expression (its multiplies wrap 64-bit, which
   * ANSI-mode built-in arithmetic would reject); everything else is built-in:
@@ -157,26 +156,15 @@ object GenExprs {
     (langs.map(_._1), langs.map(_._2))
   }
 
-  /** `If(cond, value, null)` — kept for measurement comparison (BenchExtra
-    * gen-probe3): conditional-struct codegen (CaseWhen AND If) measured ~6×
-    * slower than an unconditional struct build.
-    */
-  private[graft] def structIf(cond: Column, value: Column): Column = {
-    val v = GraftBridge.expression(value)
-    GraftBridge.column(org.apache.spark.sql.catalyst.expressions.If(
-      GraftBridge.expression(cond), v,
-      org.apache.spark.sql.catalyst.expressions.Literal.create(null, v.dataType)))
-  }
-
   /** `value` masked to NULL when `cond` is false — value-equivalent to
     * `when(cond, value)` but the value expression is evaluated
     * UNCONDITIONALLY and only the null bit depends on `cond`. For
     * struct-typed values this sidesteps the conditional-struct codegen path
     * (CaseWhen/If route struct results through boxed globals + split branch
-    * methods; measured ~6× slower than a straight-line struct build — see
-    * BenchExtra gen-probe3). Only correct when evaluating `value` on
-    * masked-out rows is safe (pure generator expressions here), and a good
-    * trade only when masked rows are a small fraction (deletes ≈ 5%).
+    * methods; measured ~6× slower than a straight-line struct build). Only
+    * correct when evaluating `value` on masked-out rows is safe (pure
+    * generator expressions here), and a good trade only when masked rows
+    * are a small fraction (deletes ≈ 5%).
     */
   case class NullMaskExpr(cond: Expression, value: Expression)
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -208,34 +196,6 @@ object GenExprs {
   private def maskedStruct(cond: Column, value: Column): Column =
     GraftBridge.column(NullMaskExpr(GraftBridge.expression(cond),
       GraftBridge.expression(value)))
-
-  private[graft] def maskedStructProbe(cond: Column, value: Column): Column =
-    maskedStruct(cond, value)
-
-  /** Measurement probe: the catch-up columns FLAT (no structs) — isolates
-    * struct-assembly/extraction cost from value-computation cost.
-    */
-  private[graft] def changelogFlatProbe(spark: SparkSession, c: GenConfig): DataFrame = {
-    val (langNames, langExts) = langsExt
-    val rps = EventGen.reposPerShard(c)
-    val id = col("id")
-    val shardIdx = (id % c.numShards).cast("int")
-    val k = longDiv(id, c.numShards)
-    val local = least(lit(rps - 1),
-      (lit(rps) * pow(h01(id, c.seed, 1), lit(c.zipfSkew))).cast("int"))
-    val repoIdx = shardIdx + lit(c.numShards) * local
-    val repo = repoName(repoIdx)
-    val pIdx = least((lit(c.pathsPerRepo) * h01(id, c.seed, 2)).cast("int"),
-      lit(c.pathsPerRepo - 1))
-    val path = concat(lit("src/dir"), (pIdx % 7).cast("string"), lit("/file"),
-      pIdx.cast("string"), lit("."), element_at(typedlit(langExts.toSeq), pIdx % 5 + 1))
-    val lang = element_at(typedlit(langNames.toSeq), pIdx % 5 + 1)
-    spark.range(c.numEvents).select(
-      (k + 1).as("event_seq"),
-      repo.as("repo"), path.as("path"), lang.as("lang"),
-      commitCol(repo, path, id, c.seed).as("commit"),
-      contentCol(repo, path, id, c).as("content"))
-  }
 
   /** Catch-up changelog — the expression twin of
     * `spark.range(numEvents).map(EventGen.catchupEvent)`.

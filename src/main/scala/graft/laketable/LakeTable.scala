@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -13,8 +13,9 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-/** One immutable data file of a snapshot. `bucket` is the hash-bucket of the
-  * merge key (`repo`) the file belongs to — the unit of copy-on-write MERGE.
+/** One immutable data file of a snapshot. `bucket` is the hash-bucket
+  * ([[Snapshot.bucketOf]]) of the first merge-key column of the file's rows
+  * — the unit of copy-on-write MERGE.
   * `schemaVersion` records which column mapping the file was written under
   * (Iceberg-style field-id rename support).
   */
@@ -54,6 +55,14 @@ final case class Snapshot(
 
   /** Bucket-group id of a bucket (one manifest per group). */
   def groupOf(bucket: Int): Int = bucket / bucketsPerManifest
+
+  /** The table's one bucketing rule: the bucket of a row is
+    * `pmod(xxhash64(k), numBuckets)` of its first merge-key column `k`
+    * (field id 1). Every writer — staged batch, survivor rewrite,
+    * compaction — buckets through this, so a key lands in one bucket.
+    */
+  def bucketOf(firstKey: Column): Column =
+    pmod(xxhash64(firstKey), lit(numBuckets)).cast("int")
 }
 
 /** Iceberg-style snapshot table, built from scratch (no Iceberg/Delta runtime
@@ -71,15 +80,16 @@ final case class Snapshot(
   *   <root>/meta/v<N>.json               snapshot N (schemas + manifest list + summary)
   *   <root>/meta/version-hint.txt        current version (atomic rename swap)
   *
-  * Scale design: data files are bucketed by `pmod(xxhash64(repo), numBuckets)`
-  * so a MERGE touches only the buckets present in the incoming batch; at
-  * 100 TB with numBuckets sized so a bucket ≈ a few GB, a micro-batch rewrite
-  * is O(affected buckets), never a full-table rewrite. Snapshot metadata is a
-  * two-level manifest tree (Iceberg's manifest-list/manifest design): v<N>.json
-  * holds only the manifest LIST (one tiny entry per bucket group); the file
-  * entries live in immutable per-group manifests that unaffected commits reuse
-  * by reference — so each micro-batch commit serializes O(affected buckets)
-  * metadata, not O(total files), even at 10⁴–10⁵ data files.
+  * Scale design: data files are bucketed by the first merge-key column
+  * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
+  * the incoming batch: a micro-batch rewrite is O(affected buckets), which
+  * is the whole table when the batch's keys span every bucket. Snapshot
+  * metadata is a two-level manifest tree (Iceberg's manifest-list/manifest
+  * design): v<N>.json holds only the manifest LIST (one tiny entry per
+  * bucket group); the file entries live in immutable per-group manifests
+  * that unaffected commits reuse by reference — so each micro-batch commit
+  * serializes O(affected buckets) metadata, not O(total files), even at
+  * 10⁴–10⁵ data files.
   */
 final class LakeTable(val root: String, spark: SparkSession) {
   import LakeTable._
@@ -283,19 +293,34 @@ final class LakeTable(val root: String, spark: SparkSession) {
   private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
     val stage = new Path(root, s"stage-${UUID.randomUUID()}")
     df.write.partitionBy("_bucket").parquet(stage.toString)
+    val entries = moveIntoData(stage, schemaVersion)
+    fs.delete(stage, true)
+    entries
+  }
+
+  /** `(bucket, dir)` of each `_bucket=<b>` partition dir directly under
+    * `parent` (none when `parent` does not exist).
+    */
+  private def bucketDirs(parent: Path): Seq[(Int, Path)] = {
     val f = fs
-    val entries = f.listStatus(stage).toSeq.filter(_.isDirectory).flatMap { dir =>
-      val bucket = dir.getPath.getName.stripPrefix("_bucket=").toInt
-      f.listStatus(dir.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+    if (!f.exists(parent)) Nil
+    else f.listStatus(parent).toSeq.filter(_.isDirectory).map(st =>
+      st.getPath.getName.stripPrefix("_bucket=").toInt -> st.getPath)
+  }
+
+  /** Move the parquet files of the `_bucket=` dirs under `parent` into
+    * data/ under fresh names (no rewrite); returns their entries.
+    */
+  private def moveIntoData(parent: Path, schemaVersion: Int): Seq[DataFileEntry] = {
+    val f = fs
+    bucketDirs(parent).flatMap { case (bucket, dir) =>
+      f.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
         val name = s"${UUID.randomUUID()}.parquet"
-        val dest = new Path(dataDir, name)
-        if (!f.rename(st.getPath, dest))
+        if (!f.rename(st.getPath, new Path(dataDir, name)))
           throw new IllegalStateException(s"failed to move ${st.getPath}")
         DataFileEntry(s"data/$name", bucket, -1L, schemaVersion)
       }
     }
-    f.delete(stage, true)
-    entries
   }
 
   /** Stage a deduped batch: rows carry `_kind` ('u' upsert / 'd' delete-key)
@@ -332,20 +357,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** Adopt staged upsert files as final data files (move, no rewrite). */
-  private[graft] def adoptStagedUpserts(stage: Path, schemaVersion: Int): Seq[DataFileEntry] = {
-    val f = fs
-    val uDir = new Path(stage, "_kind=u")
-    if (!f.exists(uDir)) Nil
-    else f.listStatus(uDir).toSeq.filter(_.isDirectory).flatMap { dir =>
-      val bucket = dir.getPath.getName.stripPrefix("_bucket=").toInt
-      f.listStatus(dir.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-        val name = s"${UUID.randomUUID()}.parquet"
-        if (!f.rename(st.getPath, new Path(dataDir, name)))
-          throw new IllegalStateException(s"failed to adopt ${st.getPath}")
-        DataFileEntry(s"data/$name", bucket, -1L, schemaVersion)
-      }
-    }
-  }
+  private[graft] def adoptStagedUpserts(stage: Path, schemaVersion: Int): Seq[DataFileEntry] =
+    moveIntoData(new Path(stage, "_kind=u"), schemaVersion)
 
   /** Move files staged for the metrics list into metrics/ (no rewrite);
     * returns their table-relative paths for [[commit]].
@@ -361,15 +374,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** Buckets present in the staged batch (from the directory layout). */
-  private[graft] def stagedBuckets(stage: Path): Set[Int] = {
-    val f = fs
-    Seq("u", "d").flatMap { kind =>
-      val p = new Path(stage, s"_kind=$kind")
-      if (!f.exists(p)) Nil
-      else f.listStatus(p).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName.stripPrefix("_bucket=").toInt)
-    }.toSet
-  }
+  private[graft] def stagedBuckets(stage: Path): Set[Int] =
+    Seq("u", "d").flatMap(kind => bucketDirs(new Path(stage, s"_kind=$kind")).map(_._1)).toSet
 
   private[graft] def dropStage(stage: Path): Unit = fs.delete(stage, true)
 
@@ -432,7 +438,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     if (crowded.isEmpty) return snap
     val keyCol = snap.currentSchema.head.name // field id 1 = bucket key
     val df = readFiles(snap, filesInBuckets(snap, crowded))
-      .withColumn("_bucket", pmod(xxhash64(col(keyCol)), lit(snap.numBuckets)).cast("int"))
+      .withColumn("_bucket", snap.bucketOf(col(keyCol)))
     val newFiles = writeDataFiles(df.repartition(col("_bucket")), snap.schemaVersion)
     commit(crowded, newFiles, Map("compacted" -> s"v${snap.version}:${crowded.size} buckets"))
   }
@@ -525,9 +531,6 @@ object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
   private val FormatVersion = 3
-
-  def bucketExpr(numBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("repo")), lit(numBuckets)).cast("int")
 
   /** Default bucket-group width of one manifest: small tables get multiple
     * groups (so the manifest machinery is exercised everywhere), huge tables

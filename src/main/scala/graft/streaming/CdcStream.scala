@@ -77,12 +77,6 @@ object CdcStream {
       // (data + cursors), the query stops cleanly, and the NEXT sync
       // resumes from the checkpoint — a partial sync, never a failure.
       timeoutSeconds: Option[Long] = None,
-      // two-pass LWW dedup (CdcApply.dedupLwwTwoPass): winner positions
-      // decided over light rows + Bloom pre-filter before any payload
-      // shuffles. Default OFF per measurement (see ApplyConfig.twoPassDedup)
-      // — opt in for heavy-payload streams where shuffling losing payloads
-      // dominates.
-      twoPassDedup: Boolean = false,
       // Avro schema registry (north-star "Avro-driven schema evolution"):
       // wire schema_version → Avro record JSON. When a batch's winners
       // carry a version above the applied watermark (summary
@@ -385,8 +379,7 @@ object CdcStream {
           conf = CdcApply.ApplyConfig(parityMode = rc.parityMode,
             wireSpec = rc.wireTable.map(_.spec).orElse(
               if (rc.wirePayload) Some(graft.core.WireTableSpec.repoProfile) else None),
-            keyColumns = rc.wireTable.map(_.keys).getOrElse(Seq("repo", "path")),
-            twoPassDedup = rc.twoPassDedup),
+            keyColumns = rc.wireTable.map(_.keys).getOrElse(Seq("repo", "path"))),
           streamName = rc.streamName)
         // stream-driven Avro evolution: the batch commit recorded the
         // announced wire version, so the trigger is derivable from committed
@@ -454,8 +447,11 @@ object CdcStream {
     maybeEvolve(table, rc)
     // end-of-sync expiry: the in-loop cadence can leave up to expireEvery-1
     // commits' metadata behind; one final pass bounds the meta dir to
-    // ~keepSnapshots × (groups + 1) files between syncs
-    if (batches > 0 && rc.expireEvery.exists(_ > 0)) table.expireSnapshots(rc.keepSnapshots)
+    // ~keepSnapshots × (groups + 1) files between syncs. A fenced sync
+    // skips it: the cancelled batch's tasks may still be reading the stage
+    // dir the expiry would sweep; the next sync's expiry takes it.
+    if (batches > 0 && !fenced.get && rc.expireEvery.exists(_ > 0))
+      table.expireSnapshots(rc.keepSnapshots)
     SyncAttempt(batches, fenced.get)
   }
 

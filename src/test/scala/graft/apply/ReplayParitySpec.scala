@@ -153,24 +153,6 @@ class ReplayParitySpec extends AnyFunSuite with SparkSupport {
     assert(n1 == ev.count())
   }
 
-  test("dedupLwwTwoPass (light winner pass + join-back) ≡ dedupLww, " +
-    "including _key_events and full payload columns") {
-    val c = GenConfig(numEvents = 10000L, numShards = 4, numRepos = 30, pathsPerRepo = 20,
-      copyRows = 1000L, deleteRatio = 0.15)
-    val ev = ChangelogGen.fullStream(spark, c)
-    val a = CdcApply.dedupLww(ev)
-    val t = CdcApply.dedupLwwTwoPass(ev)
-    assert(a.columns.toSeq == t.columns.toSeq, "output schema must match")
-    assert(a.count() == t.count())
-    assert(a.exceptAll(t).isEmpty && t.exceptAll(a).isEmpty,
-      "two-pass winners (payloads + counts) must match single-pass exactly")
-    // composite key + wire landing path too
-    val ev2 = ev.limit(2000)
-    val a2 = CdcApply.dedupLww(ev2, keys = Seq("repo", "path"))
-    val t2 = CdcApply.dedupLwwTwoPass(ev2, keys = Seq("repo", "path"))
-    assert(a2.exceptAll(t2).isEmpty && t2.exceptAll(a2).isEmpty)
-  }
-
   test("metadata injection: winning event's vgtid/seq stamped per row " +
     "(reference _planetscale_metadata, database_test.go:642-886)") {
     val c = GenConfig(numEvents = 3000L, numShards = 2, numRepos = 10, pathsPerRepo = 5)

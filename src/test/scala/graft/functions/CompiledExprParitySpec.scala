@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSupport
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +12,44 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CompiledExprParitySpec extends AnyFunSuite with SparkSupport {
   import spark.implicits._
+
+  // ---- the higher-order-function oracles of the compiled vector exprs ----
+
+  private def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  private def norm(a: Column): Column =
+    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
+
+  /** Oracle for [[VectorFunctions.cosine]]. */
+  private def cosineHof(a: Column, b: Column): Column = {
+    val d = norm(a) * norm(b)
+    when(d === 0.0, lit(0.0)).otherwise(dot(a, b) / d)
+  }
+
+  /** Oracle for [[VectorFunctions.signBucket]]. */
+  private def signBucketHof(vec: Column, dim: Int, bits: Int, seed: Long): Column = {
+    val planes = VectorFunctions.planeSigns(dim, bits, seed)
+    val buckets = (0 until bits).map { b =>
+      val proj = aggregate(
+        zip_with(vec, typedlit(planes(b)), (x, h) => x.cast("double") * h),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
+    }
+    buckets.reduce(_ + _)
+  }
+
+  /** `got` and `want` agree row for row (NULLs included), both on a local
+    * relation (interpreted eval) and on an RDD-backed copy (generated code).
+    */
+  private def assertSameBothPaths(df: DataFrame, got: Column, want: Column,
+      label: String): Unit =
+    Seq(df, spark.createDataFrame(df.rdd, df.schema)).foreach { d =>
+      val g = d.select($"id", got.as("v"))
+      val w = d.select($"id", want.as("v"))
+      assert(g.except(w).isEmpty && w.except(g).isEmpty, label)
+    }
 
   private def vec(seed: Long, dim: Int, float: Boolean): Seq[Double] =
     (0 until dim).map { i =>
@@ -28,15 +67,56 @@ class CompiledExprParitySpec extends AnyFunSuite with SparkSupport {
       (902L, vec(5, 64, float = false), vec(5, 64, float = false)))
     val df = rows.toDF("id", "a", "b")
     val got = df.select($"id", VectorFunctions.cosine($"a", $"b").as("c"))
-    val want = df.select($"id", VectorFunctions.cosineHof($"a", $"b").as("c"))
+    val want = df.select($"id", cosineHof($"a", $"b").as("c"))
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
 
     // float arrays (the sim_knn_* queries pass raw parquet array<float>)
     val fdf = rows.map { case (id, a, b) =>
       (id, a.map(_.toFloat), b.map(_.toFloat)) }.toDF("id", "a", "b")
     val fGot = fdf.select($"id", VectorFunctions.cosine($"a", $"b").as("c"))
-    val fWant = fdf.select($"id", VectorFunctions.cosineHof($"a", $"b").as("c"))
+    val fWant = fdf.select($"id", cosineHof($"a", $"b").as("c"))
     assert(fGot.except(fWant).isEmpty && fWant.except(fGot).isEmpty)
+  }
+
+  test("CosineSimExpr == HOF cosine on null slots and ragged arrays " +
+    "(NULL where the oracle is NULL, 0.0 where a norm is zero)") {
+    val rows: Seq[(Long, Seq[Option[Double]], Seq[Option[Double]])] = Seq(
+      (0L, Seq(Some(1.0), None, Some(2.0)), Seq(Some(1.0), Some(1.0), Some(1.0))),
+      (1L, Seq(Some(1.0), Some(2.0)), Seq(None, None)),
+      (2L, Seq(Some(0.0), None), Seq(Some(0.0), Some(0.0))),
+      (3L, Seq(Some(1.0), Some(2.0), Some(3.0)), Seq(Some(1.0), Some(2.0))),
+      (4L, Seq(Some(0.0), Some(0.0)), Seq(Some(1.0), Some(2.0), Some(3.0))),
+      (5L, Seq(), Seq(Some(1.0), Some(2.0))),
+      (6L, Seq(), Seq()),
+      (7L, Seq(Some(1.0), Some(2.0), Some(3.0)), Seq(Some(3.0), Some(2.0), Some(1.0))),
+      (8L, Seq(Some(0.5)), Seq(Some(-0.5), None)))
+    val df = rows.toDF("id", "a", "b")
+    assertSameBothPaths(df, VectorFunctions.cosine($"a", $"b"), cosineHof($"a", $"b"),
+      "double")
+    val fdf = df.select($"id", $"a".cast("array<float>").as("a"),
+      $"b".cast("array<float>").as("b"))
+    assertSameBothPaths(fdf, VectorFunctions.cosine($"a", $"b"), cosineHof($"a", $"b"),
+      "float")
+    // the oracle really is NULL on the null-slot and ragged rows
+    val nulls = df.select($"id", cosineHof($"a", $"b").as("v")).filter($"v".isNull)
+      .select($"id").as[Long].collect().toSet
+    assert(nulls == Set(0L, 1L, 2L, 3L, 8L))
+  }
+
+  test("JaccardHashesExpr == array_intersect/array_union jaccardPermille on " +
+    "null slots and duplicates (a null is one set element, never the value 0)") {
+    val rows: Seq[(Long, Seq[Option[Long]], Seq[Option[Long]])] = Seq(
+      (0L, Seq(Some(1L), Some(2L), None), Seq(Some(1L), None)),
+      (1L, Seq(Some(1L), None), Seq(Some(1L))),
+      (2L, Seq(None), Seq(Some(0L))),
+      (3L, Seq(None, None), Seq(None)),
+      (4L, Seq(Some(0L), None), Seq(Some(0L))),
+      (5L, Seq(Some(3L), Some(3L), Some(4L)), Seq(Some(3L))),
+      (6L, Seq(), Seq()),
+      (7L, Seq(), Seq(None)))
+    val df = rows.toDF("id", "a", "b")
+    assertSameBothPaths(df, TextFunctions.jaccardHashesPermille($"a", $"b"),
+      TextFunctions.jaccardPermille($"a", $"b"), "jaccard")
   }
 
   test("SignBucketExpr == HOF signBucket across the query seeds/shapes") {
@@ -44,7 +124,7 @@ class CompiledExprParitySpec extends AnyFunSuite with SparkSupport {
       .toDF("id", "v")
     for ((bits, seed) <- Seq((8, 11L), (8, 11L + 104729L), (4, 7L), (4, 7L + 7 * 7919L))) {
       val got = df.select($"id", VectorFunctions.signBucket($"v", 64, bits, seed).as("b"))
-      val want = df.select($"id", VectorFunctions.signBucketHof($"v", 64, bits, seed).as("b"))
+      val want = df.select($"id", signBucketHof($"v", 64, bits, seed).as("b"))
       assert(got.except(want).isEmpty && want.except(got).isEmpty, s"bits=$bits seed=$seed")
     }
   }

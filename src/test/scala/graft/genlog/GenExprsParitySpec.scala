@@ -1,6 +1,7 @@
 package graft.genlog
 
 import graft.SparkSupport
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The expression-based changelog generator must be ROW-IDENTICAL to the
@@ -10,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GenExprsParitySpec extends AnyFunSuite with SparkSupport {
 
-  private def assertSame(a: org.apache.spark.sql.DataFrame,
-      b: org.apache.spark.sql.DataFrame, label: String): Unit = {
+  private def assertSame(a: DataFrame, b: DataFrame, label: String): Unit = {
     // types modulo nullability flags: the expression formulation marks
     // always-present nested fields non-nullable (a struct-level cast to the
     // encoder's all-nullable shape measured ~10× slower per row and carries
@@ -30,6 +30,29 @@ class GenExprsParitySpec extends AnyFunSuite with SparkSupport {
     assert(a.except(b).isEmpty && b.except(a).isEmpty, s"$label rows")
   }
 
+  /** Encoder formulation of the catch-up changelog: the semantics oracle
+    * for the expression generator (the closed forms, in one place).
+    */
+  private def changelogViaEncoder(c: GenConfig): DataFrame = {
+    import spark.implicits._
+    spark.range(c.numEvents)
+      .map { id => EventGen.catchupEvent((id % c.numShards).toInt, id / c.numShards, c) }
+      .toDF()
+  }
+
+  /** Encoder formulation of the COPY phase (oracle for [[GenExprs.copyPhase]]). */
+  private def copyPhaseViaEncoder(c: GenConfig): DataFrame = {
+    import spark.implicits._
+    require(c.copyRows > 0)
+    val cp = EventGen.copyPerShard(c)
+    spark.range(cp * c.numShards)
+      .mapPartitions { it =>
+        val paths = EventGen.sortedPaths(c)
+        it.map(id => EventGen.copyEvent((id % c.numShards).toInt, id / c.numShards, c, paths))
+      }
+      .toDF()
+  }
+
   private val configs = Seq(
     "base" -> GenConfig(numEvents = 4000L, numShards = 2, numRepos = 20, pathsPerRepo = 10),
     "copy+skew" -> GenConfig(numEvents = 3000L, numShards = 4, numRepos = 30,
@@ -44,14 +67,14 @@ class GenExprsParitySpec extends AnyFunSuite with SparkSupport {
   test("expression changelog == encoder changelog, row-for-row, across configs") {
     configs.foreach { case (label, c) =>
       assertSame(ChangelogGen.changelog(spark, c),
-        ChangelogGen.changelogViaEncoder(spark, c), s"catchup/$label")
+        changelogViaEncoder(c), s"catchup/$label")
     }
   }
 
   test("expression copyPhase == encoder copyPhase, row-for-row, across configs") {
     configs.filter(_._2.copyRows > 0).foreach { case (label, c) =>
       assertSame(ChangelogGen.copyPhase(spark, c),
-        ChangelogGen.copyPhaseViaEncoder(spark, c), s"copy/$label")
+        copyPhaseViaEncoder(c), s"copy/$label")
     }
   }
 

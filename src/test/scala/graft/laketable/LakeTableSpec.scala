@@ -2,6 +2,7 @@ package graft.laketable
 
 import graft.SparkSupport
 import graft.core.ChangeEvent
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,15 +19,29 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     (0 until n).map(i => (s"repo-$i", s"src/f$i.go", "c" * 40, "go", s"content-$i"))
       .toDF("repo", "path", "commit", "lang", "content")
 
+  /** `df` with the `_bucket` column [[LakeTable.writeDataFiles]] expects,
+    * by the table's own bucketing rule.
+    */
+  private def bucketed(t: LakeTable, df: DataFrame): DataFrame =
+    df.withColumn("_bucket", t.currentSnapshot.get.bucketOf(col("repo")))
+
   test("create + commit + read round-trip; empty table reads empty") {
     val t = newTable()
     assert(t.read().count() == 0)
-    val df = someRows(10).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df = bucketed(t, someRows(10))
     val files = t.writeDataFiles(df, 0)
     assert(files.nonEmpty && files.forall(_.bucket >= 0))
     t.commit(Set.empty, files, Map("k" -> "v"))
     assert(t.read().count() == 10)
     assert(t.summaryValue("k").contains("v"))
+  }
+
+  test("bucketOf keeps the table layout: pmod(xxhash64(first key), numBuckets)") {
+    val t = newTable()
+    val df = someRows(50)
+    val got = df.select(col("repo"), t.currentSnapshot.get.bucketOf(col("repo")).as("b"))
+    val want = df.select(col("repo"), pmod(xxhash64(col("repo")), lit(4)).cast("int").as("b"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
   test("single-writer guard: a second committer that built on a stale " +
@@ -40,7 +55,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val staleBase = b.currentSnapshot.get
 
     // writer A commits v1 normally
-    val df = someRows(5).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df = bucketed(a, someRows(5))
     a.commit(Set.empty, a.writeDataFiles(df, 0), Map("writer" -> "a"))
     assert(a.currentVersion.contains(1L))
 
@@ -54,14 +69,14 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
     // and the NORMAL single-writer path is unaffected: B re-reads and
     // commits v2 cleanly on top of A's v1
-    val df2 = someRows(3).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df2 = bucketed(b, someRows(3))
     b.commit(Set.empty, b.writeDataFiles(df2, 0), Map("writer" -> "b2"))
     assert(b.currentVersion.contains(2L))
   }
 
   test("commit replaces only the named buckets") {
     val t = newTable()
-    val df = someRows(20).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df = bucketed(t, someRows(20))
     val files = t.writeDataFiles(df, 0)
     t.commit(Set.empty, files, Map.empty)
     val snap = t.currentSnapshot.get
@@ -75,9 +90,9 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("version-hint pointer gives time travel") {
     val t = newTable()
-    val f1 = t.writeDataFiles(someRows(5).withColumn("_bucket", LakeTable.bucketExpr(4)), 0)
+    val f1 = t.writeDataFiles(bucketed(t, someRows(5)), 0)
     val v1 = t.commit(Set.empty, f1, Map.empty).version
-    val f2 = t.writeDataFiles(someRows(7).withColumn("_bucket", LakeTable.bucketExpr(4)), 0)
+    val f2 = t.writeDataFiles(bucketed(t, someRows(7)), 0)
     val v2 = t.commit(Set.empty, f2, Map.empty).version
     assert(t.read(Some(v1)).count() == 5)
     assert(t.read(Some(v2)).count() == 12)
@@ -87,7 +102,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("crash-window recovery: missing version-hint recovers from the meta " +
     "listing; a replayed commit renames over an orphaned v<N>.json") {
     val t = newTable()
-    val df = someRows(6).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df = bucketed(t, someRows(6))
     t.commit(Set.empty, t.writeDataFiles(df, 0), Map("k" -> "1"))
     assert(t.currentVersion.contains(1L))
 
@@ -107,7 +122,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     // never parsed on this path)
     val orphan = java.nio.file.Paths.get(t.root, "meta", "v2.json")
     java.nio.file.Files.writeString(orphan, "{stale-orphan}")
-    val df2 = someRows(3).withColumn("_bucket", LakeTable.bucketExpr(4))
+    val df2 = bucketed(t, someRows(3))
     val snap = t.commit(Set.empty, t.writeDataFiles(df2, 0), Map("k" -> "2"))
     assert(snap.version == 2L && t.currentVersion.contains(2L))
     assert(t.read().count() == 9)
@@ -117,7 +132,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("compact merges crowded buckets without changing table contents") {
     val t = newTable()
     (1 to 6).foreach { i =>
-      val f = t.writeDataFiles(someRows(10).withColumn("_bucket", LakeTable.bucketExpr(4)), 0)
+      val f = t.writeDataFiles(bucketed(t, someRows(10)), 0)
       t.commit(Set.empty, f, Map.empty)
     }
     val before = t.read().orderBy("repo", "path").collect().toSeq
@@ -137,7 +152,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("expireSnapshots drops old metadata + unreferenced data files") {
     val t = newTable()
     (1 to 5).foreach { i =>
-      val f = t.writeDataFiles(someRows(5).withColumn("_bucket", LakeTable.bucketExpr(4)), 0)
+      val f = t.writeDataFiles(bucketed(t, someRows(5)), 0)
       t.commit(if (i > 1) t.allFiles(t.currentSnapshot.get).map(_.bucket).toSet else Set.empty,
         f, Map.empty) // replace everything each time → old files orphan fast
     }
@@ -157,7 +172,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("expireSnapshots sweeps stage dirs a crashed apply stranded") {
     val t = newTable()
     t.commit(Set.empty,
-      t.writeDataFiles(someRows(5).withColumn("_bucket", LakeTable.bucketExpr(4)), 0), Map.empty)
+      t.writeDataFiles(bucketed(t, someRows(5)), 0), Map.empty)
     val stage = java.nio.file.Paths.get(t.root, "stage-crashed")
     val bucketDir = stage.resolve("_kind=u").resolve("_bucket=1")
     java.nio.file.Files.createDirectories(bucketDir)
@@ -169,7 +184,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("schema evolution: rename is metadata-only, add fills null") {
     val t = newTable()
-    val files = t.writeDataFiles(someRows(6).withColumn("_bucket", LakeTable.bucketExpr(4)), 0)
+    val files = t.writeDataFiles(bucketed(t, someRows(6)), 0)
     t.commit(Set.empty, files, Map.empty)
     // rename content→body (field id kept), add stars:int
     t.evolveSchema(renames = Map("content" -> "body"), adds = Seq("stars" -> "INT"))
@@ -181,8 +196,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val snap = t.currentSnapshot.get
     val newRows = Seq(("r-new", "p-new", "c" * 40, "go", "body-new", 5))
       .toDF("repo", "path", "commit", "lang", "body", "stars")
-      .withColumn("_bucket", LakeTable.bucketExpr(4))
-    val nf = t.writeDataFiles(newRows, snap.schemaVersion)
+    val nf = t.writeDataFiles(bucketed(t, newRows), snap.schemaVersion)
     t.commit(Set.empty, nf, Map.empty)
     val all = t.read()
     assert(all.count() == 7)

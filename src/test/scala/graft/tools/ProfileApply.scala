@@ -2,7 +2,7 @@ package graft.tools
 import graft.apply.CdcApply
 import graft.core.ChangeEvent
 import graft.genlog.{ChangelogGen, GenConfig}
-import graft.laketable.{LakeTable, LakeTable => LT}
+import graft.laketable.LakeTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ProfileApply {
@@ -32,10 +32,10 @@ object ProfileApply {
     val agg = time("agg+cache-materialize") {
       last.agg(sum(when(col("op") =!= "delete", 1L).otherwise(0L)),
         sum(when(col("op") === "delete", 1L).otherwise(0L)),
-        collect_set(pmod(xxhash64(col("_repo")), lit(64)).cast("int"))).head()
+        collect_set(snap0.bucketOf(col("_repo")))).head()
     }
     val upserts = last.filter(col("op") =!= "delete").select(col("after.*"))
-    val merged = upserts.withColumn("_bucket", LT.bucketExpr(64))
+    val merged = upserts.withColumn("_bucket", snap0.bucketOf(col("repo")))
     val files = time("repartition+parquet-write") {
       table.writeDataFiles(merged.repartition(col("_bucket")), 0)
     }
