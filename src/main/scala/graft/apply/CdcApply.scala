@@ -2,7 +2,7 @@ package graft.apply
 
 import graft.core.{LastPk, ShardCursor, ShardStats, SyncState, VGtid}
 import graft.functions.VGtidRankExpr.vgtid_rank
-import graft.laketable.{LakeTable, Snapshot}
+import graft.laketable.{DataFileEntry, LakeTable, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -92,9 +92,7 @@ object CdcApply {
     * dedup/staging internals (`_rank`, `_win`, `_kind`, …) — a collision
     * would silently corrupt the LWW grouping, so fail loud instead.
     */
-  private val ReservedKeyNames =
-    Set("rank", "salt", "win", "key_events", "sub_events", "rn", "kind", "bucket",
-      "payload")
+  private val ReservedKeyNames = Set("rank", "win", "key_events", "kind", "bucket", "payload")
 
   /** Canonical merge-key columns `_<name>` from the event's after/before
     * images (delete events carry the key only in `before`). `landing` maps
@@ -171,7 +169,7 @@ object CdcApply {
     * parquet (one column-pruned read of local winner files — never a second
     * scan of the source). keyspace/shard dictionary-encode to ~nothing;
     * vgtid strings share a long prefix (snappy); the rest are small
-    * longs/bools. They double as per-row provenance in the adopted files
+    * longs/bools. They double as per-row provenance in the upsert data files
     * (readers project by schema field ids, so they are invisible to queries).
     */
   private val statsCols: Seq[Column] = Seq(
@@ -283,9 +281,10 @@ object CdcApply {
     val deduped = dedupLww(filtered, keys, keyLanding)
     val spark = events.sparkSession
 
-    // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet).
-    // Staged upsert files ARE the final data files (adopted by rename, no
-    // rewrite): the heavy content bytes are written exactly once per batch.
+    // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet),
+    // written in place under data/: the upsert files ARE the final data
+    // files once the batch commit lists them, so the heavy content bytes are
+    // written exactly once per batch.
     // Event payloads speak the table's ORIGINAL (v0) column names; after
     // Avro-driven renames the current snapshot may use different names —
     // map by Iceberg-style field id (rename = metadata only), columns added
@@ -322,8 +321,8 @@ object CdcApply {
     val staged = deduped.select(dataCols ++ Seq(
       when(col("op") === "delete", lit("d")).otherwise(lit("u")).as("_kind"),
       bucket.as("_bucket")) ++ statsCols: _*)
-    val stage = table.stageWrite(staged.repartition(col("_bucket")))
-    val affected = table.stagedBuckets(stage)
+    val (batchDir, written) = table.stageWrite(staged.repartition(col("_bucket")))
+    val affected = written.map(_._2).toSet
 
     // --- ONE read of the staged winners yields the per-kind row counts,
     // the per-shard cursors/stats AND (below) the survivor anti-join's
@@ -335,7 +334,8 @@ object CdcApply {
     var maxWireSv = 1
     var upsertCount = 0L
     var deleteCount = 0L
-    val stagedAll = table.stagedAllDf(spark, stage, staged.schema)
+    val stagedAll =
+      if (written.isEmpty) None else Some(table.stagedAllDf(spark, batchDir, staged.schema))
     val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
     stagedRows.foreach { r =>
       upsertCount += r.getLong(8)
@@ -369,18 +369,21 @@ object CdcApply {
         // O(buckets), independent of parallelism
         table.writeDataFiles(survivors.repartition(col("_bucket")), snap.schemaVersion)
       }
-    val newFiles = table.adoptStagedUpserts(stage, snap.schemaVersion) ++ survivorFiles
-    // --- the batch's metrics rows (and any tier fold) are staged, adopted
-    // and listed by the SAME commit as its data and cursors: exactly-once
-    // by construction. `version` is the version this commit lands as
-    // (single writer — nothing commits in between). ---
+    val newFiles = written.collect { case ("u", bucket, path) =>
+      DataFileEntry(path, bucket, -1L, snap.schemaVersion)
+    } ++ survivorFiles
+    // --- the batch's metrics rows (and any tier fold) are written in place
+    // under metrics/ and listed by the SAME commit as its data and cursors:
+    // exactly-once by construction. `version` is the version this commit
+    // lands as (single writer — nothing commits in between). ---
     val wallMs = (System.nanoTime() - tStart) / 1000000L
     val version = snap.version + 1
     val batchMetrics =
       if (stats.isEmpty) Nil
-      else Seq(writeMetricsFile(spark, stage, 0, metricsRows(batchId, stats, wallMs, version)))
-    val (foldFiles, folded) = foldMetrics(spark, table, snap, stage)
-    val newMetrics = table.adoptMetrics(batchMetrics ++ foldFiles)
+      else Seq(writeMetricsFile(spark, table.metricsDir, 0,
+        metricsRows(batchId, stats, wallMs, version)))
+    val (foldFiles, folded) = foldMetrics(spark, table, snap)
+    val newMetrics = (batchMetrics ++ foldFiles).map(p => s"metrics/${p.getName}")
 
     // --- transactional cursor + lineage commit ---
     val merged = cursors.values.foldLeft(prevState) { (st, c) =>
@@ -427,10 +430,10 @@ object CdcApply {
       dropSummaryKeys = stale,
       newMetrics = newMetrics,
       foldedMetrics = folded)
-    // the stage goes only once its batch has committed: a failed or fenced
-    // batch's cancelled tasks may still be reading it, so its stage is left
-    // to expireSnapshots' `stage-*` sweep, like a crashed batch's
-    table.dropStage(stage)
+    // the unlisted delete keys go only once their batch has committed: a
+    // failed or fenced batch's cancelled tasks may still be using its dir,
+    // so that dir is left to expireSnapshots, like a crashed batch's
+    table.dropDeleteKeys(batchDir)
     ApplyResult(committed, upsertCount, deleteCount, skipped = false, stats = stats,
       maxSchemaVersion = maxWireSv)
   }
@@ -510,17 +513,18 @@ object CdcApply {
   private def metricsTier(path: String): Int =
     new Path(path).getName.stripPrefix("gen").takeWhile(_.isDigit).toInt
 
-  /** Stage the fold of every full tier: returns the folded files (in
-    * `stage`) and the list entries they replace.
+  /** Write the fold of every full tier: returns the folded files (in
+    * metrics/, unlisted until the batch commit) and the list entries they
+    * replace.
     */
-  private def foldMetrics(spark: SparkSession, table: LakeTable, snap: Snapshot,
-      stage: Path): (Seq[Path], Set[String]) = {
+  private def foldMetrics(spark: SparkSession, table: LakeTable,
+      snap: Snapshot): (Seq[Path], Set[String]) = {
     val full = snap.metricsFiles.groupBy(metricsTier).toSeq
       .filter { case (t, files) => t < 3 && files.size >= MetricsTierFiles }
     val out = full.map { case (t, files) =>
       val rows = spark.read.schema(metricsSchema)
         .parquet(files.map(f => new Path(table.root, f).toString): _*).collect()
-      writeMetricsFile(spark, stage, t + 1, rows.toSeq)
+      writeMetricsFile(spark, table.metricsDir, t + 1, rows.toSeq)
     }
     (out, full.flatMap(_._2).toSet)
   }

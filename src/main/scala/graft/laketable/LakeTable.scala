@@ -74,11 +74,16 @@ final case class Snapshot(
   * emitting STATE after RECORD batches (`cmd/airbyte-source/read.go:131-137`).
   *
   * Layout (works on any Hadoop FileSystem — local, HDFS, S3A):
-  *   <root>/data/<uuid>.parquet          immutable data files
+  *   <root>/data/<uuid>/[_kind=<k>/]_bucket=<b>/part-*.parquet
+  *                                       immutable data files, one dir per write
   *   <root>/metrics/gen<T>-<uuid>.parquet immutable metrics files (tier T)
   *   <root>/meta/m-<uuid>.json           immutable manifest (files of one bucket group)
   *   <root>/meta/v<N>.json               snapshot N (schemas + manifest list + summary)
   *   <root>/meta/version-hint.txt        current version (atomic rename swap)
+  * Writers land every file in place; a file is part of the table only once
+  * a committed snapshot lists it, so the snapshot commit is the only publish
+  * step and [[expireSnapshots]] deletes whatever no kept snapshot lists.
+  * Flat `data/<uuid>.parquet` entries of older builds stay valid paths.
   *
   * Scale design: data files are bucketed by the first merge-key column
   * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
@@ -99,7 +104,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   private val metaDir = new Path(root, "meta")
   private val dataDir = new Path(root, "data")
-  private val metricsDir = new Path(root, "metrics")
+  private[graft] val metricsDir = new Path(root, "metrics")
   private val hintFile = new Path(metaDir, "version-hint.txt")
 
   // ---- snapshot IO -------------------------------------------------------
@@ -141,21 +146,15 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   // ---- manifest IO -------------------------------------------------------
 
-  /** Write one immutable manifest for bucket group [lo, hi). Temp-write +
-    * rename so a referenced manifest is never partially written; the UUID
-    * name makes replayed commits write fresh files (stale orphans are GC'd
-    * by [[expireSnapshots]]).
+  /** Write one immutable manifest for bucket group [lo, hi) in place: a
+    * snapshot references it only after `close()` returns, so a crash
+    * mid-write leaves an unreferenced orphan for [[expireSnapshots]]; the
+    * UUID name makes replayed commits write fresh files.
     */
   private def writeManifest(lo: Int, hi: Int, files: Seq[DataFileEntry]): ManifestEntry = {
-    val f = fs
-    f.mkdirs(metaDir)
     val name = s"m-${UUID.randomUUID()}.json"
-    val tmp = new Path(metaDir, s".$name.tmp")
-    val out = f.create(tmp, true)
+    val out = fs.create(new Path(metaDir, name), false)
     try out.write(manifestToJson(files).getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val dest = new Path(metaDir, name)
-    if (!f.rename(tmp, dest))
-      throw new IllegalStateException(s"failed to write manifest $name")
     ManifestEntry(s"meta/$name", lo, hi, files.size)
   }
 
@@ -287,97 +286,76 @@ final class LakeTable(val root: String, spark: SparkSession) {
   // ---- write / commit ----------------------------------------------------
 
   /** Write `df` (must match current schema + a `_bucket` int column) as new
-    * data files, one parquet directory write partitioned by bucket, then
-    * moved into data/ with stable names. Returns the manifest entries.
+    * data files in place: one parquet directory write under `data/<uuid>/`,
+    * partitioned by bucket. Returns the manifest entries.
     */
   private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
-    val stage = new Path(root, s"stage-${UUID.randomUUID()}")
-    df.write.partitionBy("_bucket").parquet(stage.toString)
-    val entries = moveIntoData(stage, schemaVersion)
-    fs.delete(stage, true)
-    entries
-  }
-
-  /** `(bucket, dir)` of each `_bucket=<b>` partition dir directly under
-    * `parent` (none when `parent` does not exist).
-    */
-  private def bucketDirs(parent: Path): Seq[(Int, Path)] = {
-    val f = fs
-    if (!f.exists(parent)) Nil
-    else f.listStatus(parent).toSeq.filter(_.isDirectory).map(st =>
-      st.getPath.getName.stripPrefix("_bucket=").toInt -> st.getPath)
-  }
-
-  /** Move the parquet files of the `_bucket=` dirs under `parent` into
-    * data/ under fresh names (no rewrite); returns their entries.
-    */
-  private def moveIntoData(parent: Path, schemaVersion: Int): Seq[DataFileEntry] = {
-    val f = fs
-    bucketDirs(parent).flatMap { case (bucket, dir) =>
-      f.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-        val name = s"${UUID.randomUUID()}.parquet"
-        if (!f.rename(st.getPath, new Path(dataDir, name)))
-          throw new IllegalStateException(s"failed to move ${st.getPath}")
-        DataFileEntry(s"data/$name", bucket, -1L, schemaVersion)
-      }
+    val dir = new Path(dataDir, UUID.randomUUID().toString)
+    df.write.partitionBy("_bucket").parquet(dir.toString)
+    writtenFiles(dir).map { case (_, bucket, path) =>
+      DataFileEntry(path, bucket, -1L, schemaVersion)
     }
   }
 
-  /** Stage a deduped batch: rows carry `_kind` ('u' upsert / 'd' delete-key)
-    * and `_bucket`; written as one parquet job partitioned by both. Upsert
-    * files are later *adopted* as final data files without a rewrite (the
-    * heavy content bytes are written exactly once per batch); delete/upsert
-    * keys drive the pruning rewrite of existing files.
+  private lazy val rootPrefix = fs.makeQualified(new Path(root)).toUri.getPath + "/"
+
+  /** Table-relative path of `p` (a qualified path under the root). Fails
+    * loud otherwise: expiry deletes what it cannot match to a listed path.
     */
-  private[graft] def stageWrite(df: DataFrame): Path = {
-    val stage = new Path(root, s"stage-${UUID.randomUUID()}")
-    df.write.partitionBy("_kind", "_bucket").parquet(stage.toString)
-    stage
+  private def relative(p: Path): String = {
+    val s = p.toUri.getPath
+    require(s.startsWith(rootPrefix), s"$p is not under the table root $root")
+    s.stripPrefix(rootPrefix)
   }
 
-  /** BOTH staged kinds in one read, `_kind`/`_bucket` recovered as partition
-    * columns from the directory layout — the apply derives upsert/delete
-    * counts, per-shard cursor stats AND the survivor anti-join's keys from
-    * this one DataFrame (one file listing per batch). None when the batch
-    * staged nothing. `stagedSchema` (the schema of the DataFrame that was
-    * just written, WITH `_kind`/`_bucket`) skips footer reads + schema
-    * inference — the writer knows exactly what it wrote.
+  /** Every file under `dir`, recursively. Plain `listStatus`: the local
+    * filesystem's `listFiles` forks a process per file for its permissions.
     */
-  private[graft] def stagedAllDf(spark2: SparkSession, stage: Path,
-      stagedSchema: StructType): Option[DataFrame] = {
-    val f = fs
-    if (!Seq("u", "d").exists(k => f.exists(new Path(stage, s"_kind=$k")))) None
-    else {
-      // partition columns (_kind/_bucket) go last — the order Spark's
-      // partition discovery appends them in
-      val parts = Set("_kind", "_bucket")
-      val (partCols, dataCols) = stagedSchema.fields.partition(f2 => parts.contains(f2.name))
-      Some(spark2.read.schema(StructType(dataCols ++ partCols)).parquet(stage.toString))
+  private def filesUnder(dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(st.getPath) else Seq(st.getPath))
+
+  /** `(kind, bucket, path)` of each parquet file a partitioned write left
+    * under the data dir `dir`: `kind` from its `_kind=` dir ("" when the
+    * write was not partitioned by kind), `path` table-relative.
+    */
+  private def writtenFiles(dir: Path): Seq[(String, Int, String)] =
+    filesUnder(dir).map(relative).filter(_.endsWith(".parquet")).map {
+      case p @ WrittenRe(kind, bucket) => (Option(kind).getOrElse(""), bucket.toInt, p)
+      case p => throw new IllegalStateException(s"unexpected data file layout: $p")
     }
-  }
 
-  /** Adopt staged upsert files as final data files (move, no rewrite). */
-  private[graft] def adoptStagedUpserts(stage: Path, schemaVersion: Int): Seq[DataFileEntry] =
-    moveIntoData(new Path(stage, "_kind=u"), schemaVersion)
-
-  /** Move files staged for the metrics list into metrics/ (no rewrite);
-    * returns their table-relative paths for [[commit]].
+  /** Write a deduped batch in place under `data/<uuid>/`, one parquet job
+    * partitioned by `_kind` ('u' upsert / 'd' delete-key) and `_bucket`.
+    * Its upsert files become data files as written once the batch commit
+    * lists them; its keys drive the pruning rewrite of existing files.
+    * Returns the dir and its [[writtenFiles]] listing.
     */
-  private[graft] def adoptMetrics(files: Seq[Path]): Seq[String] = {
-    val f = fs
-    if (files.nonEmpty) f.mkdirs(metricsDir)
-    files.map { p =>
-      if (!f.rename(p, new Path(metricsDir, p.getName)))
-        throw new IllegalStateException(s"failed to adopt $p")
-      s"metrics/${p.getName}"
-    }
+  private[graft] def stageWrite(df: DataFrame): (Path, Seq[(String, Int, String)]) = {
+    val dir = new Path(dataDir, UUID.randomUUID().toString)
+    df.write.partitionBy("_kind", "_bucket").parquet(dir.toString)
+    (dir, writtenFiles(dir))
   }
 
-  /** Buckets present in the staged batch (from the directory layout). */
-  private[graft] def stagedBuckets(stage: Path): Set[Int] =
-    Seq("u", "d").flatMap(kind => bucketDirs(new Path(stage, s"_kind=$kind")).map(_._1)).toSet
+  /** BOTH kinds of a [[stageWrite]] batch in one read, `_kind`/`_bucket`
+    * recovered as partition columns from the directory layout — the apply
+    * derives upsert/delete counts, per-shard cursor stats AND the survivor
+    * anti-join's keys from this one DataFrame. `stagedSchema` (the schema
+    * of the DataFrame that was just written, WITH `_kind`/`_bucket`) skips
+    * footer reads + schema inference — the writer knows exactly what it
+    * wrote.
+    */
+  private[graft] def stagedAllDf(spark2: SparkSession, dir: Path,
+      stagedSchema: StructType): DataFrame = {
+    // partition columns (_kind/_bucket) go last — the order Spark's
+    // partition discovery appends them in
+    val parts = Set("_kind", "_bucket")
+    val (partCols, dataCols) = stagedSchema.fields.partition(f => parts.contains(f.name))
+    spark2.read.schema(StructType(dataCols ++ partCols)).parquet(dir.toString)
+  }
 
-  private[graft] def dropStage(stage: Path): Unit = fs.delete(stage, true)
+  /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
+  private[graft] def dropDeleteKeys(dir: Path): Unit = fs.delete(new Path(dir, "_kind=d"), true)
 
   /** Commit a new snapshot replacing all files in `replacedBuckets` with
     * `newFiles`, merging `summaryUpdates` into the previous summary (keys in
@@ -444,9 +422,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** Drop snapshot metadata older than the last `keepLast` versions and
-    * delete data, metrics and manifest files no kept snapshot references
-    * (time travel window + GC of orphans from crashed commits), plus stage
-    * dirs a crashed apply stranded (single-writer: none is live here).
+    * delete every data, metrics and manifest file no kept snapshot lists
+    * (time travel window + GC of what failed, fenced or crashed writes left),
+    * plus `stage-*` dirs older builds stranded (single-writer: no write is
+    * in flight here). A listed file is never deleted.
     */
   def expireSnapshots(keepLast: Int = 3): Unit = {
     val cur = currentVersion.getOrElse(return)
@@ -471,17 +450,24 @@ final class LakeTable(val root: String, spark: SparkSession) {
     val keptManifests = kept.flatMap(_.manifests).distinctBy(_.path)
     val referenced = keptManifests.flatMap(readManifest).map(_.path).toSet
     val referencedMetrics = kept.flatMap(_.metricsFiles).toSet
-    // delete unreferenced data and metrics files
+    // delete unlisted data and metrics files: one flat listing per dir; an
+    // entry that holds no listed path goes whole (a flat file, or the dir of
+    // a superseded or never-committed write), and only dirs that hold a
+    // listed path are listed recursively and swept file by file
     Seq(dataDir -> referenced, metricsDir -> referencedMetrics).foreach { case (dir, refs) =>
+      val live = refs.map(_.split('/')(1))
       if (f.exists(dir)) f.listStatus(dir).foreach { st =>
-        if (!refs.contains(s"${dir.getName}/${st.getPath.getName}")) f.delete(st.getPath, false)
+        if (!live.contains(st.getPath.getName)) f.delete(st.getPath, true)
+        else if (st.isDirectory)
+          filesUnder(st.getPath).filterNot(p => refs.contains(relative(p)))
+            .foreach(f.delete(_, false))
       }
     }
     f.globStatus(new Path(root, "stage-*")).foreach(st => f.delete(st.getPath, true))
     // delete unreferenced manifests (expired snapshots' and crash orphans)
     // and temp-write leftovers a crash between create and rename strands
-    // (.m-*.tmp / .v*.tmp / .version-hint.*.tmp — single-writer, so no
-    // in-flight commit can own one while this maintenance pass runs)
+    // (.v*.tmp / .version-hint.*.tmp — single-writer, so no in-flight
+    // commit can own one while this maintenance pass runs)
     val keptManifestNames = keptManifests.map(m => new Path(root, m.path).getName).toSet
     metaListing.foreach { p =>
       val name = p.getName
@@ -530,6 +516,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
 object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
+  private val WrittenRe = """data/[^/]+/(?:_kind=(\w+)/)?_bucket=(\d+)/[^/]+\.parquet""".r
   private val FormatVersion = 3
 
   /** Default bucket-group width of one manifest: small tables get multiple

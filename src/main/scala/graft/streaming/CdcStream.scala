@@ -31,11 +31,13 @@ object CdcStream {
       compactEvery: Option[Int] = None,
       maxFilesPerBucket: Int = 4,
       // snapshot-expiry cadence: every N batches, drop snapshot metadata
-      // older than `keepSnapshots` versions and GC unreferenced data and
-      // metrics files, manifests, and crash-stranded temps and stage dirs.
-      // Without this a long-lived stream accretes one v<N>.json + O(touched
-      // groups) manifests per commit forever. None disables (keep every
-      // snapshot / external expiry).
+      // older than `keepSnapshots` versions and delete the data files,
+      // metrics files and manifests no kept snapshot lists (superseded
+      // files, and what failed, fenced or crashed batches wrote) plus
+      // crash-stranded temps. Without this a long-lived stream accretes one
+      // v<N>.json, O(touched groups) manifests and its superseded data files
+      // per commit forever. None disables (keep every snapshot / external
+      // expiry).
       expireEvery: Option[Int] = Some(32),
       keepSnapshots: Int = 8,
       startingGtids: Map[String, Map[String, String]] = Map.empty,
@@ -408,10 +410,10 @@ object CdcStream {
     // reference timeout_seconds: fence this sync attempt's wall time. The
     // watchdog stops the query; batches whose snapshot already committed
     // stand (data + cursors + checkpoint), an in-flight batch is abandoned
-    // mid-stage (its staged files are dropped, its checkpoint never
-    // advances) and replays exactly-once on the next sync. Partial sync,
-    // not a failure — the reference ends the VStream the same way
-    // (planetscale_edge_database.go:206-209 step 5b).
+    // (its files stay unlisted until a later expiry deletes them, its
+    // checkpoint never advances) and replays exactly-once on the next
+    // sync. Partial sync, not a failure — the reference ends the VStream
+    // the same way (planetscale_edge_database.go:206-209 step 5b).
     val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
     val watchdog = rc.timeoutSeconds.map { secs =>
       val t = new java.util.Timer("graft-sync-timeout", true)
@@ -448,8 +450,8 @@ object CdcStream {
     // end-of-sync expiry: the in-loop cadence can leave up to expireEvery-1
     // commits' metadata behind; one final pass bounds the meta dir to
     // ~keepSnapshots × (groups + 1) files between syncs. A fenced sync
-    // skips it: the cancelled batch's tasks may still be reading the stage
-    // dir the expiry would sweep; the next sync's expiry takes it.
+    // skips it: the cancelled batch's tasks may still be using the unlisted
+    // batch dir the expiry would delete; the next sync's expiry takes it.
     if (batches > 0 && !fenced.get && rc.expireEvery.exists(_ > 0))
       table.expireSnapshots(rc.keepSnapshots)
     SyncAttempt(batches, fenced.get)

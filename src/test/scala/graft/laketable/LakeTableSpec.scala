@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Paths}
+
 class LakeTableSpec extends AnyFunSuite with SparkSupport {
   import spark.implicits._
 
@@ -15,8 +17,8 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     t
   }
 
-  private def someRows(n: Int) =
-    (0 until n).map(i => (s"repo-$i", s"src/f$i.go", "c" * 40, "go", s"content-$i"))
+  private def someRows(n: Int, repo: String = "repo") =
+    (0 until n).map(i => (s"$repo-$i", s"src/f$i.go", "c" * 40, "go", s"content-$i"))
       .toDF("repo", "path", "commit", "lang", "content")
 
   /** `df` with the `_bucket` column [[LakeTable.writeDataFiles]] expects,
@@ -160,6 +162,10 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val rows = t.read().count()
     t.expireSnapshots(keepLast = 2)
     assert(t.read().count() == rows, "current snapshot must survive expiry")
+    // superseded files go at the first expiry that no longer keeps them;
+    // every file a kept snapshot lists stays
+    assert(TableFiles.parquetUnder(t.root, "data") == TableFiles.keptDataFiles(t, 2))
+    assert(TableFiles.strayData(t, 2).isEmpty)
     assert(t.read(Some(cur - 1)).count() >= 0)  // kept window still time-travels
     assertThrows[Exception](t.read(Some(0L)))   // expired version gone
     // a LARGER keep window after a smaller one must not crash on the
@@ -180,6 +186,68 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     t.expireSnapshots()
     assert(!java.nio.file.Files.exists(stage), "stranded stage dir survived expiry")
     assert(t.read().count() == 5)
+  }
+
+  test("a batch written but never committed leaves read() unchanged, and " +
+    "expireSnapshots deletes its dir") {
+    val t = newTable()
+    t.commit(Set.empty, t.writeDataFiles(bucketed(t, someRows(5)), 0), Map.empty)
+    val before = t.read().orderBy("repo", "path").collect().toSeq
+    // what a batch killed between its write and its commit leaves:
+    // complete parquet of both kinds under data/<uuid>/
+    val batch = bucketed(t, someRows(4, "up").withColumn("_kind", lit("u"))
+      .unionByName(someRows(4, "del").withColumn("_kind", lit("d"))))
+    val (dir, written) = t.stageWrite(batch)
+    assert(written.map(_._1).toSet == Set("u", "d"))
+    assert(written.forall { case (_, _, p) => Files.exists(Paths.get(t.root, p)) })
+    assert(t.read().orderBy("repo", "path").collect().toSeq == before)
+    t.expireSnapshots()
+    assert(!Files.exists(Paths.get(dir.toString)), "uncommitted batch dir survived")
+    assert(t.read().orderBy("repo", "path").collect().toSeq == before)
+  }
+
+  test("expireSnapshots keeps the listed files of a data dir and deletes its unlisted ones") {
+    val t = newTable()
+    val files = t.writeDataFiles(bucketed(t, someRows(20)), 0)
+    assert(files.size >= 2 && files.map(_.path.split('/')(1)).distinct.size == 1,
+      s"expected one dir of several files: ${files.map(_.path)}")
+    val (listed, unlisted) = files.splitAt(1)
+    t.commit(Set.empty, listed, Map.empty)
+    val rows = t.read().count()
+    t.expireSnapshots()
+    assert(TableFiles.parquetUnder(t.root, "data") == listed.map(_.path).toSet,
+      s"unlisted ${unlisted.map(_.path)} must go, listed ${listed.map(_.path)} must stay")
+    assert(TableFiles.strayData(t, 3).isEmpty)
+    assert(t.read().count() == rows)
+  }
+
+  test("flat data/<uuid>.parquet files of older builds, mixed with the nested " +
+    "layout, read, compact and expire with the same row count") {
+    val t = newTable()
+    // older builds' layout: each data file flat under data/, one per bucket
+    val flat = t.writeDataFiles(bucketed(t, someRows(20)).repartition(col("_bucket")), 0).map { e =>
+      val name = s"data/${java.util.UUID.randomUUID()}.parquet"
+      Files.move(Paths.get(t.root, e.path), Paths.get(t.root, name))
+      e.copy(path = name)
+    }
+    t.commit(Set.empty, flat, Map.empty)
+    val crowded = flat.head.bucket
+    val nested = t.writeDataFiles(
+      bucketed(t, someRows(40, "new")).filter(col("_bucket") === crowded), 0)
+    assert(nested.nonEmpty)
+    t.commit(Set.empty, nested, Map.empty)
+    val rows = t.read().count()
+    assert(rows == 20 + t.readFiles(t.currentSnapshot.get, nested).count())
+    t.compact(maxFilesPerBucket = 1)
+    assert(t.read().count() == rows)
+    t.expireSnapshots(keepLast = 1)
+    assert(t.read().count() == rows)
+    val current = t.allFiles(t.currentSnapshot.get).map(_.path).toSet
+    val (compacted, kept) = flat.partition(_.bucket == crowded)
+    assert(kept.nonEmpty && kept.forall(f => current.contains(f.path)),
+      "flat files of uncompacted buckets stay listed")
+    assert(TableFiles.parquetUnder(t.root, "data") == current)
+    assert(compacted.forall(f => !Files.exists(Paths.get(t.root, f.path))))
   }
 
   test("schema evolution: rename is metadata-only, add fills null") {

@@ -246,8 +246,8 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val base = tmpDir("metricsroll")
     val t = new LakeTable(s"$base/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 4)
-    val batches = CdcStream.runAvailableNow(spark, CdcStream.RunConfig(c, s"$base/t",
-      s"$base/cp", maxEventsPerTrigger = Some(100L)))
+    val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp", maxEventsPerTrigger = Some(100L))
+    val batches = CdcStream.runAvailableNow(spark, rc)
     assert(batches >= 50, s"expected ≥50 micro-batches, got $batches")
     // the snapshot's metrics list: at most MetricsTierFiles per tier, and
     // the tier-0 threshold was crossed (a fold ran inside a batch commit)
@@ -262,6 +262,10 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
     assert(files <= 33, s"metrics dir accreted $files files (unbounded growth)")
+    // data/ likewise: every parquet file (recursively) listed by a kept
+    // snapshot, and no batch dir beyond those the kept snapshots reference
+    val stray = graft.laketable.TableFiles.strayData(t, rc.keepSnapshots)
+    assert(stray.isEmpty, s"data dir holds files no kept snapshot lists: $stray")
     // no batch lost through the folds, none repeated
     val m = CdcStream.readMetrics(spark, s"$base/t")
     assert(m.select(sum(col("rows"))).head().getLong(0) == c.numEvents)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * independent oracle, cursors at the true head, NO cross-stream cursor
   * bleed (each table carries exactly its own state key + shards), metrics
   * exactly-once (rows sum to the stream's events; one batch id per applied
-  * batch), bounded data/metrics/meta file counts, and that every stream's
+  * batch), bounded data/metrics/meta file counts, no file under data/ that
+  * the kept snapshots do not list, and that every stream's
   * jobs ran in its own `graft-<stateKey>` scheduler pool.
   * Run: `sbt -batch "Test/runMain graft.tools.DriveCatalogSoak"`.
   */
@@ -123,6 +124,9 @@ object DriveCatalogSoak {
         require(dataFiles <= 8 * 4, s"${s.stateKey}: unbounded data files $dataFiles")
         require(metricsFiles <= 40, s"${s.stateKey}: unbounded metrics files $metricsFiles")
         require(metaFiles <= 40 + 6 * 8, s"${s.stateKey}: unbounded meta files $metaFiles")
+        val stray = graft.laketable.TableFiles.strayData(t, 6)
+        require(stray.isEmpty,
+          s"${s.stateKey}: unlisted data on disk: ${stray.take(5)} (${stray.size})")
       }
       val expectedPools = catalog.streams.map(s => s"graft-${s.stateKey}").toSet
       require(expectedPools.subsetOf(pools.toArray.map(_.toString).toSet),

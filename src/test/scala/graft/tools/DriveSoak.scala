@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * binlog head advances between passes via `endSeq`) — with periodic
   * small-file compaction and metrics folds along the way. At the end:
   * per-row sha parity vs the independent oracle, cursor head check, metrics
-  * integrity (every batch accounted once), bounded file counts.
+  * integrity (every batch accounted once), bounded file counts, and no
+  * file under data/ that the kept snapshots do not list.
   * Run: `sbt -batch "Test/runMain graft.tools.DriveSoak"`.
   */
 object DriveSoak {
@@ -92,6 +93,10 @@ object DriveSoak {
       require(metricsFiles <= 40, s"metrics folds failed to bound files: $metricsFiles")
       require(metaFiles <= 40 + 6 * 8,
         s"snapshot expiry failed to bound meta files: $metaFiles")
+      // data/ on disk (recursively): only what the kept snapshots list
+      val stray = graft.laketable.TableFiles.strayData(t, 6)
+      require(stray.isEmpty,
+        s"snapshot expiry left unlisted data: ${stray.take(5)} (${stray.size})")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
       println("DriveSoak OK")
     } finally spark.stop()
