@@ -70,21 +70,13 @@ object CdcApply {
 
   private val lineageMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private[graft] def lineageJson(batchId: Long, buckets: Int, upserts: Long,
-      deletes: Long, wallMs: Long, version: Long,
-      stats: Map[String, ShardStats]): String = {
+  /** The batch-level facts the batch's metrics rows do not hold: buckets
+    * replaced and staged upsert/delete winners. Per-shard positions, rows,
+    * wall time and the committed version live in the metrics rows only.
+    */
+  private[graft] def lineageJson(buckets: Int, upserts: Long, deletes: Long): String = {
     val n = lineageMapper.createObjectNode()
-    n.put("batchId", batchId); n.put("buckets", buckets)
-    n.put("upserts", upserts); n.put("deletes", deletes)
-    n.put("wallMs", wallMs); n.put("version", version)
-    val sh = n.putObject("shards")
-    stats.toSeq.sortBy(_._1).foreach { case (shard, st) =>
-      val s = sh.putObject(shard)
-      s.put("keyspace", st.cursor.keyspace)
-      s.put("position", st.cursor.position)
-      s.put("start", st.vgtidStart); s.put("end", st.vgtidEnd)
-      s.put("rows", st.rows)
-    }
+    n.put("buckets", buckets); n.put("upserts", upserts); n.put("deletes", deletes)
     lineageMapper.writeValueAsString(n)
   }
 
@@ -180,7 +172,9 @@ object CdcApply {
     col("_key_events").as("_s_key_events"),
     col("schema_version").as("_s_schema_ver"))
 
-  /** Per-shard stats aggregated from the staged LWW winners. Correct because
+  /** Per-shard stats aggregated from rows in the [[statsCols]] shape plus a
+    * `_kind` column: the staged LWW winners, or in parity mode the raw batch
+    * (one row per event). Correct on the winners because
     * within a shard events are totally ordered by `event_seq`: the shard's
     * latest event is the latest for its key, so it always survives dedup —
     * max over winners = max over the batch. Watermark rule (the reference
@@ -191,11 +185,11 @@ object CdcApply {
     *
     * The same aggregation also carries the per-kind staged row counts
     * (`_kind` is a partition column of the staged read), so ONE job yields
-    * cursors, lineage stats, AND the upsert/delete counts the apply reports
-    * — previously three separate jobs per micro-batch.
+    * cursors, per-shard stats, AND the upsert/delete counts the apply
+    * reports.
     */
-  private def statsFromStaged(winners: DataFrame): DataFrame =
-    winners
+  private def statsFromStaged(rows: DataFrame): DataFrame =
+    rows
       .select(col("_s_keyspace"), col("_s_shard"), col("_s_vgtid"), col("_s_rank"),
         col("_s_seq"), col("_s_copy"), col("_s_pk_repo"), col("_s_pk_path"),
         col("_s_key_events"), col("_s_schema_ver"), col("_kind"))
@@ -211,34 +205,25 @@ object CdcApply {
         sum(when(col("_kind") === "u", lit(1L)).otherwise(lit(0L))).as("_n_u"),
         sum(when(col("_kind") === "d", lit(1L)).otherwise(lit(0L))).as("_n_d"))
 
-  /** Per-shard stats by re-aggregating the RAW batch (second source scan) —
-    * used only in parity mode, where deletes are filtered out before dedup
-    * but must still advance the cursor position (the reference advances on
-    * VGTID events regardless of row emission). The native path derives stats
-    * from the staged winners instead — one scan.
+  /** The raw batch in the [[statsCols]] shape, one row per event — parity
+    * mode's stats input: there deletes are filtered out before dedup but
+    * must still advance the cursor position (the reference advances on
+    * VGTID events regardless of row emission).
     */
-  def statsFromEvents(batch: DataFrame, prevState: SyncState,
-      streamName: String = "repo_content"): Map[String, ShardStats] =
-    batch.groupBy(col("keyspace"), col("shard")).agg(
-      max_by(col("vgtid"), struct(vgtid_rank(col("vgtid")), col("event_seq"))).as("_s_vend"),
-      max(when(col("is_copy_phase"), lit(0)).otherwise(lit(1))).as("_s_catchup"),
-      max_by(col("last_pk.repo"),
-        when(col("is_copy_phase"), col("event_seq")).otherwise(lit(-1L))).as("_s_pk_repo"),
-      max_by(col("last_pk.path"),
-        when(col("is_copy_phase"), col("event_seq")).otherwise(lit(-1L))).as("_s_pk_path"),
-      count(lit(1)).as("_s_rows"))
-      .collect().map { r =>
-        statsFromRow(r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
-          Option(r.getString(4)), Option(r.getString(5)), r.getLong(6), prevState, streamName)
-      }.toMap
+  private def eventsAsStaged(batch: DataFrame): DataFrame =
+    batch.withColumn("_rank", vgtid_rank(col("vgtid")))
+      .withColumn("_key_events", lit(1L))
+      .select(statsCols :+ lit("e").as("_kind"): _*)
 
-  private def statsFromRow(ks: String, shard: String, vEnd: String, catchup: Int,
-      pkRepo: Option[String], pkPath: Option[String], rows: Long,
-      prevState: SyncState, streamName: String): (String, ShardStats) = {
-    val pk = if (catchup == 1) None
-             else for { r <- pkRepo; p <- pkPath } yield LastPk(r, p)
+  /** One [[statsFromStaged]] row → (shard, stats). */
+  private def statsFromRow(r: Row, prevState: SyncState,
+      streamName: String): (String, ShardStats) = {
+    val (ks, shard, vEnd) = (r.getString(0), r.getString(1), r.getString(2))
+    val pk = if (r.getInt(3) == 1) None
+             else for { repo <- Option(r.getString(4)); p <- Option(r.getString(5)) }
+                  yield LastPk(repo, p)
     val prevPos = prevState.cursorFor(s"$ks:$streamName", shard).map(_.position).getOrElse("")
-    shard -> ShardStats(ShardCursor(ks, shard, vEnd, pk), rows, prevPos, vEnd)
+    shard -> ShardStats(ShardCursor(ks, shard, vEnd, pk), r.getLong(6), prevPos, vEnd)
   }
 
   /** Apply one batch. Idempotent: replaying a batch whose id was already
@@ -327,28 +312,20 @@ object CdcApply {
     // --- ONE read of the staged winners yields the per-kind row counts,
     // the per-shard cursors/stats AND (below) the survivor anti-join's
     // keys, each a column-pruned scan of it. In parity mode the shard
-    // stats come from a re-scan of the raw batch instead, so dropped
-    // deletes still advance positions; evolution tracking stays at the
-    // base version there — parity mode models the reference's After-only
-    // comparison, not live schema changes. ---
-    var maxWireSv = 1
-    var upsertCount = 0L
-    var deleteCount = 0L
+    // stats come from the same aggregate over the raw batch instead, so
+    // dropped deletes still advance positions; evolution tracking stays at
+    // the base version there — parity mode models the reference's
+    // After-only comparison, not live schema changes. ---
     val stagedAll =
       if (written.isEmpty) None else Some(table.stagedAllDf(spark, batchDir, staged.schema))
     val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
-    stagedRows.foreach { r =>
-      upsertCount += r.getLong(8)
-      deleteCount += r.getLong(9)
-    }
-    val stats: Map[String, ShardStats] =
-      if (conf.parityMode) statsFromEvents(events, prevState, streamName)
-      else stagedRows.map { r =>
-        maxWireSv = math.max(maxWireSv, r.getInt(7))
-        statsFromRow(r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
-          Option(r.getString(4)), Option(r.getString(5)), r.getLong(6), prevState,
-          streamName)
-      }.toMap
+    val upsertCount = stagedRows.map(_.getLong(8)).sum
+    val deleteCount = stagedRows.map(_.getLong(9)).sum
+    val statsRows =
+      if (conf.parityMode) statsFromStaged(eventsAsStaged(events)).collect() else stagedRows
+    val stats = statsRows.map(statsFromRow(_, prevState, streamName)).toMap
+    val maxWireSv =
+      if (conf.parityMode) 1 else statsRows.map(_.getInt(7)).foldLeft(1)(math.max)
     val cursors = stats.map { case (s, st) => s -> st.cursor }
 
     // --- prune overwritten/deleted keys out of existing files (only the
@@ -399,8 +376,7 @@ object CdcApply {
       }
       st.updated(stateKey, keep)
     }
-    val lineage = lineageJson(batchId, affected.size, upsertCount, deleteCount,
-      wallMs, version, stats)
+    val lineage = lineageJson(affected.size, upsertCount, deleteCount)
     // bounded lineage: retain the trailing window only — the summary map
     // (rewritten every commit) must not grow O(batches) over a stream's
     // lifetime. The metrics files are the durable per-batch record.

@@ -47,8 +47,7 @@ final case class Snapshot(
 
   def currentSchema: Seq[FieldDef] = schemas(schemaVersion)
 
-  def sparkSchema: StructType =
-    StructType(currentSchema.map(f => StructField(f.name, DataType.fromDDL(f.dataType))))
+  def sparkSchema: StructType = LakeTable.sparkSchema(currentSchema)
 
   /** Total data-file count — from manifest-list counts, no manifest reads. */
   def fileCount: Int = manifests.map(_.fileCount).sum
@@ -58,8 +57,9 @@ final case class Snapshot(
 
   /** The table's one bucketing rule: the bucket of a row is
     * `pmod(xxhash64(k), numBuckets)` of its first merge-key column `k`
-    * (field id 1). Every writer — staged batch, survivor rewrite,
-    * compaction — buckets through this, so a key lands in one bucket.
+    * (field id 1). Both writers of a batch — the staged upserts and the
+    * survivor rewrite — bucket through this, so a key lands in one bucket
+    * and a commit lists at most two files per bucket.
     */
   def bucketOf(firstKey: Column): Column =
     pmod(xxhash64(firstKey), lit(numBuckets)).cast("int")
@@ -88,7 +88,12 @@ final case class Snapshot(
   * Scale design: data files are bucketed by the first merge-key column
   * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
   * the incoming batch: a micro-batch rewrite is O(affected buckets), which
-  * is the whole table when the batch's keys span every bucket. Snapshot
+  * is the whole table when the batch's keys span every bucket. A batch
+  * commit replaces every file of each bucket it touches with at most two
+  * (its upserts and the bucket's survivors, each written one file per
+  * bucket), so no bucket ever lists more than two files and the table needs
+  * no compaction: the commit and [[expireSnapshots]] are its whole file
+  * lifecycle. Snapshot
   * metadata is a two-level manifest tree (Iceberg's manifest-list/manifest
   * design): v<N>.json holds only the manifest LIST (one tiny entry per
   * bucket group); the file entries live in immutable per-group manifests
@@ -164,8 +169,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
     manifestFromJson(new String(bytes, StandardCharsets.UTF_8))
   }
 
-  /** All data files of a snapshot (reads every manifest — full-scan and
-    * maintenance paths only; the commit path never calls this).
+  /** All data files of a snapshot (reads every manifest — full-scan paths
+    * only; the commit path never calls this).
     */
   def allFiles(snap: Snapshot): Seq[DataFileEntry] = snap.manifests.flatMap(readManifest)
 
@@ -244,6 +249,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** Read the table at a snapshot (default: current). Files written under an
     * older schema version are re-mapped to current column names by field id
     * (rename = metadata only, Iceberg-style) and missing columns filled null.
+    * Each file is read with the schema it was written under, which the
+    * snapshot holds, so no scan infers a schema from parquet footers.
     */
   def read(version: Option[Long] = None): DataFrame = {
     val snap = version.map(snapshot).getOrElse(
@@ -259,7 +266,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
       files.groupBy(_.schemaVersion).map { case (sv, group) =>
         val written = snap.schemas(sv)
         val byId = written.map(f => f.id -> f).toMap
-        var df = spark.read.parquet(group.map(f => new Path(root, f.path).toString): _*)
+        val df = spark.read.schema(sparkSchema(written))
+          .parquet(group.map(f => new Path(root, f.path).toString): _*)
         // project written-name → current-name by field id; missing → null
         val cols = cur.map { c =>
           byId.get(c.id) match {
@@ -287,7 +295,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   /** Write `df` (must match current schema + a `_bucket` int column) as new
     * data files in place: one parquet directory write under `data/<uuid>/`,
-    * partitioned by bucket. Returns the manifest entries.
+    * partitioned by bucket (one file per bucket when `df` is hash-partitioned
+    * on `_bucket`). Returns the manifest entries.
     */
   private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
@@ -401,26 +410,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   // ---- maintenance ---------------------------------------------------------
 
-  /** Compact buckets whose file count exceeds `maxFilesPerBucket`: their rows
-    * are rewritten into fresh files (one parquet job over only those buckets)
-    * and the snapshot replaces them atomically. Steady-state micro-batching
-    * otherwise accretes one file per bucket per commit.
-    */
-  def compact(maxFilesPerBucket: Int = 4): Snapshot = {
-    val snap = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
-    // manifest-list file counts prune the scan: only manifests that could
-    // hold a crowded bucket (count > max possible if evenly spread) are read
-    val candidates = snap.manifests.filter(_.fileCount > maxFilesPerBucket)
-    val crowded = candidates.flatMap(readManifest)
-      .groupBy(_.bucket).filter(_._2.size > maxFilesPerBucket).keySet
-    if (crowded.isEmpty) return snap
-    val keyCol = snap.currentSchema.head.name // field id 1 = bucket key
-    val df = readFiles(snap, filesInBuckets(snap, crowded))
-      .withColumn("_bucket", snap.bucketOf(col(keyCol)))
-    val newFiles = writeDataFiles(df.repartition(col("_bucket")), snap.schemaVersion)
-    commit(crowded, newFiles, Map("compacted" -> s"v${snap.version}:${crowded.size} buckets"))
-  }
-
   /** Drop snapshot metadata older than the last `keepLast` versions and
     * delete every data, metrics and manifest file no kept snapshot lists
     * (time travel window + GC of what failed, fenced or crashed writes left),
@@ -526,6 +515,10 @@ object LakeTable {
     */
   def defaultBucketsPerManifest(numBuckets: Int): Int =
     math.max(1, math.min(64, numBuckets / 8))
+
+  /** The Spark schema of a list of field definitions, in order. */
+  def sparkSchema(fields: Seq[FieldDef]): StructType =
+    StructType(fields.map(f => StructField(f.name, DataType.fromDDL(f.dataType))))
 
   def manifestToJson(files: Seq[DataFileEntry]): String = {
     val n = mapper.createObjectNode()

@@ -22,14 +22,11 @@ object CdcStream {
       checkpoint: String,
       maxEventsPerTrigger: Option[Long] = None,
       endSeq: Option[Long] = None,
-      rowsPerPartition: Long = 250000L,
       parityMode: Boolean = false,
       streamId: String = "default",
       // source TABLE name — committed cursors are keyed <keyspace>:<streamName>
       // (reference state key, read.go:108)
       streamName: String = "repo_content",
-      compactEvery: Option[Int] = None,
-      maxFilesPerBucket: Int = 4,
       // snapshot-expiry cadence: every N batches, drop snapshot metadata
       // older than `keepSnapshots` versions and delete the data files,
       // metrics files and manifests no kept snapshot lists (superseded
@@ -66,9 +63,6 @@ object CdcStream {
       // wire strings shaped to this table, applyBatch normalizes + lands
       // them typed, merge keys = the table's primary-key columns.
       wireTable: Option[graft.core.WireTable] = None,
-      // transient-fault injection path (forwarded to the source; used by
-      // the max_retries spec to simulate a dropped stream)
-      faultFile: Option[String] = None,
       // event-supply implementation (the [[ShardEventTransport]] seam):
       // None = the synthetic closed-form changelog; a class name plugs a
       // real VStream/binlog/Kafka tail into the same sync loop
@@ -138,14 +132,12 @@ object CdcStream {
       "zipfSkew" -> c.zipfSkew.toString,
       "deleteRatio" -> c.deleteRatio.toString,
       "copyRows" -> c.copyRows.toString,
-      "contentBlocks" -> c.contentBlocks.toString,
-      "rowsPerPartition" -> rc.rowsPerPartition.toString) ++
+      "contentBlocks" -> c.contentBlocks.toString) ++
       c.schemaChangeAt.map("schemaChangeAt" -> _.toString) ++
       rc.maxEventsPerTrigger.map("maxEventsPerTrigger" -> _.toString) ++
       rc.endSeq.map("endSeq" -> _.toString) ++
       rc.shardSubset.map("shards" -> _) ++
       rc.wireTable.map("wireTable" -> _.toJson) ++
-      rc.faultFile.map("faultFile" -> _) ++
       rc.transportClass.map("transportClass" -> _) ++
       (if (rc.wirePayload) Map("wirePayload" -> "true") else Map.empty) ++
       (if (rc.useReplica) Map("useReplica" -> "true") else Map.empty) ++
@@ -374,7 +366,7 @@ object CdcStream {
       .option("checkpointLocation", rc.checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // single source scan: cursors + lineage stats come back from the
+        // single source scan: cursors + per-shard stats come back from the
         // apply itself (recovered from the staged winners' provenance
         // columns), not a pre-scan of the batch here
         val res = CdcApply.applyBatch(table, batch, batchId, streamId = rc.streamId,
@@ -392,11 +384,8 @@ object CdcStream {
         maybeEvolve(table, rc)
         if (!res.skipped) {
           batches += 1
-          // periodic small-file compaction (its commit is separate from the
-          // batch commit and content-neutral, so replays stay idempotent)
-          rc.compactEvery.foreach { k =>
-            if (k > 0 && batchId % k == k - 1) table.compact(rc.maxFilesPerBucket)
-          }
+          // the batch commit replaced every file of the buckets it touched
+          // (a bucket lists at most two), so expiry is the only upkeep:
           // periodic snapshot expiry bounds the META dir (time-travel
           // window = keepSnapshots); a replayed batch skips this branch,
           // which only delays expiry by one cadence

@@ -75,7 +75,6 @@ object ChangelogSource {
   final case class SourceOptions(
       gen: GenConfig,
       maxEventsPerTrigger: Long,
-      rowsPerPartition: Long,
       endSeq: Option[Long],
       startingGtids: Map[String, String],
       startingPks: Map[String, (String, String)],
@@ -88,11 +87,6 @@ object ChangelogSource {
       // arbitrary wire table (discover→read loop): the source serves wire
       // strings shaped to THIS table's columns instead of repo_profile
       wireTable: Option[graft.core.WireTable],
-      // transient-fault injection (tests the reference's max_retries loop):
-      // if this path exists when a partition reader opens, ONE reader
-      // atomically consumes it and throws — simulating a dropped VStream /
-      // DeadlineExceeded. The retried sync then succeeds.
-      faultFile: Option[String],
       // event supply — the transport seam ([[ShardEventTransport]]): heads
       // and event ranges come ONLY from here; a real VStream/Kafka tail is
       // one `transportClass` option away
@@ -171,7 +165,6 @@ object ChangelogSource {
     SourceOptions(
       gen,
       maxEventsPerTrigger = l("maxEventsPerTrigger", Long.MaxValue),
-      rowsPerPartition = l("rowsPerPartition", 250000L),
       endSeq = opts.get("endSeq").map(_.toLong),
       startingGtids = opts.get("startingGtids")
         .map(parseStartingGtids(_, opts.getOrElse("keyspace", "ks")))
@@ -198,7 +191,6 @@ object ChangelogSource {
         WireGen.validateKeys(wt)
         wt
       },
-      faultFile = opts.get("faultFile"),
       transport = ShardEventTransport.forConfig(gen, opts.get("transportClass")))
   }
 }
@@ -312,12 +304,11 @@ class ChangelogMicroBatchStream(opts: ChangelogSource.SourceOptions)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[ChangelogOffset].positions
     val to = end.asInstanceOf[ChangelogOffset].positions
-    ChangelogPlanner.plan(c, opts.selectedShards, from, to, opts.rowsPerPartition)
+    ChangelogPlanner.plan(c, opts.selectedShards, from, to)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangelogReaderFactory(c, opts.transport, opts.wirePayload, opts.wireTable,
-      opts.faultFile)
+    new ChangelogReaderFactory(c, opts.transport, opts.wirePayload, opts.wireTable)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -329,25 +320,27 @@ class ChangelogBatch(opts: ChangelogSource.SourceOptions) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val from = opts.selectedShards.map(_ -> 0L).toMap
     val to = opts.selectedShards.map(i => i -> opts.transport.head(i)).toMap
-    ChangelogPlanner.plan(c, opts.selectedShards, from, to, opts.rowsPerPartition)
+    ChangelogPlanner.plan(c, opts.selectedShards, from, to)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangelogReaderFactory(c, opts.transport, opts.wirePayload, opts.wireTable,
-      opts.faultFile)
+    new ChangelogReaderFactory(c, opts.transport, opts.wirePayload, opts.wireTable)
 }
 
 object ChangelogPlanner {
+  /** Events per input partition: a chunk of one shard's range. */
+  val RowsPerPartition = 250000L
+
   /** One partition per shard-chunk: shard-level parallelism (A12/A20) plus
     * chunking so a big catch-up doesn't serialize into one long task.
     */
-  def plan(c: GenConfig, shards: Seq[Int], from: Map[Int, Long], to: Map[Int, Long],
-      rowsPerPartition: Long): Array[InputPartition] =
+  def plan(c: GenConfig, shards: Seq[Int], from: Map[Int, Long],
+      to: Map[Int, Long]): Array[InputPartition] =
     shards.flatMap { s =>
       val f = from.getOrElse(s, 0L)
       val t = to.getOrElse(s, 0L)
       if (t <= f) Nil
-      else (f until t by rowsPerPartition).map { chunkStart =>
-        ChangelogInputPartition(s, chunkStart, math.min(t, chunkStart + rowsPerPartition), c)
+      else (f until t by RowsPerPartition).map { chunkStart =>
+        ChangelogInputPartition(s, chunkStart, math.min(t, chunkStart + RowsPerPartition), c)
       }
     }.toArray
 }
@@ -358,22 +351,13 @@ case class ChangelogInputPartition(shardIdx: Int, from: Long, to: Long, c: GenCo
 /** Reader factory — consumes event supply ONLY through the
   * [[ShardEventTransport]] seam (the reference's sync loop likewise consumes
   * only the `VitessClient` interface); this factory owns just the
-  * row ENCODING (typed / wire / generic-wire envelope) and test fault
-  * injection.
+  * row ENCODING (typed / wire / generic-wire envelope).
   */
 class ChangelogReaderFactory(c: GenConfig, transport: ShardEventTransport,
     wirePayload: Boolean = false,
-    wireTable: Option[graft.core.WireTable] = None,
-    faultFile: Option[String] = None)
+    wireTable: Option[graft.core.WireTable] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // injected transient fault (max_retries testing): exactly ONE reader —
-    // whoever wins the atomic delete — throws, like a dropped VStream; the
-    // retried sync attempt finds the file gone and proceeds
-    faultFile.foreach { f =>
-      if (java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-        throw new RuntimeException(s"injected transient stream fault ($f)")
-    }
     val p = partition.asInstanceOf[ChangelogInputPartition]
     new PartitionReader[InternalRow] {
       // one serializer closure chosen at construction (no per-row branching)

@@ -85,16 +85,22 @@ class ReplayParitySpec extends AnyFunSuite with SparkSupport {
     val cur = t.summaryValue("cursors")
     assert(cur.exists(_.contains("MySQL56/")))
 
-    // lineage carries per-shard stats and is pruned to a trailing window: a
-    // commit at batch 100 drops lineage:b1/b2 (1, 2 ≤ 100 - lineageKeep) —
-    // the summary map stays O(1) over a stream's lifetime, never O(batches)
-    // (event_seq is per-shard, so b2 above is empty — b1 carries the stats)
+    // lineage holds the batch-level counts and is pruned to a trailing
+    // window: a commit at batch 100 drops lineage:b1/b2 (1, 2 ≤ 100 -
+    // lineageKeep) — the summary map stays O(1) over a stream's lifetime,
+    // never O(batches). Per-shard rows live in the metrics rows (event_seq
+    // is per-shard, so b2 above is empty — b1 carries the stats).
     val lineage = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(t.summaryValue("lineage:b1").get)
-    assert(lineage.get("version").asLong() == 1L && lineage.get("wallMs").asLong() >= 0)
     import scala.jdk.CollectionConverters._
-    val shardRows = lineage.get("shards").elements().asScala.map(_.get("rows").asLong()).toSeq
-    assert(shardRows.nonEmpty && shardRows.sum > 0)
+    assert(lineage.fieldNames().asScala.toSet == Set("buckets", "upserts", "deletes"))
+    assert(lineage.get("upserts").asLong() == r1.upserts &&
+      lineage.get("deletes").asLong() == r1.deletes && r1.upserts > 0)
+    assert(lineage.get("buckets").asInt() > 0 && lineage.get("buckets").asInt() <= 8)
+    val shardRows = graft.streaming.CdcStream.readMetrics(spark, t.root)
+      .filter(col("batch_id") === 1L).select("shard", "rows").collect()
+    assert(shardRows.length == c.numShards && shardRows.map(_.getLong(1)).sum > 0)
+    assert(shardRows.forall(r => r1.stats(r.getString(0)).rows == r.getLong(1)))
     val r3 = CdcApply.applyBatch(t, b2.limit(0), batchId = 100L)
     assert(!r3.skipped)
     val keys = t.currentSnapshot.get.summary.keySet

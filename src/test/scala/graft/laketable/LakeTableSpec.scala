@@ -131,26 +131,6 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(t.snapshot(2L).summary("k") == "2") // orphan content replaced
   }
 
-  test("compact merges crowded buckets without changing table contents") {
-    val t = newTable()
-    (1 to 6).foreach { i =>
-      val f = t.writeDataFiles(bucketed(t, someRows(10)), 0)
-      t.commit(Set.empty, f, Map.empty)
-    }
-    val before = t.read().orderBy("repo", "path").collect().toSeq
-    val filesBefore = t.currentSnapshot.get.fileCount
-    t.compact(maxFilesPerBucket = 2)
-    val after = t.read().orderBy("repo", "path").collect().toSeq
-    assert(after == before, "compaction changed table contents")
-    val snap = t.currentSnapshot.get
-    assert(snap.fileCount < filesBefore)
-    assert(t.allFiles(snap).groupBy(_.bucket).values.forall(_.size <= 2))
-    // compacting an already-tidy table is a no-op commit
-    val v = t.currentVersion.get
-    t.compact(maxFilesPerBucket = 2)
-    assert(t.currentVersion.contains(v))
-  }
-
   test("expireSnapshots drops old metadata + unreferenced data files") {
     val t = newTable()
     (1 to 5).foreach { i =>
@@ -222,7 +202,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("flat data/<uuid>.parquet files of older builds, mixed with the nested " +
-    "layout, read, compact and expire with the same row count") {
+    "layout, read, replace and expire with the same row count") {
     val t = newTable()
     // older builds' layout: each data file flat under data/, one per bucket
     val flat = t.writeDataFiles(bucketed(t, someRows(20)).repartition(col("_bucket")), 0).map { e =>
@@ -238,16 +218,22 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     t.commit(Set.empty, nested, Map.empty)
     val rows = t.read().count()
     assert(rows == 20 + t.readFiles(t.currentSnapshot.get, nested).count())
-    t.compact(maxFilesPerBucket = 1)
+    // rewrite the crowded bucket as one file and commit it in its place,
+    // as a batch commit replaces the buckets it touches
+    val snap = t.currentSnapshot.get
+    val rewritten = t.writeDataFiles(bucketed(t,
+      t.readFiles(snap, t.filesInBuckets(snap, Set(crowded)))).repartition(col("_bucket")), 0)
+    t.commit(Set(crowded), rewritten, Map.empty)
+    assert(TableFiles.maxFilesPerBucket(t) == 1)
     assert(t.read().count() == rows)
     t.expireSnapshots(keepLast = 1)
     assert(t.read().count() == rows)
     val current = t.allFiles(t.currentSnapshot.get).map(_.path).toSet
-    val (compacted, kept) = flat.partition(_.bucket == crowded)
+    val (replaced, kept) = flat.partition(_.bucket == crowded)
     assert(kept.nonEmpty && kept.forall(f => current.contains(f.path)),
-      "flat files of uncompacted buckets stay listed")
+      "flat files of untouched buckets stay listed")
     assert(TableFiles.parquetUnder(t.root, "data") == current)
-    assert(compacted.forall(f => !Files.exists(Paths.get(t.root, f.path))))
+    assert((replaced ++ nested).forall(f => !Files.exists(Paths.get(t.root, f.path))))
   }
 
   test("schema evolution: rename is metadata-only, add fills null") {

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-/** On-disk views of a local lake table, for checks that GC leaves only
-  * what the kept snapshots list.
+/** On-disk and listed views of a local lake table, for checks that GC
+  * leaves only what the kept snapshots list and that buckets stay small.
   */
 object TableFiles {
 
@@ -30,6 +30,10 @@ object TableFiles {
       .filter(v => Files.exists(Paths.get(t.root, "meta", s"v$v.json")))
       .flatMap(v => t.allFiles(t.snapshot(v)).map(_.path)).toSet
   }
+
+  /** The most files any bucket of the current snapshot lists (0 when empty). */
+  def maxFilesPerBucket(t: LakeTable): Int =
+    t.allFiles(t.currentSnapshot.get).groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)
 
   /** What `data/` holds beyond the kept snapshots: every parquet file no kept
     * snapshot lists, and every entry directly under `data/` that no kept

@@ -153,9 +153,9 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val t = new LakeTable(s"$base/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 4)
     val fault = java.nio.file.Paths.get(s"$base/fault")
-    java.nio.file.Files.createFile(fault)
+    FaultOnceTransport.arm(fault)
     val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
-      maxEventsPerTrigger = Some(2000L), faultFile = Some(fault.toString))
+      maxEventsPerTrigger = Some(2000L), transportClass = Some(FaultOnceTransport.className))
 
     // without a retry loop, the injected dropped-stream fault fails the
     // sync attempt loudly (and is consumed by exactly one reader)
@@ -164,7 +164,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
 
     // re-arm and run WITH the reference's retry loop: attempt 1 fails,
     // attempt 2 resumes from the checkpoint and drains to parity
-    java.nio.file.Files.createFile(fault)
+    FaultOnceTransport.arm(fault)
     val batches = CdcStream.runWithRetries(spark, rc, maxRetries = 3)
     assert(batches > 0)
     val digest = (df: DataFrame) =>
@@ -182,9 +182,9 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val t = new LakeTable(s"$base/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 4)
     val fault = java.nio.file.Paths.get(s"$base/fault")
-    java.nio.file.Files.createFile(fault)
+    FaultOnceTransport.arm(fault)
     val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
-      maxEventsPerTrigger = Some(2000L), faultFile = Some(fault.toString))
+      maxEventsPerTrigger = Some(2000L), transportClass = Some(FaultOnceTransport.className))
     // budget of ONE total attempt: the injected fault consumes it → the
     // error is swallowed with committed progress returned, not rethrown
     val partial = CdcStream.runWithRetries(spark, rc, maxRetries = 1)
@@ -262,6 +262,10 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
     assert(files <= 33, s"metrics dir accreted $files files (unbounded growth)")
+    // no compaction runs: each batch commit replaces every file of the
+    // buckets it touches, so no bucket ever lists more than two files
+    val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
+    assert(perBucket <= 2, s"a bucket lists $perBucket files")
     // data/ likewise: every parquet file (recursively) listed by a kept
     // snapshot, and no batch dir beyond those the kept snapshots reference
     val stray = graft.laketable.TableFiles.strayData(t, rc.keepSnapshots)

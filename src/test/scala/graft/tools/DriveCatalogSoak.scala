@@ -3,7 +3,7 @@ package graft.tools
 import graft.core.{ChangeEvent, ConfiguredCatalog, ConfiguredStream, SyncState}
 import graft.genlog.{ChangelogGen, EventGen, GenConfig}
 import graft.laketable.LakeTable
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, FaultOnceTransport}
 import org.apache.spark.sql.functions._
 
 /** MULTI-STREAM catalog soak: 8 concurrent streams (2 namespaces × 4
@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * independent oracle, cursors at the true head, NO cross-stream cursor
   * bleed (each table carries exactly its own state key + shards), metrics
   * exactly-once (rows sum to the stream's events; one batch id per applied
-  * batch), bounded data/metrics/meta file counts, no file under data/ that
-  * the kept snapshots do not list, and that every stream's
+  * batch), at most two data files per bucket, bounded metrics/meta file
+  * counts, no file under data/ that the kept snapshots do not list, and
+  * that every stream's
   * jobs ran in its own `graft-<stateKey>` scheduler pool.
   * Run: `sbt -batch "Test/runMain graft.tools.DriveCatalogSoak"`.
   */
@@ -61,7 +62,7 @@ object DriveCatalogSoak {
 
       // 3 kill/resume phases: head at 40%, 75%, 100% of each stream's binlog
       Seq(0.4, 0.75, 1.0).zipWithIndex.foreach { case (frac, phase) =>
-        if (phase == 1) java.nio.file.Files.createFile(fault) // dropped stream mid-soak
+        if (phase == 1) FaultOnceTransport.arm(fault) // dropped stream mid-soak
         val res = CdcStream.runCatalog(spark, catalog, s => {
           val c = genFor(s)
           val maxHead = (0 until c.numShards)
@@ -69,10 +70,10 @@ object DriveCatalogSoak {
           CdcStream.RunConfig(c, s"$base/${dir(s)}/t", s"$base/${dir(s)}/cp",
             maxEventsPerTrigger = Some(1200L),
             endSeq = if (frac >= 1.0) None else Some((maxHead * frac).toLong),
-            compactEvery = Some(10), maxFilesPerBucket = 3,
             expireEvery = Some(16), keepSnapshots = 6,
             numBuckets = 8,
-            faultFile = if (phase == 1 && s == faultStream) Some(fault.toString) else None)
+            transportClass =
+              if (phase == 1 && s == faultStream) Some(FaultOnceTransport.className) else None)
         }, maxConcurrentStreams = 4, maxRetries = 3)
         res.foreach { case (k, v) => applied(k) += v }
         println(s"phase $phase (head ${(frac * 100).toInt}%): " +
@@ -115,13 +116,13 @@ object DriveCatalogSoak {
         require(mRows == totalEvents, s"${s.stateKey}: metrics rows $mRows != $totalEvents")
         require(mBatches == applied(s.stateKey),
           s"${s.stateKey}: metrics batches $mBatches != applied ${applied(s.stateKey)}")
-        // bounded files after 3 phases of compaction/folds/expiry
-        val dataFiles = t.currentSnapshot.get.fileCount
+        // bounded files after 3 phases of commits/folds/expiry
         val metricsFiles = fs.listStatus(
           new org.apache.hadoop.fs.Path(s"$base/${dir(s)}/t/metrics")).length
         val metaFiles = fs.listStatus(
           new org.apache.hadoop.fs.Path(s"$base/${dir(s)}/t/meta")).length
-        require(dataFiles <= 8 * 4, s"${s.stateKey}: unbounded data files $dataFiles")
+        val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
+        require(perBucket <= 2, s"${s.stateKey}: a bucket lists $perBucket data files")
         require(metricsFiles <= 40, s"${s.stateKey}: unbounded metrics files $metricsFiles")
         require(metaFiles <= 40 + 6 * 8, s"${s.stateKey}: unbounded meta files $metaFiles")
         val stray = graft.laketable.TableFiles.strayData(t, 6)
