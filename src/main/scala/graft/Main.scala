@@ -81,12 +81,95 @@ object Main {
     // >= N announce schema_version 2 (pair with --schema_registry)
     schemaChangeAt = o.get("schema_change_at").map(_.toLong))
 
+  /** The `RunConfig` of a `read` into table `root` with checkpoint `cp`:
+    * every option the single-stream and the catalog path both honor. The
+    * single-stream path then sets its resume state, wire table and stream
+    * name; the catalog path gives each stream its own dirs
+    * ([[catalogRunConfig]]).
+    */
+  private[graft] def readRunConfig(o: Map[String, String], root: String,
+      cp: String): CdcStream.RunConfig =
+    CdcStream.RunConfig(genConfig(o), root, cp,
+      // bounded by DEFAULT at the CLI: with an unbounded single micro-batch,
+      // the per-attempt timeout fence could cut the same giant batch forever
+      // with zero committed progress — batch boundaries are what make a
+      // fenced sync PARTIAL instead of empty
+      maxEventsPerTrigger = Some(o.getOrElse("maxPerTrigger", "500000").toLong),
+      parityMode = o.get("parity").exists(_.toBoolean),
+      startingGtids = o.get("starting_gtids").map(path =>
+        parseStartingGtids(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)), "UTF-8")))
+        .getOrElse(Map.empty[String, Map[String, String]]),
+      numBuckets = o.getOrElse("buckets", "64").toInt,
+      useGtidWithTablePks = o.get("use_gtid_with_table_pks").exists(_.toBoolean),
+      useReplica = o.get("use_replica").exists(_.toBoolean),
+      useRdonly = o.get("use_rdonly").exists(_.toBoolean),
+      replicaLagEvents = o.getOrElse("replica_lag", "0").toLong,
+      includeMetadata = o.get("include_metadata").exists(_.toBoolean),
+      wirePayload = o.get("wire").exists(_.toBoolean),
+      // --sync_shards: the reference's `shards` config (comma-separated
+      // shard names; --shards is the genlog COUNT flag)
+      shardSubset = o.get("sync_shards"),
+      schemaRegistry = parseSchemaRegistry(o),
+      // spec surface: default 300 s, minimum 300 (clamped loud)
+      timeoutSeconds = CdcStream.specTimeoutSeconds(o.get("timeout_seconds").map(_.toLong)),
+      expireEvery = Some(o.getOrElse("expire_every", "32").toInt),
+      keepSnapshots = o.getOrElse("keep_snapshots", "8").toInt)
+
+  /** One catalog stream's `RunConfig`: `base` with per-stream dirs keyed
+    * namespace__name, so same-named tables in different namespaces get
+    * distinct tables + checkpoints. Every other option applies to every
+    * stream of the catalog.
+    */
+  private[graft] def catalogRunConfig(base: CdcStream.RunConfig,
+      s: graft.core.ConfiguredStream): CdcStream.RunConfig = {
+    val dir = s"${s.namespace}__${s.name}"
+    base.copy(tableRoot = s"${base.tableRoot}/$dir", checkpoint = s"${base.checkpoint}/$dir")
+  }
+
+  /** `read`'s options as JSON-schema properties, in the order `spec` prints
+    * them: every option either path of `read` honors.
+    */
+  private val readOptions: Seq[(String, String)] = Seq(
+    "table" -> """{"type":"string","description":"lake table root (any Hadoop FileSystem URI)"}""",
+    "checkpoint" -> """{"type":"string","description":"streaming checkpoint dir"}""",
+    "events" -> """{"type":"integer"}""",
+    "shards" -> """{"type":"integer"}""",
+    "repos" -> """{"type":"integer"}""",
+    "paths" -> """{"type":"integer"}""",
+    "copyRows" -> """{"type":"integer"}""",
+    "seed" -> """{"type":"integer"}""",
+    "keyspace" -> """{"type":"string","description":"source keyspace (namespace for stream state keys)"}""",
+    "maxPerTrigger" -> """{"type":"integer","default":500000,"description":"micro-batch size bound in events (default 500000); batch boundaries are the commit points a fenced/partial sync keeps"}""",
+    "buckets" -> """{"type":"integer","default":64,"description":"hash buckets (the copy-on-write MERGE unit) of a table this read creates; existing tables keep their stored value"}""",
+    "parity" -> """{"type":"boolean","description":"reference After-image-only parity mode (drop deletes)"}""",
+    "include_metadata" -> """{"type":"boolean","description":"land per-row provenance columns (_graft_vgtid, _graft_seq, _graft_extracted_at)"}""",
+    "state" -> """{"type":"string","description":"SyncState JSON file; merged per stream in --catalog mode (incremental only)"}""",
+    "use_gtid_with_table_pks" -> """{"type":"boolean","description":"keep a shard's GTID position when --state resumes its COPY from a last known PK"}""",
+    "catalog" -> """{"type":"string","description":"configured catalog JSON file: one table and checkpoint per stream under --table/--checkpoint, each stream's sync_mode honored"}""",
+    "stream_concurrency" -> """{"type":"integer","description":"max concurrent streams in --catalog mode"}""",
+    "wire" -> """{"type":"boolean","description":"source serves raw MySQL wire strings (repo_profile); values are normalized and typed during apply"}""",
+    "sync_shards" -> """{"type":"string","description":"comma separated list of shards you'd like to sync, by default all shards are synced"}""",
+    "starting_gtids" -> """{"type":"string","description":"JSON file {\"<keyspace>\": {\"<shard>\": \"<gtid>\"}}: start each shard's tail at that position (a checkpoint wins)"}""",
+    "use_replica" -> """{"type":"boolean","description":"read from REPLICA tablets"}""",
+    "use_rdonly" -> """{"type":"boolean","description":"read from RDONLY tablets (wins over use_replica)"}""",
+    "replica_lag" -> """{"type":"integer","default":0,"description":"synthetic source knob: events a REPLICA/RDONLY tier lags the primary head"}""",
+    "wire_columns" -> """{"type":"string","description":"column-spec JSON file (same file discover --columns reads); the selected table's wire stream is ingested with typed landing"}""",
+    "wire_table" -> """{"type":"string","description":"table name to pick from --wire_columns (default: first table)"}""",
+    "timeout_seconds" -> """{"type":"integer","default":300,"minimum":300,"description":"timeout in seconds for ONE sync attempt (default 300; values below 300 are clamped up, matching the reference spec); fenced attempts re-enter from the checkpoint up to max_retries total attempts, committed batches stand"}""",
+    "max_retries" -> """{"type":"integer","default":3,"description":"TOTAL sync attempts per read (default 3, minimum 1); when the budget is exhausted on retryable errors the sync returns committed progress and SYNC_SUMMARY carries partial:true (reference nil-error semantics)"}""",
+    "schema_registry" -> """{"type":"string","description":"JSON file mapping wire schema versions to Avro record schemas ({\"1\": {...}, \"2\": {...}}); when stream events announce a newer schema_version, each step's Avro diff (alias renames + adds) is applied to the table and watermarked (also in --catalog mode, applied per stream)"}""",
+    "schema_change_at" -> """{"type":"integer","description":"synthetic source knob: catch-up events with global id >= N announce schema_version 2 (pair with schema_registry)"}""",
+    "expire_every" -> """{"type":"integer","description":"expire snapshot metadata every N batches (0 disables; default 32)"}""",
+    "keep_snapshots" -> """{"type":"integer","description":"time-travel window: snapshots retained by expiry (default 8)"}""")
+
   def main(args: Array[String]): Unit = {
     val (verb, o) = parseArgs(args)
     verb match {
       case "spec" =>
-        println(
-          """{"documentationUrl":"BENCH.md","connectionSpecification":{"type":"object","required":["table","checkpoint"],"properties":{"table":{"type":"string","description":"lake table root (any Hadoop FileSystem URI)"},"checkpoint":{"type":"string","description":"streaming checkpoint dir"},"events":{"type":"integer"},"shards":{"type":"integer"},"repos":{"type":"integer"},"paths":{"type":"integer"},"copyRows":{"type":"integer"},"seed":{"type":"integer"},"keyspace":{"type":"string","description":"source keyspace (namespace for stream state keys)"},"maxPerTrigger":{"type":"integer","default":500000,"description":"micro-batch size bound in events (default 500000); batch boundaries are the commit points a fenced/partial sync keeps"},"parity":{"type":"boolean","description":"reference After-image-only parity mode (drop deletes)"},"include_metadata":{"type":"boolean","description":"land per-row provenance columns (_graft_vgtid, _graft_seq, _graft_extracted_at)"},"state":{"type":"string","description":"SyncState JSON file; merged per stream in --catalog mode (incremental only)"},"stream_concurrency":{"type":"integer","description":"max concurrent streams in --catalog mode"},"wire":{"type":"boolean","description":"source serves raw MySQL wire strings (repo_profile); values are normalized and typed during apply"},"sync_shards":{"type":"string","description":"comma separated list of shards you'd like to sync, by default all shards are synced"},"wire_columns":{"type":"string","description":"column-spec JSON file (same file discover --columns reads); the selected table's wire stream is ingested with typed landing"},"wire_table":{"type":"string","description":"table name to pick from --wire_columns (default: first table)"},"timeout_seconds":{"type":"integer","default":300,"minimum":300,"description":"timeout in seconds for ONE sync attempt (default 300; values below 300 are clamped up, matching the reference spec); fenced attempts re-enter from the checkpoint up to max_retries total attempts, committed batches stand"},"max_retries":{"type":"integer","default":3,"description":"TOTAL sync attempts per read (default 3, minimum 1); when the budget is exhausted on retryable errors the sync returns committed progress and SYNC_SUMMARY carries partial:true (reference nil-error semantics)"},"buckets_per_manifest":{"type":"integer","description":"bucket-group size of the manifest tree at table CREATION (0 = auto: max(1, min(64, buckets/8))); existing tables keep their stored value"},"schema_registry":{"type":"string","description":"JSON file mapping wire schema versions to Avro record schemas ({\"1\": {...}, \"2\": {...}}); when stream events announce a newer schema_version, each step's Avro diff (alias renames + adds) is applied to the table and watermarked (also in --catalog mode, applied per stream)"},"schema_change_at":{"type":"integer","description":"synthetic source knob: catch-up events with global id >= N announce schema_version 2 (pair with schema_registry)"},"expire_every":{"type":"integer","description":"expire snapshot metadata every N batches (0 disables; default 32)"},"keep_snapshots":{"type":"integer","description":"time-travel window: snapshots retained by expiry (default 8)"}}}}""")
+        println(readOptions.map { case (k, v) => s""""$k":$v""" }.mkString(
+          """{"documentationUrl":"BENCH.md","connectionSpecification":{"type":"object",""" +
+            """"required":["table","checkpoint"],"properties":{""", ",", "}}}"))
 
       case "check" =>
         val spark = session()
@@ -159,11 +242,7 @@ object Main {
         try {
           val root = o.getOrElse("table", sys.error("--table required"))
           val cp = o.getOrElse("checkpoint", sys.error("--checkpoint required"))
-          val startingGtids = o.get("starting_gtids").map { path =>
-            val json = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(path)), "UTF-8")
-            parseStartingGtids(json)
-          }.getOrElse(Map.empty[String, Map[String, String]])
+          val base = readRunConfig(o, root, cp)
           o.get("catalog") match {
             case Some(catPath) =>
               // multi-stream configured catalog (reference read.go:103-138):
@@ -181,42 +260,16 @@ object Main {
                 SyncState.fromJson(new String(java.nio.file.Files.readAllBytes(
                   java.nio.file.Paths.get(path)), "UTF-8"))
               }.getOrElse(SyncState.empty)
-              val catalogRegistry = parseSchemaRegistry(o)
               val t0 = System.nanoTime()
-              // per-stream dirs keyed namespace__name: same-named tables in
-              // different namespaces get distinct tables + checkpoints
-              def streamDir(s: graft.core.ConfiguredStream) = s"${s.namespace}__${s.name}"
-              val outcomes = CdcStream.runCatalogOutcomes(spark, catalog, s =>
-                CdcStream.RunConfig(genConfig(o), s"$root/${streamDir(s)}", s"$cp/${streamDir(s)}",
-                  // bounded by DEFAULT at the CLI: with an unbounded single
-                  // micro-batch, the per-attempt timeout fence could cut the
-                  // same giant batch forever with zero committed progress —
-                  // batch boundaries are what make a fenced sync PARTIAL
-                  // instead of empty
-                  maxEventsPerTrigger =
-                    Some(o.getOrElse("maxPerTrigger", "500000").toLong),
-                  parityMode = o.get("parity").exists(_.toBoolean),
-                  startingGtids = startingGtids,
-                  numBuckets = o.getOrElse("buckets", "64").toInt,
-                  bucketsPerManifest = o.getOrElse("buckets_per_manifest", "0").toInt,
-                  useGtidWithTablePks = o.get("use_gtid_with_table_pks").exists(_.toBoolean),
-                  includeMetadata = o.get("include_metadata").exists(_.toBoolean),
-                  wirePayload = o.get("wire").exists(_.toBoolean),
-                  // per-sync options apply to EVERY stream of the catalog
-                  shardSubset = o.get("sync_shards"),
-                  schemaRegistry = catalogRegistry,
-                  // spec surface: default 300 s, minimum 300 (clamped loud)
-                  timeoutSeconds = CdcStream.specTimeoutSeconds(
-                    o.get("timeout_seconds").map(_.toLong)),
-                  expireEvery = Some(o.getOrElse("expire_every", "32").toInt),
-                  keepSnapshots = o.getOrElse("keep_snapshots", "8").toInt),
+              val outcomes = CdcStream.runCatalogOutcomes(spark, catalog,
+                catalogRunConfig(base, _),
                 state = catalogState,
                 maxConcurrentStreams = o.getOrElse("stream_concurrency", "4").toInt,
                 maxRetries = math.max(1, o.getOrElse("max_retries", "3").toInt))
               val secs = (System.nanoTime() - t0) / 1e9
               val anyPartial = outcomes.values.exists(_.partial)
               val per = catalog.streams.map { s =>
-                val t = new LakeTable(s"$root/${streamDir(s)}", spark)
+                val t = new LakeTable(catalogRunConfig(base, s).tableRoot, spark)
                 val oc = outcomes(s.stateKey)
                 s"""{"stream":"${s.name}","namespace":"${s.namespace}","sync_mode":"${s.syncMode}","batches":${oc.batches},"partial":${oc.partial},"table_rows":${t.read().count()},"state":${t.summaryValue("cursors").getOrElse("{}")}}"""
               }.mkString(",")
@@ -248,13 +301,9 @@ object Main {
               // serves raw wire strings, the table lands the normalized
               // TYPED repo_profile schema; the two COMPOSE
               if (t.currentVersion.isEmpty) t.create(
-                wireTable.map(wt => ChangeEvent.landingSchemaFor(wt,
-                    includeMetadata = o.get("include_metadata").exists(_.toBoolean)))
-                  .getOrElse(ChangeEvent.landingSchemaFor(
-                    wirePayload = o.get("wire").exists(_.toBoolean),
-                    includeMetadata = o.get("include_metadata").exists(_.toBoolean))),
-                numBuckets = o.getOrElse("buckets", "64").toInt,
-                bucketsPerManifest = o.getOrElse("buckets_per_manifest", "0").toInt)
+                wireTable.map(wt => ChangeEvent.landingSchemaFor(wt, base.includeMetadata))
+                  .getOrElse(ChangeEvent.landingSchemaFor(base.wirePayload, base.includeMetadata)),
+                base.numBuckets)
               // --state <file>: SyncState JSON (the reference's state file);
               // per-shard cursors resume the stream, PK watermarks resume the
               // COPY phase (position cleared unless --use_gtid_with_table_pks)
@@ -263,32 +312,10 @@ object Main {
                   java.nio.file.Paths.get(path)), "UTF-8")
                 SyncState.fromJson(json).streams.values.flatten.toMap
               }.getOrElse(Map.empty[String, graft.core.ShardCursor])
-              val schemaRegistry = parseSchemaRegistry(o)
-              val rc = CdcStream.RunConfig(genConfig(o), root, cp,
-                // bounded by DEFAULT (see catalog path: an unbounded single
-                // batch + the per-attempt fence could mean zero progress)
-                maxEventsPerTrigger =
-                  Some(o.getOrElse("maxPerTrigger", "500000").toLong),
-                parityMode = o.get("parity").exists(_.toBoolean),
-                startingGtids = startingGtids,
-                resumeState = resumeState,
-                useGtidWithTablePks = o.get("use_gtid_with_table_pks").exists(_.toBoolean),
-                useReplica = o.get("use_replica").exists(_.toBoolean),
-                useRdonly = o.get("use_rdonly").exists(_.toBoolean),
-                replicaLagEvents = o.getOrElse("replica_lag", "0").toLong,
-                includeMetadata = o.get("include_metadata").exists(_.toBoolean),
-                wirePayload = o.get("wire").exists(_.toBoolean) || wireTable.nonEmpty,
-                // --sync_shards: the reference's `shards` config (comma-
-                // separated shard names; --shards is the genlog COUNT flag)
-                shardSubset = o.get("sync_shards"),
-                wireTable = wireTable,
-                streamName = wireTable.map(_.name).getOrElse("repo_content"),
-                schemaRegistry = schemaRegistry,
-                // spec surface: default 300 s, minimum 300 (clamped loud)
-                timeoutSeconds = CdcStream.specTimeoutSeconds(
-                  o.get("timeout_seconds").map(_.toLong)),
-                expireEvery = Some(o.getOrElse("expire_every", "32").toInt),
-                keepSnapshots = o.getOrElse("keep_snapshots", "8").toInt)
+              // a wire table implies wirePayload (source and apply both
+              // take the table's spec over the repo_profile default)
+              val rc = base.copy(resumeState = resumeState, wireTable = wireTable,
+                streamName = wireTable.map(_.name).getOrElse("repo_content"))
               val t0 = System.nanoTime()
               // reference max_retries (spec.json:76-81): TOTAL sync-attempt
               // budget; exhaustion on retryable errors = partial sync

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Result of applying one micro-batch. `stats` carries per-shard end cursors
-  * + lineage derived from the SAME job that staged the batch (no second
-  * source scan).
+  * + lineage aggregated from one read of the batch's staged files (the
+  * source is scanned once, by the staged write).
   */
 final case class ApplyResult(
     snapshot: Snapshot,
@@ -317,7 +317,7 @@ object CdcApply {
     // the base version there — parity mode models the reference's
     // After-only comparison, not live schema changes. ---
     val stagedAll =
-      if (written.isEmpty) None else Some(table.stagedAllDf(spark, batchDir, staged.schema))
+      if (written.isEmpty) None else Some(table.stagedAllDf(batchDir, staged.schema))
     val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
     val upsertCount = stagedRows.map(_.getLong(8)).sum
     val deleteCount = stagedRows.map(_.getLong(9)).sum

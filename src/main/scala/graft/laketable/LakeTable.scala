@@ -1,7 +1,7 @@
 package graft.laketable
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -24,22 +24,13 @@ final case class DataFileEntry(path: String, bucket: Int, rows: Long, schemaVers
 /** A named, typed column with a stable field id. Renames keep the id. */
 final case class FieldDef(id: Int, name: String, dataType: String)
 
-/** One immutable manifest file covering the bucket range [loBucket, hiBucket):
-  * the snapshot references manifests, manifests list data files (Iceberg's
-  * manifest-list / manifest split). A commit rewrites ONLY the manifests of
-  * bucket groups it touches; untouched groups reuse the previous snapshot's
-  * manifest file byte-for-byte — commit metadata cost is O(affected buckets),
-  * never O(total files).
-  */
-final case class ManifestEntry(path: String, loBucket: Int, hiBucket: Int, fileCount: Int)
-
 final case class Snapshot(
     version: Long,
     schemaVersion: Int,
     schemas: Map[Int, Seq[FieldDef]],
     numBuckets: Int,
-    bucketsPerManifest: Int,
-    manifests: Seq[ManifestEntry],
+    // every data file of the table at this version
+    files: Seq[DataFileEntry],
     summary: Map[String, String],
     // table-relative paths of the files under metrics/ this snapshot lists
     // (per-batch metrics rows, committed with the batch's data and cursors)
@@ -49,11 +40,7 @@ final case class Snapshot(
 
   def sparkSchema: StructType = LakeTable.sparkSchema(currentSchema)
 
-  /** Total data-file count — from manifest-list counts, no manifest reads. */
-  def fileCount: Int = manifests.map(_.fileCount).sum
-
-  /** Bucket-group id of a bucket (one manifest per group). */
-  def groupOf(bucket: Int): Int = bucket / bucketsPerManifest
+  def fileCount: Int = files.size
 
   /** The table's one bucketing rule: the bucket of a row is
     * `pmod(xxhash64(k), numBuckets)` of its first merge-key column `k`
@@ -77,13 +64,12 @@ final case class Snapshot(
   *   <root>/data/<uuid>/[_kind=<k>/]_bucket=<b>/part-*.parquet
   *                                       immutable data files, one dir per write
   *   <root>/metrics/gen<T>-<uuid>.parquet immutable metrics files (tier T)
-  *   <root>/meta/m-<uuid>.json           immutable manifest (files of one bucket group)
-  *   <root>/meta/v<N>.json               snapshot N (schemas + manifest list + summary)
+  *   <root>/meta/v<N>.json               snapshot N (schemas, data and metrics
+  *                                       file lists, summary)
   *   <root>/meta/version-hint.txt        current version (atomic rename swap)
   * Writers land every file in place; a file is part of the table only once
   * a committed snapshot lists it, so the snapshot commit is the only publish
   * step and [[expireSnapshots]] deletes whatever no kept snapshot lists.
-  * Flat `data/<uuid>.parquet` entries of older builds stay valid paths.
   *
   * Scale design: data files are bucketed by the first merge-key column
   * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
@@ -93,13 +79,9 @@ final case class Snapshot(
   * (its upserts and the bucket's survivors, each written one file per
   * bucket), so no bucket ever lists more than two files and the table needs
   * no compaction: the commit and [[expireSnapshots]] are its whole file
-  * lifecycle. Snapshot
-  * metadata is a two-level manifest tree (Iceberg's manifest-list/manifest
-  * design): v<N>.json holds only the manifest LIST (one tiny entry per
-  * bucket group); the file entries live in immutable per-group manifests
-  * that unaffected commits reuse by reference — so each micro-batch commit
-  * serializes O(affected buckets) metadata, not O(total files), even at
-  * 10⁴–10⁵ data files.
+  * lifecycle. The inventory is therefore at most 2 × `numBuckets` entries,
+  * which v<N>.json lists inline: every commit writes exactly one snapshot
+  * json plus the version hint, O(numBuckets) bytes.
   */
 final class LakeTable(val root: String, spark: SparkSession) {
   import LakeTable._
@@ -149,30 +131,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   def currentSnapshot: Option[Snapshot] = currentVersion.map(snapshot)
 
-  // ---- manifest IO -------------------------------------------------------
-
-  /** Write one immutable manifest for bucket group [lo, hi) in place: a
-    * snapshot references it only after `close()` returns, so a crash
-    * mid-write leaves an unreferenced orphan for [[expireSnapshots]]; the
-    * UUID name makes replayed commits write fresh files.
-    */
-  private def writeManifest(lo: Int, hi: Int, files: Seq[DataFileEntry]): ManifestEntry = {
-    val name = s"m-${UUID.randomUUID()}.json"
-    val out = fs.create(new Path(metaDir, name), false)
-    try out.write(manifestToJson(files).getBytes(StandardCharsets.UTF_8)) finally out.close()
-    ManifestEntry(s"meta/$name", lo, hi, files.size)
-  }
-
-  private def readManifest(m: ManifestEntry): Seq[DataFileEntry] = {
-    val in = fs.open(new Path(root, m.path))
-    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
-    manifestFromJson(new String(bytes, StandardCharsets.UTF_8))
-  }
-
-  /** All data files of a snapshot (reads every manifest — full-scan paths
-    * only; the commit path never calls this).
-    */
-  def allFiles(snap: Snapshot): Seq[DataFileEntry] = snap.manifests.flatMap(readManifest)
+  /** All data files of a snapshot. */
+  def allFiles(snap: Snapshot): Seq[DataFileEntry] = snap.files
 
   private[laketable] def writeSnapshot(s: Snapshot): Unit = {
     val f = fs
@@ -233,14 +193,11 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   // ---- create / read -----------------------------------------------------
 
-  def create(schema: StructType, numBuckets: Int, props: Map[String, String] = Map.empty,
-      bucketsPerManifest: Int = 0): Snapshot = {
+  def create(schema: StructType, numBuckets: Int,
+      props: Map[String, String] = Map.empty): Snapshot = {
     require(currentVersion.isEmpty, s"table already exists at $root")
-    val bpm =
-      if (bucketsPerManifest > 0) bucketsPerManifest
-      else LakeTable.defaultBucketsPerManifest(numBuckets)
     val fields = schema.fields.zipWithIndex.map { case (f, i) => FieldDef(i + 1, f.name, f.dataType.sql) }
-    val snap = Snapshot(0L, 0, Map(0 -> fields.toSeq), numBuckets, bpm, Nil, props)
+    val snap = Snapshot(0L, 0, Map(0 -> fields.toSeq), numBuckets, Nil, props)
     fs.mkdirs(dataDir)
     writeSnapshot(snap)
     snap
@@ -280,23 +237,18 @@ final class LakeTable(val root: String, spark: SparkSession) {
     }
   }
 
-  /** Files of the snapshot belonging to the given buckets — reads ONLY the
-    * manifests whose bucket range intersects `buckets` (partition pruning at
-    * the metadata level: a merge of k buckets opens ~k/bucketsPerManifest
-    * manifests, never the whole tree).
+  /** Files of the snapshot belonging to the given buckets: the data a
+    * merge of those buckets reads back and replaces.
     */
   def filesInBuckets(snap: Snapshot, buckets: Set[Int]): Seq[DataFileEntry] =
-    snap.manifests
-      .filter(m => buckets.exists(b => b >= m.loBucket && b < m.hiBucket))
-      .flatMap(readManifest)
-      .filter(f => buckets.contains(f.bucket))
+    snap.files.filter(f => buckets.contains(f.bucket))
 
   // ---- write / commit ----------------------------------------------------
 
   /** Write `df` (must match current schema + a `_bucket` int column) as new
     * data files in place: one parquet directory write under `data/<uuid>/`,
     * partitioned by bucket (one file per bucket when `df` is hash-partitioned
-    * on `_bucket`). Returns the manifest entries.
+    * on `_bucket`). Returns the entries a commit lists.
     */
   private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
@@ -354,13 +306,12 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * footer reads + schema inference — the writer knows exactly what it
     * wrote.
     */
-  private[graft] def stagedAllDf(spark2: SparkSession, dir: Path,
-      stagedSchema: StructType): DataFrame = {
+  private[graft] def stagedAllDf(dir: Path, stagedSchema: StructType): DataFrame = {
     // partition columns (_kind/_bucket) go last — the order Spark's
     // partition discovery appends them in
     val parts = Set("_kind", "_bucket")
     val (partCols, dataCols) = stagedSchema.fields.partition(f => parts.contains(f.name))
-    spark2.read.schema(StructType(dataCols ++ partCols)).parquet(dir.toString)
+    spark.read.schema(StructType(dataCols ++ partCols)).parquet(dir.toString)
   }
 
   /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
@@ -371,12 +322,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * `dropSummaryKeys` are removed — bounded-lineage pruning). The metrics
     * list drops `foldedMetrics` and gains `newMetrics`.
     * Single-writer (the streaming driver); the version-hint swap is atomic.
-    *
-    * Metadata cost: only manifests of bucket GROUPS touched by
-    * `replacedBuckets`/`newFiles` are read + rewritten; every other group's
-    * manifest is carried into the new snapshot by reference. At 10⁵ files a
-    * small batch commits a few KB of manifests + the manifest list, not the
-    * full file inventory.
+    * Writes one snapshot json listing the whole inventory, O(numBuckets).
     */
   def commit(
       replacedBuckets: Set[Int],
@@ -386,22 +332,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
       newMetrics: Seq[String] = Nil,
       foldedMetrics: Set[String] = Set.empty): Snapshot = {
     val prev = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
-    val touchedGroups =
-      (replacedBuckets.iterator ++ newFiles.iterator.map(_.bucket)).map(prev.groupOf).toSet
-    val newByGroup = newFiles.groupBy(f => prev.groupOf(f.bucket))
-    val prevByGroup = prev.manifests.map(m => m.loBucket / prev.bucketsPerManifest -> m).toMap
-    val untouched = prev.manifests.filterNot(m =>
-      touchedGroups.contains(m.loBucket / prev.bucketsPerManifest))
-    val rewritten = touchedGroups.toSeq.sorted.flatMap { g =>
-      val kept = prevByGroup.get(g).map(readManifest).getOrElse(Nil)
-        .filterNot(f => replacedBuckets.contains(f.bucket))
-      val files = kept ++ newByGroup.getOrElse(g, Nil)
-      if (files.isEmpty) None
-      else Some(writeManifest(g * prev.bucketsPerManifest, (g + 1) * prev.bucketsPerManifest, files))
-    }
     val snap = prev.copy(
       version = prev.version + 1,
-      manifests = (untouched ++ rewritten).sortBy(_.loBucket),
+      files = prev.files.filterNot(f => replacedBuckets.contains(f.bucket)) ++ newFiles,
       summary = (prev.summary ++ summaryUpdates) -- dropSummaryKeys,
       metricsFiles = prev.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
     writeSnapshot(snap)
@@ -411,10 +344,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
   // ---- maintenance ---------------------------------------------------------
 
   /** Drop snapshot metadata older than the last `keepLast` versions and
-    * delete every data, metrics and manifest file no kept snapshot lists
-    * (time travel window + GC of what failed, fenced or crashed writes left),
-    * plus `stage-*` dirs older builds stranded (single-writer: no write is
-    * in flight here). A listed file is never deleted.
+    * delete every data and metrics file no kept snapshot lists (time travel
+    * window + GC of what failed, fenced or crashed writes left;
+    * single-writer: no write is in flight here). A listed file is never
+    * deleted.
     */
   def expireSnapshots(keepLast: Int = 3): Unit = {
     val cur = currentVersion.getOrElse(return)
@@ -422,10 +355,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
     val keepFrom = math.max(0L, cur - keepLast + 1)
     // ONE metaDir listing drives everything: which snapshot jsons actually
     // exist (earlier expiries with a smaller window may have deleted part of
-    // the keep range — never assume the range is contiguous), which
-    // manifests are on disk, and which temp leftovers to sweep. No
-    // per-version fs.exists probes — a long-lived table at version 10⁶ must
-    // not pay O(lifetime versions) RPCs per maintenance tick.
+    // the keep range — never assume the range is contiguous) and which
+    // temp leftovers to sweep. No per-version fs.exists probes — a
+    // long-lived table at version 10⁶ must not pay O(lifetime versions)
+    // RPCs per maintenance tick.
     val metaListing = f.listStatus(metaDir).toSeq.map(_.getPath)
     val versionsOnDisk = metaListing.map(_.getName)
       .collect { case VersionJsonRe(v) => v.toLong }
@@ -436,8 +369,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     require(versionsOnDisk.contains(cur),
       s"expireSnapshots: current snapshot v$cur.json missing from $metaDir — refusing to GC")
     val kept = versionsOnDisk.filter(_ >= keepFrom).sorted.map(snapshot)
-    val keptManifests = kept.flatMap(_.manifests).distinctBy(_.path)
-    val referenced = keptManifests.flatMap(readManifest).map(_.path).toSet
+    val referenced = kept.flatMap(_.files).map(_.path).toSet
     val referencedMetrics = kept.flatMap(_.metricsFiles).toSet
     // delete unlisted data and metrics files: one flat listing per dir; an
     // entry that holds no listed path goes whole (a flat file, or the dir of
@@ -452,18 +384,12 @@ final class LakeTable(val root: String, spark: SparkSession) {
             .foreach(f.delete(_, false))
       }
     }
-    f.globStatus(new Path(root, "stage-*")).foreach(st => f.delete(st.getPath, true))
-    // delete unreferenced manifests (expired snapshots' and crash orphans)
-    // and temp-write leftovers a crash between create and rename strands
+    // delete temp-write leftovers a crash between create and rename strands
     // (.v*.tmp / .version-hint.*.tmp — single-writer, so no in-flight
     // commit can own one while this maintenance pass runs)
-    val keptManifestNames = keptManifests.map(m => new Path(root, m.path).getName).toSet
     metaListing.foreach { p =>
       val name = p.getName
-      if (name.startsWith("m-") && !keptManifestNames.contains(name))
-        f.delete(p, false)
-      else if (name.startsWith(".") && name.endsWith(".tmp"))
-        f.delete(p, false)
+      if (name.startsWith(".") && name.endsWith(".tmp")) f.delete(p, false)
     }
     // delete expired snapshot json (only those actually on disk)
     versionsOnDisk.filter(_ < keepFrom).foreach { v =>
@@ -506,36 +432,11 @@ object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
   private val WrittenRe = """data/[^/]+/(?:_kind=(\w+)/)?_bucket=(\d+)/[^/]+\.parquet""".r
-  private val FormatVersion = 3
-
-  /** Default bucket-group width of one manifest: small tables get multiple
-    * groups (so the manifest machinery is exercised everywhere), huge tables
-    * cap at 64 buckets per manifest — 65,536 buckets → 1,024 manifest-list
-    * entries (~100 KB snapshot json), each manifest a few KB.
-    */
-  def defaultBucketsPerManifest(numBuckets: Int): Int =
-    math.max(1, math.min(64, numBuckets / 8))
+  private val FormatVersion = 4
 
   /** The Spark schema of a list of field definitions, in order. */
   def sparkSchema(fields: Seq[FieldDef]): StructType =
     StructType(fields.map(f => StructField(f.name, DataType.fromDDL(f.dataType))))
-
-  def manifestToJson(files: Seq[DataFileEntry]): String = {
-    val n = mapper.createObjectNode()
-    val arr = n.putArray("files")
-    files.foreach { f =>
-      val fn = arr.addObject()
-      fn.put("path", f.path); fn.put("bucket", f.bucket)
-      fn.put("rows", f.rows); fn.put("schemaVersion", f.schemaVersion)
-    }
-    mapper.writeValueAsString(n)
-  }
-
-  def manifestFromJson(json: String): Seq[DataFileEntry] =
-    mapper.readTree(json).get("files").asInstanceOf[ArrayNode].asScala.map { fn =>
-      DataFileEntry(fn.get("path").asText(), fn.get("bucket").asInt(),
-        fn.get("rows").asLong(), fn.get("schemaVersion").asInt())
-    }.toSeq
 
   def snapshotToJson(s: Snapshot): String = {
     val n = mapper.createObjectNode()
@@ -543,7 +444,6 @@ object LakeTable {
     n.put("version", s.version)
     n.put("schemaVersion", s.schemaVersion)
     n.put("numBuckets", s.numBuckets)
-    n.put("bucketsPerManifest", s.bucketsPerManifest)
     val schemas = n.putObject("schemas")
     s.schemas.toSeq.sortBy(_._1).foreach { case (sv, fields) =>
       val arr = schemas.putArray(sv.toString)
@@ -552,23 +452,24 @@ object LakeTable {
         fn.put("id", f.id); fn.put("name", f.name); fn.put("type", f.dataType)
       }
     }
-    val manifests = n.putArray("manifests")
-    s.manifests.foreach { m =>
-      val mn = manifests.addObject()
-      mn.put("path", m.path); mn.put("lo", m.loBucket)
-      mn.put("hi", m.hiBucket); mn.put("fileCount", m.fileCount)
+    val files = n.putArray("files")
+    s.files.foreach { f =>
+      val fn = files.addObject()
+      fn.put("path", f.path); fn.put("bucket", f.bucket)
+      fn.put("rows", f.rows); fn.put("schemaVersion", f.schemaVersion)
     }
     val sum = n.putObject("summary")
     s.summary.toSeq.sortBy(_._1).foreach { case (k, v) => sum.put(k, v) }
     val metrics = n.putArray("metrics")
     s.metricsFiles.foreach(metrics.add)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+    mapper.writeValueAsString(n)
   }
 
   def snapshotFromJson(json: String): Snapshot = {
     val n = mapper.readTree(json)
     // fail LOUD on older metadata, never NPE: formatVersion 1 kept the file
-    // inventory inline, formatVersion 2 kept metrics outside the snapshot
+    // inventory inline without metrics, formatVersion 2 kept metrics outside
+    // the snapshot, formatVersion 3 kept the data files in manifests
     val fv = Option(n.get("formatVersion")).map(_.asInt()).getOrElse(1)
     if (fv != FormatVersion)
       throw new IllegalStateException(
@@ -580,14 +481,13 @@ object LakeTable {
       }.toSeq
       e.getKey.toInt -> fields
     }.toMap
-    val manifests = n.get("manifests").asInstanceOf[ArrayNode].asScala.map { mn =>
-      ManifestEntry(mn.get("path").asText(), mn.get("lo").asInt(),
-        mn.get("hi").asInt(), mn.get("fileCount").asInt())
+    val files = n.get("files").asInstanceOf[ArrayNode].asScala.map { fn =>
+      DataFileEntry(fn.get("path").asText(), fn.get("bucket").asInt(),
+        fn.get("rows").asLong(), fn.get("schemaVersion").asInt())
     }.toSeq
     val summary = n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
     val metrics = n.get("metrics").asInstanceOf[ArrayNode].asScala.map(_.asText()).toSeq
     Snapshot(n.get("version").asLong(), n.get("schemaVersion").asInt(), schemas,
-      n.get("numBuckets").asInt(), n.get("bucketsPerManifest").asInt(), manifests, summary,
-      metrics)
+      n.get("numBuckets").asInt(), files, summary, metrics)
   }
 }

@@ -28,21 +28,16 @@ object CdcStream {
       // (reference state key, read.go:108)
       streamName: String = "repo_content",
       // snapshot-expiry cadence: every N batches, drop snapshot metadata
-      // older than `keepSnapshots` versions and delete the data files,
-      // metrics files and manifests no kept snapshot lists (superseded
-      // files, and what failed, fenced or crashed batches wrote) plus
-      // crash-stranded temps. Without this a long-lived stream accretes one
-      // v<N>.json, O(touched groups) manifests and its superseded data files
-      // per commit forever. None disables (keep every snapshot / external
-      // expiry).
+      // older than `keepSnapshots` versions and delete the data and metrics
+      // files no kept snapshot lists (superseded files, and what failed,
+      // fenced or crashed batches wrote) plus crash-stranded temps. Without
+      // this a long-lived stream accretes one v<N>.json and its superseded
+      // data files per commit forever. None disables (keep every snapshot /
+      // external expiry).
       expireEvery: Option[Int] = Some(32),
       keepSnapshots: Int = 8,
       startingGtids: Map[String, Map[String, String]] = Map.empty,
       numBuckets: Int = 64,
-      // bucket-group size of the manifest tree when THIS config creates the
-      // table (0 = LakeTable's default max(1, min(64, numBuckets/8)));
-      // existing tables keep the value stored in their snapshot
-      bucketsPerManifest: Int = 0,
       resumeState: Map[String, graft.core.ShardCursor] = Map.empty,
       useGtidWithTablePks: Boolean = false,
       useReplica: Boolean = false,
@@ -438,7 +433,7 @@ object CdcStream {
     maybeEvolve(table, rc)
     // end-of-sync expiry: the in-loop cadence can leave up to expireEvery-1
     // commits' metadata behind; one final pass bounds the meta dir to
-    // ~keepSnapshots × (groups + 1) files between syncs. A fenced sync
+    // keepSnapshots snapshot jsons plus the hint between syncs. A fenced sync
     // skips it: the cancelled batch's tasks may still be using the unlisted
     // batch dir the expiry would delete; the next sync's expiry takes it.
     if (batches > 0 && !fenced.get && rc.expireEvery.exists(_ > 0))
@@ -527,8 +522,7 @@ object CdcStream {
                   .map(wt => graft.core.ChangeEvent.landingSchemaFor(wt, rc.includeMetadata))
                   .getOrElse(
                     graft.core.ChangeEvent.landingSchemaFor(rc.wirePayload, rc.includeMetadata)),
-                rc.numBuckets,
-                bucketsPerManifest = rc.bucketsPerManifest)
+                rc.numBuckets)
             // keyed by stateKey (namespace:name): two streams with the same
             // table name in DIFFERENT namespaces must not collapse to one entry
             // (per-stream retry loop — the reference's max_retries is per Read)

@@ -155,19 +155,6 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(t.read().count() == rows)
   }
 
-  test("expireSnapshots sweeps stage dirs a crashed apply stranded") {
-    val t = newTable()
-    t.commit(Set.empty,
-      t.writeDataFiles(bucketed(t, someRows(5)), 0), Map.empty)
-    val stage = java.nio.file.Paths.get(t.root, "stage-crashed")
-    val bucketDir = stage.resolve("_kind=u").resolve("_bucket=1")
-    java.nio.file.Files.createDirectories(bucketDir)
-    java.nio.file.Files.write(bucketDir.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
-    t.expireSnapshots()
-    assert(!java.nio.file.Files.exists(stage), "stranded stage dir survived expiry")
-    assert(t.read().count() == 5)
-  }
-
   test("a batch written but never committed leaves read() unchanged, and " +
     "expireSnapshots deletes its dir") {
     val t = newTable()

@@ -31,6 +31,13 @@ object TableFiles {
       .flatMap(v => t.allFiles(t.snapshot(v)).map(_.path)).toSet
   }
 
+  /** Names of the files under `<root>/meta`, without the local
+    * filesystem's checksum files.
+    */
+  def metaFiles(root: String): Set[String] =
+    Using.resource(Files.list(Paths.get(root, "meta")))(_.iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet)
+
   /** The most files any bucket of the current snapshot lists (0 when empty). */
   def maxFilesPerBucket(t: LakeTable): Int =
     t.allFiles(t.currentSnapshot.get).groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)

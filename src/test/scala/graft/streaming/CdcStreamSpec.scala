@@ -270,6 +270,12 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // snapshot, and no batch dir beyond those the kept snapshots reference
     val stray = graft.laketable.TableFiles.strayData(t, rc.keepSnapshots)
     assert(stray.isEmpty, s"data dir holds files no kept snapshot lists: $stray")
+    // meta/ holds only the kept snapshot jsons and the version hint
+    val meta = graft.laketable.TableFiles.metaFiles(s"$base/t")
+    val cur = t.currentVersion.get
+    assert(meta.contains(s"v$cur.json") && meta.size == rc.keepSnapshots + 1 &&
+      (meta - "version-hint.txt").forall(_.matches("""v\d+\.json""")),
+      s"meta dir holds $meta")
     // no batch lost through the folds, none repeated
     val m = CdcStream.readMetrics(spark, s"$base/t")
     assert(m.select(sum(col("rows"))).head().getLong(0) == c.numEvents)
@@ -415,13 +421,12 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
       graft.core.ConfiguredStream("a", c.keyspace, "incremental"),
       graft.core.ConfiguredStream("b", c.keyspace, "full_refresh")))
     def rcFor(s: graft.core.ConfiguredStream) =
-      CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4,
-        bucketsPerManifest = 2)
+      CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4)
 
     val r1 = CdcStream.runCatalog(spark, cat, rcFor)
     assert(r1(s"${c.keyspace}:a") > 0 && r1(s"${c.keyspace}:b") > 0)
-    // the manifest-tree knob reaches the table runCatalog creates
-    assert(new LakeTable(s"$base/a", spark).currentSnapshot.get.bucketsPerManifest == 2)
+    // the bucket count reaches the table runCatalog creates
+    assert(new LakeTable(s"$base/a", spark).currentSnapshot.get.numBuckets == 4)
     val want = ChangelogGen.expectedFinalState(spark, c)
     assertParity(new LakeTable(s"$base/a", spark), want)
     assertParity(new LakeTable(s"$base/b", spark), want)

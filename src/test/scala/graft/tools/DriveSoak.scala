@@ -82,9 +82,7 @@ object DriveSoak {
       val metricsFiles = fs.listStatus(
         new org.apache.hadoop.fs.Path(s"$base/t/metrics")).length
       // the meta dir must stay bounded too: with periodic expiry, the
-      // surviving v<N>.json / manifest counts are O(keepSnapshots × groups),
-      // not O(total commits) — over 100+ commits this is the difference
-      // between ~60 files and ~800
+      // surviving v<N>.json count is O(keepSnapshots), not O(total commits)
       val metaFiles = fs.listStatus(
         new org.apache.hadoop.fs.Path(s"$base/t/meta")).length
       println(s"soak: data files=$dataFiles metrics files=$metricsFiles " +
