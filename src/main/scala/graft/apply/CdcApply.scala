@@ -1,16 +1,18 @@
 package graft.apply
 
 import graft.core.{LastPk, ShardCursor, ShardStats, SyncState, VGtid}
+import graft.functions.ShardStatsAgg
 import graft.functions.VGtidRankExpr.vgtid_rank
-import graft.laketable.{DataFileEntry, LakeTable, Snapshot}
+import graft.laketable.{LakeTable, Snapshot}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Result of applying one micro-batch. `stats` carries per-shard end cursors
-  * + lineage aggregated from one read of the batch's staged files (the
-  * source is scanned once, by the staged write).
+  * + lineage, and `upserts`/`deletes` the staged winners per kind, all
+  * observed by the staged write itself (the source is scanned once, and
+  * nothing the write produced is read back for them).
   */
 final case class ApplyResult(
     snapshot: Snapshot,
@@ -18,8 +20,8 @@ final case class ApplyResult(
     deletes: Long,
     skipped: Boolean,
     stats: Map[String, ShardStats] = Map.empty,
-    // highest wire schema_version among the batch's winners (recovered from
-    // the same staged provenance read as the cursors — no extra scan); the
+    // highest wire schema_version among the batch's winners (observed by
+    // the staged write with the cursors — no extra scan); the
     // streaming driver compares it to the applied registry version to
     // trigger Avro-driven evolution. 1 = base / parity mode.
     maxSchemaVersion: Int = 1)
@@ -156,70 +158,27 @@ object CdcApply {
       .select(keyCols ++ Seq(col("_win.*"), col("_key_events")): _*)
   }
 
-  /** Per-winner provenance columns staged alongside the data columns: enough
-    * to recover per-shard cursors/lineage from the ALREADY-WRITTEN staged
-    * parquet (one column-pruned read of local winner files — never a second
-    * scan of the source). keyspace/shard dictionary-encode to ~nothing;
-    * vgtid strings share a long prefix (snappy); the rest are small
-    * longs/bools. They double as per-row provenance in the upsert data files
-    * (readers project by schema field ids, so they are invisible to queries).
+  /** The [[ShardStatsAgg]] input of one row: a staged winner (its `_rank`
+    * and `_key_events`), or in parity mode a raw event (rank recomputed,
+    * one event each). Its stats are correct on the winners because within
+    * a shard events are totally ordered by `event_seq`: the shard's latest
+    * event is the latest for its key, so it always survives dedup — max over
+    * winners = max over the batch. Keys never span shards, so per-key
+    * `_key_events` sums to the shard's processed rows.
     */
-  private val statsCols: Seq[Column] = Seq(
-    col("keyspace").as("_s_keyspace"), col("shard").as("_s_shard"),
-    col("vgtid").as("_s_vgtid"), col("_rank").as("_s_rank"),
-    col("event_seq").as("_s_seq"), col("is_copy_phase").as("_s_copy"),
-    col("last_pk.repo").as("_s_pk_repo"), col("last_pk.path").as("_s_pk_path"),
-    col("_key_events").as("_s_key_events"),
-    col("schema_version").as("_s_schema_ver"))
+  private def statsRow(rank: Column, keyEvents: Column): Column = ShardStatsAgg.row(
+    col("keyspace"), col("shard"), col("vgtid"), rank, col("event_seq"), col("is_copy_phase"),
+    col("last_pk.repo"), col("last_pk.path"), keyEvents, col("schema_version"))
 
-  /** Per-shard stats aggregated from rows in the [[statsCols]] shape plus a
-    * `_kind` column: the staged LWW winners, or in parity mode the raw batch
-    * (one row per event). Correct on the winners because
-    * within a shard events are totally ordered by `event_seq`: the shard's
-    * latest event is the latest for its key, so it always survives dedup —
-    * max over winners = max over the batch. Watermark rule (the reference
-    * clears LastKnownPk once the copy phase completes): any catch-up event
-    * in the shard nulls `last_pk`; otherwise the max-seq COPY row's
-    * watermark is kept. Keys never span shards, so per-key `_s_key_events`
-    * sums to the shard's processed rows.
-    *
-    * The same aggregation also carries the per-kind staged row counts
-    * (`_kind` is a partition column of the staged read), so ONE job yields
-    * cursors, per-shard stats, AND the upsert/delete counts the apply
-    * reports.
+  /** One [[ShardStatsAgg]] result row → (shard, stats). Watermark rule
+    * (the reference clears LastKnownPk once the copy phase completes): any
+    * catch-up event in the shard nulls `last_pk`; otherwise the max-seq COPY
+    * row's watermark is kept.
     */
-  private def statsFromStaged(rows: DataFrame): DataFrame =
-    rows
-      .select(col("_s_keyspace"), col("_s_shard"), col("_s_vgtid"), col("_s_rank"),
-        col("_s_seq"), col("_s_copy"), col("_s_pk_repo"), col("_s_pk_path"),
-        col("_s_key_events"), col("_s_schema_ver"), col("_kind"))
-      .groupBy(col("_s_keyspace"), col("_s_shard")).agg(
-        max_by(col("_s_vgtid"), struct(col("_s_rank"), col("_s_seq"))).as("_s_vend"),
-        max(when(col("_s_copy"), lit(0)).otherwise(lit(1))).as("_s_catchup"),
-        max_by(col("_s_pk_repo"),
-          when(col("_s_copy"), col("_s_seq")).otherwise(lit(-1L))).as("_s_pk_repo2"),
-        max_by(col("_s_pk_path"),
-          when(col("_s_copy"), col("_s_seq")).otherwise(lit(-1L))).as("_s_pk_path2"),
-        sum(col("_s_key_events")).as("_s_rows"),
-        max(col("_s_schema_ver")).as("_s_max_sv"),
-        sum(when(col("_kind") === "u", lit(1L)).otherwise(lit(0L))).as("_n_u"),
-        sum(when(col("_kind") === "d", lit(1L)).otherwise(lit(0L))).as("_n_d"))
-
-  /** The raw batch in the [[statsCols]] shape, one row per event — parity
-    * mode's stats input: there deletes are filtered out before dedup but
-    * must still advance the cursor position (the reference advances on
-    * VGTID events regardless of row emission).
-    */
-  private def eventsAsStaged(batch: DataFrame): DataFrame =
-    batch.withColumn("_rank", vgtid_rank(col("vgtid")))
-      .withColumn("_key_events", lit(1L))
-      .select(statsCols :+ lit("e").as("_kind"): _*)
-
-  /** One [[statsFromStaged]] row → (shard, stats). */
   private def statsFromRow(r: Row, prevState: SyncState,
       streamName: String): (String, ShardStats) = {
     val (ks, shard, vEnd) = (r.getString(0), r.getString(1), r.getString(2))
-    val pk = if (r.getInt(3) == 1) None
+    val pk = if (r.getBoolean(3)) None
              else for { repo <- Option(r.getString(4)); p <- Option(r.getString(5)) }
                   yield LastPk(repo, p)
     val prevPos = prevState.cursorFor(s"$ks:$streamName", shard).map(_.position).getOrElse("")
@@ -229,10 +188,12 @@ object CdcApply {
   /** Apply one batch. Idempotent: replaying a batch whose id was already
     * committed (crash between sink write and checkpoint advance) is a no-op,
     * which is what makes restart-from-checkpoint exactly-once. Per-shard end
-    * cursors are derived INSIDE the staging job — the winner rows carry
-    * `_s_*` provenance columns into the staged parquet, and cursors/lineage
-    * are aggregated from a column-pruned read of those already-written files
-    * — so the source is scanned exactly once per batch.
+    * cursors and the per-kind counts are observed INSIDE the staging job —
+    * an `Observation` in its result stage aggregates the winners as they are
+    * written, and the stats inputs are projected away before the files — so
+    * the source is scanned exactly once and no staged file is read back for
+    * stats. The only read of the staged files is the survivor anti-join's
+    * key columns, planned from the written entries.
     *
     * `streamName` is the source TABLE name: committed cursors are keyed
     * `<keyspace>:<streamName>` (the reference's `namespace + ":" + name`
@@ -300,37 +261,43 @@ object CdcApply {
         case None => nullAs(f.dataType, f.name)
       }
     }
-    // winner rows carry their provenance (`_s_*`) into the staged write, so
-    // cursors/lineage are recovered from the already-written staged parquet
-    // — the SOURCE is scanned exactly once per batch
+    // --- the per-shard stats and per-kind counts are OBSERVED by the write:
+    // the observation sits above the bucket exchange, in the write's result
+    // stage, where Spark applies each task's accumulator update once (a
+    // retried task does not count twice). Its `_stats` input rides the
+    // shuffle and is projected away before the files, which hold only
+    // table columns. ---
+    val observation = Observation()
     val staged = deduped.select(dataCols ++ Seq(
       when(col("op") === "delete", lit("d")).otherwise(lit("u")).as("_kind"),
-      bucket.as("_bucket")) ++ statsCols: _*)
-    val (batchDir, written) = table.stageWrite(staged.repartition(col("_bucket")))
-    val affected = written.map(_._2).toSet
-
-    // --- ONE read of the staged winners yields the per-kind row counts,
-    // the per-shard cursors/stats AND (below) the survivor anti-join's
-    // keys, each a column-pruned scan of it. In parity mode the shard
-    // stats come from the same aggregate over the raw batch instead, so
+      bucket.as("_bucket"), statsRow(col("_rank"), col("_key_events")).as("_stats")): _*)
+      .repartition(col("_bucket"))
+      .observe(observation, ShardStatsAgg.shard_stats(col("_stats")).as("shards"),
+        count_if(col("_kind") === "u").as("u"), count_if(col("_kind") === "d").as("d"))
+      .drop("_stats")
+    val (batchDir, written) = table.stageWrite(staged, snap.schemaVersion)
+    val affected = written.map(_._2.bucket).toSet
+    // a batch with no winners writes no file and has no stats to wait for
+    val observed = if (written.isEmpty) Map.empty[String, Any] else observation.get
+    val upsertCount = observed.get("u").fold(0L)(_.asInstanceOf[Long])
+    val deleteCount = observed.get("d").fold(0L)(_.asInstanceOf[Long])
+    // parity mode runs the same aggregate over the raw batch instead, so
     // dropped deletes still advance positions; evolution tracking stays at
     // the base version there — parity mode models the reference's
-    // After-only comparison, not live schema changes. ---
-    val stagedAll =
-      if (written.isEmpty) None else Some(table.stagedAllDf(batchDir, staged.schema))
-    val stagedRows = stagedAll.map(statsFromStaged(_).collect()).getOrElse(Array.empty[Row])
-    val upsertCount = stagedRows.map(_.getLong(8)).sum
-    val deleteCount = stagedRows.map(_.getLong(9)).sum
-    val statsRows =
-      if (conf.parityMode) statsFromStaged(eventsAsStaged(events)).collect() else stagedRows
+    // After-only comparison, not live schema changes
+    val statsRows: Seq[Row] =
+      if (conf.parityMode)
+        events.agg(ShardStatsAgg.shard_stats(statsRow(vgtid_rank(col("vgtid")), lit(1L))))
+          .head().getSeq[Row](0)
+      else observed.get("shards").fold(Seq.empty[Row])(_.asInstanceOf[Seq[Row]])
     val stats = statsRows.map(statsFromRow(_, prevState, streamName)).toMap
     val maxWireSv =
       if (conf.parityMode) 1 else statsRows.map(_.getInt(7)).foldLeft(1)(math.max)
     val cursors = stats.map { case (s, st) => s -> st.cursor }
 
     // --- prune overwritten/deleted keys out of existing files (only the
-    // affected buckets, so a staged read exists whenever old files do;
-    // anti-join against its key columns) ---
+    // affected buckets, so staged files exist whenever old files do;
+    // anti-join against the key columns of all of them, both kinds) ---
     // merge key = fields id 1..k (current names survive renames)
     val keyNames = (1 to keys.length).map(id =>
       snap.currentSchema.find(_.id == id).get.name)
@@ -340,15 +307,14 @@ object CdcApply {
       else {
         val old = table.readFiles(snap, oldFiles)
         val survivors = old
-          .join(stagedAll.get.select(keyNames.map(col): _*), keyNames, "left_anti")
+          .join(table.readFiles(snap, written.map(_._2)).select(keyNames.map(col): _*),
+            keyNames, "left_anti")
           .withColumn("_bucket", snap.bucketOf(col(keyNames.head)))
         // hash-repartition on _bucket alone: file count per commit is
         // O(buckets), independent of parallelism
         table.writeDataFiles(survivors.repartition(col("_bucket")), snap.schemaVersion)
       }
-    val newFiles = written.collect { case ("u", bucket, path) =>
-      DataFileEntry(path, bucket, -1L, snap.schemaVersion)
-    } ++ survivorFiles
+    val newFiles = written.collect { case ("u", e) => e } ++ survivorFiles
     // --- the batch's metrics rows (and any tier fold) are written in place
     // under metrics/ and listed by the SAME commit as its data and cursors:
     // exactly-once by construction. `version` is the version this commit

@@ -3,8 +3,13 @@ package graft.laketable
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -16,10 +21,12 @@ import scala.jdk.CollectionConverters._
 /** One immutable data file of a snapshot. `bucket` is the hash-bucket
   * ([[Snapshot.bucketOf]]) of the first merge-key column of the file's rows
   * — the unit of copy-on-write MERGE.
-  * `schemaVersion` records which column mapping the file was written under
-  * (Iceberg-style field-id rename support).
+  * `bytes` is the file's length as its writer listed it, so a scan is
+  * planned from the entry alone. `schemaVersion` records which column
+  * mapping the file was written under (Iceberg-style field-id rename
+  * support).
   */
-final case class DataFileEntry(path: String, bucket: Int, rows: Long, schemaVersion: Int)
+final case class DataFileEntry(path: String, bucket: Int, bytes: Long, schemaVersion: Int)
 
 /** A named, typed column with a stable field id. Renames keep the id. */
 final case class FieldDef(id: Int, name: String, dataType: String)
@@ -67,9 +74,12 @@ final case class Snapshot(
   *   <root>/meta/v<N>.json               snapshot N (schemas, data and metrics
   *                                       file lists, summary)
   *   <root>/meta/version-hint.txt        current version (atomic rename swap)
-  * Writers land every file in place; a file is part of the table only once
-  * a committed snapshot lists it, so the snapshot commit is the only publish
-  * step and [[expireSnapshots]] deletes whatever no kept snapshot lists.
+  * Writers land every file in place, with no `_SUCCESS` marker; a file is
+  * part of the table only once a committed snapshot lists it, so the
+  * snapshot commit is the only publish step and [[expireSnapshots]] deletes
+  * whatever no kept snapshot lists. Each listed entry records the file's
+  * length, so every scan is planned from the entries alone: no listing, no
+  * footer read, no Spark job before an action.
   *
   * Scale design: data files are bucketed by the first merge-key column
   * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
@@ -207,7 +217,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * older schema version are re-mapped to current column names by field id
     * (rename = metadata only, Iceberg-style) and missing columns filled null.
     * Each file is read with the schema it was written under, which the
-    * snapshot holds, so no scan infers a schema from parquet footers.
+    * snapshot holds, over a file index of the snapshot's entries, so
+    * building the scan lists nothing and infers no schema: no Spark job runs
+    * before an action.
     */
   def read(version: Option[Long] = None): DataFrame = {
     val snap = version.map(snapshot).getOrElse(
@@ -223,8 +235,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
       files.groupBy(_.schemaVersion).map { case (sv, group) =>
         val written = snap.schemas(sv)
         val byId = written.map(f => f.id -> f).toMap
-        val df = spark.read.schema(sparkSchema(written))
-          .parquet(group.map(f => new Path(root, f.path).toString): _*)
+        val index = new ListedFiles(qualifiedRoot, group.map(f =>
+          new FileStatus(f.bytes, false, 1, f.bytes, 0L, new Path(qualifiedRoot, f.path))))
+        val df = GraftBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+          new StructType(), sparkSchema(written), None, new ParquetFileFormat, Map.empty)(spark)))
         // project written-name → current-name by field id; missing → null
         val cols = cur.map { c =>
           byId.get(c.id) match {
@@ -252,13 +266,12 @@ final class LakeTable(val root: String, spark: SparkSession) {
     */
   private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
-    df.write.partitionBy("_bucket").parquet(dir.toString)
-    writtenFiles(dir).map { case (_, bucket, path) =>
-      DataFileEntry(path, bucket, -1L, schemaVersion)
-    }
+    df.write.options(NoSuccessMarker).partitionBy("_bucket").parquet(dir.toString)
+    writtenFiles(dir, schemaVersion).map(_._2)
   }
 
-  private lazy val rootPrefix = fs.makeQualified(new Path(root)).toUri.getPath + "/"
+  private lazy val qualifiedRoot = fs.makeQualified(new Path(root))
+  private lazy val rootPrefix = qualifiedRoot.toUri.getPath + "/"
 
   /** Table-relative path of `p` (a qualified path under the root). Fails
     * loud otherwise: expiry deletes what it cannot match to a listed path.
@@ -272,46 +285,34 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** Every file under `dir`, recursively. Plain `listStatus`: the local
     * filesystem's `listFiles` forks a process per file for its permissions.
     */
-  private def filesUnder(dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq.flatMap(st =>
-      if (st.isDirectory) filesUnder(st.getPath) else Seq(st.getPath))
+  private def filesUnder(dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap(st => if (st.isDirectory) filesUnder(st.getPath) else Seq(st))
 
-  /** `(kind, bucket, path)` of each parquet file a partitioned write left
-    * under the data dir `dir`: `kind` from its `_kind=` dir ("" when the
-    * write was not partitioned by kind), `path` table-relative.
+  /** `(kind, entry)` of each parquet file a partitioned write left under
+    * the data dir `dir`: `kind` from its `_kind=` dir ("" when the write was
+    * not partitioned by kind), the entry's path table-relative and its
+    * length from the same listing.
     */
-  private def writtenFiles(dir: Path): Seq[(String, Int, String)] =
-    filesUnder(dir).map(relative).filter(_.endsWith(".parquet")).map {
-      case p @ WrittenRe(kind, bucket) => (Option(kind).getOrElse(""), bucket.toInt, p)
-      case p => throw new IllegalStateException(s"unexpected data file layout: $p")
-    }
+  private def writtenFiles(dir: Path, schemaVersion: Int): Seq[(String, DataFileEntry)] =
+    filesUnder(dir).map(st => (relative(st.getPath), st.getLen))
+      .filter(_._1.endsWith(".parquet")).map {
+        case (p @ WrittenRe(kind, bucket), len) =>
+          (Option(kind).getOrElse(""), DataFileEntry(p, bucket.toInt, len, schemaVersion))
+        case (p, _) => throw new IllegalStateException(s"unexpected data file layout: $p")
+      }
 
-  /** Write a deduped batch in place under `data/<uuid>/`, one parquet job
-    * partitioned by `_kind` ('u' upsert / 'd' delete-key) and `_bucket`.
-    * Its upsert files become data files as written once the batch commit
-    * lists them; its keys drive the pruning rewrite of existing files.
-    * Returns the dir and its [[writtenFiles]] listing.
+  /** Write a deduped batch (current schema + `_kind`/`_bucket`) in place
+    * under `data/<uuid>/`, one parquet job partitioned by `_kind` ('u'
+    * upsert / 'd' delete-key) and `_bucket`. Its upsert entries become data
+    * files as written once the batch commit lists them; [[readFiles]] over
+    * all its entries gives the keys that drive the pruning rewrite of
+    * existing files. Returns the dir and its [[writtenFiles]] listing.
     */
-  private[graft] def stageWrite(df: DataFrame): (Path, Seq[(String, Int, String)]) = {
+  private[graft] def stageWrite(df: DataFrame,
+      schemaVersion: Int): (Path, Seq[(String, DataFileEntry)]) = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
-    df.write.partitionBy("_kind", "_bucket").parquet(dir.toString)
-    (dir, writtenFiles(dir))
-  }
-
-  /** BOTH kinds of a [[stageWrite]] batch in one read, `_kind`/`_bucket`
-    * recovered as partition columns from the directory layout — the apply
-    * derives upsert/delete counts, per-shard cursor stats AND the survivor
-    * anti-join's keys from this one DataFrame. `stagedSchema` (the schema
-    * of the DataFrame that was just written, WITH `_kind`/`_bucket`) skips
-    * footer reads + schema inference — the writer knows exactly what it
-    * wrote.
-    */
-  private[graft] def stagedAllDf(dir: Path, stagedSchema: StructType): DataFrame = {
-    // partition columns (_kind/_bucket) go last — the order Spark's
-    // partition discovery appends them in
-    val parts = Set("_kind", "_bucket")
-    val (partCols, dataCols) = stagedSchema.fields.partition(f => parts.contains(f.name))
-    spark.read.schema(StructType(dataCols ++ partCols)).parquet(dir.toString)
+    df.write.options(NoSuccessMarker).partitionBy("_kind", "_bucket").parquet(dir.toString)
+    (dir, writtenFiles(dir, schemaVersion))
   }
 
   /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
@@ -380,7 +381,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
       if (f.exists(dir)) f.listStatus(dir).foreach { st =>
         if (!live.contains(st.getPath.getName)) f.delete(st.getPath, true)
         else if (st.isDirectory)
-          filesUnder(st.getPath).filterNot(p => refs.contains(relative(p)))
+          filesUnder(st.getPath).map(_.getPath).filterNot(p => refs.contains(relative(p)))
             .foreach(f.delete(_, false))
       }
     }
@@ -432,7 +433,26 @@ object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
   private val WrittenRe = """data/[^/]+/(?:_kind=(\w+)/)?_bucket=(\d+)/[^/]+\.parquet""".r
-  private val FormatVersion = 4
+  private val FormatVersion = 5
+
+  /** Write option: no `_SUCCESS` marker. The snapshot commit is the only
+    * publish step, so a marker would only be one more file for expiry.
+    */
+  private val NoSuccessMarker = Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** A file index that serves a fixed list of files with their recorded
+    * lengths: planning a scan over it makes no filesystem call.
+    */
+  private final class ListedFiles(root: Path, files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 
   /** The Spark schema of a list of field definitions, in order. */
   def sparkSchema(fields: Seq[FieldDef]): StructType =
@@ -456,7 +476,7 @@ object LakeTable {
     s.files.foreach { f =>
       val fn = files.addObject()
       fn.put("path", f.path); fn.put("bucket", f.bucket)
-      fn.put("rows", f.rows); fn.put("schemaVersion", f.schemaVersion)
+      fn.put("bytes", f.bytes); fn.put("schemaVersion", f.schemaVersion)
     }
     val sum = n.putObject("summary")
     s.summary.toSeq.sortBy(_._1).foreach { case (k, v) => sum.put(k, v) }
@@ -469,7 +489,8 @@ object LakeTable {
     val n = mapper.readTree(json)
     // fail LOUD on older metadata, never NPE: formatVersion 1 kept the file
     // inventory inline without metrics, formatVersion 2 kept metrics outside
-    // the snapshot, formatVersion 3 kept the data files in manifests
+    // the snapshot, formatVersion 3 kept the data files in manifests,
+    // formatVersion 4 recorded no file lengths
     val fv = Option(n.get("formatVersion")).map(_.asInt()).getOrElse(1)
     if (fv != FormatVersion)
       throw new IllegalStateException(
@@ -483,7 +504,7 @@ object LakeTable {
     }.toMap
     val files = n.get("files").asInstanceOf[ArrayNode].asScala.map { fn =>
       DataFileEntry(fn.get("path").asText(), fn.get("bucket").asInt(),
-        fn.get("rows").asLong(), fn.get("schemaVersion").asInt())
+        fn.get("bytes").asLong(), fn.get("schemaVersion").asInt())
     }.toSeq
     val summary = n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
     val metrics = n.get("metrics").asInstanceOf[ArrayNode].asScala.map(_.asText()).toSeq

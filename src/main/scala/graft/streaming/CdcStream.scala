@@ -362,8 +362,8 @@ object CdcStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // single source scan: cursors + per-shard stats come back from the
-        // apply itself (recovered from the staged winners' provenance
-        // columns), not a pre-scan of the batch here
+        // apply itself (observed by its staged write), not a pre-scan of
+        // the batch here
         val res = CdcApply.applyBatch(table, batch, batchId, streamId = rc.streamId,
           conf = CdcApply.ApplyConfig(parityMode = rc.parityMode,
             wireSpec = rc.wireTable.map(_.spec).orElse(

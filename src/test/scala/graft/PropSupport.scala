@@ -16,6 +16,15 @@ trait PropSupport {
   def forAll[A](ga: Gen[A])(f: A => Unit): Unit =
     run(Prop.forAll(ga) { a => f(a); true })
 
+  /** `f` over `n` cases from a fixed seed, without shrinking: for
+    * properties whose cases are costly, and whose coverage is checked.
+    */
+  def forAllSeeded[A](n: Int)(ga: Gen[A])(f: A => Unit): Unit = {
+    val res = SCTest.check(params.withMinSuccessfulTests(n)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), Prop.forAllNoShrink(ga) { a => f(a); true })
+    if (!res.passed) throw new AssertionError(s"property failed: ${res.status}")
+  }
+
   def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
     run(Prop.forAll(ga, gb) { (a, b) => f(a, b); true })
 

@@ -38,6 +38,20 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(t.summaryValue("k").contains("v"))
   }
 
+  test("read() on a 64-bucket table of more than 32 files submits no job before an action") {
+    val t = new LakeTable(tmpDir("laketable") + "/t64", spark)
+    t.create(ChangeEvent.rowSchema, numBuckets = 64)
+    t.commit(Set.empty, t.writeDataFiles(bucketed(t, someRows(400)).repartition(col("_bucket")), 0),
+      Map.empty)
+    assert(t.currentSnapshot.get.fileCount > 32)
+    val sc = spark.sparkContext
+    sc.setJobGroup("read-plan", "building read()")
+    val df = try t.read() finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("read-plan").isEmpty,
+      "building the scan ran a Spark job (file listing or schema inference)")
+    assert(df.count() == 400)
+  }
+
   test("bucketOf keeps the table layout: pmod(xxhash64(first key), numBuckets)") {
     val t = newTable()
     val df = someRows(50)
@@ -164,9 +178,9 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     // complete parquet of both kinds under data/<uuid>/
     val batch = bucketed(t, someRows(4, "up").withColumn("_kind", lit("u"))
       .unionByName(someRows(4, "del").withColumn("_kind", lit("d"))))
-    val (dir, written) = t.stageWrite(batch)
+    val (dir, written) = t.stageWrite(batch, 0)
     assert(written.map(_._1).toSet == Set("u", "d"))
-    assert(written.forall { case (_, _, p) => Files.exists(Paths.get(t.root, p)) })
+    assert(written.forall { case (_, e) => Files.exists(Paths.get(t.root, e.path)) })
     assert(t.read().orderBy("repo", "path").collect().toSeq == before)
     t.expireSnapshots()
     assert(!Files.exists(Paths.get(dir.toString)), "uncommitted batch dir survived")

@@ -63,7 +63,7 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
     assert(LakeTable.snapshotFromJson(LakeTable.snapshotToJson(s)) == s)
   }
 
-  test("formatVersion 2 and 3 snapshots fail loudly") {
+  test("formatVersion 2, 3 and 4 snapshots fail loudly") {
     val s = Snapshot(1L, 0, Map(0 -> Seq(FieldDef(1, "repo", "STRING"))), 8, Nil, Map.empty)
     def older(fv: Int)(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
       val n = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -82,7 +82,12 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
       n.putArray("manifests").addObject()
         .put("path", "meta/m-x.json").put("lo", 0).put("hi", 1).put("fileCount", 1)
     }
-    Seq(2 -> v2, 3 -> v3).foreach { case (fv, json) =>
+    // formatVersion 4: file entries without their lengths
+    val v4 = older(4) { n =>
+      n.putArray("files").addObject().put("path", "data/a/_bucket=0/part-0.parquet")
+        .put("bucket", 0).put("rows", -1L).put("schemaVersion", 0)
+    }
+    Seq(2 -> v2, 3 -> v3, 4 -> v4).foreach { case (fv, json) =>
       val e = intercept[IllegalStateException](LakeTable.snapshotFromJson(json))
       assert(e.getMessage.contains(s"formatVersion $fv") && e.getMessage.contains("Rebuild"))
     }
