@@ -318,7 +318,8 @@ object CdcApply {
     // --- the batch's metrics rows (and any tier fold) are written in place
     // under metrics/ and listed by the SAME commit as its data and cursors:
     // exactly-once by construction. `version` is the version this commit
-    // lands as (single writer — nothing commits in between). ---
+    // lands as: it builds on `snap`, and fails loud if another commit
+    // landed since. ---
     val wallMs = (System.nanoTime() - tStart) / 1000000L
     val version = snap.version + 1
     val batchMetrics =
@@ -362,7 +363,7 @@ object CdcApply {
       if (math.max(maxWireSv, announcedPrev) > 1)
         Map("wire_schema_announced" -> math.max(maxWireSv, announcedPrev).toString)
       else Map.empty
-    val committed = table.commit(
+    val committed = table.commit(snap,
       replacedBuckets = affected,
       newFiles = newFiles,
       summaryUpdates = Map(

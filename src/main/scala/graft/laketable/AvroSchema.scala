@@ -86,12 +86,13 @@ object AvroSchema {
     * the mistake forever). Intermediate steps tolerate both-absent: a
     * chained rename (a→b in step 1, b→c in step 2) legitimately leaves
     * step 1's replay with neither name present.
+    *
+    * `cur` is the table's current snapshot as the caller read it; the
+    * result is `cur` itself when nothing is pending, else the evolved one.
     */
-  def evolveIfNeeded(table: LakeTable, oldJson: String, newJson: String,
+  def evolveIfNeeded(table: LakeTable, cur: Snapshot, oldJson: String, newJson: String,
       strict: Boolean = false): Snapshot = {
     val (renames, adds) = diff(parse(oldJson), parse(newJson))
-    val cur = table.currentSnapshot
-      .getOrElse(throw new IllegalStateException("create() first"))
     val names = cur.currentSchema.map(_.name).toSet
     if (strict) renames.foreach { case (from, to) =>
       if (!names.contains(from) && !names.contains(to))

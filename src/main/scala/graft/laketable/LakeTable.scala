@@ -13,7 +13,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 import scala.jdk.CollectionConverters._
@@ -61,7 +60,7 @@ final case class Snapshot(
 
 /** Iceberg-style snapshot table, built from scratch (no Iceberg/Delta runtime
   * exists in this environment): immutable Parquet data files + JSON snapshot
-  * metadata + an atomic version-pointer swap. Per-shard VGTID cursors and
+  * metadata, committed by one no-overwrite rename. Per-shard VGTID cursors and
   * lineage live in the snapshot `summary` and per-batch metrics files in its
   * `metricsFiles` list, so data, cursors and metrics commit in the SAME atomic
   * operation — the exactly-once mechanism the reference only approximates by
@@ -72,14 +71,16 @@ final case class Snapshot(
   *                                       immutable data files, one dir per write
   *   <root>/metrics/gen<T>-<uuid>.parquet immutable metrics files (tier T)
   *   <root>/meta/v<N>.json               snapshot N (schemas, data and metrics
-  *                                       file lists, summary)
-  *   <root>/meta/version-hint.txt        current version (atomic rename swap)
+  *                                       file lists, summary); the largest N
+  *                                       is the current version
   * Writers land every file in place, with no `_SUCCESS` marker; a file is
   * part of the table only once a committed snapshot lists it, so the
-  * snapshot commit is the only publish step and [[expireSnapshots]] deletes
-  * whatever no kept snapshot lists. Each listed entry records the file's
-  * length, so every scan is planned from the entries alone: no listing, no
-  * footer read, no Spark job before an action.
+  * snapshot commit — the rename of a temp json onto `v<N>.json`, which fails
+  * when `v<N>.json` exists (the Delta Lake log's put-if-absent) — is the
+  * only publish step and [[expireSnapshots]] deletes whatever no kept
+  * snapshot lists. Each listed entry records the file's length, so every
+  * scan is planned from the entries alone: no listing, no footer read, no
+  * Spark job before an action.
   *
   * Scale design: data files are bucketed by the first merge-key column
   * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
@@ -91,7 +92,7 @@ final case class Snapshot(
   * no compaction: the commit and [[expireSnapshots]] are its whole file
   * lifecycle. The inventory is therefore at most 2 × `numBuckets` entries,
   * which v<N>.json lists inline: every commit writes exactly one snapshot
-  * json plus the version hint, O(numBuckets) bytes.
+  * json, O(numBuckets) bytes.
   */
 final class LakeTable(val root: String, spark: SparkSession) {
   import LakeTable._
@@ -102,34 +103,22 @@ final class LakeTable(val root: String, spark: SparkSession) {
   private val metaDir = new Path(root, "meta")
   private val dataDir = new Path(root, "data")
   private[graft] val metricsDir = new Path(root, "metrics")
-  private val hintFile = new Path(metaDir, "version-hint.txt")
 
   // ---- snapshot IO -------------------------------------------------------
 
-  def currentVersion: Option[Long] = observedVersion(ignore = None)
+  /** Every path directly under `meta/`: none when it does not exist yet. */
+  private def metaListing(f: FileSystem): Seq[Path] =
+    try f.listStatus(metaDir).toSeq.map(_.getPath)
+    catch { case _: java.io.FileNotFoundException => Nil }
 
-  /** Current version as [[currentVersion]], except the crash-recovery
-    * listing fallback can IGNORE one version — the snapshot json a write in
-    * progress has already renamed into place must not satisfy (or trip) the
-    * single-writer guard's reads during that same write.
+  private def versionsIn(listing: Seq[Path]): Seq[Long] =
+    listing.map(_.getName).collect { case VersionJsonRe(v) => v.toLong }
+
+  /** The committed version: the largest `v<N>.json` in one listing of
+    * `meta/` (a json lands complete, by rename). [[expireSnapshots]] bounds
+    * that listing.
     */
-  private def observedVersion(ignore: Option[Long]): Option[Long] = {
-    val f = fs
-    if (f.exists(hintFile)) {
-      val in = new BufferedReader(new InputStreamReader(f.open(hintFile), StandardCharsets.UTF_8))
-      try Some(in.readLine().trim.toLong) finally in.close()
-    } else if (!f.exists(metaDir)) None
-    else {
-      // crash recovery: a failure between hint delete and rename leaves no
-      // version-hint — the table is NOT gone; recover from the snapshot
-      // listing (max committed v<N>.json)
-      val versions = f.listStatus(metaDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case VersionJsonRe(v) => v.toLong }
-        .filterNot(v => ignore.contains(v))
-      if (versions.isEmpty) None else Some(versions.max)
-    }
-  }
+  def currentVersion: Option[Long] = versionsIn(metaListing(fs)).maxOption
 
   def snapshot(version: Long): Snapshot = {
     val f = fs
@@ -144,61 +133,36 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** All data files of a snapshot. */
   def allFiles(snap: Snapshot): Seq[DataFileEntry] = snap.files
 
-  private[laketable] def writeSnapshot(s: Snapshot): Unit = {
+  /** Publish snapshot `s`: the one rename of its temp json onto
+    * `meta/v<N>.json` is the commit, and it never replaces a json. A commit
+    * built on a snapshot that is no longer the current one therefore fails
+    * loud: its `v<N>.json` exists (a second writer committed N), or the
+    * listing after the rename holds a larger version (N was expired, so the
+    * rename landed under the current version and would be ignored). A crash
+    * before the rename leaves only a `.v<N>.*.tmp`, which nothing reads and
+    * expiry deletes; a crash after it leaves the committed version.
+    */
+  private def writeSnapshot(s: Snapshot): Unit = {
     val f = fs
-    f.mkdirs(metaDir)
-    // ---- single-writer guard -------------------------------------------
-    // The table contract is single-writer (the streaming driver); a
-    // MISCONFIGURED duplicate stream pointed at the same root would
-    // otherwise silently interleave last-writer-wins commits and lose data.
-    // Every commit expects the observed version to be exactly the one it
-    // built on (s.version - 1); the check runs before writing, again right
-    // before the pointer swap, and the hint is verified to be OURS after —
-    // steady interleaving by a second writer trips one of the three within
-    // a commit or two. (A plain-filesystem rename is not a conditional put,
-    // so a sub-millisecond photo-finish can still race — this guard detects
-    // the practical failure mode, it is not a distributed lock.)
-    val expectedPrev: Option[Long] = if (s.version == 0L) None else Some(s.version - 1)
-    def guard(stage: String): Unit = {
-      val cur = observedVersion(ignore = Some(s.version))
-      if (cur != expectedPrev)
-        throw new graft.core.GraftValidationException(
-          s"concurrent writer detected at $root ($stage): committing " +
-            s"v${s.version} expects current version " +
-            s"${expectedPrev.map(_.toString).getOrElse("<none>")} but found " +
-            s"${cur.map(_.toString).getOrElse("<none>")} — is a second stream " +
-            "pointed at this table root?")
-    }
-    guard("pre-write")
-    // snapshot json lands via temp-write + rename: a crash after v<N>.json
-    // but before the hint swap leaves a stale orphan that the REPLAYED batch
-    // (same content, single writer) simply renames over — no
-    // FileAlreadyExists crash-loop on restart
-    val p = new Path(metaDir, s"v${s.version}.json")
-    val tmpJson = new Path(metaDir, s".v${s.version}.${UUID.randomUUID()}.tmp")
-    val out = f.create(tmpJson, true)
+    val target = new Path(metaDir, s"v${s.version}.json")
+    val tmp = new Path(metaDir, s".v${s.version}.${UUID.randomUUID()}.tmp")
+    val out = f.create(tmp, true)
     try out.write(snapshotToJson(s).getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmpJson, p))
-      throw new IllegalStateException(s"failed to write snapshot v${s.version}")
-    guard("pre-swap")
-    // atomic pointer swap: write tmp hint then rename over the old one
-    val tmp = new Path(metaDir, s".version-hint.${UUID.randomUUID()}.tmp")
-    val o2 = f.create(tmp, true)
-    try o2.write(s.version.toString.getBytes(StandardCharsets.UTF_8)) finally o2.close()
-    if (f.exists(hintFile)) f.delete(hintFile, false)
-    if (!f.rename(tmp, hintFile))
-      throw new IllegalStateException(s"atomic commit failed for v${s.version}")
-    // post-swap verification: the hint must still be OURS — if it is not, a
-    // concurrent writer swapped in between and one of the two commits has
-    // been silently superseded; fail loud so the operator untangles it NOW
-    val after = observedVersion(ignore = None)
-    if (!after.contains(s.version))
-      throw new graft.core.GraftValidationException(
-        s"concurrent writer detected at $root (post-swap): committed " +
-          s"v${s.version} but the version hint reads " +
-          s"${after.map(_.toString).getOrElse("<none>")} — a second writer " +
-          "overwrote the commit pointer")
+    def concurrentWriter(found: String) = new graft.core.GraftValidationException(
+      s"concurrent writer detected at $root: committing v${s.version} but $found " +
+        "— is a second stream pointed at this table root?")
+    // the FileSystem contract fails a rename onto an existing file (HDFS,
+    // object stores), but the local filesystem replaces it: probe first
+    if (f.exists(target) || !f.rename(tmp, target)) {
+      f.delete(tmp, false)
+      if (f.exists(target)) throw concurrentWriter(s"v${s.version}.json already exists")
+      throw new IllegalStateException(s"failed to publish snapshot v${s.version}")
+    }
+    val cur = versionsIn(metaListing(f)).maxOption
+    if (!cur.contains(s.version)) {
+      f.delete(target, false) // below the current version: never read
+      throw concurrentWriter(s"the current version is ${cur.getOrElse("<none>")}")
+    }
   }
 
   // ---- create / read -----------------------------------------------------
@@ -318,26 +282,28 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
   private[graft] def dropDeleteKeys(dir: Path): Unit = fs.delete(new Path(dir, "_kind=d"), true)
 
-  /** Commit a new snapshot replacing all files in `replacedBuckets` with
-    * `newFiles`, merging `summaryUpdates` into the previous summary (keys in
-    * `dropSummaryKeys` are removed — bounded-lineage pruning). The metrics
-    * list drops `foldedMetrics` and gains `newMetrics`.
-    * Single-writer (the streaming driver); the version-hint swap is atomic.
-    * Writes one snapshot json listing the whole inventory, O(numBuckets).
+  /** Commit the snapshot after `base`, replacing all files in
+    * `replacedBuckets` with `newFiles` and merging `summaryUpdates` into
+    * `base`'s summary (keys in `dropSummaryKeys` are removed — bounded-lineage
+    * pruning). The metrics list drops `foldedMetrics` and gains `newMetrics`.
+    * `base` is the snapshot the caller read and built on, so the commit
+    * fails loud when another commit landed since ([[writeSnapshot]]); it
+    * becomes the largest `v<N>.json`, one json listing the whole inventory,
+    * O(numBuckets).
     */
   def commit(
+      base: Snapshot,
       replacedBuckets: Set[Int],
       newFiles: Seq[DataFileEntry],
       summaryUpdates: Map[String, String],
       dropSummaryKeys: Set[String] = Set.empty,
       newMetrics: Seq[String] = Nil,
       foldedMetrics: Set[String] = Set.empty): Snapshot = {
-    val prev = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
-    val snap = prev.copy(
-      version = prev.version + 1,
-      files = prev.files.filterNot(f => replacedBuckets.contains(f.bucket)) ++ newFiles,
-      summary = (prev.summary ++ summaryUpdates) -- dropSummaryKeys,
-      metricsFiles = prev.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
+    val snap = base.copy(
+      version = base.version + 1,
+      files = base.files.filterNot(f => replacedBuckets.contains(f.bucket)) ++ newFiles,
+      summary = (base.summary ++ summaryUpdates) -- dropSummaryKeys,
+      metricsFiles = base.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
     writeSnapshot(snap)
     snap
   }
@@ -351,27 +317,25 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * deleted.
     */
   def expireSnapshots(keepLast: Int = 3): Unit = {
-    val cur = currentVersion.getOrElse(return)
     val f = fs
-    val keepFrom = math.max(0L, cur - keepLast + 1)
-    // ONE metaDir listing drives everything: which snapshot jsons actually
-    // exist (earlier expiries with a smaller window may have deleted part of
-    // the keep range — never assume the range is contiguous) and which
-    // temp leftovers to sweep. No per-version fs.exists probes — a
+    // ONE meta/ listing drives everything: the current version, which
+    // snapshot jsons exist (earlier expiries with a smaller window may have
+    // deleted part of the keep range — never assume it is contiguous) and
+    // which temp leftovers to sweep. No per-version fs.exists probes — a
     // long-lived table at version 10⁶ must not pay O(lifetime versions)
     // RPCs per maintenance tick.
-    val metaListing = f.listStatus(metaDir).toSeq.map(_.getPath)
-    val versionsOnDisk = metaListing.map(_.getName)
-      .collect { case VersionJsonRe(v) => v.toLong }
-    // fail LOUD before deleting anything if the current snapshot json is
-    // not in the listing (partial copy, external deletion, inconsistent
-    // object-store listing): an empty kept set would otherwise compute an
-    // empty referenced set and silently delete every data file
-    require(versionsOnDisk.contains(cur),
-      s"expireSnapshots: current snapshot v$cur.json missing from $metaDir — refusing to GC")
+    val listing = metaListing(f)
+    val versionsOnDisk = versionsIn(listing)
+    val cur = versionsOnDisk.maxOption.getOrElse(return)
+    val keepFrom = math.max(0L, cur - keepLast + 1)
     val kept = versionsOnDisk.filter(_ >= keepFrom).sorted.map(snapshot)
     val referenced = kept.flatMap(_.files).map(_.path).toSet
     val referencedMetrics = kept.flatMap(_.metricsFiles).toSet
+    // delete expired snapshot jsons (only those actually on disk) before any
+    // file they list: a crash part-way leaves every json on disk readable
+    versionsOnDisk.filter(_ < keepFrom).foreach { v =>
+      f.delete(new Path(metaDir, s"v$v.json"), false)
+    }
     // delete unlisted data and metrics files: one flat listing per dir; an
     // entry that holds no listed path goes whole (a flat file, or the dir of
     // a superseded or never-committed write), and only dirs that hold a
@@ -385,16 +349,12 @@ final class LakeTable(val root: String, spark: SparkSession) {
             .foreach(f.delete(_, false))
       }
     }
-    // delete temp-write leftovers a crash between create and rename strands
-    // (.v*.tmp / .version-hint.*.tmp — single-writer, so no in-flight
-    // commit can own one while this maintenance pass runs)
-    metaListing.foreach { p =>
+    // delete the .v<N>.*.tmp a crash between create and rename strands
+    // (single-writer, so no in-flight commit can own one while this
+    // maintenance pass runs)
+    listing.foreach { p =>
       val name = p.getName
       if (name.startsWith(".") && name.endsWith(".tmp")) f.delete(p, false)
-    }
-    // delete expired snapshot json (only those actually on disk)
-    versionsOnDisk.filter(_ < keepFrom).foreach { v =>
-      f.delete(new Path(metaDir, s"v$v.json"), false)
     }
   }
 

@@ -313,18 +313,20 @@ object CdcStream {
     */
   private def maybeEvolve(table: LakeTable, rc: RunConfig): Unit = {
     if (rc.schemaRegistry.isEmpty) return
-    val announced = table.summaryValue("wire_schema_announced").map(_.toInt).getOrElse(1)
-    val applied = table.summaryValue("wire_schema_version").map(_.toInt).getOrElse(1)
+    val snap = table.currentSnapshot.getOrElse(return)
+    def summaryInt(key: String) = snap.summary.get(key).map(_.toInt).getOrElse(1)
+    val announced = summaryInt("wire_schema_announced")
+    val applied = summaryInt("wire_schema_version")
     if (announced <= applied) return
     def avro(i: Int) = rc.schemaRegistry.getOrElse(i,
       throw new graft.core.GraftValidationException(
         s"schema_registry has no Avro schema for wire version $i " +
           s"(stream announced $announced)"))
-    (applied until announced).foreach { v =>
-      graft.laketable.AvroSchema.evolveIfNeeded(table, avro(v), avro(v + 1),
+    val evolved = (applied until announced).foldLeft(snap) { (base, v) =>
+      graft.laketable.AvroSchema.evolveIfNeeded(table, base, avro(v), avro(v + 1),
         strict = v + 1 == announced)
     }
-    table.commit(Set.empty, Nil, Map("wire_schema_version" -> announced.toString))
+    table.commit(evolved, Set.empty, Nil, Map("wire_schema_version" -> announced.toString))
   }
 
   /** Run one `Trigger.AvailableNow` pass: peek the head, drain to it in
@@ -433,7 +435,7 @@ object CdcStream {
     maybeEvolve(table, rc)
     // end-of-sync expiry: the in-loop cadence can leave up to expireEvery-1
     // commits' metadata behind; one final pass bounds the meta dir to
-    // keepSnapshots snapshot jsons plus the hint between syncs. A fenced sync
+    // keepSnapshots snapshot jsons between syncs. A fenced sync
     // skips it: the cancelled batch's tasks may still be using the unlisted
     // batch dir the expiry would delete; the next sync's expiry takes it.
     if (batches > 0 && !fenced.get && rc.expireEvery.exists(_ > 0))

@@ -33,7 +33,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val df = bucketed(t, someRows(10))
     val files = t.writeDataFiles(df, 0)
     assert(files.nonEmpty && files.forall(_.bucket >= 0))
-    t.commit(Set.empty, files, Map("k" -> "v"))
+    t.commit(t.currentSnapshot.get, Set.empty, files, Map("k" -> "v"))
     assert(t.read().count() == 10)
     assert(t.summaryValue("k").contains("v"))
   }
@@ -41,8 +41,8 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("read() on a 64-bucket table of more than 32 files submits no job before an action") {
     val t = new LakeTable(tmpDir("laketable") + "/t64", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 64)
-    t.commit(Set.empty, t.writeDataFiles(bucketed(t, someRows(400)).repartition(col("_bucket")), 0),
-      Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty,
+      t.writeDataFiles(bucketed(t, someRows(400)).repartition(col("_bucket")), 0), Map.empty)
     assert(t.currentSnapshot.get.fileCount > 32)
     val sc = spark.sparkContext
     sc.setJobGroup("read-plan", "building read()")
@@ -66,90 +66,112 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val a = new LakeTable(root, spark)
     a.create(ChangeEvent.rowSchema, numBuckets = 4)
     // writer B reads the table at v0 — the state a misconfigured duplicate
-    // stream would hold while writer A commits underneath it
+    // stream holds while writer A commits underneath it
     val b = new LakeTable(root, spark)
     val staleBase = b.currentSnapshot.get
+    val bFiles = b.writeDataFiles(bucketed(b, someRows(3, "b")), 0)
 
-    // writer A commits v1 normally
-    val df = bucketed(a, someRows(5))
-    a.commit(Set.empty, a.writeDataFiles(df, 0), Map("writer" -> "a"))
-    assert(a.currentVersion.contains(1L))
+    // writer A commits v1 while B's batch runs
+    val aFiles = a.writeDataFiles(bucketed(a, someRows(5, "a")), 0)
+    a.commit(a.currentSnapshot.get, Set.empty, aFiles, Map("writer" -> "a"))
+    val aRows = a.read().orderBy("repo", "path").collect().toSeq
+    assert(a.currentVersion.contains(1L) && aRows.size == 5)
 
-    // writer B then tries to commit ITS v1, built on the stale v0 → the
-    // pre-write guard must trip (expected current <none>+1 = 0, found 1)
-    val staleCommit = staleBase.copy(version = 1L, summary = Map("writer" -> "b"))
-    val e = intercept[graft.core.GraftValidationException](b.writeSnapshot(staleCommit))
+    // B's commit builds on v0, so it targets v1, which exists
+    val e = intercept[graft.core.GraftValidationException](
+      b.commit(staleBase, Set(0, 1, 2, 3), bFiles, Map("writer" -> "b")))
     assert(e.getMessage.contains("concurrent writer detected"))
-    // writer A's commit is untouched
+    // writer A's v1 is untouched: content, summary and no stray temp
     assert(a.currentVersion.contains(1L) && a.summaryValue("writer").contains("a"))
+    assert(a.read().orderBy("repo", "path").collect().toSeq == aRows)
+    assert(TableFiles.metaFiles(root) == Set("v0.json", "v1.json"))
 
-    // and the NORMAL single-writer path is unaffected: B re-reads and
+    // and the normal single-writer path is unaffected: B re-reads and
     // commits v2 cleanly on top of A's v1
-    val df2 = bucketed(b, someRows(3))
-    b.commit(Set.empty, b.writeDataFiles(df2, 0), Map("writer" -> "b2"))
-    assert(b.currentVersion.contains(2L))
+    b.commit(b.currentSnapshot.get, Set.empty, bFiles, Map("writer" -> "b2"))
+    assert(b.currentVersion.contains(2L) && b.read().count() == 8)
+  }
+
+  test("single-writer guard: a commit whose target version was expired fails " +
+    "LOUDLY and the current version stands") {
+    val t = newTable()
+    val v0 = t.currentSnapshot.get
+    (1 to 5).foreach { i =>
+      t.commit(t.currentSnapshot.get, Set.empty,
+        t.writeDataFiles(bucketed(t, someRows(2, s"r$i")), 0), Map("writer" -> s"$i"))
+    }
+    t.expireSnapshots(keepLast = 2)
+    assert(!TableFiles.metaFiles(t.root).contains("v1.json"))
+    val rows = t.read().orderBy("repo", "path").collect().toSeq
+    // built on the in-memory v0: its v1.json is gone, so the rename lands,
+    // but a commit below the current version would be ignored
+    val e = intercept[graft.core.GraftValidationException](
+      t.commit(v0, Set(0, 1, 2, 3), Nil, Map("writer" -> "stale")))
+    assert(e.getMessage.contains("concurrent writer detected"))
+    assert(t.currentVersion.contains(5L) && t.summaryValue("writer").contains("5"))
+    assert(t.read().orderBy("repo", "path").collect().toSeq == rows)
+    assert(TableFiles.metaFiles(t.root) == Set("v4.json", "v5.json"))
   }
 
   test("commit replaces only the named buckets") {
     val t = newTable()
     val df = bucketed(t, someRows(20))
     val files = t.writeDataFiles(df, 0)
-    t.commit(Set.empty, files, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, files, Map.empty)
     val snap = t.currentSnapshot.get
     val bucketsPresent = t.allFiles(snap).map(_.bucket).toSet
     val victim = bucketsPresent.head
     // replace victim bucket with nothing → its rows disappear, others remain
     val expectRemaining = t.readFiles(snap, t.allFiles(snap).filterNot(_.bucket == victim)).count()
-    t.commit(Set(victim), Nil, Map.empty)
+    t.commit(t.currentSnapshot.get, Set(victim), Nil, Map.empty)
     assert(t.read().count() == expectRemaining)
   }
 
-  test("version-hint pointer gives time travel") {
+  test("snapshot versions give time travel") {
     val t = newTable()
     val f1 = t.writeDataFiles(bucketed(t, someRows(5)), 0)
-    val v1 = t.commit(Set.empty, f1, Map.empty).version
+    val v1 = t.commit(t.currentSnapshot.get, Set.empty, f1, Map.empty).version
     val f2 = t.writeDataFiles(bucketed(t, someRows(7)), 0)
-    val v2 = t.commit(Set.empty, f2, Map.empty).version
+    val v2 = t.commit(t.currentSnapshot.get, Set.empty, f2, Map.empty).version
     assert(t.read(Some(v1)).count() == 5)
     assert(t.read(Some(v2)).count() == 12)
     assert(t.currentVersion.contains(v2))
   }
 
-  test("crash-window recovery: missing version-hint recovers from the meta " +
-    "listing; a replayed commit renames over an orphaned v<N>.json") {
+  // a stray temp json is never read and expiry deletes it; a v<N>.json on
+  // disk is the committed version
+  test("crash states: a stray temp json is never read; v<N>.json commits") {
     val t = newTable()
-    val df = bucketed(t, someRows(6))
-    t.commit(Set.empty, t.writeDataFiles(df, 0), Map("k" -> "1"))
+    val s1 = t.commit(t.currentSnapshot.get, Set.empty,
+      t.writeDataFiles(bucketed(t, someRows(6)), 0), Map("k" -> "1"))
     assert(t.currentVersion.contains(1L))
 
-    // crash between hint delete and rename: no version-hint on disk —
-    // recovery lists meta/v*.json (every committed json is complete, it
-    // lands by temp+rename) and takes the max
-    val hint = java.nio.file.Paths.get(t.root, "meta", "version-hint.txt")
-    val hintBytes = java.nio.file.Files.readAllBytes(hint)
-    java.nio.file.Files.delete(hint)
-    assert(t.currentVersion.contains(1L), "must recover max committed version from listing")
-    assert(t.read().count() == 6)
-    java.nio.file.Files.write(hint, hintBytes)
+    // a crash between writing v2's temp json and its rename: the temp (even
+    // a truncated one) is not a version, and the replayed batch commits v2
+    val stray = Paths.get(t.root, "meta", ".v2.0123-crashed.tmp")
+    Files.writeString(stray, "{truncat")
+    assert(t.currentVersion.contains(1L) && t.read().count() == 6)
+    val s2 = t.commit(s1, Set.empty, t.writeDataFiles(bucketed(t, someRows(3, "b")), 0),
+      Map("k" -> "2"))
+    assert(s2.version == 2L && t.currentVersion.contains(2L) && t.read().count() == 9)
+    t.expireSnapshots()
+    assert(!Files.exists(stray), "expiry left the stray temp json")
+    assert(TableFiles.metaFiles(t.root) == Set("v0.json", "v1.json", "v2.json"))
 
-    // crash after v2.json was fully written but before the hint swap: the
-    // restart replays the same commit — the rename must overwrite the
-    // orphan, not throw FileAlreadyExists in a loop (orphan content is
-    // never parsed on this path)
-    val orphan = java.nio.file.Paths.get(t.root, "meta", "v2.json")
-    java.nio.file.Files.writeString(orphan, "{stale-orphan}")
-    val df2 = bucketed(t, someRows(3))
-    val snap = t.commit(Set.empty, t.writeDataFiles(df2, 0), Map("k" -> "2"))
-    assert(snap.version == 2L && t.currentVersion.contains(2L))
-    assert(t.read().count() == 9)
-    assert(t.snapshot(2L).summary("k") == "2") // orphan content replaced
+    // a crash right after the rename: v3.json on disk is the commit, so the
+    // replay of the same batch built on v2 fails loud instead of landing twice
+    val s3 = t.commit(s2, Set.empty, Nil, Map("k" -> "3"))
+    assert(t.currentVersion.contains(3L) && t.summaryValue("k").contains("3"))
+    intercept[graft.core.GraftValidationException](t.commit(s2, Set.empty, Nil, Map("k" -> "3")))
+    assert(t.snapshot(3L) == s3 && t.read().count() == 9)
   }
 
   test("expireSnapshots drops old metadata + unreferenced data files") {
     val t = newTable()
     (1 to 5).foreach { i =>
       val f = t.writeDataFiles(bucketed(t, someRows(5)), 0)
-      t.commit(if (i > 1) t.allFiles(t.currentSnapshot.get).map(_.bucket).toSet else Set.empty,
+      val cur = t.currentSnapshot.get
+      t.commit(cur, if (i > 1) t.allFiles(cur).map(_.bucket).toSet else Set.empty,
         f, Map.empty) // replace everything each time → old files orphan fast
     }
     val cur = t.currentVersion.get
@@ -172,7 +194,8 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("a batch written but never committed leaves read() unchanged, and " +
     "expireSnapshots deletes its dir") {
     val t = newTable()
-    t.commit(Set.empty, t.writeDataFiles(bucketed(t, someRows(5)), 0), Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, t.writeDataFiles(bucketed(t, someRows(5)), 0),
+      Map.empty)
     val before = t.read().orderBy("repo", "path").collect().toSeq
     // what a batch killed between its write and its commit leaves:
     // complete parquet of both kinds under data/<uuid>/
@@ -193,7 +216,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(files.size >= 2 && files.map(_.path.split('/')(1)).distinct.size == 1,
       s"expected one dir of several files: ${files.map(_.path)}")
     val (listed, unlisted) = files.splitAt(1)
-    t.commit(Set.empty, listed, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, listed, Map.empty)
     val rows = t.read().count()
     t.expireSnapshots()
     assert(TableFiles.parquetUnder(t.root, "data") == listed.map(_.path).toSet,
@@ -211,12 +234,12 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
       Files.move(Paths.get(t.root, e.path), Paths.get(t.root, name))
       e.copy(path = name)
     }
-    t.commit(Set.empty, flat, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, flat, Map.empty)
     val crowded = flat.head.bucket
     val nested = t.writeDataFiles(
       bucketed(t, someRows(40, "new")).filter(col("_bucket") === crowded), 0)
     assert(nested.nonEmpty)
-    t.commit(Set.empty, nested, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, nested, Map.empty)
     val rows = t.read().count()
     assert(rows == 20 + t.readFiles(t.currentSnapshot.get, nested).count())
     // rewrite the crowded bucket as one file and commit it in its place,
@@ -224,7 +247,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val snap = t.currentSnapshot.get
     val rewritten = t.writeDataFiles(bucketed(t,
       t.readFiles(snap, t.filesInBuckets(snap, Set(crowded)))).repartition(col("_bucket")), 0)
-    t.commit(Set(crowded), rewritten, Map.empty)
+    t.commit(snap, Set(crowded), rewritten, Map.empty)
     assert(TableFiles.maxFilesPerBucket(t) == 1)
     assert(t.read().count() == rows)
     t.expireSnapshots(keepLast = 1)
@@ -240,7 +263,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("schema evolution: rename is metadata-only, add fills null") {
     val t = newTable()
     val files = t.writeDataFiles(bucketed(t, someRows(6)), 0)
-    t.commit(Set.empty, files, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, files, Map.empty)
     // rename content→body (field id kept), add stars:int
     t.evolveSchema(renames = Map("content" -> "body"), adds = Seq("stars" -> "INT"))
     val df = t.read()
@@ -252,7 +275,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val newRows = Seq(("r-new", "p-new", "c" * 40, "go", "body-new", 5))
       .toDF("repo", "path", "commit", "lang", "body", "stars")
     val nf = t.writeDataFiles(bucketed(t, newRows), snap.schemaVersion)
-    t.commit(Set.empty, nf, Map.empty)
+    t.commit(snap, Set.empty, nf, Map.empty)
     val all = t.read()
     assert(all.count() == 7)
     assert(all.filter($"stars" === 5).count() == 1)

@@ -20,12 +20,12 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
   test("a one-bucket commit replaces exactly that bucket") {
     val t = new LakeTable(tmpDir("inventory") + "/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 64)
-    t.commit(Set.empty, syntheticFiles(0 until 64, 4, "base"), Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, syntheticFiles(0 until 64, 4, "base"), Map.empty)
     val full = t.currentSnapshot.get
     assert(full.fileCount == 256)
 
     val before = TableFiles.metaFiles(t.root)
-    val snap = t.commit(Set(7), Seq(DataFileEntry("data/new.parquet", 7, -1L, 0)),
+    val snap = t.commit(full, Set(7), Seq(DataFileEntry("data/new.parquet", 7, -1L, 0)),
       Map("k" -> "v"))
     // the commit's only new metadata file is its snapshot json
     assert(TableFiles.metaFiles(t.root) -- before == Set(s"v${snap.version}.json"))
@@ -43,12 +43,12 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
   test("an emptied bucket refills") {
     val t = new LakeTable(tmpDir("inventory") + "/t2", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 32)
-    t.commit(Set.empty, syntheticFiles(0 until 32, 2, "a"), Map.empty)
-    t.commit((0 until 8).toSet, Nil, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, syntheticFiles(0 until 32, 2, "a"), Map.empty)
+    t.commit(t.currentSnapshot.get, (0 until 8).toSet, Nil, Map.empty)
     val wiped = t.currentSnapshot.get
     assert(wiped.fileCount == 48 && wiped.files.forall(_.bucket >= 8))
     assert(t.filesInBuckets(wiped, Set(3)).isEmpty)
-    t.commit(Set.empty, Seq(DataFileEntry("data/refill.parquet", 3, -1L, 0)), Map.empty)
+    t.commit(wiped, Set.empty, Seq(DataFileEntry("data/refill.parquet", 3, -1L, 0)), Map.empty)
     val refilled = t.currentSnapshot.get
     assert(refilled.fileCount == 49)
     assert(t.filesInBuckets(refilled, Set(3)).map(_.path) == Seq("data/refill.parquet"))

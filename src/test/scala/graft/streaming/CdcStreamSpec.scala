@@ -270,11 +270,11 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // snapshot, and no batch dir beyond those the kept snapshots reference
     val stray = graft.laketable.TableFiles.strayData(t, rc.keepSnapshots)
     assert(stray.isEmpty, s"data dir holds files no kept snapshot lists: $stray")
-    // meta/ holds only the kept snapshot jsons and the version hint
+    // meta/ holds only the kept snapshot jsons
     val meta = graft.laketable.TableFiles.metaFiles(s"$base/t")
     val cur = t.currentVersion.get
-    assert(meta.contains(s"v$cur.json") && meta.size == rc.keepSnapshots + 1 &&
-      (meta - "version-hint.txt").forall(_.matches("""v\d+\.json""")),
+    assert(meta.contains(s"v$cur.json") && meta.size == rc.keepSnapshots &&
+      meta.forall(_.matches("""v\d+\.json""")),
       s"meta dir holds $meta")
     // no batch lost through the folds, none repeated
     val m = CdcStream.readMetrics(spark, s"$base/t")

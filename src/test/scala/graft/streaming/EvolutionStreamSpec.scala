@@ -69,7 +69,7 @@ class EvolutionStreamSpec extends AnyFunSuite with SparkSupport {
     // evolution; direct re-application of the registry step is a no-op
     val v = t.currentVersion.get
     assert(CdcStream.runAvailableNow(spark, rc) == 0L)
-    assert(AvroSchema.evolveIfNeeded(t, avroV1, avroV2).version == v)
+    assert(AvroSchema.evolveIfNeeded(t, t.currentSnapshot.get, avroV1, avroV2).version == v)
     assert(t.currentVersion.contains(v))
   }
 
@@ -112,11 +112,11 @@ class EvolutionStreamSpec extends AnyFunSuite with SparkSupport {
     val typoV1 = avroV1.replace("\"name\":\"lang\"", "\"name\":\"lng\"")
     val typoV2 = avroV2.replace("\"aliases\":[\"lang\"]", "\"aliases\":[\"lng\"]")
     val e = intercept[graft.core.GraftValidationException](
-      AvroSchema.evolveIfNeeded(t, typoV1, typoV2, strict = true))
+      AvroSchema.evolveIfNeeded(t, t.currentSnapshot.get, typoV1, typoV2, strict = true))
     assert(e.getMessage.contains("schema registry mismatch"))
     // non-strict (intermediate step) tolerates it — chained renames need
     // both-absent tolerance there (only the pending add is applied)
-    AvroSchema.evolveIfNeeded(t, typoV1, typoV2, strict = false)
+    AvroSchema.evolveIfNeeded(t, t.currentSnapshot.get, typoV1, typoV2, strict = false)
   }
 
   test("evolveIfNeeded applies only the PENDING part of a bump (partial " +
@@ -126,10 +126,11 @@ class EvolutionStreamSpec extends AnyFunSuite with SparkSupport {
     t.create(ChangeEvent.rowSchema, numBuckets = 4)
     // simulate the torn state: rename applied, add missing
     t.evolveSchema(Map("lang" -> "language"), Nil)
-    val snap = AvroSchema.evolveIfNeeded(t, avroV1, avroV2)
+    val snap = AvroSchema.evolveIfNeeded(t, t.currentSnapshot.get, avroV1, avroV2)
     assert(snap.currentSchema.map(_.name) ==
       Seq("repo", "path", "commit", "language", "content", "size_bytes"))
     // and a second call is a complete no-op
-    assert(AvroSchema.evolveIfNeeded(t, avroV1, avroV2).version == snap.version)
+    assert(AvroSchema.evolveIfNeeded(t, t.currentSnapshot.get, avroV1, avroV2).version ==
+      snap.version)
   }
 }

@@ -40,7 +40,7 @@ object ProfileApply {
       table.writeDataFiles(merged.repartition(col("_bucket")), 0)
     }
     println("  files=" + files.size)
-    time("commit") { table.commit(agg.getSeq[Int](2).toSet, files, Map("x"->"y")) }
+    time("commit") { table.commit(snap0, agg.getSeq[Int](2).toSet, files, Map("x"->"y")) }
     table.drop(); spark.stop()
   }
 }
