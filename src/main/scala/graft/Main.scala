@@ -141,7 +141,7 @@ object Main {
     "seed" -> """{"type":"integer"}""",
     "keyspace" -> """{"type":"string","description":"source keyspace (namespace for stream state keys)"}""",
     "maxPerTrigger" -> """{"type":"integer","default":500000,"description":"micro-batch size bound in events (default 500000); batch boundaries are the commit points a fenced/partial sync keeps"}""",
-    "buckets" -> """{"type":"integer","default":64,"description":"hash buckets (the copy-on-write MERGE unit) of a table this read creates; existing tables keep their stored value"}""",
+    "buckets" -> """{"type":"integer","default":64,"description":"hash buckets of a table this read creates: the finest split a data file covers, not the file count (a batch writes one file per contiguous range of buckets and kind; a bucket is held by at most 2 files); existing tables keep their stored value"}""",
     "parity" -> """{"type":"boolean","description":"reference After-image-only parity mode (drop deletes)"}""",
     "include_metadata" -> """{"type":"boolean","description":"land per-row provenance columns (_graft_vgtid, _graft_seq, _graft_extracted_at)"}""",
     "state" -> """{"type":"string","description":"SyncState JSON file; merged per stream in --catalog mode (incremental only)"}""",

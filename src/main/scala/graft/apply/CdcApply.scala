@@ -3,7 +3,7 @@ package graft.apply
 import graft.core.{LastPk, ShardCursor, ShardStats, SyncState, VGtid}
 import graft.functions.ShardStatsAgg
 import graft.functions.VGtidRankExpr.vgtid_rank
-import graft.laketable.{LakeTable, Snapshot}
+import graft.laketable.{BucketRanges, LakeTable, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,11 +39,11 @@ final case class ApplyResult(
   *    for the single shuffle. Hot repos are handled by that combine, by AQE
   *    skew splitting on the join and by the key carrying `path` (high
   *    cardinality within a hot repo spreads its partitions).
-  *  - The MERGE reads back, anti-joins and rewrites only the buckets present
-  *    in the batch. That bounds a commit by the batch's key spread, not by
-  *    its size: uniform keys touch every bucket, so such a batch rewrites
-  *    the whole table. The batch side of the join is broadcast when small
-  *    (AQE decides from runtime stats).
+  *  - The MERGE reads back, anti-joins and rewrites only the files whose
+  *    bucket ranges the batch touches. That bounds a commit by the batch's
+  *    key spread, not by its size: uniform keys touch every range, so such
+  *    a batch rewrites the whole table. The batch side of the join is
+  *    broadcast when small (AQE decides from runtime stats).
   */
 object CdcApply {
 
@@ -227,7 +227,7 @@ object CdcApply {
     val deduped = dedupLww(filtered, keys, keyLanding)
     val spark = events.sparkSession
 
-    // --- stage (ONE job: gen/source → LWW combine → bucket shuffle → parquet),
+    // --- stage (ONE job: gen/source → LWW combine → range shuffle → parquet),
     // written in place under data/: the upsert files ARE the final data
     // files once the batch commit lists them, so the heavy content bytes are
     // written exactly once per batch.
@@ -237,8 +237,10 @@ object CdcApply {
     // since v0 fill null.
     // `_<key>` columns are already canonical/typed (keyLanding ran before
     // dedup), so bucketing here hashes the SAME value the survivor rewrite
-    // hashes from the typed read path
+    // hashes from the typed read path. Both writes split the buckets into
+    // the same ranges: one file per range and kind.
     val bucket = snap.bucketOf(col(s"_${keys.head}"))
+    val ranges = BucketRanges.forBatch(snap, spark)
     val origById = snap.schemas(0).map(f => f.id -> f.name).toMap
     def nullAs(ddl: String, name: String) =
       lit(null).cast(org.apache.spark.sql.types.DataType.fromDDL(ddl)).as(name)
@@ -262,21 +264,23 @@ object CdcApply {
       }
     }
     // --- the per-shard stats and per-kind counts are OBSERVED by the write:
-    // the observation sits above the bucket exchange, in the write's result
+    // the observation sits above the range exchange, in the write's result
     // stage, where Spark applies each task's accumulator update once (a
     // retried task does not count twice). Its `_stats` input rides the
     // shuffle and is projected away before the files, which hold only
     // table columns. ---
     val observation = Observation()
-    val staged = deduped.select(dataCols ++ Seq(
+    val staged = ranges.partition(deduped.select(dataCols ++ Seq(
       when(col("op") === "delete", lit("d")).otherwise(lit("u")).as("_kind"),
-      bucket.as("_bucket"), statsRow(col("_rank"), col("_key_events")).as("_stats")): _*)
-      .repartition(col("_bucket"))
+      bucket.as("_bucket"), statsRow(col("_rank"), col("_key_events")).as("_stats")): _*))
       .observe(observation, ShardStatsAgg.shard_stats(col("_stats")).as("shards"),
         count_if(col("_kind") === "u").as("u"), count_if(col("_kind") === "d").as("d"))
       .drop("_stats")
-    val (batchDir, written) = table.stageWrite(staged, snap.schemaVersion)
-    val affected = written.map(_._2.bucket).toSet
+    val (batchDir, written) = table.stageWrite(staged, ranges, snap.schemaVersion)
+    // every file meeting the written ranges is replaced (and read back for
+    // its survivors); lineage counts the buckets that covers
+    val replaced = ranges.replacedBuckets(snap.files,
+      written.map { case (_, e) => ranges.rangeOf(e.lo) }.toSet)
     // a batch with no winners writes no file and has no stats to wait for
     val observed = if (written.isEmpty) Map.empty[String, Any] else observation.get
     val upsertCount = observed.get("u").fold(0L)(_.asInstanceOf[Long])
@@ -295,13 +299,13 @@ object CdcApply {
       if (conf.parityMode) 1 else statsRows.map(_.getInt(7)).foldLeft(1)(math.max)
     val cursors = stats.map { case (s, st) => s -> st.cursor }
 
-    // --- prune overwritten/deleted keys out of existing files (only the
-    // affected buckets, so staged files exist whenever old files do;
+    // --- prune overwritten/deleted keys out of existing files (only those
+    // the commit replaces, so staged files exist whenever old files do;
     // anti-join against the key columns of all of them, both kinds) ---
     // merge key = fields id 1..k (current names survive renames)
     val keyNames = (1 to keys.length).map(id =>
       snap.currentSchema.find(_.id == id).get.name)
-    val oldFiles = table.filesInBuckets(snap, affected)
+    val oldFiles = table.filesInBuckets(snap, replaced)
     val survivorFiles =
       if (oldFiles.isEmpty) Nil
       else {
@@ -310,9 +314,7 @@ object CdcApply {
           .join(table.readFiles(snap, written.map(_._2)).select(keyNames.map(col): _*),
             keyNames, "left_anti")
           .withColumn("_bucket", snap.bucketOf(col(keyNames.head)))
-        // hash-repartition on _bucket alone: file count per commit is
-        // O(buckets), independent of parallelism
-        table.writeDataFiles(survivors.repartition(col("_bucket")), snap.schemaVersion)
+        table.writeDataFiles(survivors, ranges, snap.schemaVersion)
       }
     val newFiles = written.collect { case ("u", e) => e } ++ survivorFiles
     // --- the batch's metrics rows (and any tier fold) are written in place
@@ -343,7 +345,7 @@ object CdcApply {
       }
       st.updated(stateKey, keep)
     }
-    val lineage = lineageJson(affected.size, upsertCount, deleteCount)
+    val lineage = lineageJson(replaced.size, upsertCount, deleteCount)
     // bounded lineage: retain the trailing window only — the summary map
     // (rewritten every commit) must not grow O(batches) over a stream's
     // lifetime. The metrics files are the durable per-batch record.
@@ -364,7 +366,7 @@ object CdcApply {
         Map("wire_schema_announced" -> math.max(maxWireSv, announcedPrev).toString)
       else Map.empty
     val committed = table.commit(snap,
-      replacedBuckets = affected,
+      replacedBuckets = replaced,
       newFiles = newFiles,
       summaryUpdates = Map(
         key -> batchId.toString,
@@ -445,6 +447,28 @@ object CdcApply {
     file
   }
 
+  /** The rows ([[metricsSchema]]) of one metrics file, read on the driver
+    * with the parquet reader that mirrors [[writeMetricsFile]]: a fold reads
+    * a tier's few tiny files, far below the cost of a Spark job. Fields
+    * match by name; an unset optional string reads as null.
+    */
+  private[graft] def readMetricsFile(spark: SparkSession, file: Path): Seq[Row] = {
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      Row.fromSeq(metricsSchema.fields.toSeq.map { f =>
+        if (g.getFieldRepetitionCount(f.name) == 0) null
+        else f.dataType match {
+          case LongType   => g.getLong(f.name, 0)
+          case DoubleType => g.getDouble(f.name, 0)
+          case _          => g.getString(f.name, 0)
+        }
+      })
+    }.toVector finally reader.close()
+  }
+
   /** Files per metrics tier. A tier below the top one that holds this many
     * files in the previous snapshot folds into ONE file of the next tier
     * inside the batch commit — a content-neutral swap of list entries — so
@@ -465,9 +489,8 @@ object CdcApply {
     val full = snap.metricsFiles.groupBy(metricsTier).toSeq
       .filter { case (t, files) => t < 3 && files.size >= MetricsTierFiles }
     val out = full.map { case (t, files) =>
-      val rows = spark.read.schema(metricsSchema)
-        .parquet(files.map(f => new Path(table.root, f).toString): _*).collect()
-      writeMetricsFile(spark, table.metricsDir, t + 1, rows.toSeq)
+      val rows = files.flatMap(f => readMetricsFile(spark, new Path(table.root, f)))
+      writeMetricsFile(spark, table.metricsDir, t + 1, rows)
     }
     (out, full.flatMap(_._2).toSet)
   }

@@ -17,15 +17,85 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-/** One immutable data file of a snapshot. `bucket` is the hash-bucket
-  * ([[Snapshot.bucketOf]]) of the first merge-key column of the file's rows
-  * — the unit of copy-on-write MERGE.
+/** One immutable data file of a snapshot. Its rows' buckets
+  * ([[Snapshot.bucketOf]]) lie in the span `[lo, hi]`: the range of
+  * [[BucketRanges]] it was written for, the unit of copy-on-write MERGE.
   * `bytes` is the file's length as its writer listed it, so a scan is
   * planned from the entry alone. `schemaVersion` records which column
   * mapping the file was written under (Iceberg-style field-id rename
   * support).
   */
-final case class DataFileEntry(path: String, bucket: Int, bytes: Long, schemaVersion: Int)
+final case class DataFileEntry(path: String, lo: Int, hi: Int, bytes: Long, schemaVersion: Int) {
+  def holds(bucket: Int): Boolean = lo <= bucket && bucket <= hi
+
+  /** Whether the span holds any of `buckets`. */
+  def meets(buckets: Set[Int]): Boolean = (lo to hi).exists(buckets)
+}
+
+/** `count` contiguous ranges over a table's `numBuckets` buckets: range `r`
+  * holds buckets `[lo(r), hi(r)]`, and range sizes differ by at most one.
+  * A range is the unit a data file covers (the bins-and-ranges layout of
+  * Megaphone, VLDB 2019): both writers of a batch shuffle one range per task
+  * ([[partition]]), so a write makes one file per range and kind, whatever
+  * `numBuckets` is.
+  */
+final case class BucketRanges(numBuckets: Int, count: Int) {
+  require(count >= 1 && count <= numBuckets, s"$count ranges over $numBuckets buckets")
+
+  def lo(r: Int): Int = ((r.toLong * numBuckets + count - 1) / count).toInt
+  def hi(r: Int): Int = lo(r + 1) - 1
+  def rangeOf(bucket: Int): Int = (bucket.toLong * count / numBuckets).toInt
+
+  /** `df` with its `_bucket` column replaced by the bucket's range `_range`,
+    * shuffled so that partition `r` holds exactly range `r`.
+    */
+  def partition(df: DataFrame): DataFrame =
+    df.withColumn("_range", expr(s"CAST(_bucket * $count DIV $numBuckets AS INT)"))
+      .drop("_bucket")
+      .repartitionById(count, col("_range"))
+
+  /** The buckets a commit that writes into the ranges `touched` must
+    * replace: those ranges, grown by every range that a file of `files`
+    * meeting them spans, until no file straddles the edge. Every file that
+    * holds one of these buckets is replaced, and the batch writes at most
+    * one upsert and one survivor file per range, so after the commit no
+    * bucket is held by more than two files. When every file spans one range
+    * of this count (the range count did not change), this is just the
+    * touched ranges' buckets.
+    */
+  def replacedBuckets(files: Seq[DataFileEntry], touched: Set[Int]): Set[Int] = {
+    @scala.annotation.tailrec
+    def grow(ranges: Set[Int]): Set[Int] = {
+      val buckets = ranges.flatMap(r => lo(r) to hi(r))
+      val spanned = files.filter(_.meets(buckets))
+        .flatMap(f => rangeOf(f.lo) to rangeOf(f.hi)).toSet
+      if (spanned.subsetOf(ranges)) buckets else grow(ranges ++ spanned)
+    }
+    grow(touched)
+  }
+}
+
+object BucketRanges {
+
+  /** Ranges per write: the session's shuffle parallelism `partitions`, or
+    * more when the table's bytes fill more than that many
+    * `maxPartitionBytes` splits, and never more than `numBuckets` (the
+    * finest split). A large table thus keeps one file per bucket, so a
+    * sparse batch rewrites no more of it than a per-bucket layout would.
+    */
+  def count(numBuckets: Int, partitions: Int, tableBytes: Long, maxPartitionBytes: Long): Int =
+    math.min(numBuckets.toLong,
+      math.max(partitions.toLong, (tableBytes + maxPartitionBytes - 1) / maxPartitionBytes)).toInt
+
+  /** The ranges a batch on `base` writes under `spark`'s session settings
+    * (`spark.sql.shuffle.partitions`, `spark.sql.files.maxPartitionBytes`).
+    */
+  def forBatch(base: Snapshot, spark: SparkSession): BucketRanges =
+    BucketRanges(base.numBuckets, count(base.numBuckets,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, base.files.map(_.bytes).sum,
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes"))))
+}
 
 /** A named, typed column with a stable field id. Renames keep the id. */
 final case class FieldDef(id: Int, name: String, dataType: String)
@@ -51,8 +121,10 @@ final case class Snapshot(
   /** The table's one bucketing rule: the bucket of a row is
     * `pmod(xxhash64(k), numBuckets)` of its first merge-key column `k`
     * (field id 1). Both writers of a batch — the staged upserts and the
-    * survivor rewrite — bucket through this, so a key lands in one bucket
-    * and a commit lists at most two files per bucket.
+    * survivor rewrite — bucket through this and write one file per
+    * contiguous range of buckets ([[BucketRanges]]), so a key lands in one
+    * file and a bucket is held by at most two. `numBuckets` is the finest
+    * split a file can cover, not the file count.
     */
   def bucketOf(firstKey: Column): Column =
     pmod(xxhash64(firstKey), lit(numBuckets)).cast("int")
@@ -67,7 +139,7 @@ final case class Snapshot(
   * emitting STATE after RECORD batches (`cmd/airbyte-source/read.go:131-137`).
   *
   * Layout (works on any Hadoop FileSystem — local, HDFS, S3A):
-  *   <root>/data/<uuid>/[_kind=<k>/]_bucket=<b>/part-*.parquet
+  *   <root>/data/<uuid>/[_kind=<k>/]_range=<r>/part-*.parquet
   *                                       immutable data files, one dir per write
   *   <root>/metrics/gen<T>-<uuid>.parquet immutable metrics files (tier T)
   *   <root>/meta/v<N>.json               snapshot N (schemas, data and metrics
@@ -78,21 +150,23 @@ final case class Snapshot(
   * snapshot commit — the rename of a temp json onto `v<N>.json`, which fails
   * when `v<N>.json` exists (the Delta Lake log's put-if-absent) — is the
   * only publish step and [[expireSnapshots]] deletes whatever no kept
-  * snapshot lists. Each listed entry records the file's length, so every
-  * scan is planned from the entries alone: no listing, no footer read, no
-  * Spark job before an action.
+  * snapshot lists. Each listed entry records the file's length and bucket
+  * span, so every scan is planned from the entries alone: no listing, no
+  * footer read, no Spark job before an action.
   *
-  * Scale design: data files are bucketed by the first merge-key column
-  * ([[Snapshot.bucketOf]]) so a MERGE touches only the buckets present in
-  * the incoming batch: a micro-batch rewrite is O(affected buckets), which
-  * is the whole table when the batch's keys span every bucket. A batch
-  * commit replaces every file of each bucket it touches with at most two
-  * (its upserts and the bucket's survivors, each written one file per
-  * bucket), so no bucket ever lists more than two files and the table needs
-  * no compaction: the commit and [[expireSnapshots]] are its whole file
-  * lifecycle. The inventory is therefore at most 2 × `numBuckets` entries,
-  * which v<N>.json lists inline: every commit writes exactly one snapshot
-  * json, O(numBuckets) bytes.
+  * Scale design: rows hash into `numBuckets` buckets by the first merge-key
+  * column ([[Snapshot.bucketOf]]), and a write makes one file per range and
+  * kind: a batch splits the buckets into [[BucketRanges]] contiguous ranges,
+  * as many as the session's shuffle partitions or the table's bytes call
+  * for. A MERGE touches only the ranges present in the incoming batch: a
+  * micro-batch rewrite is O(affected ranges), which is the whole table when
+  * the batch's keys span every range. A batch commit replaces every file
+  * whose span meets those ranges with at most two per range (its upserts
+  * and the range's survivors), so no bucket is ever held by more than two
+  * files and the table needs no compaction: the commit and
+  * [[expireSnapshots]] are its whole file lifecycle. The inventory is
+  * therefore at most 2 × `numBuckets` entries, which v<N>.json lists inline:
+  * every commit writes exactly one snapshot json, O(numBuckets) bytes.
   */
 final class LakeTable(val root: String, spark: SparkSession) {
   import LakeTable._
@@ -215,23 +289,24 @@ final class LakeTable(val root: String, spark: SparkSession) {
     }
   }
 
-  /** Files of the snapshot belonging to the given buckets: the data a
-    * merge of those buckets reads back and replaces.
+  /** Files of the snapshot whose span holds any of the given buckets: the
+    * data a merge of those buckets reads back and replaces.
     */
   def filesInBuckets(snap: Snapshot, buckets: Set[Int]): Seq[DataFileEntry] =
-    snap.files.filter(f => buckets.contains(f.bucket))
+    snap.files.filter(_.meets(buckets))
 
   // ---- write / commit ----------------------------------------------------
 
   /** Write `df` (must match current schema + a `_bucket` int column) as new
     * data files in place: one parquet directory write under `data/<uuid>/`,
-    * partitioned by bucket (one file per bucket when `df` is hash-partitioned
-    * on `_bucket`). Returns the entries a commit lists.
+    * one file per range of `ranges`. Returns the entries a commit lists.
     */
-  private[graft] def writeDataFiles(df: DataFrame, schemaVersion: Int): Seq[DataFileEntry] = {
+  private[graft] def writeDataFiles(df: DataFrame, ranges: BucketRanges,
+      schemaVersion: Int): Seq[DataFileEntry] = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
-    df.write.options(NoSuccessMarker).partitionBy("_bucket").parquet(dir.toString)
-    writtenFiles(dir, schemaVersion).map(_._2)
+    ranges.partition(df).write.options(NoSuccessMarker).partitionBy("_range")
+      .parquet(dir.toString)
+    writtenFiles(dir, ranges, schemaVersion).map(_._2)
   }
 
   private lazy val qualifiedRoot = fs.makeQualified(new Path(root))
@@ -254,36 +329,39 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   /** `(kind, entry)` of each parquet file a partitioned write left under
     * the data dir `dir`: `kind` from its `_kind=` dir ("" when the write was
-    * not partitioned by kind), the entry's path table-relative and its
-    * length from the same listing.
+    * not partitioned by kind), the entry's span the range of its `_range=`
+    * dir, its path table-relative and its length from the same listing.
     */
-  private def writtenFiles(dir: Path, schemaVersion: Int): Seq[(String, DataFileEntry)] =
+  private def writtenFiles(dir: Path, ranges: BucketRanges,
+      schemaVersion: Int): Seq[(String, DataFileEntry)] =
     filesUnder(dir).map(st => (relative(st.getPath), st.getLen))
       .filter(_._1.endsWith(".parquet")).map {
-        case (p @ WrittenRe(kind, bucket), len) =>
-          (Option(kind).getOrElse(""), DataFileEntry(p, bucket.toInt, len, schemaVersion))
+        case (p @ WrittenRe(kind, r), len) =>
+          (Option(kind).getOrElse(""),
+            DataFileEntry(p, ranges.lo(r.toInt), ranges.hi(r.toInt), len, schemaVersion))
         case (p, _) => throw new IllegalStateException(s"unexpected data file layout: $p")
       }
 
-  /** Write a deduped batch (current schema + `_kind`/`_bucket`) in place
-    * under `data/<uuid>/`, one parquet job partitioned by `_kind` ('u'
-    * upsert / 'd' delete-key) and `_bucket`. Its upsert entries become data
-    * files as written once the batch commit lists them; [[readFiles]] over
-    * all its entries gives the keys that drive the pruning rewrite of
-    * existing files. Returns the dir and its [[writtenFiles]] listing.
+  /** Write a deduped batch (current schema + `_kind` + `_range`, shuffled by
+    * [[BucketRanges.partition]]) in place under `data/<uuid>/`, one parquet
+    * job partitioned by `_kind` ('u' upsert / 'd' delete-key) and `_range`.
+    * Its upsert entries become data files as written once the batch commit
+    * lists them; [[readFiles]] over all its entries gives the keys that
+    * drive the pruning rewrite of existing files. Returns the dir and its
+    * [[writtenFiles]] listing.
     */
-  private[graft] def stageWrite(df: DataFrame,
+  private[graft] def stageWrite(df: DataFrame, ranges: BucketRanges,
       schemaVersion: Int): (Path, Seq[(String, DataFileEntry)]) = {
     val dir = new Path(dataDir, UUID.randomUUID().toString)
-    df.write.options(NoSuccessMarker).partitionBy("_kind", "_bucket").parquet(dir.toString)
-    (dir, writtenFiles(dir, schemaVersion))
+    df.write.options(NoSuccessMarker).partitionBy("_kind", "_range").parquet(dir.toString)
+    (dir, writtenFiles(dir, ranges, schemaVersion))
   }
 
   /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
   private[graft] def dropDeleteKeys(dir: Path): Unit = fs.delete(new Path(dir, "_kind=d"), true)
 
-  /** Commit the snapshot after `base`, replacing all files in
-    * `replacedBuckets` with `newFiles` and merging `summaryUpdates` into
+  /** Commit the snapshot after `base`, replacing every file whose span
+    * meets `replacedBuckets` with `newFiles` and merging `summaryUpdates` into
     * `base`'s summary (keys in `dropSummaryKeys` are removed — bounded-lineage
     * pruning). The metrics list drops `foldedMetrics` and gains `newMetrics`.
     * `base` is the snapshot the caller read and built on, so the commit
@@ -301,7 +379,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
       foldedMetrics: Set[String] = Set.empty): Snapshot = {
     val snap = base.copy(
       version = base.version + 1,
-      files = base.files.filterNot(f => replacedBuckets.contains(f.bucket)) ++ newFiles,
+      files = base.files.filterNot(_.meets(replacedBuckets)) ++ newFiles,
       summary = (base.summary ++ summaryUpdates) -- dropSummaryKeys,
       metricsFiles = base.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
     writeSnapshot(snap)
@@ -392,8 +470,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
 object LakeTable {
   private val mapper = new ObjectMapper()
   private val VersionJsonRe = """v(\d+)\.json""".r
-  private val WrittenRe = """data/[^/]+/(?:_kind=(\w+)/)?_bucket=(\d+)/[^/]+\.parquet""".r
-  private val FormatVersion = 5
+  private val WrittenRe = """data/[^/]+/(?:_kind=(\w+)/)?_range=(\d+)/[^/]+\.parquet""".r
+  private val FormatVersion = 6
 
   /** Write option: no `_SUCCESS` marker. The snapshot commit is the only
     * publish step, so a marker would only be one more file for expiry.
@@ -435,7 +513,7 @@ object LakeTable {
     val files = n.putArray("files")
     s.files.foreach { f =>
       val fn = files.addObject()
-      fn.put("path", f.path); fn.put("bucket", f.bucket)
+      fn.put("path", f.path); fn.put("lo", f.lo); fn.put("hi", f.hi)
       fn.put("bytes", f.bytes); fn.put("schemaVersion", f.schemaVersion)
     }
     val sum = n.putObject("summary")
@@ -450,7 +528,8 @@ object LakeTable {
     // fail LOUD on older metadata, never NPE: formatVersion 1 kept the file
     // inventory inline without metrics, formatVersion 2 kept metrics outside
     // the snapshot, formatVersion 3 kept the data files in manifests,
-    // formatVersion 4 recorded no file lengths
+    // formatVersion 4 recorded no file lengths, formatVersion 5 one bucket
+    // per file
     val fv = Option(n.get("formatVersion")).map(_.asInt()).getOrElse(1)
     if (fv != FormatVersion)
       throw new IllegalStateException(
@@ -463,7 +542,7 @@ object LakeTable {
       e.getKey.toInt -> fields
     }.toMap
     val files = n.get("files").asInstanceOf[ArrayNode].asScala.map { fn =>
-      DataFileEntry(fn.get("path").asText(), fn.get("bucket").asInt(),
+      DataFileEntry(fn.get("path").asText(), fn.get("lo").asInt(), fn.get("hi").asInt(),
         fn.get("bytes").asLong(), fn.get("schemaVersion").asInt())
     }.toSeq
     val summary = n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap

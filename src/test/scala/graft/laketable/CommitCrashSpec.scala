@@ -57,7 +57,7 @@ class CommitCrashSpec extends AnyFunSuite with SparkSupport {
     def run(k: Int, after: Boolean): (String, Int) = {
       val (dir, t) = crashFsTable()
       // data files land with the fault disarmed: only meta/ is under test
-      val files = batches.map(new LakeTable(dir, spark).writeDataFiles(_, 0))
+      val files = batches.map(new LakeTable(dir, spark).writeDataFiles(_, BucketRanges(4, 4), 0))
       val protocol: Seq[() => Unit] = Seq(
         () => t.create(ChangeEvent.rowSchema, numBuckets = 4),
         () => t.commit(t.currentSnapshot.get, Set.empty, files(0), Map("b" -> "1")),

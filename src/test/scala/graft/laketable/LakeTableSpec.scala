@@ -27,12 +27,21 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   private def bucketed(t: LakeTable, df: DataFrame): DataFrame =
     df.withColumn("_bucket", t.currentSnapshot.get.bucketOf(col("repo")))
 
+  /** The ranges a batch on `t` writes in this session: one per bucket of a
+    * 4-bucket table at 4 shuffle partitions.
+    */
+  private def ranges(t: LakeTable): BucketRanges =
+    BucketRanges.forBatch(t.currentSnapshot.get, spark)
+
+  /** `df` written as data files of `t`, one per range. */
+  private def write(t: LakeTable, df: DataFrame, schemaVersion: Int = 0): Seq[DataFileEntry] =
+    t.writeDataFiles(bucketed(t, df), ranges(t), schemaVersion)
+
   test("create + commit + read round-trip; empty table reads empty") {
     val t = newTable()
     assert(t.read().count() == 0)
-    val df = bucketed(t, someRows(10))
-    val files = t.writeDataFiles(df, 0)
-    assert(files.nonEmpty && files.forall(_.bucket >= 0))
+    val files = write(t, someRows(10))
+    assert(files.nonEmpty && files.forall(f => 0 <= f.lo && f.lo <= f.hi && f.hi < 4))
     t.commit(t.currentSnapshot.get, Set.empty, files, Map("k" -> "v"))
     assert(t.read().count() == 10)
     assert(t.summaryValue("k").contains("v"))
@@ -42,7 +51,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val t = new LakeTable(tmpDir("laketable") + "/t64", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 64)
     t.commit(t.currentSnapshot.get, Set.empty,
-      t.writeDataFiles(bucketed(t, someRows(400)).repartition(col("_bucket")), 0), Map.empty)
+      t.writeDataFiles(bucketed(t, someRows(400)), BucketRanges(64, 64), 0), Map.empty)
     assert(t.currentSnapshot.get.fileCount > 32)
     val sc = spark.sparkContext
     sc.setJobGroup("read-plan", "building read()")
@@ -69,10 +78,10 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     // stream holds while writer A commits underneath it
     val b = new LakeTable(root, spark)
     val staleBase = b.currentSnapshot.get
-    val bFiles = b.writeDataFiles(bucketed(b, someRows(3, "b")), 0)
+    val bFiles = write(b, someRows(3, "b"))
 
     // writer A commits v1 while B's batch runs
-    val aFiles = a.writeDataFiles(bucketed(a, someRows(5, "a")), 0)
+    val aFiles = write(a, someRows(5, "a"))
     a.commit(a.currentSnapshot.get, Set.empty, aFiles, Map("writer" -> "a"))
     val aRows = a.read().orderBy("repo", "path").collect().toSeq
     assert(a.currentVersion.contains(1L) && aRows.size == 5)
@@ -98,7 +107,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val v0 = t.currentSnapshot.get
     (1 to 5).foreach { i =>
       t.commit(t.currentSnapshot.get, Set.empty,
-        t.writeDataFiles(bucketed(t, someRows(2, s"r$i")), 0), Map("writer" -> s"$i"))
+        write(t, someRows(2, s"r$i")), Map("writer" -> s"$i"))
     }
     t.expireSnapshots(keepLast = 2)
     assert(!TableFiles.metaFiles(t.root).contains("v1.json"))
@@ -115,23 +124,20 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("commit replaces only the named buckets") {
     val t = newTable()
-    val df = bucketed(t, someRows(20))
-    val files = t.writeDataFiles(df, 0)
-    t.commit(t.currentSnapshot.get, Set.empty, files, Map.empty)
+    t.commit(t.currentSnapshot.get, Set.empty, write(t, someRows(20)), Map.empty)
     val snap = t.currentSnapshot.get
-    val bucketsPresent = t.allFiles(snap).map(_.bucket).toSet
-    val victim = bucketsPresent.head
+    val victim = t.allFiles(snap).head.lo
     // replace victim bucket with nothing → its rows disappear, others remain
-    val expectRemaining = t.readFiles(snap, t.allFiles(snap).filterNot(_.bucket == victim)).count()
+    val expectRemaining = t.readFiles(snap, t.allFiles(snap).filterNot(_.holds(victim))).count()
     t.commit(t.currentSnapshot.get, Set(victim), Nil, Map.empty)
     assert(t.read().count() == expectRemaining)
   }
 
   test("snapshot versions give time travel") {
     val t = newTable()
-    val f1 = t.writeDataFiles(bucketed(t, someRows(5)), 0)
+    val f1 = write(t, someRows(5))
     val v1 = t.commit(t.currentSnapshot.get, Set.empty, f1, Map.empty).version
-    val f2 = t.writeDataFiles(bucketed(t, someRows(7)), 0)
+    val f2 = write(t, someRows(7))
     val v2 = t.commit(t.currentSnapshot.get, Set.empty, f2, Map.empty).version
     assert(t.read(Some(v1)).count() == 5)
     assert(t.read(Some(v2)).count() == 12)
@@ -143,7 +149,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("crash states: a stray temp json is never read; v<N>.json commits") {
     val t = newTable()
     val s1 = t.commit(t.currentSnapshot.get, Set.empty,
-      t.writeDataFiles(bucketed(t, someRows(6)), 0), Map("k" -> "1"))
+      write(t, someRows(6)), Map("k" -> "1"))
     assert(t.currentVersion.contains(1L))
 
     // a crash between writing v2's temp json and its rename: the temp (even
@@ -151,7 +157,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val stray = Paths.get(t.root, "meta", ".v2.0123-crashed.tmp")
     Files.writeString(stray, "{truncat")
     assert(t.currentVersion.contains(1L) && t.read().count() == 6)
-    val s2 = t.commit(s1, Set.empty, t.writeDataFiles(bucketed(t, someRows(3, "b")), 0),
+    val s2 = t.commit(s1, Set.empty, write(t, someRows(3, "b")),
       Map("k" -> "2"))
     assert(s2.version == 2L && t.currentVersion.contains(2L) && t.read().count() == 9)
     t.expireSnapshots()
@@ -169,9 +175,9 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("expireSnapshots drops old metadata + unreferenced data files") {
     val t = newTable()
     (1 to 5).foreach { i =>
-      val f = t.writeDataFiles(bucketed(t, someRows(5)), 0)
+      val f = write(t, someRows(5))
       val cur = t.currentSnapshot.get
-      t.commit(cur, if (i > 1) t.allFiles(cur).map(_.bucket).toSet else Set.empty,
+      t.commit(cur, if (i > 1) (0 until 4).toSet else Set.empty,
         f, Map.empty) // replace everything each time → old files orphan fast
     }
     val cur = t.currentVersion.get
@@ -194,14 +200,14 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("a batch written but never committed leaves read() unchanged, and " +
     "expireSnapshots deletes its dir") {
     val t = newTable()
-    t.commit(t.currentSnapshot.get, Set.empty, t.writeDataFiles(bucketed(t, someRows(5)), 0),
+    t.commit(t.currentSnapshot.get, Set.empty, write(t, someRows(5)),
       Map.empty)
     val before = t.read().orderBy("repo", "path").collect().toSeq
     // what a batch killed between its write and its commit leaves:
     // complete parquet of both kinds under data/<uuid>/
     val batch = bucketed(t, someRows(4, "up").withColumn("_kind", lit("u"))
       .unionByName(someRows(4, "del").withColumn("_kind", lit("d"))))
-    val (dir, written) = t.stageWrite(batch, 0)
+    val (dir, written) = t.stageWrite(ranges(t).partition(batch), ranges(t), 0)
     assert(written.map(_._1).toSet == Set("u", "d"))
     assert(written.forall { case (_, e) => Files.exists(Paths.get(t.root, e.path)) })
     assert(t.read().orderBy("repo", "path").collect().toSeq == before)
@@ -212,7 +218,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("expireSnapshots keeps the listed files of a data dir and deletes its unlisted ones") {
     val t = newTable()
-    val files = t.writeDataFiles(bucketed(t, someRows(20)), 0)
+    val files = write(t, someRows(20))
     assert(files.size >= 2 && files.map(_.path.split('/')(1)).distinct.size == 1,
       s"expected one dir of several files: ${files.map(_.path)}")
     val (listed, unlisted) = files.splitAt(1)
@@ -229,15 +235,15 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     "layout, read, replace and expire with the same row count") {
     val t = newTable()
     // older builds' layout: each data file flat under data/, one per bucket
-    val flat = t.writeDataFiles(bucketed(t, someRows(20)).repartition(col("_bucket")), 0).map { e =>
+    val flat = write(t, someRows(20)).map { e =>
       val name = s"data/${java.util.UUID.randomUUID()}.parquet"
       Files.move(Paths.get(t.root, e.path), Paths.get(t.root, name))
       e.copy(path = name)
     }
     t.commit(t.currentSnapshot.get, Set.empty, flat, Map.empty)
-    val crowded = flat.head.bucket
+    val crowded = flat.head.lo
     val nested = t.writeDataFiles(
-      bucketed(t, someRows(40, "new")).filter(col("_bucket") === crowded), 0)
+      bucketed(t, someRows(40, "new")).filter(col("_bucket") === crowded), ranges(t), 0)
     assert(nested.nonEmpty)
     t.commit(t.currentSnapshot.get, Set.empty, nested, Map.empty)
     val rows = t.read().count()
@@ -245,15 +251,14 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     // rewrite the crowded bucket as one file and commit it in its place,
     // as a batch commit replaces the buckets it touches
     val snap = t.currentSnapshot.get
-    val rewritten = t.writeDataFiles(bucketed(t,
-      t.readFiles(snap, t.filesInBuckets(snap, Set(crowded)))).repartition(col("_bucket")), 0)
+    val rewritten = write(t, t.readFiles(snap, t.filesInBuckets(snap, Set(crowded))))
     t.commit(snap, Set(crowded), rewritten, Map.empty)
     assert(TableFiles.maxFilesPerBucket(t) == 1)
     assert(t.read().count() == rows)
     t.expireSnapshots(keepLast = 1)
     assert(t.read().count() == rows)
     val current = t.allFiles(t.currentSnapshot.get).map(_.path).toSet
-    val (replaced, kept) = flat.partition(_.bucket == crowded)
+    val (replaced, kept) = flat.partition(_.holds(crowded))
     assert(kept.nonEmpty && kept.forall(f => current.contains(f.path)),
       "flat files of untouched buckets stay listed")
     assert(TableFiles.parquetUnder(t.root, "data") == current)
@@ -262,7 +267,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("schema evolution: rename is metadata-only, add fills null") {
     val t = newTable()
-    val files = t.writeDataFiles(bucketed(t, someRows(6)), 0)
+    val files = write(t, someRows(6))
     t.commit(t.currentSnapshot.get, Set.empty, files, Map.empty)
     // rename content→body (field id kept), add stars:int
     t.evolveSchema(renames = Map("content" -> "body"), adds = Seq("stars" -> "INT"))
@@ -274,7 +279,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val snap = t.currentSnapshot.get
     val newRows = Seq(("r-new", "p-new", "c" * 40, "go", "body-new", 5))
       .toDF("repo", "path", "commit", "lang", "body", "stars")
-    val nf = t.writeDataFiles(bucketed(t, newRows), snap.schemaVersion)
+    val nf = write(t, newRows, snap.schemaVersion)
     t.commit(snap, Set.empty, nf, Map.empty)
     val all = t.read()
     assert(all.count() == 7)

@@ -38,9 +38,11 @@ object TableFiles {
     Using.resource(Files.list(Paths.get(root, "meta")))(_.iterator().asScala
       .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet)
 
-  /** The most files any bucket of the current snapshot lists (0 when empty). */
-  def maxFilesPerBucket(t: LakeTable): Int =
-    t.allFiles(t.currentSnapshot.get).groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)
+  /** The most files of the current snapshot whose span holds one bucket. */
+  def maxFilesPerBucket(t: LakeTable): Int = {
+    val snap = t.currentSnapshot.get
+    (0 until snap.numBuckets).map(b => snap.files.count(_.holds(b))).max
+  }
 
   /** What `data/` holds beyond the kept snapshots: every parquet file no kept
     * snapshot lists, and every entry directly under `data/` that no kept

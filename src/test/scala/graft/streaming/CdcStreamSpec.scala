@@ -262,8 +262,8 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
     assert(files <= 33, s"metrics dir accreted $files files (unbounded growth)")
-    // no compaction runs: each batch commit replaces every file of the
-    // buckets it touches, so no bucket ever lists more than two files
+    // no compaction runs: each batch commit replaces every file whose span
+    // meets the ranges it touches, so no bucket is held by more than two files
     val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
     assert(perBucket <= 2, s"a bucket lists $perBucket files")
     // data/ likewise: every parquet file (recursively) listed by a kept
@@ -293,6 +293,8 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     assert(r.length == 1 && r(0).isNullAt(1) && r(0).isNullAt(3))
     assert(r(0).getLong(0) == 7L && r(0).getString(2) == "-80" &&
       r(0).getString(4) == "MySQL56/x:1-5" && r(0).getLong(5) == 5L)
+    // the driver-side reader a metrics fold uses gives the same row
+    assert(graft.apply.CdcApply.readMetricsFile(spark, f) == r.toSeq)
   }
 
   test("wirePayload source: raw wire strings stream through the DSv2 source and " +

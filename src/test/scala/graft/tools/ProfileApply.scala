@@ -2,7 +2,7 @@ package graft.tools
 import graft.apply.CdcApply
 import graft.core.ChangeEvent
 import graft.genlog.{ChangelogGen, GenConfig}
-import graft.laketable.LakeTable
+import graft.laketable.{BucketRanges, LakeTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ProfileApply {
@@ -37,7 +37,7 @@ object ProfileApply {
     val upserts = last.filter(col("op") =!= "delete").select(col("after.*"))
     val merged = upserts.withColumn("_bucket", snap0.bucketOf(col("repo")))
     val files = time("repartition+parquet-write") {
-      table.writeDataFiles(merged.repartition(col("_bucket")), 0)
+      table.writeDataFiles(merged, BucketRanges.forBatch(snap0, spark), 0)
     }
     println("  files=" + files.size)
     time("commit") { table.commit(snap0, agg.getSeq[Int](2).toSet, files, Map("x"->"y")) }
