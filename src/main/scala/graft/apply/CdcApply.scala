@@ -447,28 +447,6 @@ object CdcApply {
     file
   }
 
-  /** The rows ([[metricsSchema]]) of one metrics file, read on the driver
-    * with the parquet reader that mirrors [[writeMetricsFile]]: a fold reads
-    * a tier's few tiny files, far below the cost of a Spark job. Fields
-    * match by name; an unset optional string reads as null.
-    */
-  private[graft] def readMetricsFile(spark: SparkSession, file: Path): Seq[Row] = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .build()
-    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-      Row.fromSeq(metricsSchema.fields.toSeq.map { f =>
-        if (g.getFieldRepetitionCount(f.name) == 0) null
-        else f.dataType match {
-          case LongType   => g.getLong(f.name, 0)
-          case DoubleType => g.getDouble(f.name, 0)
-          case _          => g.getString(f.name, 0)
-        }
-      })
-    }.toVector finally reader.close()
-  }
-
   /** Files per metrics tier. A tier below the top one that holds this many
     * files in the previous snapshot folds into ONE file of the next tier
     * inside the batch commit — a content-neutral swap of list entries — so
@@ -489,8 +467,9 @@ object CdcApply {
     val full = snap.metricsFiles.groupBy(metricsTier).toSeq
       .filter { case (t, files) => t < 3 && files.size >= MetricsTierFiles }
     val out = full.map { case (t, files) =>
-      val rows = files.flatMap(f => readMetricsFile(spark, new Path(table.root, f)))
-      writeMetricsFile(spark, table.metricsDir, t + 1, rows)
+      val rows = spark.read.schema(metricsSchema)
+        .parquet(files.map(f => new Path(table.root, f).toString): _*).collect()
+      writeMetricsFile(spark, table.metricsDir, t + 1, rows.toSeq)
     }
     (out, full.flatMap(_._2).toSet)
   }

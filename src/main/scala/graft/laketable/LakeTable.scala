@@ -61,7 +61,9 @@ final case class BucketRanges(numBuckets: Int, count: Int) {
     * one upsert and one survivor file per range, so after the commit no
     * bucket is held by more than two files. When every file spans one range
     * of this count (the range count did not change), this is just the
-    * touched ranges' buckets.
+    * touched ranges' buckets; after [[BucketRanges.count]] changes, nested
+    * ranges grow it to at most the larger of a touched range and the one
+    * old file span that holds it.
     */
   def replacedBuckets(files: Seq[DataFileEntry], touched: Set[Int]): Set[Int] = {
     @scala.annotation.tailrec
@@ -77,24 +79,24 @@ final case class BucketRanges(numBuckets: Int, count: Int) {
 
 object BucketRanges {
 
-  /** Ranges per write: the session's shuffle parallelism `partitions`, or
-    * more when the table's bytes fill more than that many
-    * `maxPartitionBytes` splits, and never more than `numBuckets` (the
-    * finest split). A large table thus keeps one file per bucket, so a
-    * sparse batch rewrites no more of it than a per-bucket layout would.
+  /** Ranges per write: the session's shuffle parallelism `partitions`
+    * rounded up to a power of two, and never more than `numBuckets` (the
+    * finest split). Power-of-two counts nest — range `r` of `count` is
+    * ranges `2r` and `2r + 1` of `2 × count`, since `lo` rounds up — and
+    * every range nests in one of them when the count is `numBuckets`, so
+    * when the parallelism changes between batches a new range lies inside
+    * one old file span or covers whole ones, and a sparse batch never
+    * replaces more than that span.
     */
-  def count(numBuckets: Int, partitions: Int, tableBytes: Long, maxPartitionBytes: Long): Int =
-    math.min(numBuckets.toLong,
-      math.max(partitions.toLong, (tableBytes + maxPartitionBytes - 1) / maxPartitionBytes)).toInt
+  def count(numBuckets: Int, partitions: Int): Int =
+    math.min(numBuckets, Integer.highestOneBit(math.max(1, partitions) * 2 - 1))
 
-  /** The ranges a batch on `base` writes under `spark`'s session settings
-    * (`spark.sql.shuffle.partitions`, `spark.sql.files.maxPartitionBytes`).
+  /** The ranges a batch on `base` writes under `spark`'s
+    * `spark.sql.shuffle.partitions`.
     */
   def forBatch(base: Snapshot, spark: SparkSession): BucketRanges =
-    BucketRanges(base.numBuckets, count(base.numBuckets,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, base.files.map(_.bytes).sum,
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes"))))
+    BucketRanges(base.numBuckets,
+      count(base.numBuckets, spark.conf.get("spark.sql.shuffle.partitions").toInt))
 }
 
 /** A named, typed column with a stable field id. Renames keep the id. */
@@ -157,10 +159,12 @@ final case class Snapshot(
   * Scale design: rows hash into `numBuckets` buckets by the first merge-key
   * column ([[Snapshot.bucketOf]]), and a write makes one file per range and
   * kind: a batch splits the buckets into [[BucketRanges]] contiguous ranges,
-  * as many as the session's shuffle partitions or the table's bytes call
-  * for. A MERGE touches only the ranges present in the incoming batch: a
-  * micro-batch rewrite is O(affected ranges), which is the whole table when
-  * the batch's keys span every range. A batch commit replaces every file
+  * one per write task (the session's shuffle partitions, rounded up to a
+  * power of two). A MERGE touches only the ranges present in the incoming
+  * batch: a micro-batch rewrite is O(affected ranges), which is the whole
+  * table when the batch's keys span every range. The trade is the sparse
+  * batch: a batch touching one bucket rewrites its whole range, so
+  * `numBuckets / count` buckets' rows. A batch commit replaces every file
   * whose span meets those ranges with at most two per range (its upserts
   * and the range's survivors), so no bucket is ever held by more than two
   * files and the table needs no compaction: the commit and

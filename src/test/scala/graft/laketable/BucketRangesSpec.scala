@@ -4,22 +4,33 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class BucketRangesSpec extends AnyFunSuite {
 
-  private val MB = 1L << 20
-
-  test("range count: numBuckets below the partitions, an empty table, and bytes " +
-    "past numBuckets × maxPartitionBytes") {
+  test("range count: the partitions rounded up to a power of two, never more " +
+    "than numBuckets") {
     // fewer buckets than tasks: one range per bucket
-    assert(BucketRanges.count(numBuckets = 4, partitions = 8, tableBytes = 0L, 128 * MB) == 4)
-    // an empty table splits by parallelism alone
-    assert(BucketRanges.count(64, 4, 0L, 128 * MB) == 4)
-    // the size term takes over past partitions × maxPartitionBytes, rounding up
-    assert(BucketRanges.count(64, 4, 4 * 128 * MB, 128 * MB) == 4)
-    assert(BucketRanges.count(64, 4, 4 * 128 * MB + 1, 128 * MB) == 5)
-    assert(BucketRanges.count(64, 4, 20 * 128 * MB, 128 * MB) == 20)
-    // and stops at one range per bucket
-    assert(BucketRanges.count(64, 4, 64 * 128 * MB, 128 * MB) == 64)
-    assert(BucketRanges.count(64, 4, 1000 * 128 * MB, 128 * MB) == 64)
-    assert(BucketRanges.count(64, 4, Long.MaxValue / 2, 1L) == 64)
+    assert(BucketRanges.count(numBuckets = 4, partitions = 8) == 4)
+    assert(BucketRanges.count(6, 5) == 6)
+    assert(BucketRanges.count(64, 4) == 4)
+    assert(BucketRanges.count(64, 1) == 1)
+    assert(BucketRanges.count(64, 0) == 1)
+    assert(BucketRanges.count(64, 2) == 2)
+    assert(BucketRanges.count(64, 3) == 4)
+    assert(BucketRanges.count(64, 5) == 8)
+    assert(BucketRanges.count(64, 6) == 8)
+    assert(BucketRanges.count(64, 33) == 64)
+    assert(BucketRanges.count(64, 1000) == 64)
+  }
+
+  test("the counts the range count can take nest: each range lies inside one " +
+    "range of every coarser count") {
+    for (n <- Seq(1, 4, 6, 7, 16, 64, 100)) {
+      val counts = (1 to 2 * n).map(p => BucketRanges.count(n, p)).distinct
+      for (fine <- counts; coarse <- counts if coarse < fine) {
+        val (f, c) = (BucketRanges(n, fine), BucketRanges(n, coarse))
+        (0 until fine).foreach { r =>
+          assert(c.rangeOf(f.lo(r)) == c.rangeOf(f.hi(r)), s"$n: range $r of $fine over $coarse")
+        }
+      }
+    }
   }
 
   test("ranges tile the buckets contiguously, sizes within one") {
@@ -42,18 +53,27 @@ class BucketRangesSpec extends AnyFunSuite {
     spans.map { case (lo, hi) => DataFileEntry(s"data/$lo-$hi.parquet", lo, hi, 1L, 0) }
 
   test("replaced buckets: the touched ranges at a fixed range count, grown to " +
-    "every range a straddling file spans after the count changes") {
+    "the old file span that holds them after the count changes") {
     val four = BucketRanges(16, 4)
     val base = files((0, 3), (0, 3), (4, 7), (8, 11), (8, 11), (12, 15))
     assert(four.replacedBuckets(base, Set(1)) == (4 to 7).toSet)
     assert(four.replacedBuckets(base, Set.empty) == Set.empty)
     assert(four.replacedBuckets(Nil, Set(3)) == (12 to 15).toSet)
-    // written at 4 ranges, committed into at 3 ([0,5] [6,10] [11,15]):
-    // range 0 meets (4,7), which spans range 1, which meets (8,11), ...
-    val three = BucketRanges(16, 3)
-    assert(three.replacedBuckets(base, Set(0)) == (0 to 15).toSet)
     // at 8 ranges, a touched range inside one old file grows to that file
     val eight = BucketRanges(16, 8)
     assert(eight.replacedBuckets(base, Set(2)) == (4 to 7).toSet)
+    // at 2 ranges, a touched range covers whole old files and stays itself
+    val two = BucketRanges(16, 2)
+    assert(two.replacedBuckets(base, Set(0)) == (0 to 7).toSet)
+    // spans left by several counts: each touched range grows to the one
+    // file span that holds it, and no further
+    val mixed = files((0, 7), (8, 9), (10, 11), (12, 15), (12, 12))
+    assert(eight.replacedBuckets(mixed, Set(1)) == (0 to 7).toSet)
+    assert(eight.replacedBuckets(mixed, Set(4)) == (8 to 9).toSet)
+    assert(BucketRanges(16, 16).replacedBuckets(mixed, Set(12)) == (12 to 15).toSet)
+    assert(four.replacedBuckets(mixed, Set(2)) == (8 to 11).toSet)
+    // a non-nested count (never chosen by `count`) can chain across the table:
+    // range 0 of 3 ([0,5]) meets (4,7), which spans range 1, which meets (8,11), ...
+    assert(BucketRanges(16, 3).replacedBuckets(base, Set(0)) == (0 to 15).toSet)
   }
 }

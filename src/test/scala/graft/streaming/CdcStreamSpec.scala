@@ -293,8 +293,6 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     assert(r.length == 1 && r(0).isNullAt(1) && r(0).isNullAt(3))
     assert(r(0).getLong(0) == 7L && r(0).getString(2) == "-80" &&
       r(0).getString(4) == "MySQL56/x:1-5" && r(0).getLong(5) == 5L)
-    // the driver-side reader a metrics fold uses gives the same row
-    assert(graft.apply.CdcApply.readMetricsFile(spark, f) == r.toSeq)
   }
 
   test("wirePayload source: raw wire strings stream through the DSv2 source and " +
