@@ -5,7 +5,7 @@ import graft.genlog.GenConfig
 import graft.streaming.CdcStream
 import org.apache.spark.sql.SparkSession
 
-/** Evidence for the concurrent `runCatalog` (SURVEY A20, the reference's
+/** Evidence for the concurrent `runCatalogOutcomes` (SURVEY A20, the reference's
   * sequential stream loop re-expressed as overlapped queries): wall time of
   * a 2-stream catalog vs one stream, same per-stream input. Interleaved
   * rounds, best-of — the host's CPU speed drifts (see BENCH.md).
@@ -25,7 +25,7 @@ object CatalogBench {
     val cat = ConfiguredCatalog((1 to streams).map(i =>
       ConfiguredStream(s"s$i", c.keyspace, "incremental")))
     val t0 = System.nanoTime()
-    CdcStream.runCatalog(spark, cat, s => {
+    CdcStream.runCatalogOutcomes(spark, cat, s => {
       val n = eventsFor(s.name.stripPrefix("s").toInt)
       val cc = if (n > 0) c.copy(numEvents = n, copyRows = n / 10) else c
       CdcStream.RunConfig(cc, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 32)

@@ -3,7 +3,7 @@ package graft.apply
 import graft.core.{LastPk, ShardCursor, ShardStats, SyncState, VGtid}
 import graft.functions.ShardStatsAgg
 import graft.functions.VGtidRankExpr.vgtid_rank
-import graft.laketable.{BucketRanges, LakeTable, Snapshot}
+import graft.laketable.{BucketRanges, DataFileEntry, LakeTable, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,10 +40,12 @@ final case class ApplyResult(
   *    skew splitting on the join and by the key carrying `path` (high
   *    cardinality within a hot repo spreads its partitions).
   *  - The MERGE reads back, anti-joins and rewrites only the files whose
-  *    bucket ranges the batch touches. That bounds a commit by the batch's
-  *    key spread, not by its size: uniform keys touch every range, so such
-  *    a batch rewrites the whole table. The batch side of the join is
-  *    broadcast when small (AQE decides from runtime stats).
+  *    bucket ranges the batch touches: the commit drops the listed files
+  *    whose span overlaps a written file; spans nest, so that set is exact
+  *    in one pass. That bounds a commit by the batch's key spread, not by
+  *    its size: uniform keys touch every range, so such a batch rewrites
+  *    the whole table. The batch side of the join is broadcast when small
+  *    (AQE decides from runtime stats).
   */
 object CdcApply {
 
@@ -277,10 +279,12 @@ object CdcApply {
         count_if(col("_kind") === "u").as("u"), count_if(col("_kind") === "d").as("d"))
       .drop("_stats")
     val (batchDir, written) = table.stageWrite(staged, ranges, snap.schemaVersion)
-    // every file meeting the written ranges is replaced (and read back for
-    // its survivors); lineage counts the buckets that covers
-    val replaced = ranges.replacedBuckets(snap.files,
-      written.map { case (_, e) => ranges.rangeOf(e.lo) }.toSet)
+    // the commit drops the listed files whose span overlaps a written file
+    // of either kind; spans nest, so that set is exact in one pass. They are
+    // read back for their survivors, and lineage counts the buckets the
+    // written and dropped spans cover.
+    val writtenFiles = written.map(_._2)
+    val oldFiles = DataFileEntry.overlapping(snap.files, writtenFiles)
     // a batch with no winners writes no file and has no stats to wait for
     val observed = if (written.isEmpty) Map.empty[String, Any] else observation.get
     val upsertCount = observed.get("u").fold(0L)(_.asInstanceOf[Long])
@@ -305,13 +309,12 @@ object CdcApply {
     // merge key = fields id 1..k (current names survive renames)
     val keyNames = (1 to keys.length).map(id =>
       snap.currentSchema.find(_.id == id).get.name)
-    val oldFiles = table.filesInBuckets(snap, replaced)
     val survivorFiles =
       if (oldFiles.isEmpty) Nil
       else {
         val old = table.readFiles(snap, oldFiles)
         val survivors = old
-          .join(table.readFiles(snap, written.map(_._2)).select(keyNames.map(col): _*),
+          .join(table.readFiles(snap, writtenFiles).select(keyNames.map(col): _*),
             keyNames, "left_anti")
           .withColumn("_bucket", snap.bucketOf(col(keyNames.head)))
         table.writeDataFiles(survivors, ranges, snap.schemaVersion)
@@ -345,7 +348,8 @@ object CdcApply {
       }
       st.updated(stateKey, keep)
     }
-    val lineage = lineageJson(replaced.size, upsertCount, deleteCount)
+    val lineage = lineageJson((writtenFiles ++ oldFiles).flatMap(f => f.lo to f.hi).distinct.size,
+      upsertCount, deleteCount)
     // bounded lineage: retain the trailing window only — the summary map
     // (rewritten every commit) must not grow O(batches) over a stream's
     // lifetime. The metrics files are the durable per-batch record.
@@ -366,7 +370,7 @@ object CdcApply {
         Map("wire_schema_announced" -> math.max(maxWireSv, announcedPrev).toString)
       else Map.empty
     val committed = table.commit(snap,
-      replacedBuckets = replaced,
+      replaced = oldFiles,
       newFiles = newFiles,
       summaryUpdates = Map(
         key -> batchId.toString,

@@ -24,12 +24,26 @@ import scala.jdk.CollectionConverters._
   * planned from the entry alone. `schemaVersion` records which column
   * mapping the file was written under (Iceberg-style field-id rename
   * support).
+  *
+  * Listed spans are pairwise equal or disjoint: every span is a range of a
+  * nesting count ([[BucketRanges.count]]), and a batch commit drops every
+  * listed file that overlaps a file the batch wrote
+  * ([[DataFileEntry.overlapping]]).
   */
 final case class DataFileEntry(path: String, lo: Int, hi: Int, bytes: Long, schemaVersion: Int) {
   def holds(bucket: Int): Boolean = lo <= bucket && bucket <= hi
+}
 
-  /** Whether the span holds any of `buckets`. */
-  def meets(buckets: Set[Int]): Boolean = (lo to hi).exists(buckets)
+object DataFileEntry {
+
+  /** The files of `listed` whose span overlaps the span of a file of
+    * `written`: what a batch that wrote `written` reads back for its
+    * survivors and its commit drops. Spans nest, so that set is exact in
+    * one pass: a listed span that meets a written range either lies inside
+    * it or holds it, and any other listed span meeting it equals it.
+    */
+  def overlapping(listed: Seq[DataFileEntry], written: Seq[DataFileEntry]): Seq[DataFileEntry] =
+    listed.filter(f => written.exists(w => f.lo <= w.hi && w.lo <= f.hi))
 }
 
 /** `count` contiguous ranges over a table's `numBuckets` buckets: range `r`
@@ -37,7 +51,9 @@ final case class DataFileEntry(path: String, lo: Int, hi: Int, bytes: Long, sche
   * A range is the unit a data file covers (the bins-and-ranges layout of
   * Megaphone, VLDB 2019): both writers of a batch shuffle one range per task
   * ([[partition]]), so a write makes one file per range and kind, whatever
-  * `numBuckets` is.
+  * `numBuckets` is. Every listed file span is a range of a count
+  * [[BucketRanges.count]] returns, and those counts nest, so two listed
+  * spans are equal or disjoint.
   */
 final case class BucketRanges(numBuckets: Int, count: Int) {
   require(count >= 1 && count <= numBuckets, s"$count ranges over $numBuckets buckets")
@@ -53,28 +69,6 @@ final case class BucketRanges(numBuckets: Int, count: Int) {
     df.withColumn("_range", expr(s"CAST(_bucket * $count DIV $numBuckets AS INT)"))
       .drop("_bucket")
       .repartitionById(count, col("_range"))
-
-  /** The buckets a commit that writes into the ranges `touched` must
-    * replace: those ranges, grown by every range that a file of `files`
-    * meeting them spans, until no file straddles the edge. Every file that
-    * holds one of these buckets is replaced, and the batch writes at most
-    * one upsert and one survivor file per range, so after the commit no
-    * bucket is held by more than two files. When every file spans one range
-    * of this count (the range count did not change), this is just the
-    * touched ranges' buckets; after [[BucketRanges.count]] changes, nested
-    * ranges grow it to at most the larger of a touched range and the one
-    * old file span that holds it.
-    */
-  def replacedBuckets(files: Seq[DataFileEntry], touched: Set[Int]): Set[Int] = {
-    @scala.annotation.tailrec
-    def grow(ranges: Set[Int]): Set[Int] = {
-      val buckets = ranges.flatMap(r => lo(r) to hi(r))
-      val spanned = files.filter(_.meets(buckets))
-        .flatMap(f => rangeOf(f.lo) to rangeOf(f.hi)).toSet
-      if (spanned.subsetOf(ranges)) buckets else grow(ranges ++ spanned)
-    }
-    grow(touched)
-  }
 }
 
 object BucketRanges {
@@ -164,9 +158,10 @@ final case class Snapshot(
   * batch: a micro-batch rewrite is O(affected ranges), which is the whole
   * table when the batch's keys span every range. The trade is the sparse
   * batch: a batch touching one bucket rewrites its whole range, so
-  * `numBuckets / count` buckets' rows. A batch commit replaces every file
-  * whose span meets those ranges with at most two per range (its upserts
-  * and the range's survivors), so no bucket is ever held by more than two
+  * `numBuckets / count` buckets' rows. A batch commit drops the listed
+  * files whose span overlaps a written file — spans nest, so that set is
+  * exact in one pass — and lists at most two per range (its upserts and
+  * the range's survivors), so no bucket is ever held by more than two
   * files and the table needs no compaction: the commit and
   * [[expireSnapshots]] are its whole file lifecycle. The inventory is
   * therefore at most 2 × `numBuckets` entries, which v<N>.json lists inline:
@@ -293,12 +288,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
     }
   }
 
-  /** Files of the snapshot whose span holds any of the given buckets: the
-    * data a merge of those buckets reads back and replaces.
-    */
-  def filesInBuckets(snap: Snapshot, buckets: Set[Int]): Seq[DataFileEntry] =
-    snap.files.filter(_.meets(buckets))
-
   // ---- write / commit ----------------------------------------------------
 
   /** Write `df` (must match current schema + a `_bucket` int column) as new
@@ -364,26 +353,27 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** Delete the unlisted delete-key files of a [[stageWrite]] batch. */
   private[graft] def dropDeleteKeys(dir: Path): Unit = fs.delete(new Path(dir, "_kind=d"), true)
 
-  /** Commit the snapshot after `base`, replacing every file whose span
-    * meets `replacedBuckets` with `newFiles` and merging `summaryUpdates` into
-    * `base`'s summary (keys in `dropSummaryKeys` are removed — bounded-lineage
-    * pruning). The metrics list drops `foldedMetrics` and gains `newMetrics`.
-    * `base` is the snapshot the caller read and built on, so the commit
-    * fails loud when another commit landed since ([[writeSnapshot]]); it
-    * becomes the largest `v<N>.json`, one json listing the whole inventory,
-    * O(numBuckets).
+  /** Commit the snapshot after `base`, listing `base`'s files without the
+    * entries of `replaced` (matched by path) plus `newFiles`, and merging
+    * `summaryUpdates` into `base`'s summary (keys in `dropSummaryKeys` are
+    * removed — bounded-lineage pruning). The metrics list drops
+    * `foldedMetrics` and gains `newMetrics`. `base` is the snapshot the
+    * caller read and built on, so the commit fails loud when another commit
+    * landed since ([[writeSnapshot]]); it becomes the largest `v<N>.json`,
+    * one json listing the whole inventory, O(numBuckets).
     */
   def commit(
       base: Snapshot,
-      replacedBuckets: Set[Int],
+      replaced: Seq[DataFileEntry],
       newFiles: Seq[DataFileEntry],
       summaryUpdates: Map[String, String],
       dropSummaryKeys: Set[String] = Set.empty,
       newMetrics: Seq[String] = Nil,
       foldedMetrics: Set[String] = Set.empty): Snapshot = {
+    val dropped = replaced.map(_.path).toSet
     val snap = base.copy(
       version = base.version + 1,
-      files = base.files.filterNot(_.meets(replacedBuckets)) ++ newFiles,
+      files = base.files.filterNot(f => dropped(f.path)) ++ newFiles,
       summary = (base.summary ++ summaryUpdates) -- dropSummaryKeys,
       metricsFiles = base.metricsFiles.filterNot(foldedMetrics) ++ newMetrics)
     writeSnapshot(snap)

@@ -218,6 +218,16 @@ object CdcStream {
     case some => some
   }
 
+  /** Outcome of a retried sync: batches applied across attempts, whether
+    * the sync ended PARTIAL (retry/timeout budget exhausted with work
+    * possibly left — the reference's nil-error-after-maxRetries case), and
+    * the last retryable error message when one caused the exhaustion. A
+    * caller with no scheduler above it (the one-shot CLI) must surface
+    * `partial` — stderr logs alone would make a fully-failed sync
+    * indistinguishable from a successful one.
+    */
+  final case class SyncOutcome(batches: Long, partial: Boolean, lastError: Option[String])
+
   /** The reference's `max_retries` × `timeout_seconds` sync loop (the Read
     * loop, `planetscale_edge_database.go:240-287` + `spec.json:76-90`):
     * `maxRetries` is the TOTAL sync-attempt budget (spec default 3 ⇒ at
@@ -236,22 +246,9 @@ object CdcStream {
     * `syncCount >= maxRetries` for gRPC statuses (a partial sync, not a
     * failure; the next scheduled sync resumes). Non-retryable engine
     * validation errors propagate immediately (the reference's non-gRPC
-    * branch returns the error). Returns total batches applied ACROSS
-    * attempts, derived from the table's committed batch-id delta.
+    * branch returns the error). Its [[SyncOutcome]] counts the batches
+    * applied ACROSS attempts, from the table's committed batch-id delta.
     */
-  def runWithRetries(spark: SparkSession, rc: RunConfig, maxRetries: Int = 3): Long =
-    runWithRetriesOutcome(spark, rc, maxRetries).batches
-
-  /** Outcome of a retried sync: batches applied across attempts, whether
-    * the sync ended PARTIAL (retry/timeout budget exhausted with work
-    * possibly left — the reference's nil-error-after-maxRetries case), and
-    * the last retryable error message when one caused the exhaustion. A
-    * caller with no scheduler above it (the one-shot CLI) must surface
-    * `partial` — stderr logs alone would make a fully-failed sync
-    * indistinguishable from a successful one.
-    */
-  final case class SyncOutcome(batches: Long, partial: Boolean, lastError: Option[String])
-
   def runWithRetriesOutcome(spark: SparkSession, rc: RunConfig,
       maxRetries: Int = 3): SyncOutcome = {
     require(maxRetries >= 1, s"max_retries must be >= 1 (got $maxRetries)")
@@ -326,7 +323,7 @@ object CdcStream {
       graft.laketable.AvroSchema.evolveIfNeeded(table, base, avro(v), avro(v + 1),
         strict = v + 1 == announced)
     }
-    table.commit(evolved, Set.empty, Nil, Map("wire_schema_version" -> announced.toString))
+    table.commit(evolved, Nil, Nil, Map("wire_schema_version" -> announced.toString))
   }
 
   /** Run one `Trigger.AvailableNow` pass: peek the head, drain to it in
@@ -334,7 +331,7 @@ object CdcStream {
     * A `timeoutSeconds` fence bounds THIS pass as a whole (single-fence:
     * committed batches stand, the call returns cleanly) — the
     * reference-style continue-after-timeout composition lives in
-    * [[runWithRetries]], which re-arms the fence per attempt.
+    * [[runWithRetriesOutcome]], which re-arms the fence per attempt.
     */
   def runAvailableNow(spark: SparkSession, rc: RunConfig): Long =
     runOnce(spark, rc).batches
@@ -421,7 +418,7 @@ object CdcStream {
       watchdog.foreach(_.cancel())
       // deregistration from the JVM-global active-checkpoint set can lag
       // awaitTermination; stop() synchronizes it so an immediate restart on
-      // the same checkpoint (crash/resume tests, runWithRetries' next
+      // the same checkpoint (crash/resume tests, runWithRetriesOutcome's next
       // attempt, back-to-back syncs) doesn't trip the concurrent-use guard.
       // Runs on the FAILURE path too — a retried attempt must not burn its
       // retry on "query already active". Best-effort: a stop() error must
@@ -459,20 +456,10 @@ object CdcStream {
     * reference's sequential stream loop lacks (SURVEY A20): a 100-table
     * catalog overlaps its 100 ingest passes instead of serializing them,
     * and each stream's own shard×chunk task parallelism still applies
-    * inside its batches. Returns batches applied per stream STATE KEY
+    * inside its batches. Returns each stream's [[SyncOutcome]] per STATE KEY
     * (`<namespace>:<name>` — same-named tables in different namespaces stay
     * distinct).
     */
-  def runCatalog(
-      spark: SparkSession,
-      catalog: graft.core.ConfiguredCatalog,
-      rcFor: graft.core.ConfiguredStream => RunConfig,
-      state: graft.core.SyncState = graft.core.SyncState.empty,
-      maxConcurrentStreams: Int = 4,
-      maxRetries: Int = 3): Map[String, Long] =
-    runCatalogOutcomes(spark, catalog, rcFor, state, maxConcurrentStreams, maxRetries)
-      .map { case (k, o) => k -> o.batches }
-
   def runCatalogOutcomes(
       spark: SparkSession,
       catalog: graft.core.ConfiguredCatalog,

@@ -70,6 +70,7 @@ class RangeLayoutSpec extends AnyFunSuite with SparkSupport {
       val spans = (0 until want).map(k => (ranges.lo(k), ranges.hi(k))).toSet
       assert(snap.files.map(f => (f.lo, f.hi)).toSet == spans)
       assert(snap.fileCount <= 2 * want, s"${snap.fileCount} files over $want ranges")
+      TableFiles.assertSpansNest(t)
       assert(TableFiles.maxFilesPerBucket(t) <= 2)
       assert(lineageBuckets(t, i.toLong) == Buckets)
     }
@@ -98,6 +99,7 @@ class RangeLayoutSpec extends AnyFunSuite with SparkSupport {
       "rows of another bucket changed")
     assert(after.groupBy("repo", "path").count().filter(col("count") > 1).isEmpty)
     assert(after.filter(base.bucketOf(col("repo")) === b).count() > 0)
+    TableFiles.assertSpansNest(t)
     assert(TableFiles.maxFilesPerBucket(t) <= 2)
     before.unpersist()
     def spans(fs: Seq[DataFileEntry]) = fs.map(f => (f.lo, f.hi)).toSet

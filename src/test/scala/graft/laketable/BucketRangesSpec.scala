@@ -1,8 +1,10 @@
 package graft.laketable
 
+import graft.PropSupport
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-class BucketRangesSpec extends AnyFunSuite {
+class BucketRangesSpec extends AnyFunSuite with PropSupport {
 
   test("range count: the partitions rounded up to a power of two, never more " +
     "than numBuckets") {
@@ -49,31 +51,61 @@ class BucketRangesSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](BucketRanges(4, 0))
   }
 
-  private def files(spans: (Int, Int)*): Seq[DataFileEntry] =
-    spans.map { case (lo, hi) => DataFileEntry(s"data/$lo-$hi.parquet", lo, hi, 1L, 0) }
+  /** The replaced-bucket fixpoint commits ran before listed spans were known
+    * to nest, kept as the oracle of the one overlap pass: the `touched`
+    * ranges, grown by every range that a file of `files` meeting them spans,
+    * until no file straddles the edge.
+    */
+  private def fixpoint(ranges: BucketRanges, files: Seq[DataFileEntry],
+      touched: Set[Int]): Set[Int] = {
+    @scala.annotation.tailrec
+    def grow(rs: Set[Int]): Set[Int] = {
+      val buckets = rs.flatMap(r => ranges.lo(r) to ranges.hi(r))
+      val spanned = files.filter(f => (f.lo to f.hi).exists(buckets))
+        .flatMap(f => ranges.rangeOf(f.lo) to ranges.rangeOf(f.hi)).toSet
+      if (spanned.subsetOf(rs)) buckets else grow(rs ++ spanned)
+    }
+    grow(touched)
+  }
 
-  test("replaced buckets: the touched ranges at a fixed range count, grown to " +
-    "the old file span that holds them after the count changes") {
-    val four = BucketRanges(16, 4)
-    val base = files((0, 3), (0, 3), (4, 7), (8, 11), (8, 11), (12, 15))
-    assert(four.replacedBuckets(base, Set(1)) == (4 to 7).toSet)
-    assert(four.replacedBuckets(base, Set.empty) == Set.empty)
-    assert(four.replacedBuckets(Nil, Set(3)) == (12 to 15).toSet)
-    // at 8 ranges, a touched range inside one old file grows to that file
-    val eight = BucketRanges(16, 8)
-    assert(eight.replacedBuckets(base, Set(2)) == (4 to 7).toSet)
-    // at 2 ranges, a touched range covers whole old files and stays itself
-    val two = BucketRanges(16, 2)
-    assert(two.replacedBuckets(base, Set(0)) == (0 to 7).toSet)
-    // spans left by several counts: each touched range grows to the one
-    // file span that holds it, and no further
-    val mixed = files((0, 7), (8, 9), (10, 11), (12, 15), (12, 12))
-    assert(eight.replacedBuckets(mixed, Set(1)) == (0 to 7).toSet)
-    assert(eight.replacedBuckets(mixed, Set(4)) == (8 to 9).toSet)
-    assert(BucketRanges(16, 16).replacedBuckets(mixed, Set(12)) == (12 to 15).toSet)
-    assert(four.replacedBuckets(mixed, Set(2)) == (8 to 11).toSet)
-    // a non-nested count (never chosen by `count`) can chain across the table:
-    // range 0 of 3 ([0,5]) meets (4,7), which spans range 1, which meets (8,11), ...
-    assert(BucketRanges(16, 3).replacedBuckets(base, Set(0)) == (0 to 15).toSet)
+  test("one overlap pass drops what the replaced-bucket fixpoint did, and commits " +
+    "keep listed spans equal or disjoint and each bucket in at most 2 files") {
+    forAllSeeded(200)(Gen.zip(Gen.choose(1, 128), Gen.long)) { case (n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      var listed = Seq.empty[DataFileEntry]
+      var next = 0
+      def file(ranges: BucketRanges, r: Int): DataFileEntry = {
+        next += 1
+        DataFileEntry(s"data/$next.parquet", ranges.lo(r), ranges.hi(r), 1L, 0)
+      }
+      for (step <- 1 to 24) {
+        val ranges = BucketRanges(n, BucketRanges.count(n, 1 + rnd.nextInt(2 * n)))
+        val at = s"$n buckets, seed $seed, step $step at ${ranges.count} ranges"
+        // a batch writes one file per touched range and kind: upserts,
+        // delete keys or both; only the upserts are listed
+        val density = rnd.nextDouble()
+        val touched = (0 until ranges.count).filter(_ => rnd.nextDouble() < density)
+        val kinds = touched.map(r => r -> (1 + rnd.nextInt(3))).toMap
+        val upserts = touched.filter(r => (kinds(r) & 1) != 0).map(file(ranges, _))
+        val deletes = touched.filter(r => (kinds(r) & 2) != 0).map(file(ranges, _))
+        val replaced = DataFileEntry.overlapping(listed, upserts ++ deletes)
+        // (c) the fixpoint's buckets cover the same files, and are the
+        // buckets of the written and replaced spans (lineage `buckets`)
+        val oracle = fixpoint(ranges, listed, touched.toSet)
+        assert(replaced == listed.filter(f => (f.lo to f.hi).exists(oracle)), at)
+        assert((upserts ++ deletes ++ replaced).flatMap(f => f.lo to f.hi).toSet == oracle, at)
+        // survivors of a replaced span land in the new ranges that meet it,
+        // unless the batch overwrote every row there
+        val survivorRanges = (0 until ranges.count).filter(r =>
+          replaced.exists(f => f.lo <= ranges.hi(r) && ranges.lo(r) <= f.hi))
+        val survivors = survivorRanges.filter(_ => rnd.nextInt(4) > 0).map(file(ranges, _))
+        val dropped = replaced.map(_.path).toSet
+        listed = listed.filterNot(f => dropped(f.path)) ++ upserts ++ survivors
+        // (a) listed spans are pairwise equal or disjoint
+        TableFiles.assertSpansNest(listed)
+        // (b) no bucket is held by more than 2 files
+        (0 until n).foreach(b => assert(listed.count(_.holds(b)) <= 2, s"$at: bucket $b"))
+      }
+    }
   }
 }

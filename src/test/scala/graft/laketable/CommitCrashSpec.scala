@@ -36,9 +36,9 @@ class CommitCrashSpec extends AnyFunSuite with SparkSupport {
     val (_, a) = crashFsTable()
     a.create(ChangeEvent.rowSchema, numBuckets = 4)
     val v0 = a.currentSnapshot.get
-    val v1 = a.commit(v0, Set.empty, Nil, Map("writer" -> "a"))
+    val v1 = a.commit(v0, Nil, Nil, Map("writer" -> "a"))
     val e = intercept[graft.core.GraftValidationException](
-      a.commit(v0, Set.empty, Nil, Map("writer" -> "b")))
+      a.commit(v0, Nil, Nil, Map("writer" -> "b")))
     assert(e.getMessage.contains("concurrent writer detected"))
     assert(a.currentSnapshot.contains(v1))
   }
@@ -60,8 +60,8 @@ class CommitCrashSpec extends AnyFunSuite with SparkSupport {
       val files = batches.map(new LakeTable(dir, spark).writeDataFiles(_, BucketRanges(4, 4), 0))
       val protocol: Seq[() => Unit] = Seq(
         () => t.create(ChangeEvent.rowSchema, numBuckets = 4),
-        () => t.commit(t.currentSnapshot.get, Set.empty, files(0), Map("b" -> "1")),
-        () => t.commit(t.currentSnapshot.get, Set(0, 1, 2, 3), files(1), Map("b" -> "2")),
+        () => t.commit(t.currentSnapshot.get, Nil, files(0), Map("b" -> "1")),
+        () => { val s = t.currentSnapshot.get; t.commit(s, s.files, files(1), Map("b" -> "2")) },
         () => t.expireSnapshots(keepLast = 1))
       CrashAtFs.arm(k, after)
       try (dir, protocol.indexWhere { step =>
@@ -95,7 +95,7 @@ class CommitCrashSpec extends AnyFunSuite with SparkSupport {
       // when no version was published)
       if (v.isEmpty) t.create(ChangeEvent.rowSchema, numBuckets = 4)
       val base = t.currentSnapshot.get
-      val retried = t.commit(base, Set.empty, Nil, Map("retry" -> "1"))
+      val retried = t.commit(base, Nil, Nil, Map("retry" -> "1"))
       assert(t.currentVersion.contains(base.version + 1) && retried.version == base.version + 1)
       t.expireSnapshots(keepLast = 2)
       val meta = TableFiles.metaFiles(dir)

@@ -42,7 +42,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(t.read().count() == 0)
     val files = write(t, someRows(10))
     assert(files.nonEmpty && files.forall(f => 0 <= f.lo && f.lo <= f.hi && f.hi < 4))
-    t.commit(t.currentSnapshot.get, Set.empty, files, Map("k" -> "v"))
+    t.commit(t.currentSnapshot.get, Nil, files, Map("k" -> "v"))
     assert(t.read().count() == 10)
     assert(t.summaryValue("k").contains("v"))
   }
@@ -50,7 +50,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("read() on a 64-bucket table of more than 32 files submits no job before an action") {
     val t = new LakeTable(tmpDir("laketable") + "/t64", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 64)
-    t.commit(t.currentSnapshot.get, Set.empty,
+    t.commit(t.currentSnapshot.get, Nil,
       t.writeDataFiles(bucketed(t, someRows(400)), BucketRanges(64, 64), 0), Map.empty)
     assert(t.currentSnapshot.get.fileCount > 32)
     val sc = spark.sparkContext
@@ -82,13 +82,13 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
     // writer A commits v1 while B's batch runs
     val aFiles = write(a, someRows(5, "a"))
-    a.commit(a.currentSnapshot.get, Set.empty, aFiles, Map("writer" -> "a"))
+    a.commit(a.currentSnapshot.get, Nil, aFiles, Map("writer" -> "a"))
     val aRows = a.read().orderBy("repo", "path").collect().toSeq
     assert(a.currentVersion.contains(1L) && aRows.size == 5)
 
     // B's commit builds on v0, so it targets v1, which exists
     val e = intercept[graft.core.GraftValidationException](
-      b.commit(staleBase, Set(0, 1, 2, 3), bFiles, Map("writer" -> "b")))
+      b.commit(staleBase, staleBase.files, bFiles, Map("writer" -> "b")))
     assert(e.getMessage.contains("concurrent writer detected"))
     // writer A's v1 is untouched: content, summary and no stray temp
     assert(a.currentVersion.contains(1L) && a.summaryValue("writer").contains("a"))
@@ -97,7 +97,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
     // and the normal single-writer path is unaffected: B re-reads and
     // commits v2 cleanly on top of A's v1
-    b.commit(b.currentSnapshot.get, Set.empty, bFiles, Map("writer" -> "b2"))
+    b.commit(b.currentSnapshot.get, Nil, bFiles, Map("writer" -> "b2"))
     assert(b.currentVersion.contains(2L) && b.read().count() == 8)
   }
 
@@ -106,7 +106,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val t = newTable()
     val v0 = t.currentSnapshot.get
     (1 to 5).foreach { i =>
-      t.commit(t.currentSnapshot.get, Set.empty,
+      t.commit(t.currentSnapshot.get, Nil,
         write(t, someRows(2, s"r$i")), Map("writer" -> s"$i"))
     }
     t.expireSnapshots(keepLast = 2)
@@ -115,7 +115,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     // built on the in-memory v0: its v1.json is gone, so the rename lands,
     // but a commit below the current version would be ignored
     val e = intercept[graft.core.GraftValidationException](
-      t.commit(v0, Set(0, 1, 2, 3), Nil, Map("writer" -> "stale")))
+      t.commit(v0, v0.files, Nil, Map("writer" -> "stale")))
     assert(e.getMessage.contains("concurrent writer detected"))
     assert(t.currentVersion.contains(5L) && t.summaryValue("writer").contains("5"))
     assert(t.read().orderBy("repo", "path").collect().toSeq == rows)
@@ -124,21 +124,22 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
   test("commit replaces only the named buckets") {
     val t = newTable()
-    t.commit(t.currentSnapshot.get, Set.empty, write(t, someRows(20)), Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, write(t, someRows(20)), Map.empty)
     val snap = t.currentSnapshot.get
     val victim = t.allFiles(snap).head.lo
-    // replace victim bucket with nothing → its rows disappear, others remain
-    val expectRemaining = t.readFiles(snap, t.allFiles(snap).filterNot(_.holds(victim))).count()
-    t.commit(t.currentSnapshot.get, Set(victim), Nil, Map.empty)
+    // replace victim bucket's files with nothing → its rows disappear, others remain
+    val (dropped, kept) = t.allFiles(snap).partition(_.holds(victim))
+    val expectRemaining = t.readFiles(snap, kept).count()
+    t.commit(snap, dropped, Nil, Map.empty)
     assert(t.read().count() == expectRemaining)
   }
 
   test("snapshot versions give time travel") {
     val t = newTable()
     val f1 = write(t, someRows(5))
-    val v1 = t.commit(t.currentSnapshot.get, Set.empty, f1, Map.empty).version
+    val v1 = t.commit(t.currentSnapshot.get, Nil, f1, Map.empty).version
     val f2 = write(t, someRows(7))
-    val v2 = t.commit(t.currentSnapshot.get, Set.empty, f2, Map.empty).version
+    val v2 = t.commit(t.currentSnapshot.get, Nil, f2, Map.empty).version
     assert(t.read(Some(v1)).count() == 5)
     assert(t.read(Some(v2)).count() == 12)
     assert(t.currentVersion.contains(v2))
@@ -148,7 +149,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   // disk is the committed version
   test("crash states: a stray temp json is never read; v<N>.json commits") {
     val t = newTable()
-    val s1 = t.commit(t.currentSnapshot.get, Set.empty,
+    val s1 = t.commit(t.currentSnapshot.get, Nil,
       write(t, someRows(6)), Map("k" -> "1"))
     assert(t.currentVersion.contains(1L))
 
@@ -157,7 +158,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val stray = Paths.get(t.root, "meta", ".v2.0123-crashed.tmp")
     Files.writeString(stray, "{truncat")
     assert(t.currentVersion.contains(1L) && t.read().count() == 6)
-    val s2 = t.commit(s1, Set.empty, write(t, someRows(3, "b")),
+    val s2 = t.commit(s1, Nil, write(t, someRows(3, "b")),
       Map("k" -> "2"))
     assert(s2.version == 2L && t.currentVersion.contains(2L) && t.read().count() == 9)
     t.expireSnapshots()
@@ -166,9 +167,9 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
 
     // a crash right after the rename: v3.json on disk is the commit, so the
     // replay of the same batch built on v2 fails loud instead of landing twice
-    val s3 = t.commit(s2, Set.empty, Nil, Map("k" -> "3"))
+    val s3 = t.commit(s2, Nil, Nil, Map("k" -> "3"))
     assert(t.currentVersion.contains(3L) && t.summaryValue("k").contains("3"))
-    intercept[graft.core.GraftValidationException](t.commit(s2, Set.empty, Nil, Map("k" -> "3")))
+    intercept[graft.core.GraftValidationException](t.commit(s2, Nil, Nil, Map("k" -> "3")))
     assert(t.snapshot(3L) == s3 && t.read().count() == 9)
   }
 
@@ -177,8 +178,8 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     (1 to 5).foreach { i =>
       val f = write(t, someRows(5))
       val cur = t.currentSnapshot.get
-      t.commit(cur, if (i > 1) (0 until 4).toSet else Set.empty,
-        f, Map.empty) // replace everything each time → old files orphan fast
+      // replace everything each time → old files orphan fast
+      t.commit(cur, cur.files, f, Map.empty)
     }
     val cur = t.currentVersion.get
     val rows = t.read().count()
@@ -200,7 +201,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("a batch written but never committed leaves read() unchanged, and " +
     "expireSnapshots deletes its dir") {
     val t = newTable()
-    t.commit(t.currentSnapshot.get, Set.empty, write(t, someRows(5)),
+    t.commit(t.currentSnapshot.get, Nil, write(t, someRows(5)),
       Map.empty)
     val before = t.read().orderBy("repo", "path").collect().toSeq
     // what a batch killed between its write and its commit leaves:
@@ -222,7 +223,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     assert(files.size >= 2 && files.map(_.path.split('/')(1)).distinct.size == 1,
       s"expected one dir of several files: ${files.map(_.path)}")
     val (listed, unlisted) = files.splitAt(1)
-    t.commit(t.currentSnapshot.get, Set.empty, listed, Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, listed, Map.empty)
     val rows = t.read().count()
     t.expireSnapshots()
     assert(TableFiles.parquetUnder(t.root, "data") == listed.map(_.path).toSet,
@@ -240,19 +241,20 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
       Files.move(Paths.get(t.root, e.path), Paths.get(t.root, name))
       e.copy(path = name)
     }
-    t.commit(t.currentSnapshot.get, Set.empty, flat, Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, flat, Map.empty)
     val crowded = flat.head.lo
     val nested = t.writeDataFiles(
       bucketed(t, someRows(40, "new")).filter(col("_bucket") === crowded), ranges(t), 0)
     assert(nested.nonEmpty)
-    t.commit(t.currentSnapshot.get, Set.empty, nested, Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, nested, Map.empty)
     val rows = t.read().count()
     assert(rows == 20 + t.readFiles(t.currentSnapshot.get, nested).count())
     // rewrite the crowded bucket as one file and commit it in its place,
-    // as a batch commit replaces the buckets it touches
+    // as a batch commit drops the files whose span overlaps a file it writes
     val snap = t.currentSnapshot.get
-    val rewritten = write(t, t.readFiles(snap, t.filesInBuckets(snap, Set(crowded))))
-    t.commit(snap, Set(crowded), rewritten, Map.empty)
+    val crowdedFiles = snap.files.filter(_.holds(crowded))
+    val rewritten = write(t, t.readFiles(snap, crowdedFiles))
+    t.commit(snap, crowdedFiles, rewritten, Map.empty)
     assert(TableFiles.maxFilesPerBucket(t) == 1)
     assert(t.read().count() == rows)
     t.expireSnapshots(keepLast = 1)
@@ -268,7 +270,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
   test("schema evolution: rename is metadata-only, add fills null") {
     val t = newTable()
     val files = write(t, someRows(6))
-    t.commit(t.currentSnapshot.get, Set.empty, files, Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, files, Map.empty)
     // rename content→body (field id kept), add stars:int
     t.evolveSchema(renames = Map("content" -> "body"), adds = Seq("stars" -> "INT"))
     val df = t.read()
@@ -280,7 +282,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSupport {
     val newRows = Seq(("r-new", "p-new", "c" * 40, "go", "body-new", 5))
       .toDF("repo", "path", "commit", "lang", "body", "stars")
     val nf = write(t, newRows, snap.schemaVersion)
-    t.commit(snap, Set.empty, nf, Map.empty)
+    t.commit(snap, Nil, nf, Map.empty)
     val all = t.read()
     assert(all.count() == 7)
     assert(all.filter($"stars" === 5).count() == 1)

@@ -8,8 +8,8 @@ import java.nio.file.{Files, Paths}
 
 /** The snapshot's data-file inventory: v<N>.json lists every data file
   * inline, so a commit writes one snapshot json and `meta/` holds nothing
-  * else. A batch commit replaces the files whose bucket span meets the
-  * buckets it names and keeps every other entry.
+  * else. A commit drops exactly the entries it names and keeps every other
+  * entry.
   */
 class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
 
@@ -20,18 +20,18 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
   test("a one-bucket commit replaces exactly that bucket") {
     val t = new LakeTable(tmpDir("inventory") + "/t", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 64)
-    t.commit(t.currentSnapshot.get, Set.empty, syntheticFiles(0 until 64, 4, "base"), Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, syntheticFiles(0 until 64, 4, "base"), Map.empty)
     val full = t.currentSnapshot.get
     assert(full.fileCount == 256)
 
     val before = TableFiles.metaFiles(t.root)
-    val snap = t.commit(full, Set(7), Seq(DataFileEntry("data/new.parquet", 7, 7, -1L, 0)),
-      Map("k" -> "v"))
+    val snap = t.commit(full, full.files.filter(_.holds(7)),
+      Seq(DataFileEntry("data/new.parquet", 7, 7, -1L, 0)), Map("k" -> "v"))
     // the commit's only new metadata file is its snapshot json
     assert(TableFiles.metaFiles(t.root) -- before == Set(s"v${snap.version}.json"))
     assert(snap.fileCount == 256 - 4 + 1)
-    assert(t.filesInBuckets(snap, Set(7)).map(_.path) == Seq("data/new.parquet"))
-    assert(t.filesInBuckets(snap, (0 until 64).toSet - 7) ==
+    assert(snap.files.filter(_.holds(7)).map(_.path) == Seq("data/new.parquet"))
+    assert(snap.files.filter(f => (0 until 64).filterNot(_ == 7).exists(f.holds)) ==
       full.files.filterNot(_.holds(7)))
     assert(t.allFiles(snap).size == snap.fileCount)
     // listed compactly: one line, no pretty-printer indentation
@@ -43,27 +43,32 @@ class SnapshotInventorySpec extends AnyFunSuite with SparkSupport {
   test("an emptied bucket refills") {
     val t = new LakeTable(tmpDir("inventory") + "/t2", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 32)
-    t.commit(t.currentSnapshot.get, Set.empty, syntheticFiles(0 until 32, 2, "a"), Map.empty)
-    t.commit(t.currentSnapshot.get, (0 until 8).toSet, Nil, Map.empty)
+    t.commit(t.currentSnapshot.get, Nil, syntheticFiles(0 until 32, 2, "a"), Map.empty)
+    val full = t.currentSnapshot.get
+    t.commit(full, full.files.filter(_.lo < 8), Nil, Map.empty)
     val wiped = t.currentSnapshot.get
     assert(wiped.fileCount == 48 && wiped.files.forall(_.lo >= 8))
-    assert(t.filesInBuckets(wiped, Set(3)).isEmpty)
-    t.commit(wiped, Set.empty, Seq(DataFileEntry("data/refill.parquet", 3, 3, -1L, 0)), Map.empty)
+    assert(wiped.files.filter(_.holds(3)).isEmpty)
+    t.commit(wiped, Nil, Seq(DataFileEntry("data/refill.parquet", 3, 3, -1L, 0)), Map.empty)
     val refilled = t.currentSnapshot.get
     assert(refilled.fileCount == 49)
-    assert(t.filesInBuckets(refilled, Set(3)).map(_.path) == Seq("data/refill.parquet"))
+    assert(refilled.files.filter(_.holds(3)).map(_.path) == Seq("data/refill.parquet"))
   }
 
-  test("a commit replaces every file whose span meets the named buckets") {
+  test("a commit drops exactly the entries it names and keeps every other entry") {
     val t = new LakeTable(tmpDir("inventory") + "/t3", spark)
     t.create(ChangeEvent.rowSchema, numBuckets = 16)
     // two layouts side by side: 4 ranges over buckets 0-7, single buckets
     // over 8-15
     val wide = Seq(0 -> 3, 4 -> 7).map { case (lo, hi) =>
       DataFileEntry(s"data/w-$lo.parquet", lo, hi, -1L, 0) }
-    t.commit(t.currentSnapshot.get, Set.empty, wide ++ syntheticFiles(8 until 16, 1, "n"),
+    t.commit(t.currentSnapshot.get, Nil, wide ++ syntheticFiles(8 until 16, 1, "n"),
       Map.empty)
-    val snap = t.commit(t.currentSnapshot.get, Set(2, 9), Nil, Map.empty)
+    val base = t.currentSnapshot.get
+    val named = base.files.filter(f => f.holds(2) || f.holds(9))
+    assert(named.map(_.path).toSet == Set("data/w-0.parquet", "data/n-9-0.parquet"))
+    val snap = t.commit(base, named, Nil, Map.empty)
+    assert(snap.files == base.files.filterNot(named.contains))
     assert(snap.files.map(_.path).toSet ==
       Set("data/w-4.parquet") ++ (8 until 16).filterNot(_ == 9).map(b => s"data/n-$b-0.parquet"))
   }

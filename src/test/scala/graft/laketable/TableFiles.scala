@@ -44,6 +44,18 @@ object TableFiles {
     (0 until snap.numBuckets).map(b => snap.files.count(_.holds(b))).max
   }
 
+  /** Fails unless every two of `files` have equal or disjoint spans: what
+    * makes one overlap pass exact ([[DataFileEntry.overlapping]]).
+    */
+  def assertSpansNest(files: Seq[DataFileEntry]): Unit = {
+    val spans = files.map(f => (f.lo, f.hi)).distinct
+    for (a <- spans; b <- spans if a != b && a._1 <= b._2 && b._1 <= a._2)
+      throw new AssertionError(s"listed spans $a and $b overlap without being equal")
+  }
+
+  /** [[assertSpansNest]] over the files the current snapshot lists. */
+  def assertSpansNest(t: LakeTable): Unit = assertSpansNest(t.currentSnapshot.get.files)
+
   /** What `data/` holds beyond the kept snapshots: every parquet file no kept
     * snapshot lists, and every entry directly under `data/` that no kept
     * snapshot references. Empty after an expiry with the same `keepLast`.

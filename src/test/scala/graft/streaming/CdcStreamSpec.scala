@@ -165,7 +165,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // re-arm and run WITH the reference's retry loop: attempt 1 fails,
     // attempt 2 resumes from the checkpoint and drains to parity
     FaultOnceTransport.arm(fault)
-    val batches = CdcStream.runWithRetries(spark, rc, maxRetries = 3)
+    val batches = CdcStream.runWithRetriesOutcome(spark, rc, maxRetries = 3).batches
     assert(batches > 0)
     val digest = (df: DataFrame) =>
       df.select(col("repo"), col("path"), sha2(col("content"), 256).as("sha"))
@@ -187,12 +187,12 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
       maxEventsPerTrigger = Some(2000L), transportClass = Some(FaultOnceTransport.className))
     // budget of ONE total attempt: the injected fault consumes it → the
     // error is swallowed with committed progress returned, not rethrown
-    val partial = CdcStream.runWithRetries(spark, rc, maxRetries = 1)
+    val partial = CdcStream.runWithRetriesOutcome(spark, rc, maxRetries = 1).batches
     assert(partial >= 0L)
     assert(!java.nio.file.Files.exists(fault), "fault was not consumed")
     // the NEXT scheduled sync (reference: Airbyte re-invokes read) resumes
     // from the checkpoint and drains to parity
-    CdcStream.runWithRetries(spark, rc, maxRetries = 3)
+    CdcStream.runWithRetriesOutcome(spark, rc, maxRetries = 3)
     assertParity(t, ChangelogGen.expectedFinalState(spark, c))
   }
 
@@ -206,12 +206,12 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // ~10 micro-batches against a 4 s per-attempt fence (query start +
     // checkpoint replay eat ~1-2 s of each window on a loaded host): a
     // single fenced attempt cannot drain it, so reaching parity in ONE
-    // runWithRetries call proves fenced attempts re-enter (the reference
+    // runWithRetriesOutcome call proves fenced attempts re-enter (the reference
     // continues syncing after DeadlineExceeded, up to max_retries × timeout
     // of progress)
     val rc = CdcStream.RunConfig(c, s"$base/t", s"$base/cp",
       maxEventsPerTrigger = Some(2000L), timeoutSeconds = Some(4L))
-    val batches = CdcStream.runWithRetries(spark, rc, maxRetries = 20)
+    val batches = CdcStream.runWithRetriesOutcome(spark, rc, maxRetries = 20).batches
     assert(batches > 0)
     assertParity(t, ChangelogGen.expectedFinalState(spark, c))
   }
@@ -262,8 +262,10 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
     assert(files <= 33, s"metrics dir accreted $files files (unbounded growth)")
-    // no compaction runs: each batch commit replaces every file whose span
-    // meets the ranges it touches, so no bucket is held by more than two files
+    // no compaction runs: each batch commit drops every listed file whose
+    // span overlaps a file it writes, so listed spans nest and no bucket is
+    // held by more than two files
+    graft.laketable.TableFiles.assertSpansNest(t)
     val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
     assert(perBucket <= 2, s"a bucket lists $perBucket files")
     // data/ likewise: every parquet file (recursively) listed by a kept
@@ -338,7 +340,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val base = tmpDir("wiremeta")
     val cat = graft.core.ConfiguredCatalog(Seq(
       graft.core.ConfiguredStream("wm", c.keyspace, "incremental")))
-    CdcStream.runCatalog(spark, cat, s =>
+    CdcStream.runCatalogOutcomes(spark, cat, s =>
       CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4,
         wirePayload = true, includeMetadata = true))
     val df = new LakeTable(s"$base/wm", spark).read()
@@ -423,9 +425,10 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     def rcFor(s: graft.core.ConfiguredStream) =
       CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4)
 
-    val r1 = CdcStream.runCatalog(spark, cat, rcFor)
+    val r1 = CdcStream.runCatalogOutcomes(spark, cat, rcFor)
+      .map { case (k, o) => k -> o.batches }
     assert(r1(s"${c.keyspace}:a") > 0 && r1(s"${c.keyspace}:b") > 0)
-    // the bucket count reaches the table runCatalog creates
+    // the bucket count reaches the table runCatalogOutcomes creates
     assert(new LakeTable(s"$base/a", spark).currentSnapshot.get.numBuckets == 4)
     val want = ChangelogGen.expectedFinalState(spark, c)
     assertParity(new LakeTable(s"$base/a", spark), want)
@@ -434,7 +437,8 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
 
     // second pass: incremental stream early-exits (nothing new); full_refresh
     // stream is reset (cursor + table) and replays everything
-    val r2 = CdcStream.runCatalog(spark, cat, rcFor)
+    val r2 = CdcStream.runCatalogOutcomes(spark, cat, rcFor)
+      .map { case (k, o) => k -> o.batches }
     assert(r2(s"${c.keyspace}:a") == 0L,
       s"incremental stream should early-exit, applied ${r2(s"${c.keyspace}:a")}")
     assert(r2(s"${c.keyspace}:b") > 0L, "full_refresh stream should re-ingest")
@@ -472,8 +476,8 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val r1 = CdcStream.runCatalog(spark, cat, rcFor, maxConcurrentStreams = 3)
-    assert(r1.values.forall(_ > 0))
+    val r1 = CdcStream.runCatalogOutcomes(spark, cat, rcFor, maxConcurrentStreams = 3)
+    assert(r1.values.forall(_.batches > 0))
     assert(maxInFlight.get() >= 2, s"streams ran sequentially (max in flight ${maxInFlight.get()})")
     // listener events are async; queries are done, give the bus a moment
     org.scalatest.concurrent.Eventually.eventually(
@@ -502,7 +506,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val emitted = SyncState.fromJson(new LakeTable(s"$base/a", spark).summaryValue("cursors").get)
     val cat2 = graft.core.ConfiguredCatalog(Seq(
       graft.core.ConfiguredStream("a", c.keyspace, "incremental")))
-    CdcStream.runCatalog(spark, cat2,
+    CdcStream.runCatalogOutcomes(spark, cat2,
       s => CdcStream.RunConfig(c, s"$base/fresh-${s.name}", s"$base/cp2/${s.name}", numBuckets = 4),
       state = emitted)
     // fresh checkpoint + state at head → batch 0 runs (Spark records initial
@@ -518,7 +522,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     val base = tmpDir("withmeta")
     val cat = graft.core.ConfiguredCatalog(Seq(
       graft.core.ConfiguredStream("m", c.keyspace, "incremental")))
-    CdcStream.runCatalog(spark, cat, s =>
+    CdcStream.runCatalogOutcomes(spark, cat, s =>
       CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4,
         includeMetadata = true))
     val df = new LakeTable(s"$base/m", spark).read()
@@ -529,7 +533,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSupport {
     // without the flag: plain schema, no metadata columns
     val cat2 = graft.core.ConfiguredCatalog(Seq(
       graft.core.ConfiguredStream("p", c.keyspace, "incremental")))
-    CdcStream.runCatalog(spark, cat2, s =>
+    CdcStream.runCatalogOutcomes(spark, cat2, s =>
       CdcStream.RunConfig(c, s"$base/${s.name}", s"$base/cp/${s.name}", numBuckets = 4))
     assert(!new LakeTable(s"$base/p", spark).read().columns.contains("_graft_vgtid"))
   }

@@ -63,7 +63,7 @@ object DriveCatalogSoak {
       // 3 kill/resume phases: head at 40%, 75%, 100% of each stream's binlog
       Seq(0.4, 0.75, 1.0).zipWithIndex.foreach { case (frac, phase) =>
         if (phase == 1) FaultOnceTransport.arm(fault) // dropped stream mid-soak
-        val res = CdcStream.runCatalog(spark, catalog, s => {
+        val res = CdcStream.runCatalogOutcomes(spark, catalog, s => {
           val c = genFor(s)
           val maxHead = (0 until c.numShards)
             .map(i => EventGen.totalPerShard(i, c)).max
@@ -75,6 +75,7 @@ object DriveCatalogSoak {
             transportClass =
               if (phase == 1 && s == faultStream) Some(FaultOnceTransport.className) else None)
         }, maxConcurrentStreams = 4, maxRetries = 3)
+          .map { case (k, o) => k -> o.batches }
         res.foreach { case (k, v) => applied(k) += v }
         println(s"phase $phase (head ${(frac * 100).toInt}%): " +
           res.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" "))
@@ -121,6 +122,7 @@ object DriveCatalogSoak {
           new org.apache.hadoop.fs.Path(s"$base/${dir(s)}/t/metrics")).length
         val metaFiles = fs.listStatus(
           new org.apache.hadoop.fs.Path(s"$base/${dir(s)}/t/meta")).length
+        graft.laketable.TableFiles.assertSpansNest(t)
         val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
         require(perBucket <= 2, s"${s.stateKey}: a bucket lists $perBucket data files")
         require(metricsFiles <= 40, s"${s.stateKey}: unbounded metrics files $metricsFiles")

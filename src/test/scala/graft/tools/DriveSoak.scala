@@ -87,6 +87,7 @@ object DriveSoak {
         new org.apache.hadoop.fs.Path(s"$base/t/meta")).length
       println(s"soak: data files=$dataFiles metrics files=$metricsFiles " +
         s"meta files=$metaFiles version=${t.currentVersion.get}")
+      graft.laketable.TableFiles.assertSpansNest(t)
       val perBucket = graft.laketable.TableFiles.maxFilesPerBucket(t)
       require(perBucket <= 2, s"a bucket lists $perBucket data files")
       require(metricsFiles <= 40, s"metrics folds failed to bound files: $metricsFiles")

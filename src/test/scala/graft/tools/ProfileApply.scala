@@ -29,10 +29,9 @@ object ProfileApply {
     val table = new LakeTable(root, spark)
     val snap0 = table.create(ChangeEvent.rowSchema, 64)
     val last = CdcApply.dedupLww(ChangelogGen.fullStream(spark, c)).cache()
-    val agg = time("agg+cache-materialize") {
+    time("agg+cache-materialize") {
       last.agg(sum(when(col("op") =!= "delete", 1L).otherwise(0L)),
-        sum(when(col("op") === "delete", 1L).otherwise(0L)),
-        collect_set(snap0.bucketOf(col("_repo")))).head()
+        sum(when(col("op") === "delete", 1L).otherwise(0L))).head()
     }
     val upserts = last.filter(col("op") =!= "delete").select(col("after.*"))
     val merged = upserts.withColumn("_bucket", snap0.bucketOf(col("repo")))
@@ -40,7 +39,7 @@ object ProfileApply {
       table.writeDataFiles(merged, BucketRanges.forBatch(snap0, spark), 0)
     }
     println("  files=" + files.size)
-    time("commit") { table.commit(snap0, agg.getSeq[Int](2).toSet, files, Map("x"->"y")) }
+    time("commit") { table.commit(snap0, Nil, files, Map("x"->"y")) }
     table.drop(); spark.stop()
   }
 }
